@@ -137,8 +137,7 @@ object AnnScaleBench {
         numPlanes = bandPlanes, probeHamming = 1, numBands = 16))
     // IVF variant of the join: √n cells (the knnJoinIvf auto rule),
     // nprobe 8 — candidate mass nprobe/nlist of the corpus per probe,
-    // no banding multiplier; cold includes the quantizer fit (cached
-    // for warm passes, as a persisted index would be)
+    // no banding multiplier; every pass includes the quantizer fit
     val ivfCells = math.min(4096, math.max(8, math.sqrt(n.toDouble).toInt))
     run(s"knn_join_ivf_l${ivfCells}p8_k3", () =>
       Similarity.knnJoinIvf(e, knnProbes, k = 3, nprobe = 8,

@@ -29,12 +29,6 @@ import org.apache.spark.sql.graftshim.ExprBridge.{toColumn, toExpression}
   */
 object BloomPrune {
 
-  /** Materialized sketches keyed by (build-plan semantic hash, items,
-    * bits) — deterministic, so reuse returns the identical filter.
-    */
-  private val sketchCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, Long, Long), Array[Byte]]
-
   /** Aggregate a column of keys into one binary Bloom sketch. */
   def bloomAgg(key: Column, expectedItems: Long, numBits: Long): Column =
     toColumn(new BloomFilterAggregate(
@@ -59,13 +53,10 @@ object BloomPrune {
     // a literal — the same thing Spark's InjectRuntimeFilter does with
     // its materialized subquery result. Bounded: one row of numBits/8
     // bytes (default 1 MB), independent of build-side cardinality.
-    // Cached by the build plan's semantic hash (the quantizer-cache
-    // pattern): a filter built once serves every probe thereafter.
-    val keyed = build.select(col(buildKey))
-    val sketch = sketchCache.getOrElseUpdate(
-      (keyed.queryExecution.analyzed.semanticHash(), expectedItems, numBits),
-      keyed.agg(bloomAgg(col(buildKey), expectedItems, numBits)
-        .as("__bloom")).head().getAs[Array[Byte]](0))
+    // Aggregated on every call: the sketch must reflect the build
+    // side's current content, not whatever an earlier call saw.
+    val sketch = build.agg(bloomAgg(col(buildKey), expectedItems, numBits)
+      .as("__bloom")).head().getAs[Array[Byte]](0)
     probe.filter(mightContain(lit(sketch), col(probeKey)))
   }
 

@@ -1040,15 +1040,14 @@ object Dedup {
     * tradeoff the semantic-dedup literature picked for web-scale
     * corpora.
     *
-    * Scale shape: the quantizer fits on a bounded sample (cached by
-    * training-plan semantic hash — the offline-index seam IVF already
-    * uses); assignment is one broadcast matvec per row; the self-join
-    * equi-keys on `cell`, so pair generation co-partitions by cell and
-    * is quadratic only within a cell (nlist grows with the corpus to
-    * hold cell size ~constant; hot cells split by AQE). Within a cell
-    * every pair must be verified anyway, so vectors riding the
-    * cell-local join IS the candidate verification — there is no
-    * slimmer exact formulation per cell.
+    * Scale shape: the quantizer fits on a bounded sample of the input
+    * on every call; assignment is one broadcast matvec per row; the
+    * self-join equi-keys on `cell`, so pair generation co-partitions by
+    * cell and is quadratic only within a cell (nlist grows with the
+    * corpus to hold cell size ~constant; hot cells split by AQE).
+    * Within a cell every pair must be verified anyway, so vectors
+    * riding the cell-local join IS the candidate verification — there
+    * is no slimmer exact formulation per cell.
     *
     * Output: (id_a, id_b, cosine, cell), id_a < id_b, cosine ≥
     * threshold. Deterministic for a fixed seed.

@@ -7,12 +7,12 @@ import graft.functions.VectorFunctions
 
 /** PERSISTED inverted-file (IVF) ANN index — the build-once/probe-many
   * deployment shape of [[Similarity.ivfTopK]]. Every quantizer-based
-  * operator in [[Similarity]] fits k-means per call (amortized only by
-  * a process-local cache); a real ANN service clusters the corpus ONCE,
-  * persists (centroids, cell-partitioned vectors), and serves every
-  * probe afterwards from the committed layout — re-clustering 100 TB
-  * per query batch is not a plan. This is the embedding-search mirror
-  * of the text n-gram / sign / phash indexes:
+  * operator in [[Similarity]] fits k-means per call; a real ANN
+  * service clusters the corpus ONCE, persists (centroids,
+  * cell-partitioned vectors), and serves every probe afterwards from
+  * the committed layout — re-clustering 100 TB per query batch is not
+  * a plan. This is the embedding-search mirror of the text n-gram /
+  * sign / phash indexes:
   *
   *  - LAYOUT: `<root>/_ixvN/centroids` (≤ nlist rows, broadcast at
   *    probe time) + `<root>/_ixvN/vectors/cell=K/` (raw vectors
@@ -260,32 +260,17 @@ object IvfIndex {
     val trainSet =
       if (fitSamplePerCell == 0) c
       else c.orderBy(xxhash64(col("id"))).limit(trainCap)
-    // content-keyed reuse: a compaction's refit trains over the folded
-    // layout's OWN files (a new path every generation), so the
-    // plan-hash cache can never hit — the content fingerprint does
-    val cents = Similarity.fitQuantizerByContent(trainSet, "nvec",
-      cells, seed)
+    val cents = Similarity.fitQuantizer(trainSet, "nvec", cells, seed)
     cents.zipWithIndex.map { case (v, i) => (i, v) }
       .toSeq.toDF("cell", "centroid")
   }
-
-  private def segDir(path: String, n: Long): String =
-    SegmentLog.segDir(path, n)
-  private def committedSegs(spark: SparkSession, path: String): Seq[Long] =
-    SegmentLog.committedSegs(spark, path)
-  private def commitSegManifest(spark: SparkSession, path: String,
-      segs: Seq[Long]): Unit =
-    SegmentLog.commitManifest(spark, path, segs)
-  private def healSegs(spark: SparkSession, path: String,
-      live: Seq[Long]): Unit =
-    SegmentLog.heal(spark, path, live)
 
   /** Segment numbers probes must read: committed manifest rows newer
     * than the committed base's `segs_upto`. */
   private[graft] def liveSegs(spark: SparkSession,
       path: String): Seq[Long] = {
     val upto = metaFull(spark, path).map(_.segsUpto).getOrElse(0L)
-    committedSegs(spark, path).filter(_ > upto)
+    SegmentLog.committedSegs(spark, path).filter(_ > upto)
   }
 
   /** The probe/compaction read: base vectors ∪ live segments. Every
@@ -296,7 +281,7 @@ object IvfIndex {
     val base = spark.read.parquet(
       s"${IndexVersions.resolvePath(spark, path)}/vectors")
     liveSegs(spark, path).foldLeft(base) { (acc, n) =>
-      acc.unionByName(spark.read.parquet(segDir(path, n)))
+      acc.unionByName(spark.read.parquet(SegmentLog.segDir(path, n)))
     }
   }
 
@@ -324,10 +309,10 @@ object IvfIndex {
       dims: Int = 0, atSeg: Long = -1L): Long = {
     val m = requireMeta(spark, path, dims)
     if (atSeg >= 0 && atSeg <= m.segsUpto) return -2L
-    val committed = committedSegs(spark, path)
+    val committed = SegmentLog.committedSegs(spark, path)
     val live = committed.filter(_ > m.segsUpto)
-    healSegs(spark, path, live)
-    if (live != committed) commitSegManifest(spark, path, live)
+    SegmentLog.heal(spark, path, live)
+    if (live != committed) SegmentLog.commitManifest(spark, path, live)
     val b = batch.select(col(idCol).as("id"), col(vecCol).as("vec"),
       Embeddings.normalize(col(vecCol)).as("nvec"))
     if (b.isEmpty) return -1L
@@ -336,8 +321,8 @@ object IvfIndex {
       .select(col("id"), col("vec"), col("cell"))
       .repartition(col("cell"))
       .write.partitionBy("cell").mode("overwrite")
-      .parquet(segDir(path, n))
-    commitSegManifest(spark, path, (live.toSet + n).toSeq.sorted)
+      .parquet(SegmentLog.segDir(path, n))
+    SegmentLog.commitManifest(spark, path, (live.toSet + n).toSeq.sorted)
     n
   }
 
@@ -361,8 +346,8 @@ object IvfIndex {
     val upto = (live :+ m.segsUpto).max
     val v = write(view, path, m.dims, nlist, seed,
       fitSamplePerCell = fitSamplePerCell, subsumedUpto = upto)
-    commitSegManifest(spark, path, Seq.empty)
-    healSegs(spark, path, Seq.empty)
+    SegmentLog.commitManifest(spark, path, Seq.empty)
+    SegmentLog.heal(spark, path, Seq.empty)
     v
   }
 

@@ -24,62 +24,6 @@ import graft.functions.{TopKAgg, VectorFunctions}
   */
 object Similarity {
 
-  /** Process-level cache of fitted coarse quantizers, keyed by the
-    * SEMANTIC hash of the training plan + (k, seed, sample cap). An IVF
-    * index is built offline once and probed by every query thereafter;
-    * this is that reuse seam in a single process — repeated calls over
-    * the same corpus (verify passes, bench warm/timed passes,
-    * interactive sessions) skip re-clustering. Deterministic: same
-    * plan + seed ⇒ the fit would return the identical centroids anyway.
-    * Bounded LRU (ADVICE r16): a long-lived session building many
-    * distinct indexes must not accumulate centroid matrices forever.
-    */
-  private val quantizerCache =
-    new BoundedCache[(Int, Int, Long, Int), Array[Array[Float]]](64)
-
-  /** Second-chance quantizer cache keyed by training-sample CONTENT
-    * (a 5-long multiset fingerprint + k + seed) instead of plan hash.
-    * The plan-hash key misses whenever the same corpus content arrives
-    * through a different plan — the IVF compaction refit is the
-    * canonical case: it trains over `<root>/_ixvN/vectors`, and N
-    * increments per generation, so every fold re-ran a full fit over
-    * content it had already clustered. One bounded agg over the sample
-    * replaces the fit on a hit. Correctness: centroids steer only
-    * layout/recall — gate probes run nprobe = nlist (provably exact
-    * under ANY centroids) — and the fingerprint collision risk over 5
-    * independent 64-bit aggregates is negligible. */
-  private val quantizerContentCache =
-    new BoundedCache[(Seq[Long], Int, Long), Array[Array[Float]]](64)
-
-  /** Tiny synchronized LRU: access-ordered LinkedHashMap, eldest entry
-    * evicted past `cap`. The compute runs under the lock so concurrent
-    * requests for the same key fit once (fits are rare and bounded). */
-  private final class BoundedCache[K, V](cap: Int) {
-    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-        size() > cap
-    }
-    def getOrElseUpdate(k: K, v: => V): V = m.synchronized {
-      val cur = m.get(k)
-      if (cur != null) cur
-      else { val nv = v; m.put(k, nv); nv }
-    }
-  }
-
-  /** Fit (or reuse) a quantizer for `trainSet` keyed by the CONTENT of
-    * its `vecCol` multiset. */
-  private[operators] def fitQuantizerByContent(trainSet: DataFrame,
-      vecCol: String, nlist: Int, seed: Long): Array[Array[Float]] = {
-    // bit_xor/min/max/count never overflow; the additive leg sums the
-    // hash folded into [0, 2^31) so ANSI mode stays safe to ~2^32 rows
-    val h = xxhash64(col(vecCol))
-    val r = trainSet.agg(sum(pmod(h, lit(1L << 31))), bit_xor(h),
-      count(lit(1)), min(h), max(h)).head()
-    val key = (0 until 5).map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
-    quantizerContentCache.getOrElseUpdate((key, nlist, seed),
-      fitQuantizer(trainSet, vecCol, nlist, seed))
-  }
-
   /** Order-independent bounded training sample: rank rows by a hash of
     * the vector itself and take the top-N. A bare `.limit(N)` is
     * partition-order dependent — the same corpus written with a
@@ -99,30 +43,28 @@ object Similarity {
       .limit(sampleN)
       .collect().map(_.getSeq[Float](0).toArray)
 
-  /** Fit (or reuse) the coarse quantizer: a DRIVER-SIDE Lloyd's k-means
-    * over a bounded content-ordered sample of `vecs(vecCol)` — the
-    * [[Pq.kmeansSub]] pattern applied to the coarse fit. The former
-    * MLlib fit scheduled ~(kmeans|| init rounds + 10 Lloyd iterations)
-    * of cluster jobs over a ≤ 256·k-row sample: pure fixed job overhead
-    * (guide §1.2 / §5 driver rules) — measured 2–3 s of every cold
-    * index build at sf0.1 and ~94% of the 2M-vector build wall
-    * (BASELINE.md round 16). The sample is content-hash-ordered
-    * ([[deterministicSample]]) so the same content fits the same
-    * centroids under ANY physical layout, and the fit is deterministic
-    * end-to-end (seeded k-means++ init over that order, fixed-chunk FP
-    * reduction in [[lloyd]]). Centroids steer only layout/recall: every
-    * declared gate probes nprobe = nlist / reranks ≥ corpus, which is
-    * provably exact under any centroids; production-nprobe recall is
-    * pinned in the specs. `sampleCap` ≤ 0 derives 256·k (the public
-    * FAISS training guidance), floored at 2048 and capped at 2^20. */
+  /** Fit the coarse quantizer: a DRIVER-SIDE Lloyd's k-means over a
+    * bounded content-ordered sample of `vecs(vecCol)`, computed from
+    * the input on every call. The former MLlib fit scheduled
+    * ~(kmeans|| init rounds + 10 Lloyd iterations) of cluster jobs over
+    * a ≤ 256·k-row sample: pure fixed job overhead (guide §1.2 / §5
+    * driver rules) — measured 2–3 s of every cold index build at sf0.1
+    * and ~94% of the 2M-vector build wall (BASELINE.md round 16). The
+    * sample is content-hash-ordered ([[deterministicSample]]) so the
+    * same content fits the same centroids under ANY physical layout,
+    * and the fit is deterministic end-to-end (seeded k-means++ init
+    * over that order, fixed-chunk FP reduction in [[lloyd]]). Nothing
+    * is cached: a cache keyed on the plan identifies a file scan by its
+    * path, not its content, and the fit costs one sample pass anyway.
+    * Centroids steer only layout/recall: every declared gate probes
+    * nprobe = nlist / reranks ≥ corpus, which is provably exact under
+    * any centroids; production-nprobe recall is pinned in the specs.
+    * The sample holds 256·k rows (the public FAISS training guidance),
+    * floored at 2048 and capped at 2^20. */
   private[graft] def fitQuantizer(vecs: DataFrame, vecCol: String,
-      nlist: Int, seed: Long, sampleCap: Int = 0): Array[Array[Float]] = {
-    val cap =
-      if (sampleCap > 0) sampleCap
-      else math.min(1L << 20, math.max(2048L, 256L * nlist)).toInt
-    quantizerCache.getOrElseUpdate(
-      (vecs.queryExecution.analyzed.semanticHash(), nlist, seed, cap),
-      lloyd(deterministicSample(vecs, col(vecCol), cap), nlist, seed))
+      nlist: Int, seed: Long): Array[Array[Float]] = {
+    val cap = math.min(1L << 20, math.max(2048L, 256L * nlist)).toInt
+    lloyd(deterministicSample(vecs, col(vecCol), cap), nlist, seed)
   }
 
   /** Driver-side Lloyd's k-means with restarts: `nRedo` independent
@@ -153,7 +95,7 @@ object Similarity {
     * thread scheduling cannot reorder FP accumulation. Returns exactly
     * `k` float32 centroids: a sample with fewer than `k` distinct rows
     * pads the init deterministically, and an empty cell keeps its
-    * previous position (the [[Pq.kmeansSub]] convention). */
+    * previous position. */
   private def lloydOnce(sample: Array[Array[Float]], k: Int,
       seed: Long, maxIter: Int): (Array[Array[Float]], Double) = {
     require(sample.nonEmpty, "empty quantizer training sample")
@@ -544,12 +486,13 @@ object Similarity {
     // downstream cosine-verify stage — the r16 kernel variant collapsed
     // the 4M-candidate verify onto the probe scan's partition count
     // (2.1 s → 2.9 s warm). Re-attempted in r17 per the VERDICT with an
-    // explicit repartition restoring the width (graft.KnnAB, same-JVM
-    // 3-way A/B at 32c): exchange 2.0–2.7 s vs kernel+repartition(qid)
-    // 3.3–3.6 s vs kernel+repartition(defaultParallelism, qid)
-    // 3.3–3.8 s — the explicit exchange costs the same as the rank
-    // exchange it replaces while losing the aggregate's output
-    // statistics, so the exchange path stays.
+    // explicit repartition restoring the width (same-JVM 3-way A/B at
+    // 32c, recorded in OPTIMIZATION_r17.md): exchange 2.0–2.7 s vs
+    // kernel+repartition(qid) 3.3–3.6 s vs
+    // kernel+repartition(defaultParallelism, qid) 3.3–3.8 s — the
+    // explicit exchange costs the same as the rank exchange it
+    // replaces while losing the aggregate's output statistics, so the
+    // exchange path stays.
     val q = probes.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
     val cellScores = q.crossJoin(broadcast(centroids))
       .select(col("qid"), col("cell").as("id"),
@@ -856,65 +799,29 @@ object Similarity {
         if (preNormalized) col(vecCol) else Embeddings.normalize(col(vecCol))
       val sample: Array[Array[Float]] =
         deterministicSample(corpus, vexpr, sampleN)
-      kmeansSub(sample, dims, m, ksub, seed, iters)
+      fitCodebook(sample, dims, m, ksub, seed, iters)
     }
 
-    /** Per-subspace Lloyd's k-means on an in-memory sample → flat
-      * [m][ksub][dsub] codebook (driver-side; the sample is bounded).
+    /** Per-subspace k-means on an in-memory sample → flat
+      * [m][ksub][dsub] codebook (driver-side; the sample is bounded):
+      * one [[lloyd]] fit per subspace, seeded `seed + sub`.
       */
-    private[operators] def kmeansSub(sample: Array[Array[Float]], dims: Int,
-        m: Int, ksub: Int, seed: Long, iters: Int): Array[Float] = {
+    private def fitCodebook(sample: Array[Array[Float]],
+        dims: Int, m: Int, ksub: Int, seed: Long,
+        iters: Int): Array[Float] = {
       require(dims % m == 0, s"dims=$dims not divisible by m=$m")
       val dsub = dims / m
-      require(sample.nonEmpty, "empty training sample")
-      val rnd = new java.util.Random(seed)
       val codebook = new Array[Float](m * ksub * dsub)
       var sub = 0
       while (sub < m) {
-        // init: distinct random sample rows' subvectors
-        val perm = rnd.ints(0, sample.length).distinct().limit(ksub)
-          .toArray
-        var j = 0
-        while (j < ksub) {
-          val src = sample(perm(j % perm.length))
-          System.arraycopy(src, sub * dsub, codebook, (sub * ksub + j) * dsub, dsub)
-          j += 1
-        }
-        // Lloyd's iterations over the sample's subvectors
-        var it = 0
-        while (it < iters) {
-          val sums = Array.ofDim[Double](ksub, dsub)
-          val counts = new Array[Int](ksub)
-          sample.foreach { v =>
-            var best = 0; var bestD = Double.MaxValue
-            var c = 0
-            while (c < ksub) {
-              val off = (sub * ksub + c) * dsub
-              var d = 0.0; var i = 0
-              while (i < dsub) {
-                val diff = v(sub * dsub + i) - codebook(off + i)
-                d += diff * diff; i += 1
-              }
-              if (d < bestD) { bestD = d; best = c }
-              c += 1
-            }
-            counts(best) += 1
-            var i = 0
-            while (i < dsub) { sums(best)(i) += v(sub * dsub + i); i += 1 }
-          }
-          var c = 0
-          while (c < ksub) {
-            if (counts(c) > 0) {
-              var i = 0
-              while (i < dsub) {
-                codebook((sub * ksub + c) * dsub + i) =
-                  (sums(c)(i) / counts(c)).toFloat
-                i += 1
-              }
-            }
-            c += 1
-          }
-          it += 1
+        val lo = sub * dsub
+        val cents = lloyd(sample.map(_.slice(lo, lo + dsub)), ksub,
+          seed + sub, maxIter = iters)
+        var c = 0
+        while (c < ksub) {
+          System.arraycopy(cents(c), 0, codebook, (sub * ksub + c) * dsub,
+            dsub)
+          c += 1
         }
         sub += 1
       }
@@ -973,7 +880,7 @@ object Similarity {
       var t = 0
       while (t < opqIters) {
         val y = sample.map(rotated)
-        val cb = kmeansSub(y, dims, m, ksub, seed, iters)
+        val cb = fitCodebook(y, dims, m, ksub, seed, iters)
         // Procrustes: maximize tr(R·M) with M = Σ x·qᵀ → R = V·Uᵀ
         val mMat = DenseMatrix.zeros[Double](dims, dims)
         var i = 0
@@ -993,7 +900,7 @@ object Similarity {
         t += 1
       }
       // final codebook trained under the FINAL rotation
-      val cbFinal = kmeansSub(sample.map(rotated), dims, m, ksub, seed, iters)
+      val cbFinal = fitCodebook(sample.map(rotated), dims, m, ksub, seed, iters)
       val rFlat = new Array[Float](dims * dims)
       var a = 0
       while (a < dims) {

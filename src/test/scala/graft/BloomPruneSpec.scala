@@ -29,6 +29,25 @@ class BloomPruneSpec extends SparkSpec {
     assert(bloomJoined == plain && plain.nonEmpty)
   }
 
+  test("a rewritten build-side path is re-sketched: join == plain join") {
+    val path = tmpDir("bloom-rewrite") + "/build"
+    val probe = spark.range(0, 1000).toDF("pk")
+    def build(lo: Long) = {
+      spark.range(lo, lo + 100).toDF("bk")
+        .write.mode("overwrite").parquet(path)
+      spark.read.parquet(path)
+    }
+    assert(BloomPrune.join(probe, build(0L), "pk", "bk", 100L).count() == 100L)
+    // same path, disjoint keys: the sketch must come from the new files
+    val rewritten = build(500L)
+    val bloomJoined = BloomPrune.join(probe, rewritten, "pk", "bk", 100L)
+      .collect().map(_.toSeq).toSet
+    val plain = probe.join(rewritten, $"pk" === $"bk")
+      .collect().map(_.toSeq).toSet
+    assert(plain.size == 100 && bloomJoined == plain,
+      s"${bloomJoined.size} of ${plain.size} true matches")
+  }
+
   test("SQL surface: graft_bloom_agg / graft_might_contain round-trip") {
     GraftFunctions.register(spark)
     spark.range(0, 1000).toDF("k").createOrReplaceTempView("bloom_build")

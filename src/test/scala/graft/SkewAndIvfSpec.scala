@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Similarity, Skew}
+import graft.operators.{Dedup, Similarity, Skew}
 
 class SkewAndIvfSpec extends SparkSpec {
   import spark.implicits._
@@ -28,6 +29,45 @@ class SkewAndIvfSpec extends SparkSpec {
       combine = Map("v" -> (c => sum(c)), "n" -> (c => sum(c))))
     assert(direct.orderBy("k").collect().map(_.toSeq).toSeq ==
       twoPhase.orderBy("k").collect().map(_.toSeq).toSeq)
+  }
+
+  /** Four tight clusters of 50 rows, on axes `axis` and `axis + 1`.
+    * Clusters on axes 2/3 are about equally far from every centroid
+    * fitted on axes 0/1. */
+  private def blobs(axis: Int): DataFrame = {
+    val rnd = new java.util.Random(5L)
+    (for (c <- 0 until 4; i <- 0 until 50) yield {
+      val v = Array.fill(4)((rnd.nextFloat() - 0.5f) * 0.02f)
+      v(axis + c % 2) += (if (c < 2) 1f else -1f)
+      ((c * 50 + i).toLong, v.toSeq)
+    }).toDF("id", "vec")
+  }
+
+  /** Overwrite `path` with [[blobs]] and read it back. */
+  private def writtenBlobs(path: String, axis: Int): DataFrame = {
+    blobs(axis).write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
+  test("fitQuantizer over a rewritten parquet path fits its new content") {
+    def fit(df: DataFrame) =
+      Similarity.fitQuantizer(df, "vec", 4, 42L).map(_.toSeq).toSeq
+    val path = tmpDir("quantizer-rewrite") + "/vecs"
+    val oldCents = fit(writtenBlobs(path, 0))
+    val cents = fit(writtenBlobs(path, 2))
+    assert(cents == fit(blobs(2)))
+    assert(cents != oldCents)
+  }
+
+  test("semanticPairs over a rewritten parquet path assigns cells " +
+      "from its new content") {
+    def pairs(df: DataFrame) = Dedup.semanticPairs(df, "id", "vec",
+      nlist = 4).collect().map(_.toSeq).toSet
+    val path = tmpDir("semantic-rewrite") + "/vecs"
+    pairs(writtenBlobs(path, 0))
+    val expected = pairs(blobs(2))
+    assert(expected.size == 4 * 1225) // each cluster in its own cell
+    assert(pairs(writtenBlobs(path, 2)) == expected)
   }
 
   test("IVF full probe == brute force; partial probe keeps decent recall") {
