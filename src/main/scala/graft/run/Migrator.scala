@@ -25,11 +25,12 @@ final case class MigrationReport(
   *
   * The reference's serial read→transform→write batch loop collapses into
   * ONE Spark job: a narrow (shuffle-free) chain of projections from scan
-  * to sink. The only extra actions are the tiny aggregate jobs the
-  * reference also ran: latest-partition lookup and (policy=fail) the
-  * null-count pass. At 100 TB this plan moves each row exactly once,
-  * through whole-stage-codegen'd projections, with scan pruning handled
-  * by Catalyst.
+  * to sink. The only extra actions are the source's schema inference,
+  * the latest-partition probe (the partition is chosen from the file
+  * index; one pruned `limit(1)` confirms it holds a row) and
+  * (policy=fail) the null-count pass. At 100 TB this plan moves each
+  * row exactly once, through whole-stage-codegen'd projections, with
+  * scan pruning handled by Catalyst.
   */
 class Migrator(source: Source, sink: Sink,
     progressOut: String => Unit = m => Console.err.println(m)) {

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 
 import graft.model.SourceColumn
 
@@ -32,22 +34,23 @@ class SourceReader(spark: SparkSession, baseDir: String,
     * directory).
     */
   override def table(name: String): DataFrame = {
-    val flat = s"$baseDir/$name.$format"
-    val dir = s"$baseDir/$name"
-    val path = if (exists(flat)) flat else dir
     // parquet TIMESTAMP(NANOS) columns: read as raw nanos, truncate to
     // micros at ingest (Spark's timestamp precision) — see Tables.read
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.Tables.normalize(
-      spark.read.options(readOptions).format(format).load(path))
+      spark.read.options(readOptions).format(format).load(path(name)))
+  }
+
+  private def path(name: String): String = {
+    val flat = s"$baseDir/$name.$format"
+    if (exists(flat)) flat else s"$baseDir/$name"
   }
 
   private def exists(p: String): Boolean =
     new java.io.File(p).exists() ||
-      org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(p))
+      FileSystem.get(spark.sparkContext.hadoopConfiguration).exists(new Path(p))
 
-  /** S5: catalog schema fetch — StructType + hive partition detection. */
+  /** S5: catalog schema fetch — StructType + hive partition columns. */
   override def schemaOf(name: String): Seq[SourceColumn] = {
     val df = table(name)
     val partCols = partitionColumns(name)
@@ -61,13 +64,16 @@ class SourceReader(spark: SparkSession, baseDir: String,
     }.toIndexedSeq
   }
 
-  /** Hive-style partition columns of a directory-backed table (k=v dirs). */
+  /** Hive-style partition columns (`k=v` directories, at every level)
+    * from the partition schema of the same file index [[table]]'s scan
+    * holds. Built from the listing alone: no footer is read, so no Spark
+    * job runs.
+    */
   override def partitionColumns(name: String): Set[String] = {
-    val dir = new java.io.File(s"$baseDir/$name")
-    if (!dir.isDirectory) Set.empty
-    else Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).map(_.getName)
-      .filter(_.contains("=")).map(_.split("=", 2)(0).toLowerCase).toSet
+    val p = path(name)
+    if (!exists(p)) Set.empty
+    else new InMemoryFileIndex(spark, Seq(new Path(p)), readOptions, None)
+      .partitionSchema.fieldNames.map(_.toLowerCase).toSet
   }
 
   /** S7: connection test — can we list the base dir. */

@@ -151,6 +151,25 @@ class MigratorSpec extends SparkSpec {
     assert(!spark.read.parquet(s"$out/events_latest").columns.contains("pt"))
   }
 
+  test("two-level partitioned source: only the latest (pt, region) migrates") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val srcDir = tmpDir("part2-src")
+    spark.range(100).select($"id",
+      when($"id" % 2 === 1, "2024-01-02").otherwise("2024-01-01").as("pt"),
+      element_at(array(lit("a"), lit("b"), lit("c")),
+        ($"id" % 3 + 1).cast("int")).as("region"))
+      .write.partitionBy("pt", "region").parquet(s"$srcDir/ev")
+    val out = tmpDir("part2-out")
+    val m = new Migrator(new SourceReader(spark, srcDir), new ParquetSink(spark, out))
+    val report = m.migrate(MigrationSpec(sourceTable = "ev", destTable = "ev_latest"))
+    // latest is pt=2024-01-02 (odd ids), region=c (id % 3 == 2): id % 6 == 5
+    assert(report.rowsWritten == 16)
+    val dest = spark.read.parquet(s"$out/ev_latest")
+    assert(dest.columns.toSeq == Seq("id"))
+    assert(dest.as[Long].collect().forall(_ % 6 == 5))
+  }
+
   test("writePartitions controls output file count") {
     val out = tmpDir("mig-wp")
     migrator(out).migrate(MigrationSpec(
