@@ -1,26 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: dumps the formatted physical plan of every registered
   * query and flags the scale-relevant properties — parquet filter/column
   * pushdown, broadcast vs shuffle joins, shuffle (Exchange) count, and
-  * whole-stage-codegen coverage. Run:
+  * whole-stage-codegen coverage. It plans in Verify's gate session, so
+  * the broadcast-vs-shuffle counts describe the plans the gates run.
+  * Run:
   *   sbt "runMain graft.ExplainAudit /root/testdata/sf0.001 [outFile]"
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("/tmp/plans.txt")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.gateSession("graft-explain")
 
     val sb = new StringBuilder
     val summary = new StringBuilder

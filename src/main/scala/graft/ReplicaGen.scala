@@ -42,15 +42,7 @@ object ReplicaGen {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS, tablesS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-replica")
     tablesS.split(",").map(_.trim).filter(_.nonEmpty).foreach { t =>
       val base = Tables(spark, src, t)
       val all = replicateAll(spark, t, base, factor)

@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 64m: the ~15MB ngram prefix self-join sits at the default 10MB
-      // AQE broadcast edge and flaps between broadcast and SMJ plans
-      // (measured 2.6s vs 10s run-to-run); plenty of driver room here
-      .config("spark.sql.autoBroadcastJoinThreshold", String.valueOf(64L * 1024 * 1024))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.gateSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // dev aid (mirrors Bench): SPARK_GRAFT_ONLY=q1,q2 restricts the dump
     // for fast single-query oracle iteration; the driver never sets it

@@ -1,7 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 import graft.config.ConfigLoader
 import graft.model._
 import graft.run.Migrator
@@ -40,18 +38,12 @@ object Main {
     def flag(k: String): Boolean =
       cfg.get(k).exists(v => Set("true", "1", "yes").contains(v.toLowerCase))
 
-    val spark = SparkSession.builder()
-      .master(cfg.getOrElse("master", "local[*]"))
-      .appName("graft-migrate")
-      .config("spark.sql.shuffle.partitions",
-        cfg.getOrElse("shuffle_partitions", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      cfg.getOrElse("log_level", "WARN").toUpperCase match {
+    // master and shuffle width are deployment settings, so they come
+    // from the config rather than the local core count
+    val spark = graft.LocalSpark.session("graft-migrate",
+      master = cfg.getOrElse("master", "local[*]"),
+      shufflePartitions = cfg.getOrElse("shuffle_partitions", "32").toInt,
+      logLevel = cfg.getOrElse("log_level", "WARN").toUpperCase match {
         case "WARNING" => "WARN" // reference cli.py:62 spells it WARNING
         case lvl       => lvl
       })

@@ -397,17 +397,11 @@ object Dedup {
     * sidecar ([[Bucketed.writeBucketed]]) that attach/probe sessions
     * self-configure from and refuse to mismatch — the sign-index
     * sidecar contract applied to the text-side index.
-    *
-    * `filesPerBucket` > 1 restores build parallelism for build-heavy
-    * deployments: the one-file-per-bucket write funnels the shingle
-    * explode into ≤ buckets tasks (measured 6× build wall at 450k docs,
-    * BASELINE.md round-11); m files per bucket runs m× the write tasks
-    * while reads stay Exchange-free ([[Bucketed.writeBucketed]]).
     */
   def writeNgramIndexBucketed(corpus: DataFrame, tablePrefix: String,
       idCol: String, textCol: String, n: Int = 3,
       threshold: Double = 0.5, buckets: Int = 0,
-      filesPerBucket: Int = 1, knownCount: Long = -1L): Unit = {
+      knownCount: Long = -1L): Unit = {
     val b =
       if (buckets > 0) buckets
       else Tune.scaledBuckets(
@@ -418,18 +412,17 @@ object Dedup {
     // one tokenize + one df aggregate per build, not three/two — see
     // persistIndexFrames; the three table writes then run as CONCURRENT
     // jobs over the pinned frames (awaitAll — each write alone funnels
-    // into ≤ m·buckets tasks, so overlapping them is what keeps the
+    // into ≤ buckets tasks, so overlapping them is what keeps the
     // cluster busy through the per-write task tails)
     persistIndexFrames(dfC, shC)
     try {
       materializeIndexFrames(dfC)
       awaitAll(Seq(
-        () => Bucketed.writeBucketed(dfC, s"${tablePrefix}_df", "h", b,
-          filesPerBucket),
+        () => Bucketed.writeBucketed(dfC, s"${tablePrefix}_df", "h", b),
         () => Bucketed.writeBucketed(prefix, s"${tablePrefix}_prefix", "h",
-          b, filesPerBucket),
+          b),
         () => Bucketed.writeBucketed(shC, s"${tablePrefix}_shingles", "id",
-          b, filesPerBucket)))
+          b)))
     } finally unpersistIndexFrames(dfC, shC)
     // a FRESH flat build resets the prefix to generation zero: a stale
     // version pointer from an earlier compaction would silently shadow

@@ -228,13 +228,13 @@ object Multimodal {
     writePhashIndexSigs(perceptualSig(media), table, buckets, bands)
 
   /** [[writePhashIndex]] from an already-computed (media_id, phash)
-    * frame — the seam KernelScaleBench uses to measure the index
-    * machinery at 100M signatures without staging 100M payloads.
-    * `kernel` names the signature function the sigs came from; probes
-    * declaring a different kernel are refused (an asset-level probe
-    * against a frame-level index shares the key SHAPE but none of the
-    * semantics — it would "work" and mean nothing). */
-  private[graft] def writePhashIndexSigs(sigs: DataFrame, table: String,
+    * frame, which is also how [[writeVideoFrameIndex]] writes its
+    * per-frame signatures. `kernel` names the signature function the
+    * sigs came from; probes declaring a different kernel are refused
+    * (an asset-level probe against a frame-level index shares the key
+    * SHAPE but none of the semantics — it would "work" and mean
+    * nothing). */
+  private def writePhashIndexSigs(sigs: DataFrame, table: String,
       buckets: Int, bands: Int, kernel: String = PhashKernel): Unit = {
     Bucketed.writeBucketed(
       bandedKeys(sigs, bands), table, "key", buckets)
@@ -324,18 +324,10 @@ object Multimodal {
     */
   def probePhashIndex(spark: SparkSession, table: String,
       batch: DataFrame, maxDist: Int, bands: Int = 0,
-      maxKeyLiterals: Int = 1024): DataFrame =
-    probePhashIndexSigs(spark, table, perceptualSig(batch), maxDist,
-      bands, maxKeyLiterals)
-
-  /** [[probePhashIndex]] from an already-computed (media_id, phash)
-    * batch frame (the KernelScaleBench seam, and the reuse path when a
-    * caller already holds signatures). */
-  private[graft] def probePhashIndexSigs(spark: SparkSession,
-      table: String, batchSigs: DataFrame, maxDist: Int,
-      bands: Int = 0, maxKeyLiterals: Int = 1024): DataFrame = {
+      maxKeyLiterals: Int = 1024): DataFrame = {
     require(maxDist >= 0 && maxDist <= 64, s"maxDist: $maxDist")
-    probeJoin(spark, table, batchSigs, bands, maxKeyLiterals, PhashKernel)
+    probeJoin(spark, table, perceptualSig(batch), bands, maxKeyLiterals,
+        PhashKernel)
       .select(col("q_id").as("media_id"),
         col("media_id").as("dup_of"),
         bit_count(col("q_phash").bitwiseXOR(col("phash")))

@@ -166,16 +166,4 @@ object Tune {
     val derived = math.ceil(rows.toDouble / RowsPerSortBucket.toDouble)
     math.max(floor, math.min(derived, 1000003.0).toInt)
   }
-
-  /** On-disk bytes of a parquet table path (a single file or a
-    * directory of part files) — plain java.io so it can run BEFORE the
-    * SparkSession exists, which is when shuffle.partitions must be set.
-    */
-  def parquetBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0L
-      else f.length()
-    walk(new java.io.File(path))
-  }
 }

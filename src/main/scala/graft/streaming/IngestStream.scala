@@ -256,9 +256,7 @@ object IngestStream {
     *     ([[Dedup.writeNgramIndexBucketed]] auto mode) unless pinned;
     *     `corpusCount` ≥ 0 skips that sizing count job — the rebuild
     *     then pays ONE cheap parquet-footer count over the archives
-    *     instead of re-scanning the corpus it just materialized.
-    *     An explicit `newIndexPrefix` builds there instead, unversioned
-    *     (caller-managed layout, no pointer);
+    *     instead of re-scanning the corpus it just materialized;
     *  3. remove the `batch=` dirs, so [[accepted]] and the stage-3
     *     probe restart empty. A crash between 2 and 3 leaves both
     *     defenses active (index AND accepted set catch the same dups) —
@@ -272,8 +270,8 @@ object IngestStream {
   def compact(spark: SparkSession, corpus: DataFrame,
       indexTablePrefix: String, outDir: String,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
-      threshold: Double = 0.5, buckets: Int = 0, filesPerBucket: Int = 1,
-      newIndexPrefix: String = "", corpusCount: Long = -1L): Long = {
+      threshold: Double = 0.5, buckets: Int = 0,
+      corpusCount: Long = -1L): Long = {
     val dirs = batchDirs(spark, outDir)
     if (dirs.isEmpty) return -1L
     val maxId = dirs.map(_._1).max
@@ -287,15 +285,11 @@ object IngestStream {
     val root = graft.operators.IndexVersions.tableRoot(spark,
       indexTablePrefix)
     val next = graft.operators.IndexVersions.nextVersion(spark, root)
-    val target =
-      if (newIndexPrefix.nonEmpty) newIndexPrefix
-      else graft.operators.IndexVersions.versionPrefix(indexTablePrefix, next)
     Dedup.writeNgramIndexBucketed(
       corpus.select(col(idCol), col(textCol)).unionByName(archived),
-      target, idCol, textCol, n, threshold, buckets, filesPerBucket,
-      knownCount = known)
-    if (newIndexPrefix.isEmpty)
-      graft.operators.IndexVersions.commit(spark, root, next)
+      graft.operators.IndexVersions.versionPrefix(indexTablePrefix, next),
+      idCol, textCol, n, threshold, buckets, knownCount = known)
+    graft.operators.IndexVersions.commit(spark, root, next)
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     dirs.foreach { case (_, p) =>

@@ -199,8 +199,8 @@ class PipelineSpec extends SparkSpec {
 
   test("occupancy-scaled banding: plane policy matches the measured " +
       "decades; auto operator == fixed operator at the chosen planes") {
-    // the AnnScaleBench occupancy-held configuration (BASELINE.md round-9
-    // decades: 2k/20k/200k vectors → 7/10/13 planes) is this policy
+    // the occupancy-held configuration of BASELINE.md's round-9 ANN
+    // decades (2k/20k/200k vectors → 7/10/13 planes) is this policy
     assert(Dedup.scaledPlanes(2000) === 7)
     assert(Dedup.scaledPlanes(20000) === 10)
     assert(Dedup.scaledPlanes(200000) === 13)

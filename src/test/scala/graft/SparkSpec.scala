@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM-wide session). */
+/** Shared local SparkSession for all suites (one JVM-wide session).
+  * Fixed at 4 cores and 4 shuffle partitions whatever the host, so job
+  * and task counts asserted by the specs do not move. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // testdata contract: events.ts has drifted to TIMESTAMP(NANOS) in
-    // past rounds; set at build time so Tables.read never mutates conf
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSpark.session("graft-test",
+    master = "local[4]", shufflePartitions = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -216,6 +216,174 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch && batch.nonEmpty)
   }
 
+  /** Write `df` as the single parquet file `<dir>/b<k>.parquet`, dated
+    * `ageMin` minutes ago: the file source picks files up oldest first,
+    * so ages fix the micro-batch order. */
+  private def writeArrivalFile(df: org.apache.spark.sql.DataFrame,
+      dir: String, k: Int, ageMin: Int): Unit = {
+    val tmp = s"$dir/tmp$k"
+    df.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val dst = new java.io.File(f"$dir/b$k%02d.parquet")
+    assert(part.renameTo(dst))
+    assert(dst.setLastModified(System.currentTimeMillis() - ageMin * 60000L))
+    new java.io.File(tmp).listFiles().foreach(_.delete())
+    new java.io.File(tmp).delete(): Unit
+  }
+
+  /** The events split into `n` equal time ranges, one file each,
+    * delivered one range per micro-batch (`maxFilesPerTrigger` 1) in
+    * event-time order, the shape a log shipper delivers. */
+  private def chronologicalEventFiles(n: Int): String = {
+    import org.apache.spark.sql.functions.{floor, least, min}
+    val dir = tmpDir("stream-chrono")
+    val us = unix_micros($"ts")
+    val b = batchEvents.agg(min(us), max(us)).head()
+    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    val bucket = least(lit(n - 1),
+      floor((us - lo).cast("double") / ((hi - lo).toDouble / n)).cast("int"))
+    (0 until n).foreach { k =>
+      writeArrivalFile(batchEvents.filter(bucket === k), dir, k, n - k)
+    }
+    dir
+  }
+
+  test("micro-batched chronological delivery: stateful sessionization " +
+      "and payload dedup (retain-all watermark), click→purchase join " +
+      "and append-mode windowed aggs (2 h watermark) == batch") {
+    import org.apache.spark.sql.functions.col
+    val dir = chronologicalEventFiles(5)
+    def stream() = {
+      val schema = spark.read.parquet(dir).schema
+      Tables.normalize(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(dir))
+    }
+    def runAppend(df: org.apache.spark.sql.DataFrame, name: String)
+        : org.apache.spark.sql.DataFrame = {
+      val q = df.writeStream.outputMode("append")
+        .format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      q.processAllAvailable()
+      q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 5,
+        s"$name: one micro-batch per file")
+      spark.table(name)
+    }
+
+    // sessionization: the latest update per user (batches apply in
+    // order on the driver) is the batch gaps-and-islands result
+    val latest = scala.collection.mutable.Map.empty[Long, (Long, Long)]
+    val sq = EventStreams.sessionizeStateful(
+        stream().as[EventStreams.Event], gapSeconds = 1800L,
+        watermark = "3650 days")
+      .writeStream.outputMode("update")
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[EventStreams.UserSessions],
+          _: Long) =>
+        b.collect().foreach(s => latest(s.user_id) = (s.n_events, s.n_sessions))
+      }
+      .trigger(Trigger.AvailableNow()).start()
+    sq.processAllAvailable()
+    sq.stop()
+    val sessions = EventStreams.sessionizeBatch(batchEvents, 1800L).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(latest.toMap === sessions && sessions.nonEmpty)
+
+    // payload dedup: the emitted fingerprints are exactly the batch's,
+    // each emitted once
+    val fps = runAppend(EventStreams.dedupStream(stream(),
+      watermark = "3650 days"), "chrono_dedup").select($"fp")
+    val batchFps = EventStreams.dedupStream(batchEvents).select($"fp")
+    assert(fps.count() === batchFps.count())
+    assert(fps.exceptAll(batchFps).isEmpty && batchFps.exceptAll(fps).isEmpty)
+
+    // click→purchase join at the production watermark: in-order
+    // delivery means no event is late, so nothing is lost to eviction
+    val joined = runAppend(EventStreams.attributePurchases(stream()),
+      "chrono_join").collect().map(_.toSeq).toSet
+    val batchJoined = EventStreams.attributePurchases(batchEvents)
+      .collect().map(_.toSeq).toSet
+    assert(joined === batchJoined && batchJoined.nonEmpty)
+
+    // windowed aggs: append mode emits each window once, when the
+    // watermark passes its end, so the emitted rows equal the batch
+    // aggregate over every window up to the last one emitted
+    Seq(("chrono_hourly", "hour_start",
+        (e: org.apache.spark.sql.DataFrame) => EventStreams.hourlyAgg(e)),
+      ("chrono_sliding", "win_start",
+        (e: org.apache.spark.sql.DataFrame) => EventStreams.slidingAgg(e)))
+      .foreach { case (name, start, agg) =>
+        val emitted = runAppend(agg(stream()), name)
+        val cutoff = emitted.agg(max(col(start))).head().getTimestamp(0)
+        assert(cutoff != null, s"$name emitted nothing")
+        val closed = agg(batchEvents).filter(col(start) <= lit(cutoff))
+        assert(emitted.exceptAll(closed).isEmpty &&
+          closed.exceptAll(emitted).isEmpty, s"$name != batch")
+      }
+  }
+
+  test("shard appender under the real engine: micro-batches append, a " +
+      "mid-stream compaction folds the tail, the resumed stream appends " +
+      "above it; manifest == corpus by totals, raw read, manifest-" +
+      "directed read and per-shard disk aggregate") {
+    import graft.operators.Shards
+    import org.apache.spark.sql.functions.{col, count, length, sum}
+    val docs = Tables(spark, sf001, "documents").select($"doc_id", $"text")
+    val corpus = docs.filter(pmod($"doc_id", lit(10)) =!= 0)
+    val arrivals = docs.filter(pmod($"doc_id", lit(10)) === 0)
+    val totalMass = docs.agg(sum(length($"text"))).head().getLong(0)
+    // ten target shards over the whole corpus: each arrival slice is
+    // ~1/40 of it, so every append leaves a shard under half the target
+    val shardMass = totalMass / 10
+    val shardDir = tmpDir("stream-shards")
+    Shards.writeShards(corpus, shardDir, "doc_id", length($"text"),
+      shardMass, buckets = 4): Unit
+    val src = tmpDir("stream-shards-src")
+    val ckpt = tmpDir("stream-shards-ckpt")
+    def stage(slices: Range): Unit = slices.foreach { i =>
+      writeArrivalFile(
+        arrivals.filter(pmod(($"doc_id" / 10).cast("long"), lit(4)) === i),
+        src, i, 4 - i)
+    }
+    def runWave(): Unit = {
+      val q = spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1).parquet(src)
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          Shards.appendShards(b, shardDir, "doc_id", length(col("text")),
+            shardMass, buckets = 4): Unit
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    def smallShards() = Shards.readManifest(spark, shardDir)
+      .filter($"mass" < shardMass / 2).count()
+
+    stage(0 until 2)
+    runWave()
+    val tailBefore = smallShards()
+    assert(tailBefore >= 2, s"appends must leave small shards: $tailBefore")
+    Shards.compactShards(spark, shardDir, "doc_id", shardMass,
+      buckets = 4): Unit
+    assert(smallShards() < tailBefore, "compaction must fold the tail")
+    stage(2 until 4)
+    runWave()
+
+    val man = Shards.readManifest(spark, shardDir).localCheckpoint(true)
+    val tots = man.agg(sum($"docs"), sum($"mass")).head()
+    assert(tots.getLong(0) === docs.count())
+    assert(tots.getLong(1) === totalMass)
+    assert(spark.read.parquet(shardDir).count() === docs.count())
+    assert(Shards.readCorpus(spark, shardDir).count() === docs.count())
+    val disk = spark.read.parquet(shardDir)
+      .groupBy($"shard".cast("long").as("shard"))
+      .agg(count(lit(1)).as("docs"), sum($"doc_mass").as("mass"))
+    val manRows = man.select($"shard", $"docs", $"mass")
+    assert(disk.exceptAll(manRows).isEmpty && manRows.exceptAll(disk).isEmpty,
+      "manifest must describe exactly what is on disk")
+  }
+
   private def arrivalBatch(i: Int) =
     batchEvents.filter(pmod($"event_id", lit(3)) === i)
 
