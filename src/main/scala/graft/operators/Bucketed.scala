@@ -75,19 +75,11 @@ object Bucketed {
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-    writeBucketSidecar(spark, loc, buckets, key)
+    IndexVersions.writeText(spark, loc.toString, BucketMetaFile,
+      s"""{"buckets":$buckets,"key":"$key"}""")
   }
 
   private val BucketMetaFile = "_graft_buckets.json"
-
-  private def writeBucketSidecar(spark: SparkSession,
-      loc: org.apache.hadoop.fs.Path, buckets: Int, key: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(loc, BucketMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(s"""{"buckets":$buckets,"key":"$key"}""".getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** The (buckets, key) a [[writeBucketed]] table was written with, from
     * its sidecar — None when the directory is missing or pre-sidecar. */
@@ -95,15 +87,10 @@ object Bucketed {
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     val loc = new org.apache.hadoop.fs.Path(
       spark.sessionState.catalog.defaultTablePath(ident))
-    val p = new org.apache.hadoop.fs.Path(loc, BucketMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val re = """"buckets":(\d+),"key":"([^"]*)"""".r
-      re.findFirstMatchIn(txt).map(m => (m.group(1).toInt, m.group(2)))
+    IndexVersions.readText(spark, loc.toString, BucketMetaFile).flatMap {
+      txt =>
+        val re = """"buckets":(\d+),"key":"([^"]*)"""".r
+        re.findFirstMatchIn(txt).map(m => (m.group(1).toInt, m.group(2)))
     }
   }
 

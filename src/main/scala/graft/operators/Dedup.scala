@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -299,7 +299,7 @@ object Dedup {
     persistIndexFrames(dfC, shC)
     try {
       materializeIndexFrames(dfC)
-      awaitAll(Seq(
+      awaitAll(corpus.sparkSession, Seq(
         () => dfC.write.mode("overwrite").parquet(s"$path/df"),
         () => prefix.repartition(col("h"))
           .write.mode("overwrite").parquet(s"$path/prefix"),
@@ -321,22 +321,37 @@ object Dedup {
     * overlap independent jobs): Spark schedules concurrent jobs FIFO,
     * so a later write's tasks back-fill executor slots as the earlier
     * write's task tail drains instead of leaving the cluster idle
-    * behind each write barrier. The first failure propagates. */
-  private def awaitAll(jobs: Seq[() => Unit]): Unit = {
+    * behind each write barrier. Every job runs under one job tag: the
+    * FIRST failure (in completion order) cancels the tag, so sibling
+    * writes stop instead of writing on after the caller has seen the
+    * error; a sibling not yet started is skipped. Returns or rethrows
+    * only after every job has ended. */
+  private[graft] def awaitAll(spark: SparkSession,
+      jobs: Seq[() => Unit]): Unit = {
     if (jobs.lengthCompare(1) <= 0) { jobs.foreach(_.apply()); return }
+    val sc = spark.sparkContext
+    val tag = s"graft-await-${java.util.UUID.randomUUID()}"
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.length)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
     try {
-      val futs = jobs.map(j =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = j()
-        }))
-      futs.foreach { f =>
-        try f.get()
+      jobs.foreach(j => done.submit(() => if (!failed.get()) {
+        sc.addJobTag(tag)
+        try j() finally sc.removeJobTag(tag)
+      }))
+      var first: Option[Throwable] = None
+      jobs.foreach { _ =>
+        try done.take().get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
+            if (first.isEmpty) {
+              first = Some(e.getCause)
+              failed.set(true)
+              sc.cancelJobsWithTag(tag, "a sibling write failed")
+            }
         }
       }
+      first.foreach(e => throw e)
     } finally pool.shutdownNow(): Unit
   }
 
@@ -417,7 +432,7 @@ object Dedup {
     persistIndexFrames(dfC, shC)
     try {
       materializeIndexFrames(dfC)
-      awaitAll(Seq(
+      awaitAll(corpus.sparkSession, Seq(
         () => Bucketed.writeBucketed(dfC, s"${tablePrefix}_df", "h", b),
         () => Bucketed.writeBucketed(prefix, s"${tablePrefix}_prefix", "h",
           b),

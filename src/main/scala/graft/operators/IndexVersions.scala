@@ -47,19 +47,85 @@ object IndexVersions {
   private def hadoopConf(spark: SparkSession) =
     spark.sparkContext.hadoopConfiguration
 
-  /** The monotonic commit markers at `rootDir` (see class doc), as
-    * versions. `.tmpN` leftovers from a crashed rename are not
-    * markers. */
-  private def markerVersions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Int] = {
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toIndexedSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(s"$PointerFile.v") &&
-        n.stripPrefix(s"$PointerFile.v").nonEmpty &&
-        n.stripPrefix(s"$PointerFile.v").forall(_.isDigit))
-      .map(_.stripPrefix(s"$PointerFile.v").toInt)
+  /** Write `text` (UTF-8) as `dir/file` — the one writer of graft's
+    * small text artifacts (sidecars, pointers, manifests). With
+    * `overwrite = false` the create fails when the file exists: a
+    * create-if-absent record. */
+  private[graft] def writeText(spark: SparkSession, dir: String,
+      file: String, text: String, overwrite: Boolean = true): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, file)
+    val out = p.getFileSystem(hadoopConf(spark)).create(p, overwrite)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
+
+  /** The UTF-8 text of `dir/file`, or None when the file is absent. */
+  private[graft] def readText(spark: SparkSession, dir: String,
+      file: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir, file)
+    val fs = p.getFileSystem(hadoopConf(spark))
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    }
+  }
+
+  /** Commit `lines` as `file` of the next generation under `rootDir`
+    * (version dir beside the previous one, pointer flip LAST, then
+    * retention of current + one rollback target) — the bounded text
+    * manifests (segment lists, shard tables) are written, read and
+    * committed driver-side with no Spark job. */
+  private[graft] def commitLines(spark: SparkSession, rootDir: String,
+      file: String, lines: Seq[String]): Unit = {
+    val v = nextVersion(spark, rootDir)
+    writeText(spark, versionDir(rootDir, v), file,
+      lines.mkString("", "\n", "\n"))
+    commit(spark, rootDir, v)
+    dropOldPathVersions(spark, rootDir, keepPrevious = 1): Unit
+  }
+
+  /** The non-blank lines of `file` in the committed generation under
+    * `rootDir` — None when that generation has no such file. */
+  private[graft] def committedLines(spark: SparkSession, rootDir: String,
+      file: String): Option[Seq[String]] =
+    readText(spark, resolvePath(spark, rootDir), file).map(
+      _.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq)
+
+  /** Test seam: called with the name of each commit step a segmented
+    * index ([[SegmentedIndex]]) or shard layout ([[Shards]]) mutation
+    * completes. A crash spec throws from it to leave the on-disk state
+    * of a crash right after that step. */
+  @volatile private[graft] var afterStep: String => Unit = _ => ()
+
+  /** The numbers N of the entries named `<prefix>N` directly under
+    * `dir` (none when `dir` is absent) — one listing, no data read. */
+  private[graft] def numbered(spark: SparkSession, dir: String,
+      prefix: String): Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(hadoopConf(spark))
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toIndexedSeq.map(_.getPath.getName)
+      .filter(n => n.startsWith(prefix) && n.length > prefix.length &&
+        n.drop(prefix.length).forall(_.isDigit))
+      .map(_.drop(prefix.length).toLong)
+  }
+
+  /** Delete (recursively) the `<prefix>N` entries under `dir` whose N
+    * satisfies `drop`; returns the deleted numbers. */
+  private[graft] def deleteNumbered(spark: SparkSession, dir: String,
+      prefix: String, drop: Long => Boolean): Seq[Long] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(hadoopConf(spark))
+    numbered(spark, dir, prefix).filter(drop).map { n =>
+      fs.delete(new org.apache.hadoop.fs.Path(dir, s"$prefix$n"), true)
+      n
+    }
+  }
+
+  /** Name prefix of the monotonic commit markers (see class doc);
+    * `.tmpN` leftovers from a crashed rename are not markers. */
+  private val Marker = s"$PointerFile.v"
 
   /** The committed version at `rootDir`, or None for a legacy flat
     * layout (or nothing at all). Resolves to the max of the pointer
@@ -68,20 +134,13 @@ object IndexVersions {
     * absent) still lands on the committed version, never on
     * generation zero. */
   def currentVersion(spark: SparkSession, rootDir: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(rootDir, PointerFile)
-    val fs = p.getFileSystem(hadoopConf(spark))
-    val fromPointer =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val t = txt.trim
-        require(t.nonEmpty && t.forall(_.isDigit),
-          s"corrupt index pointer at $p: '$txt'")
-        Some(t.toInt)
-      }
-    val fromMarkers = markerVersions(fs, p.getParent).maxOption
+    val fromPointer = readText(spark, rootDir, PointerFile).map { txt =>
+      val t = txt.trim
+      require(t.nonEmpty && t.forall(_.isDigit),
+        s"corrupt index pointer at $rootDir/$PointerFile: '$txt'")
+      t.toInt
+    }
+    val fromMarkers = numbered(spark, rootDir, Marker).map(_.toInt).maxOption
     (fromPointer ++ fromMarkers).maxOption
   }
 
@@ -131,23 +190,14 @@ object IndexVersions {
     */
   def commit(spark: SparkSession, rootDir: String, v: Int): Unit = {
     val root = new org.apache.hadoop.fs.Path(rootDir)
-    val fs = root.getFileSystem(hadoopConf(spark))
-    fs.mkdirs(root)
-    val marker = new org.apache.hadoop.fs.Path(root, s"$PointerFile.v$v")
-    val mout = fs.create(marker, true)
-    try mout.write(v.toString.getBytes("UTF-8")) finally mout.close()
+    writeText(spark, rootDir, s"$Marker$v", v.toString)
     val tmp = new org.apache.hadoop.fs.Path(root, s"$PointerFile.tmp$v")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+    writeText(spark, rootDir, tmp.getName, v.toString)
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       root.toUri, hadoopConf(spark))
     fc.rename(tmp, new org.apache.hadoop.fs.Path(root, PointerFile),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    markerVersions(fs, root).filter(_ < v).foreach { old =>
-      fs.delete(
-        new org.apache.hadoop.fs.Path(root, s"$PointerFile.v$old"),
-        false): Unit
-    }
+    deleteNumbered(spark, rootDir, Marker, _ < v): Unit
   }
 
   /** Roll the committed version back to `v` (a previous, still-retained
@@ -160,12 +210,7 @@ object IndexVersions {
     */
   def rollbackTo(spark: SparkSession, rootDir: String, v: Int): Unit = {
     require(v >= 0, s"version: $v")
-    val root = new org.apache.hadoop.fs.Path(rootDir)
-    val fs = root.getFileSystem(hadoopConf(spark))
-    markerVersions(fs, root).filter(_ > v).foreach { m =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"$PointerFile.v$m"),
-        false): Unit
-    }
+    deleteNumbered(spark, rootDir, Marker, _ > v)
     if (v == 0) clearPointer(spark, rootDir)
     else commit(spark, rootDir, v)
   }
@@ -181,11 +226,7 @@ object IndexVersions {
     val p = new org.apache.hadoop.fs.Path(rootDir, PointerFile)
     val fs = p.getFileSystem(hadoopConf(spark))
     if (fs.exists(p)) fs.delete(p, false): Unit
-    markerVersions(fs, p.getParent).foreach { m =>
-      fs.delete(
-        new org.apache.hadoop.fs.Path(p.getParent, s"$PointerFile.v$m"),
-        false): Unit
-    }
+    deleteNumbered(spark, rootDir, Marker, _ => true): Unit
   }
 
   /** Retention for a PATH-rooted index: delete every version older than
@@ -193,11 +234,13 @@ object IndexVersions {
     * one rollback target). Generation zero (the legacy flat files at
     * the root) counts as version 0 and is removed by the same rule —
     * its data children are the non-hidden entries beside the version
-    * dirs. Refuses to run when no version is committed (there would be
-    * nothing newer than the flat layout). Returns what it deleted.
+    * dirs, except the names in `keep` (entries every generation shares,
+    * such as a segmented index's `segments` dir). Refuses to run when no
+    * version is committed (there would be nothing newer than the flat
+    * layout). Returns what it deleted.
     */
   def dropOldPathVersions(spark: SparkSession, rootDir: String,
-      keepPrevious: Int = 1): Seq[String] = {
+      keepPrevious: Int = 1, keep: Set[String] = Set.empty): Seq[String] = {
     require(keepPrevious >= 0, s"keepPrevious: $keepPrevious")
     val cur = currentVersion(spark, rootDir).getOrElse(
       throw new IllegalArgumentException(
@@ -216,7 +259,7 @@ object IndexVersions {
           deleted += st.getPath.toString
         }
       } else if (name != PointerFile && !name.startsWith("_") &&
-          !name.startsWith(".") && floor > 0) {
+          !name.startsWith(".") && !keep(name) && floor > 0) {
         // generation-zero data (bucket=* dirs / flat part files)
         fs.delete(st.getPath, true)
         deleted += st.getPath.toString

@@ -239,13 +239,8 @@ object Multimodal {
     Bucketed.writeBucketed(
       bandedKeys(sigs, bands), table, "key", buckets)
     val spark = sigs.sparkSession
-    val p = new org.apache.hadoop.fs.Path(tableLocation(spark, table),
-      PhashMetaFile)
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, true)
-    try out.write(
-      s"""{"bands":$bands,"kernel":"$kernel"}""".getBytes("UTF-8"))
-    finally out.close()
+    IndexVersions.writeText(spark, tableLocation(spark, table).toString,
+      PhashMetaFile, s"""{"bands":$bands,"kernel":"$kernel"}""")
     // a FRESH flat build resets the index to generation zero: a stale
     // version pointer from an earlier compaction would silently shadow
     // the table just written. Cleared LAST — while the write is in
@@ -287,20 +282,13 @@ object Multimodal {
     * [[IndexVersions]] pointer to the committed generation's sidecar,
     * same as the sign-index meta lookup. */
   def phashIndexMeta(spark: SparkSession,
-      table: String): Option[(Int, String)] = {
-    val p = new org.apache.hadoop.fs.Path(
-      tableLocation(spark, resolvePhashTable(spark, table)),
-      PhashMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      table: String): Option[(Int, String)] =
+    IndexVersions.readText(spark,
+        tableLocation(spark, resolvePhashTable(spark, table)).toString,
+        PhashMetaFile).flatMap { txt =>
       val re = """"bands":(\d+),"kernel":"([^"]*)"""".r
       re.findFirstMatchIn(txt).map(m => (m.group(1).toInt, m.group(2)))
     }
-  }
 
   /** Probe a [[writePhashIndex]] layout with an arriving batch: every
     * (batch, corpus) pair sharing a band within `maxDist` Hamming —

@@ -1,0 +1,425 @@
+package graft.operators
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.functions.VectorFunctions
+
+/** The lifecycle both persisted cell-partitioned vector indexes share
+  * ([[IvfIndex]]: raw vectors, [[IvfPqIndex]]: residual PQ codes). An
+  * index supplies only its payload — what a corpus or arrival row is
+  * stored as, and how a compaction rebuilds the base; everything else
+  * lives here once:
+  *
+  *  - the coarse quantizer: a bounded deterministic k-means fit, the
+  *    narrow nearest-cell assignment kernel every build, arrival, drift
+  *    and probe shares, and the exact squared-L2 quantization error;
+  *  - the sidecar (`nlist`, `dims`, the index's own integer params,
+  *    `seed`, `kernel`, `build_mse`, `segs_upto`), written as JSON and
+  *    read back with the kernel and dims checks;
+  *  - the base generation: `<root>/_ixvN/{centroids, <leg>/cell=K/}`
+  *    committed through the [[IndexVersions]] pointer (sidecar → flip →
+  *    retention of current + one rollback target);
+  *  - the segments (the ingest path): an append assigns an arrival batch
+  *    under the FROZEN committed centroids, writes it as
+  *    `<root>/segments/segN/cell=K/` and commits the segment manifest
+  *    (`segs.txt` under `<root>/_graft_segs`, its own pointer); probes
+  *    read base ∪ live segments with the same cell prune on every leg;
+  *  - the crash contract: a segment dir without a manifest row is
+  *    invisible (crashed append); a manifest row ≤ the base sidecar's
+  *    `segs_upto` is ignored (compaction flipped the base, prune
+  *    interrupted); the next mutation heals both. Compaction commits in
+  *    the order base flip → manifest prune → heal, so every crash window
+  *    keeps probes exact. Arrival ids must be new — probes do not dedup.
+  */
+private[graft] object SegmentedIndex {
+
+  /** What distinguishes one index kind on disk: its sidecar file, its
+    * kernel tag (a sidecar with another kernel is refused — same layout
+    * shape, none of the semantics), its name in messages, the payload
+    * leg's directory name, and the names of its integer params (written
+    * between `dims` and `seed`). */
+  case class Layout(metaFile: String, kernel: String, name: String,
+      leg: String, params: Seq[String] = Nil)
+
+  /** The committed sidecar. `params` holds the layout's own integer
+    * params in the layout's order. */
+  case class Meta(nlist: Int, dims: Int, seed: Long, buildMse: Double,
+      segsUpto: Long = 0L, params: Seq[(String, Int)] = Nil) {
+    def param(name: String): Int = params.collectFirst {
+      case (`name`, v) => v
+    }.getOrElse(throw new NoSuchElementException(s"sidecar param $name"))
+  }
+
+  private def writeMeta(spark: SparkSession, dir: String, layout: Layout,
+      m: Meta): Unit = {
+    val fields = Seq("nlist" -> m.nlist.toString, "dims" -> m.dims.toString) ++
+      m.params.map { case (k, v) => k -> v.toString } ++
+      Seq("seed" -> m.seed.toString, "kernel" -> s""""${layout.kernel}"""",
+        "build_mse" -> m.buildMse.toString,
+        "segs_upto" -> m.segsUpto.toString)
+    IndexVersions.writeText(spark, dir, layout.metaFile,
+      fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
+  }
+
+  /** Sidecar of the COMMITTED generation — None when the resolved
+    * generation has none (not an index of this kind). A kernel mismatch
+    * refuses. Sidecars written before segments parse with
+    * `segs_upto` = 0. */
+  def metaFull(spark: SparkSession, path: String,
+      layout: Layout): Option[Meta] =
+    IndexVersions.readText(spark, IndexVersions.resolvePath(spark, path),
+        layout.metaFile).map { txt =>
+      val kv = """"(\w+)":("[^"]*"|[^,}]*)""".r.findAllMatchIn(txt)
+        .map(g => g.group(1) -> g.group(2).stripPrefix("\"")
+          .stripSuffix("\"")).toMap
+      def field(k: String): String = kv.getOrElse(k,
+        throw new IllegalArgumentException(
+          s"${layout.metaFile} at $path has no `$k`: $txt"))
+      require(field("kernel") == layout.kernel,
+        s"${layout.name} index at $path was built with kernel " +
+          s"`${field("kernel")}`; this index computes `${layout.kernel}`")
+      Meta(field("nlist").toInt, field("dims").toInt, field("seed").toLong,
+        field("build_mse").toDouble, kv.get("segs_upto").fold(0L)(_.toLong),
+        layout.params.map(k => k -> field(k).toInt))
+    }
+
+  def requireMeta(spark: SparkSession, path: String, layout: Layout,
+      dims: Int): Meta = {
+    val m = metaFull(spark, path, layout).getOrElse(
+      throw new IllegalArgumentException(
+        s"no ${layout.metaFile} under the committed generation of $path " +
+          s"— not an ${layout.name} index"))
+    if (dims > 0) require(m.dims == dims,
+      s"${layout.name} index at $path was built with dims=${m.dims}; " +
+        s"called with dims=$dims")
+    m
+  }
+
+  def readCentroids(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(
+      s"${IndexVersions.resolvePath(spark, path)}/centroids")
+
+  /** Write the (cell, centroid) frame into version dir `dir`. */
+  def writeCentroids(centroids: DataFrame, dir: String): Unit =
+    centroids.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+
+  /** An index's working projection of a corpus or arrival batch:
+    * (id, vec, nvec) with `nvec` the L2-normalized vector. */
+  def arrivals(batch: DataFrame, idCol: String, vecCol: String): DataFrame =
+    batch.select(col(idCol).as("id"), col(vecCol).as("vec"),
+      Embeddings.normalize(col(vecCol)).as("nvec"))
+
+  /** Write an (id, payload, cell) frame as `cell=`-partitioned parquet:
+    * one exchange by cell, then directory-local sequential writes. */
+  def writeCells(df: DataFrame, dir: String): Unit =
+    df.repartition(col("cell"))
+      .write.partitionBy("cell").mode("overwrite").parquet(dir)
+
+  /** Exact squared L2 distance between two float vectors, computed from
+    * three native dot products — the identity ‖a−b‖² = a·a − 2a·b + b·b
+    * keeps every leg inside the codegen'd DotProd kernel. */
+  private def sqDist(a: Column, b: Column): Column =
+    VectorFunctions.dotProduct(a, a) -
+      lit(2.0) * VectorFunctions.dotProduct(a, b) +
+      VectorFunctions.dotProduct(b, b)
+
+  /** Derive nlist: caller's value, or the √n occupancy rule (capped at
+    * 4096); `knownCount` skips the count job. */
+  private def deriveNlist(corpus: DataFrame, idCol: String, nlist: Int,
+      knownCount: Long): Int =
+    if (nlist > 0) nlist
+    else {
+      val n = if (knownCount >= 0) knownCount
+        else corpus.select(col(idCol)).count()
+      math.min(4096, math.max(8, math.sqrt(n.toDouble).toInt))
+    }
+
+  /** Fit the coarse quantizer on a bounded DETERMINISTIC sample of `c`
+    * (id, nvec — see [[IvfIndex.write]]'s fitSamplePerCell doc) and
+    * return the (cell, centroid) frame. */
+  private def fitCentroids(c: DataFrame, cells: Int, seed: Long,
+      fitSamplePerCell: Int): DataFrame = {
+    val spark = c.sparkSession
+    import spark.implicits._
+    val trainCap = math.min(Int.MaxValue.toLong,
+      fitSamplePerCell.toLong * cells).toInt
+    // the id-hash TakeOrderedAndProject bounds the fit input in one
+    // narrow pass; the fit itself runs DRIVER-SIDE (Similarity.lloyd —
+    // seeded k-means++ over a content-ordered re-sample), so a build
+    // schedules NO per-init-round / per-iteration cluster jobs. The
+    // former MLlib fit was ~2–3 s of fixed job overhead per cold build
+    // at sf0.1 and ~94% of the 2M-vector build wall (guide §1.2 / §5
+    // driver rules; BASELINE.md round 16).
+    val trainSet =
+      if (fitSamplePerCell == 0) c
+      else c.orderBy(xxhash64(col("id"))).limit(trainCap)
+    val cents = Similarity.fitQuantizer(trainSet, "nvec", cells, seed)
+    cents.zipWithIndex.map { case (v, i) => (i, v) }
+      .toSeq.toDF("cell", "centroid")
+  }
+
+  /** The (flat row-major matrix, nlist, dims) of a bounded centroid
+    * frame — ≤ nlist ≤ 4096 rows collected driver-side, cells required
+    * contiguous 0..n−1 (the build writes them that way). Shared by the
+    * narrow assignment and probe kernels. */
+  private def centroidMatrix(
+      centroids: DataFrame): (Seq[Float], Int, Int) = {
+    val rows = centroids.select(col("cell"), col("centroid")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1)))
+      .sortBy(_._1)
+    require(rows.nonEmpty, "empty centroid frame")
+    require(rows.head._1 == 0 && rows.last._1 == rows.length - 1,
+      s"centroid cells must be contiguous 0..n-1, got " +
+        s"${rows.head._1}..${rows.last._1} over ${rows.length} rows")
+    val dims = rows.head._2.length
+    (rows.flatMap(_._2).toSeq, rows.length, dims)
+  }
+
+  /** Nearest-cell assignment of `batch` (with an `nvec` column) under
+    * FROZEN `centroids`: the shared build/arrival kernel, as ONE narrow
+    * codegen pass — the centroid matrix (≤ 4096 × dims floats) rides the
+    * plan as a broadcast object ([[graft.functions.NearestCell]]), score
+    * and tie-break (lowest cell id) identical for build and arrival, so
+    * a duplicate of a corpus vector provably lands in its twin's cell.
+    * Adds `cell`. */
+  def assignWith(batch: DataFrame, centroids: DataFrame): DataFrame = {
+    val (flat, nlist, dims) = centroidMatrix(centroids)
+    // null vectors: the former crossJoin + rank assignment dropped them
+    // at its inner join; the kernel's nullSafeEval would instead emit a
+    // null cell, landing the row in the Hive default partition where no
+    // pruned probe can reach it (ADVICE r16) — keep the drop semantics
+    batch.filter(col("nvec").isNotNull)
+      .withColumn("cell",
+        VectorFunctions.nearestCell(col("nvec"), flat, nlist, dims))
+  }
+
+  /** Publish the next base generation: `writeBase` fills the version
+    * dir and returns its sidecar, whose `segs_upto` is replaced here — a
+    * compaction passes the highest live segment it folded in
+    * (`subsumedUpto` ≥ 0); a plain rebuild carries the previous base's
+    * value forward (its segments are still live arrivals it did NOT
+    * fold). Then sidecar → pointer flip → retention. Returns the
+    * committed version. */
+  def publish(spark: SparkSession, path: String, layout: Layout,
+      subsumedUpto: Long)(writeBase: String => Meta): Int = {
+    val v = IndexVersions.nextVersion(spark, path)
+    val dir = IndexVersions.versionDir(path, v)
+    val m = writeBase(dir)
+    val upto =
+      if (subsumedUpto >= 0L) subsumedUpto
+      else metaFull(spark, path, layout).map(_.segsUpto).getOrElse(0L)
+    writeMeta(spark, dir, layout, m.copy(segsUpto = upto))
+    IndexVersions.commit(spark, path, v)
+    // the segment dirs are not generation-zero data: live ones stay
+    // live across a plain rebuild, and folded ones are reclaimed by heal
+    IndexVersions.dropOldPathVersions(spark, path, keepPrevious = 1,
+      keep = Set(SegmentsDir)): Unit
+    v
+  }
+
+  /** Build a base generation over `corpus`: fit the coarse quantizer on
+    * a bounded sample, assign every row through the shared kernel, let
+    * `payload` turn the assigned (id, vec, nvec, cell) rows — given the
+    * centroids and the version dir, where it may write its own
+    * artifacts — into the (id, payload, cell) leg, write the leg and the
+    * centroids, and record the build-time quantization error (mean
+    * ‖nvec − centroid‖², the [[drift]] baseline). */
+  def build(corpus: DataFrame, path: String, layout: Layout, dims: Int,
+      nlist: Int, seed: Long, idCol: String, vecCol: String,
+      knownCount: Long, fitSamplePerCell: Int, subsumedUpto: Long,
+      params: Seq[(String, Int)] = Nil)(
+      payload: (DataFrame, DataFrame, String) => DataFrame): Int = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    require(dims > 0, s"dims: $dims")
+    require(fitSamplePerCell >= 0, s"fitSamplePerCell: $fitSamplePerCell")
+    val cells = deriveNlist(corpus, idCol, nlist, knownCount)
+    val c = arrivals(corpus, idCol, vecCol)
+    val centroids = fitCentroids(c, cells, seed, fitSamplePerCell)
+    publish(spark, path, layout, subsumedUpto) { dir =>
+      // NOT persisted (r17): assignment is a narrow scan+map since the
+      // NearestCell kernel, so the consumers below recompute it cheaper
+      // than a corpus-sized cache materializes, bit-identically
+      val assigned = assignWith(c, centroids)
+      writeCells(payload(assigned, centroids, dir), s"$dir/${layout.leg}")
+      writeCentroids(centroids, dir)
+      val buildMse = assigned
+        .join(broadcast(centroids), Seq("cell"))
+        .select(sqDist(col("nvec"), col("centroid")).as("d2"))
+        .agg(avg(col("d2"))).as[Double].head()
+      Meta(cells, dims, seed, buildMse, params = params)
+    }
+  }
+
+  private val SegmentsDir = "segments"
+
+  private def segsRoot(path: String): String = s"$path/_graft_segs"
+  def segDir(path: String, n: Long): String = s"$path/$SegmentsDir/seg$n"
+
+  private val SegsFile = "segs.txt"
+
+  /** Every segment number the committed manifest lists — INCLUDING
+    * rows a compaction already subsumed but hadn't pruned (callers
+    * filter by the base sidecar's `segs_upto`). Empty before the first
+    * append. A bounded line-per-segment text file read driver-side:
+    * zero Spark jobs per mutation or probe. */
+  def committedSegs(spark: SparkSession, path: String): Seq[Long] =
+    IndexVersions.committedLines(spark, segsRoot(path), SegsFile)
+      .getOrElse(Nil).map(_.toLong).sorted
+
+  private def commitSegs(spark: SparkSession, path: String,
+      segs: Seq[Long]): Unit =
+    IndexVersions.commitLines(spark, segsRoot(path), SegsFile,
+      segs.map(_.toString))
+
+  /** Segment numbers probes must read: committed manifest rows newer
+    * than the committed base's `segs_upto`. */
+  def liveSegs(spark: SparkSession, path: String, layout: Layout): Seq[Long] = {
+    val upto = metaFull(spark, path, layout).map(_.segsUpto).getOrElse(0L)
+    committedSegs(spark, path).filter(_ > upto)
+  }
+
+  /** The probe/compaction read: the base leg ∪ live segments. Every leg
+    * is `cell=`-partitioned, so a probe's bounded IN prune pushes into
+    * each leg's directory listing. */
+  def view(spark: SparkSession, path: String, layout: Layout): DataFrame =
+    legs(spark, path, layout, liveSegs(spark, path, layout))
+
+  private def legs(spark: SparkSession, path: String, layout: Layout,
+      live: Seq[Long]): DataFrame =
+    live.foldLeft(spark.read.parquet(
+        s"${IndexVersions.resolvePath(spark, path)}/${layout.leg}")) {
+      (acc, n) => acc.unionByName(spark.read.parquet(segDir(path, n)))
+    }
+
+  def dirsOnDisk(spark: SparkSession, path: String): Seq[Long] =
+    IndexVersions.numbered(spark, s"$path/$SegmentsDir", "seg")
+
+  /** Delete segment dirs not in `live` — a crashed append's orphan
+    * (written, never committed) or a compaction's subsumed sources
+    * (folded into the base, prune interrupted). Dead by the
+    * manifest/`segs_upto` contract, so removal never changes a probe. */
+  private def heal(spark: SparkSession, path: String,
+      live: Seq[Long]): Unit =
+    IndexVersions.deleteNumbered(spark, s"$path/$SegmentsDir", "seg",
+      n => !live.contains(n)): Unit
+
+  /** Fold an arrival batch in at O(batch) as the next segment: `encode`
+    * turns the assigned (id, vec, nvec, cell) rows — given the frozen
+    * centroids and sidecar — into the (id, payload, cell) segment.
+    * Probes see the batch exactly when the manifest flips. Returns the
+    * segment number, -1 for an empty batch (committed no-op), or -2
+    * when `atSeg` ≥ 0 pins a number a compaction already folded
+    * (≤ `segs_upto`: the rows are already probe-able from the base).
+    *
+    * `atSeg` is the streaming writer's exactly-once hook: a retried
+    * micro-batch re-runs under the SAME number, so the retry overwrites
+    * the same segment dir with identical rows (frozen kernel ⇒
+    * deterministic) and the manifest commit is a set-union. The caller
+    * owns the numbering (single writer). */
+  def append(spark: SparkSession, path: String, layout: Layout,
+      batch: DataFrame, idCol: String, vecCol: String, dims: Int,
+      atSeg: Long)(encode: (DataFrame, DataFrame, Meta) => DataFrame): Long = {
+    val m = requireMeta(spark, path, layout, dims)
+    if (atSeg >= 0 && atSeg <= m.segsUpto) return -2L
+    val committed = committedSegs(spark, path)
+    val live = committed.filter(_ > m.segsUpto)
+    // a pinned retry's own dir survives the heal only if committed; an
+    // uncommitted prior attempt is reclaimed and rewritten below
+    heal(spark, path, live)
+    if (live != committed) commitSegs(spark, path, live)
+    val b = arrivals(batch, idCol, vecCol)
+    if (b.isEmpty) return -1L
+    val n = if (atSeg >= 0) atSeg else (committed :+ m.segsUpto).max + 1
+    val centroids = readCentroids(spark, path)
+    writeCells(encode(assignWith(b, centroids), centroids, m),
+      segDir(path, n))
+    IndexVersions.afterStep("segment-written")
+    commitSegs(spark, path, (live.toSet + n).toSeq.sorted)
+    IndexVersions.afterStep("manifest-flipped")
+    n
+  }
+
+  /** Fold base ∪ live segments into the next base generation:
+    * `rebuild(sidecar, view, upto)` publishes that generation with
+    * `segs_upto` = `upto`, subsuming every folded segment BEFORE the
+    * manifest prune — so a crash between base flip and prune still
+    * probes exactly, and the next mutation heals the leftover dirs.
+    * Returns the new base version. */
+  def compact(spark: SparkSession, path: String, layout: Layout,
+      dims: Int)(rebuild: (Meta, DataFrame, Long) => Int): Int = {
+    val m = requireMeta(spark, path, layout, dims)
+    val live = committedSegs(spark, path).filter(_ > m.segsUpto)
+    val v = rebuild(m, legs(spark, path, layout, live),
+      (live :+ m.segsUpto).max)
+    IndexVersions.afterStep("base-flipped")
+    commitSegs(spark, path, Seq.empty)
+    IndexVersions.afterStep("manifest-pruned")
+    heal(spark, path, Seq.empty)
+    v
+  }
+
+  /** Quantization-drift frame: an arrival batch's mean squared error
+    * under the FROZEN committed centroids vs the build-time error the
+    * sidecar recorded. One row: (n, build_mse, batch_mse, ratio) —
+    * ratio ≫ 1 means the corpus distribution moved and the quantizer
+    * deserves a retrain. Zero-batch guarded; no collect of the batch
+    * (one broadcast join, one agg row). */
+  def drift(spark: SparkSession, path: String, layout: Layout,
+      batch: DataFrame, idCol: String, vecCol: String,
+      dims: Int): DataFrame = {
+    val buildMse = requireMeta(spark, path, layout, dims).buildMse
+    val centroids = readCentroids(spark, path)
+    assignWith(arrivals(batch, idCol, vecCol), centroids)
+      .join(broadcast(centroids), Seq("cell"))
+      .select(sqDist(col("nvec"), col("centroid")).as("d2"))
+      .agg(count(lit(1)).as("n"), avg(col("d2")).as("batch_mse"))
+      .select(col("n"), lit(buildMse).as("build_mse"), col("batch_mse"),
+        when(col("n") === 0L || lit(buildMse) === 0.0, lit(0.0))
+          .otherwise(col("batch_mse") / lit(buildMse)).as("ratio"))
+  }
+
+  /** A probe's cell selection: the committed sidecar, the queries as
+    * (qid, qvec, qn), the centroids, the (qid, cell) probe pairs, and
+    * the base ∪ live-segment legs pruned to the probed cells (`cell`
+    * as int). */
+  case class Probe(meta: Meta, queries: DataFrame, centroids: DataFrame,
+      cells: DataFrame, index: DataFrame)
+
+  /** Rank `nprobe` cells per query (one narrow kernel pass — exact
+    * squared L2 on the normalized space, lowest cell on ties; the query
+    * side never shuffles to pick its cells) and prune every leg's scan
+    * by a bounded literal IN over the distinct probed cells. A full
+    * probe (nprobe ≥ nlist) needs no job to list its cells; a probe set
+    * past `maxCellLiterals` distinct cells skips the prune (at that
+    * occupancy the unpruned scan wins anyway — the probeSignIndex cap
+    * contract). Each corpus row lives in exactly one cell, so
+    * candidates need no dedup. */
+  def probe(spark: SparkSession, path: String, layout: Layout,
+      queries: DataFrame, qidCol: String, vecCol: String, nprobe: Int,
+      dims: Int, maxCellLiterals: Int): Probe = {
+    require(maxCellLiterals >= 0, s"maxCellLiterals: $maxCellLiterals")
+    val meta = requireMeta(spark, path, layout, dims)
+    val centroids = readCentroids(spark, path)
+    val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"),
+      Embeddings.normalize(col(vecCol)).as("qn"))
+    val (cflat, cn, cdims) = centroidMatrix(centroids)
+    val cells = q.select(col("qid"),
+      explode(VectorFunctions.nearestCells(col("qn"), cflat, cn, cdims,
+        math.min(nprobe, meta.nlist))).as("cell"))
+    // bounded collect: distinct probed cells ≤ nlist ≤ 4096 by
+    // construction, limit(cap + 1) bounds the driver materialization
+    val cellLits =
+      if (nprobe >= meta.nlist) (0 until meta.nlist).toArray
+      else cells.select(col("cell")).distinct()
+        .limit(maxCellLiterals + 1).collect().map(_.getInt(0))
+    val raw = view(spark, path, layout)
+    val pruned =
+      if (cellLits.length <= maxCellLiterals)
+        raw.filter(col("cell").isin(cellLits.map(Int.box): _*))
+      else raw
+    Probe(meta, q, centroids, cells,
+      pruned.withColumn("cell", col("cell").cast("int")))
+  }
+}

@@ -65,11 +65,10 @@ object Shards {
     * order) plus a committed manifest with one row per shard —
     * (shard, docs, mass) — tallied by the write tasks themselves (see
     * [[writeAssigned]]), so the manifest describes exactly the rows the
-    * write materialized with no read-back scan of the layout;
-    * `spark.graft.shards.manifestReadback=true` re-derives it from the
-    * files instead (the audit mode). The underscore prefix hides the
-    * manifest from `spark.read.parquet(outDir)`, which therefore loads
-    * exactly the corpus. Returns the committed manifest.
+    * write materialized with no read-back scan of the layout. The
+    * underscore prefix hides the manifest from
+    * `spark.read.parquet(outDir)`, which therefore loads exactly the
+    * corpus. Returns the committed manifest.
     *
     * An EMPTY input commits an empty manifest (and writes no shard
     * dirs) — the bootstrap of a stream that starts from nothing and
@@ -88,7 +87,7 @@ object Shards {
     val assigned = shardByMass(df, idCol, mass, shardMass, buckets,
       knownCount, epoch)
     commitManifest(spark, outDir,
-      writeAssigned(assigned, outDir, dynamic = false, None))
+      writeAssigned(assigned, outDir, dynamic = false))
   }
 
   /** Write an assigned (`shard`, `cum_mass`, `doc_mass`, …) frame as
@@ -106,79 +105,47 @@ object Shards {
     * (retried/failed tasks are discarded), and a failed write throws
     * before any manifest commit — so the committed manifest still
     * describes precisely what is on disk.
-    *
-    * `spark.graft.shards.manifestReadback=true` opts back into the
-    * read-back audit: the manifest is recomputed from the written files
-    * (`readBackFilter` prunes to the dirs this write produced) —
-    * byte-identical on a healthy write, at the cost of the extra scan.
     */
   private def writeAssigned(assigned: DataFrame, outDir: String,
-      dynamic: Boolean, readBackFilter: Option[Column]): DataFrame = {
+      dynamic: Boolean): DataFrame = {
     val spark = assigned.sparkSession
-    val audit = spark.conf
-      .get("spark.graft.shards.manifestReadback", "false").toBoolean
-    val obs =
-      if (audit) None else Some(org.apache.spark.sql.Observation())
-    val sorted = assigned
+    val obs = org.apache.spark.sql.Observation()
+    val writer = assigned
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col("cum_mass"))
-    val framed = obs.fold(sorted)(o => sorted.observe(o,
-      graft.functions.ManifestAgg.shardStats(col("shard"), col("doc_mass"))
-        .as("manifest")))
-    val writer = framed.write.mode("overwrite")
+      .observe(obs, graft.functions.ManifestAgg
+        .shardStats(col("shard"), col("doc_mass")).as("manifest"))
+      .write.mode("overwrite")
     val w = if (dynamic) writer.option("partitionOverwriteMode", "dynamic")
       else writer
     w.partitionBy("shard").parquet(outDir)
-    obs match {
-      case Some(o) =>
-        val rows = o.get("manifest")
-          .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
-          .map(r => org.apache.spark.sql.Row(
-            r.getLong(0), r.getLong(1), r.getLong(2)))
-        spark.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows.toSeq).asJava,
-          manifestSchema)
-      case None =>
-        if (shardDirsOnDisk(spark, outDir).isEmpty) emptyManifest(spark)
-        else manifestRows(readBackFilter
-          .foldLeft(spark.read.parquet(outDir))((d, f) => d.filter(f)))
-    }
+    IndexVersions.afterStep("shards-written")
+    manifestFrame(spark, obs.get("manifest")
+      .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
+      .map(r => org.apache.spark.sql.Row(
+        r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
   }
 
   private val ManifestFile = "manifest.csv"
 
-  /** The committed manifest of a [[writeShards]] layout: resolves the
-    * [[IndexVersions]] pointer to the current generation (a legacy
-    * pre-pointer layout's flat `_graft_manifest` files are generation
-    * zero and stay readable unchanged).
-    *
-    * The manifest is BOUNDED (one row per shard), so the current
-    * generation is a driver-written `shard,docs,mass` text file
-    * surfaced as a local relation — reading it schedules NO Spark job
-    * and collects from it for free, where the former one-row-per-shard
-    * parquet paid a schema-inference read plus a cluster job per
-    * manifest consult (every mutation consults it at least once, and
-    * an ingest loop mutates per micro-batch). Legacy parquet
-    * generations stay readable through the fallback.
+  /** The committed manifest of a [[writeShards]] layout: the
+    * `shard,docs,mass` text file of the current [[IndexVersions]]
+    * generation under `_graft_manifest`. The manifest is BOUNDED (one
+    * row per shard), so it is read driver-side and surfaced as a local
+    * relation — reading it schedules NO Spark job and collects from it
+    * for free (every mutation consults it at least once, and an ingest
+    * loop mutates per micro-batch). A layout with no committed manifest
+    * is refused.
     */
   def readManifest(spark: SparkSession, outDir: String): DataFrame = {
-    val dir = IndexVersions.resolvePath(spark, manifestRoot(outDir))
-    val p = new org.apache.hadoop.fs.Path(dir, ManifestFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return spark.read.parquet(dir)
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val rows = txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+    val rows = IndexVersions.committedLines(spark, manifestRoot(outDir),
+        ManifestFile).getOrElse(throw new IllegalArgumentException(
+          s"no committed shard manifest under $outDir"))
       .map { line =>
         val f = line.split(",")
         org.apache.spark.sql.Row(f(0).toLong, f(1).toLong, f(2).toLong)
-      }.toSeq
-    // a java-list createDataFrame plans as a LocalRelation: collects,
-    // joins and broadcasts over the manifest never schedule a job
-    spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
-      manifestSchema)
+      }
+    manifestFrame(spark, rows)
   }
 
   /** Manifest-directed corpus read: exactly the shards the committed
@@ -200,7 +167,8 @@ object Shards {
       .select(col("shard").cast("long")).collect().map(_.getLong(0)).toSet
     if (committed.isEmpty)
       sys.error(s"empty shard layout at $outDir — nothing to read")
-    val dead = shardDirsOnDisk(spark, outDir).filterNot(committed)
+    val dead = IndexVersions.numbered(spark, outDir, "shard=")
+      .filterNot(committed)
     val raw = spark.read.parquet(outDir)
     if (dead.isEmpty) raw
     else raw.filter(!col("shard").cast("long").isin(dead: _*))
@@ -228,14 +196,8 @@ object Shards {
     manifest.select(col("shard").cast("long")).collect().map(_.getLong(0))
 
   private def healWith(spark: SparkSession, outDir: String,
-      committed: Set[Long]): Seq[Long] = {
-    val fs = fsOf(spark, outDir)
-    shardDirsOnDisk(spark, outDir).filterNot(committed).map { sid =>
-      fs.delete(
-        new org.apache.hadoop.fs.Path(outDir, s"shard=$sid"), true)
-      sid
-    }
-  }
+      committed: Set[Long]): Seq[Long] =
+    IndexVersions.deleteNumbered(spark, outDir, "shard=", !committed(_))
 
   /** APPEND a new batch of documents to an existing [[writeShards]]
     * layout — the serialization leg of an incremental pipeline (an
@@ -248,9 +210,8 @@ object Shards {
     * it again under fresh shard numbers — feeding an appender exactly
     * once is the upstream's contract (the ingest stream's three dedup
     * stages are exactly that machinery). The manifest is extended with
-    * the new shards' rows (computed by reading back ONLY the new,
-    * partition-pruned dirs) and committed as the next [[IndexVersions]]
-    * generation — the pointer flip is the LAST step, so a crash at any
+    * the new shards' rows (tallied by the write itself) and committed
+    * as the next [[IndexVersions]] generation — the pointer flip is the LAST step, so a crash at any
     * earlier point leaves the previous manifest committed and only
     * uncommitted orphan dirs on disk, which the heal pass of the next
     * mutation (or a retry of this one) deletes before numbering.
@@ -268,8 +229,7 @@ object Shards {
     // ONE manifest read serves the heal pass, the numbering base, and
     // the carried-forward rows below (a local relation — the commit
     // later in this method collects before retiring anything, so no
-    // pin is needed; a legacy parquet manifest is read through at most
-    // twice, once here and once by the commit's collect)
+    // pin is needed)
     val manifest = readManifest(spark, outDir)
     val ids = committedIds(manifest)
     healWith(spark, outDir, ids.toSet): Unit
@@ -281,11 +241,8 @@ object Shards {
     // dynamic partition overwrite: only the NEW shard dirs are written;
     // static overwrite mode would wipe the existing layout. The new
     // rows' manifest is tallied during the write (writeAssigned) — no
-    // read-back job; the audit flag's read-back prunes to shard >= base
-    val newRows = writeAssigned(assigned, outDir, dynamic = true,
-      Some(col("shard") >= base))
-    // `manifest` is pinned above, so the union cannot re-read files the
-    // commit is about to retire
+    // read-back job
+    val newRows = writeAssigned(assigned, outDir, dynamic = true)
     commitManifest(spark, outDir,
       manifest.filter(col("shard") < base).unionByName(newRows))
   }
@@ -338,17 +295,13 @@ object Shards {
           .drop("shard", "cum_mass"),
         idCol, col("doc_mass"), shardMass, buckets, epoch = epoch)
       .withColumn("shard", col("shard") + lit(base))
-    val newRows = writeAssigned(folded, outDir, dynamic = true,
-      Some(col("shard") >= base))
+    val newRows = writeAssigned(folded, outDir, dynamic = true)
     val committed = commitManifest(spark, outDir, manifest
       .filter(!col("shard").isin(small.toIndexedSeq: _*))
       .unionByName(newRows))
     // sources are retracted from the committed manifest — delete LAST
-    val fs = fsOf(spark, outDir)
-    small.foreach { sid =>
-      fs.delete(
-        new org.apache.hadoop.fs.Path(outDir, s"shard=$sid"), true): Unit
-    }
+    IndexVersions.deleteNumbered(spark, outDir, "shard=", small.toSet): Unit
+    IndexVersions.afterStep("sources-deleted")
     committed
   }
 
@@ -363,14 +316,6 @@ object Shards {
     spark.read.parquet(outDir)
       .filter(col("shard") === shard)
       .sort(col("cum_mass"))
-
-  /** (shard, docs, mass) rows for a (subset of a) read-back layout.
-    * Partition-dir inference reads shard= back as INT; the manifest
-    * contract is BIGINT like the assignment that produced it. */
-  private def manifestRows(corpus: DataFrame): DataFrame =
-    corpus
-      .groupBy(col("shard").cast("long").as("shard"))
-      .agg(count(lit(1)).as("docs"), sum(col("doc_mass")).as("mass"))
 
   /** Write `rows` as the next manifest generation and flip the pointer
     * (the [[IndexVersions]] protocol: version dir beside the previous
@@ -387,52 +332,27 @@ object Shards {
     * bought with three extra jobs per mutation). */
   private def commitManifest(spark: SparkSession, outDir: String,
       rows: DataFrame): DataFrame = {
-    val root = manifestRoot(outDir)
     val data = rows.select(col("shard").cast("long"),
         col("docs").cast("long"), col("mass").cast("long"))
       .collect().sortBy(_.getLong(0))
-    val v = IndexVersions.nextVersion(spark, root)
-    val p = new org.apache.hadoop.fs.Path(
-      IndexVersions.versionDir(root, v), ManifestFile)
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, true)
-    try out.write(data.iterator
-      .map(r => s"${r.getLong(0)},${r.getLong(1)},${r.getLong(2)}")
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    IndexVersions.commit(spark, root, v)
-    IndexVersions.dropOldPathVersions(spark, root, keepPrevious = 1): Unit
-    spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(data.toSeq).asJava,
-      manifestSchema)
+    IndexVersions.commitLines(spark, manifestRoot(outDir), ManifestFile,
+      data.map(r => s"${r.getLong(0)},${r.getLong(1)},${r.getLong(2)}"))
+    IndexVersions.afterStep("manifest-flipped")
+    manifestFrame(spark, data.toSeq)
   }
 
   private val manifestSchema = StructType(Seq(
     StructField("shard", LongType), StructField("docs", LongType),
     StructField("mass", LongType)))
 
-  private def emptyManifest(spark: SparkSession): DataFrame =
+  /** (shard, docs, mass) rows as a local relation: a java-list
+    * createDataFrame plans as a LocalRelation, so collects, joins and
+    * broadcasts over the manifest never schedule a job. */
+  private def manifestFrame(spark: SparkSession,
+      rows: Seq[org.apache.spark.sql.Row]): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
       manifestSchema)
-
-  /** The `shard=N` ids present on disk (one FS listing — #shards
-    * entries, no data read). */
-  private def shardDirsOnDisk(spark: SparkSession,
-      outDir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    val fs = fsOf(spark, outDir)
-    if (!fs.exists(p)) return Seq.empty
-    fs.listStatus(p).toIndexedSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("shard=") &&
-        n.stripPrefix("shard=").nonEmpty &&
-        n.stripPrefix("shard=").forall(_.isDigit))
-      .map(_.stripPrefix("shard=").toLong)
-  }
-
-  private def fsOf(spark: SparkSession, outDir: String) =
-    new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def manifestRoot(outDir: String): String =
     s"$outDir/_graft_manifest"

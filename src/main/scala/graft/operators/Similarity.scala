@@ -566,14 +566,8 @@ object Similarity {
           .as("bucket"))
       .repartition(col("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
-    val p = new org.apache.hadoop.fs.Path(path, SignMetaFile)
-    val fs = p.getFileSystem(
-      corpus.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"planes":$planes,"dims":$dims,"seed":$seed}"""
-        .getBytes("UTF-8"))
-    finally out.close()
+    IndexVersions.writeText(corpus.sparkSession, path, SignMetaFile,
+      s"""{"planes":$planes,"dims":$dims,"seed":$seed}""")
   }
 
   private val SignMetaFile = "_graft_sign_meta.json"
@@ -584,20 +578,13 @@ object Similarity {
     * pointer ([[IndexVersions]]) to the committed generation's sidecar.
     */
   def signIndexMeta(spark: SparkSession,
-      path: String): Option[(Int, Int, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(
-      IndexVersions.resolvePath(spark, path), SignMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+      path: String): Option[(Int, Int, Long)] =
+    IndexVersions.readText(spark, IndexVersions.resolvePath(spark, path),
+        SignMetaFile).flatMap { txt =>
       val re = """"planes":(\d+),"dims":(\d+),"seed":(-?\d+)""".r
       re.findFirstMatchIn(txt).map(m =>
         (m.group(1).toInt, m.group(2).toInt, m.group(3).toLong))
     }
-  }
 
   /** Resolve the plane count for probing `path`: an explicit value wins
     * (and is validated against the sidecar when one exists — a

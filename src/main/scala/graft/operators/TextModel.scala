@@ -83,28 +83,18 @@ object TextModel {
     val dir = IndexVersions.versionDir(path, v)
     weights.select(col("bucket").cast("int"), col("weight").cast("long"))
       .write.mode("overwrite").parquet(dir)
-    val p = new org.apache.hadoop.fs.Path(dir, ModelMetaFile)
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, true)
-    try out.write(
-      (s"""{"buckets":$buckets,"bigrams":$bigrams,""" +
-        s""""kernel":"$Kernel","scale":$Scale}""").getBytes("UTF-8"))
-    finally out.close()
+    IndexVersions.writeText(spark, dir, ModelMetaFile,
+      s"""{"buckets":$buckets,"bigrams":$bigrams,""" +
+        s""""kernel":"$Kernel","scale":$Scale}""")
     IndexVersions.commit(spark, path, v)
     IndexVersions.dropOldPathVersions(spark, path, keepPrevious = 1): Unit
   }
 
   /** The (buckets, bigrams) the committed model generation was written
     * with — None when no sidecar exists at the resolved generation. */
-  def modelMeta(spark: SparkSession, path: String): Option[(Int, Boolean)] = {
-    val p = new org.apache.hadoop.fs.Path(
-      IndexVersions.resolvePath(spark, path), ModelMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+  def modelMeta(spark: SparkSession, path: String): Option[(Int, Boolean)] =
+    IndexVersions.readText(spark, IndexVersions.resolvePath(spark, path),
+        ModelMetaFile).flatMap { txt =>
       val re = (""""buckets":(\d+),"bigrams":(true|false),""" +
         """"kernel":"([^"]*)"""").r
       re.findFirstMatchIn(txt).map { m =>
@@ -114,7 +104,6 @@ object TextModel {
         (m.group(1).toInt, m.group(2).toBoolean)
       }
     }
-  }
 
   /** Load the committed generation's weights as the dense vector the
     * scoring kernel broadcasts (absent buckets → 0). Bounded by the

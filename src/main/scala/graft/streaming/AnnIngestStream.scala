@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.IvfPqIndex
+import graft.operators.{IndexVersions, IvfPqIndex, SegmentedIndex}
 
 /** Continuous MAINTENANCE of the persisted IVF-PQ ANN index — the
   * serving-freshness mirror of the dedup ingest streams. Those streams
@@ -58,28 +58,22 @@ object AnnIngestStream {
     * checkpoint dir is single-writer by Structured Streaming's own
     * lock). */
   private[graft] def segBase(spark: SparkSession, checkpointDir: String,
-      indexPath: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(checkpointDir, BaseFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      """"seg_base":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-        .getOrElse(throw new IllegalStateException(
-          s"unparseable $BaseFile under $checkpointDir: $txt"))
-    } else {
-      val meta = IvfPqIndex.metaFull(spark, indexPath).getOrElse(
-        throw new IllegalArgumentException(
-          s"no IVF-PQ index at $indexPath"))
-      val base = (graft.operators.SegmentLog
-        .committedSegs(spark, indexPath) :+ meta.segsUpto).max
-      val out = fs.create(p, false)
-      try out.write(s"""{"seg_base":$base}""".getBytes("UTF-8"))
-      finally out.close()
-      base
+      indexPath: String): Long =
+    IndexVersions.readText(spark, checkpointDir, BaseFile) match {
+      case Some(txt) =>
+        """"seg_base":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
+          .getOrElse(throw new IllegalStateException(
+            s"unparseable $BaseFile under $checkpointDir: $txt"))
+      case None =>
+        val meta = IvfPqIndex.metaFull(spark, indexPath).getOrElse(
+          throw new IllegalArgumentException(
+            s"no IVF-PQ index at $indexPath"))
+        val base = (SegmentedIndex.committedSegs(spark, indexPath) :+
+          meta.segsUpto).max
+        IndexVersions.writeText(spark, checkpointDir, BaseFile,
+          s"""{"seg_base":$base}""", overwrite = false)
+        base
     }
-  }
 
   /** One micro-batch through the maintenance stages — factored out so
     * tests can replay it batch-exactly (including retries). Returns
@@ -106,10 +100,11 @@ object AnnIngestStream {
       // table they land in), so the new base must subsume every live
       // segment — otherwise probes would double-count arrival rows
       // from both the rebuilt base and the still-live segment legs
-      val upto = (graft.operators.SegmentLog
-        .committedSegs(spark, indexPath) :+ meta.segsUpto).max
+      val upto = (SegmentedIndex.committedSegs(spark, indexPath) :+
+        meta.segsUpto).max
       IvfPqIndex.write(corpus, indexPath, meta.dims,
-        nlist = nlist, m = meta.m, ksub = meta.ksub, seed = meta.seed,
+        nlist = nlist, m = meta.param("m"), ksub = meta.param("ksub"),
+        seed = meta.seed,
         idCol = idCol, vecCol = vecCol,
         fitSamplePerCell = fitSamplePerCell, subsumedUpto = upto): Unit
     }

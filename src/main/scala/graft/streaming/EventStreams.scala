@@ -216,10 +216,16 @@ object EventStreams {
   }
 
   /** File-source streaming read of an events parquet (schema pinned from
-    * a batch probe; nanos ts normalized like the batch path).
+    * a batch probe; nanos ts normalized like the batch path). The
+    * session must read nanosecond timestamps as longs
+    * (`spark.sql.legacy.parquet.nanosAsLong`, set by every
+    * [[graft.LocalSpark]] session); a session without it is refused
+    * rather than reconfigured.
     */
   def readStreamEvents(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    require(spark.conf.get(nanosAsLong, "false").toBoolean,
+      s"readStreamEvents needs $nanosAsLong=true on the session")
     val schema = spark.read.parquet(path).schema
     graft.Tables.normalize(
       spark.readStream.schema(schema).parquet(path))

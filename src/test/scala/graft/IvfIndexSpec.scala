@@ -156,43 +156,6 @@ class IvfIndexSpec extends SparkSpec {
       "post-compaction probe must not move")
   }
 
-  test("segment crash windows: an uncommitted segment dir is " +
-      "invisible, a manifest row the base subsumed is ignored, and " +
-      "the next mutation heals both") {
-    val dir = tmpDir("ivfcrash")
-    IvfIndex.write(e.filter($"vec_id" % 3 =!= 0), dir, dims = 64,
-      nlist = 8)
-    IvfIndex.appendVectors(spark, dir, e.filter($"vec_id" % 3 === 0))
-    assert(probeAll(dir) == bruteAll)
-    // crashed append: segment written, manifest never flipped
-    val orphan = s"$dir/segments/seg9"
-    e.limit(5).select(($"vec_id" + 900000L).as("id"),
-        $"embedding".as("vec"), lit(0).as("cell"))
-      .write.partitionBy("cell").parquet(orphan)
-    assert(IvfIndex.liveSegs(spark, dir) == Seq(1L))
-    assert(probeAll(dir) == bruteAll,
-      "an uncommitted segment must be invisible to probes")
-    // interrupted compaction: base flipped (segs_upto = 1) but the
-    // manifest prune crashed — recommit a manifest still listing seg 1
-    IvfIndex.compact(spark, dir, nlist = 8)
-    val root = s"$dir/_graft_segs"
-    val mv = IndexVersions.nextVersion(spark, root)
-    Seq(1L).toDF("seg").write
-      .parquet(IndexVersions.versionDir(root, mv))
-    IndexVersions.commit(spark, root, mv)
-    assert(IvfIndex.liveSegs(spark, dir).isEmpty,
-      "a manifest row at or below segs_upto must be ignored")
-    assert(probeAll(dir) == bruteAll,
-      "the unpruned-manifest window must probe exactly")
-    // an empty append heals: stale manifest row dropped, orphan
-    // segment dir reclaimed
-    IvfIndex.appendVectors(spark, dir, e.filter($"vec_id" < 0))
-    assert(!new java.io.File(orphan).exists(),
-      "heal must reclaim the crashed append's orphan dir")
-    assert(IvfIndex.liveSegs(spark, dir).isEmpty)
-    assert(probeAll(dir) == bruteAll)
-  }
-
   test("pinned-segment appends (atSeg) converge under retry and " +
       "refuse a number the base already subsumed") {
     val dir = tmpDir("ivfatseg")
@@ -215,6 +178,20 @@ class IvfIndexSpec extends SparkSpec {
     assert(IvfIndex.liveSegs(spark, dir).isEmpty,
       "a retry of a folded number must not resurrect its segment")
     assert(probeAll(dir) == want)
+  }
+
+  test("a plain rebuild over live segments keeps them live: retention " +
+      "does not take the segment dirs for generation-zero data") {
+    val dir = tmpDir("ivfrebuildseg")
+    IvfIndex.write(e.filter($"vec_id" % 3 =!= 0), dir, dims = 64,
+      nlist = 8)
+    assert(IvfIndex.appendVectors(spark, dir,
+      e.filter($"vec_id" % 3 === 0)) == 1L)
+    assert(IvfIndex.write(e.filter($"vec_id" % 3 =!= 0), dir, dims = 64,
+      nlist = 8, seed = 43L) == 2)
+    assert(IvfIndex.liveSegs(spark, dir) == Seq(1L))
+    assert(probeAll(dir) == bruteAll,
+      "the rebuilt base ∪ the carried-forward segment must probe exactly")
   }
 
   test("rebuild publishes the next generation behind the pointer; " +

@@ -160,42 +160,6 @@ class IvfPqIndexSpec extends SparkSpec {
       "compaction must not change a single code byte")
   }
 
-  test("segment crash windows: an uncommitted segment dir is " +
-      "invisible, a manifest row the base subsumed is ignored, and the " +
-      "next mutation heals both") {
-    val dir = tmpDir("ivfpqcrash")
-    IvfPqIndex.write(e.filter($"vec_id" % 3 =!= 0), dir, dims = 64,
-      nlist = 8)
-    IvfPqIndex.append(spark, dir, e.filter($"vec_id" % 3 === 0))
-    assert(probeAll(dir) == bruteAll)
-    // crashed append: segment written, manifest never flipped
-    val orphan = s"$dir/segments/seg9"
-    e.limit(5).select(($"vec_id" + 900000L).as("id"),
-        array(lit(0), lit(1)).as("codes"), lit(0).as("cell"))
-      .write.partitionBy("cell").parquet(orphan)
-    assert(IvfPqIndex.liveSegs(spark, dir) == Seq(1L))
-    assert(probeAll(dir) == bruteAll,
-      "an uncommitted segment must be invisible to probes")
-    // interrupted compaction: base flipped (segs_upto = 1) but the
-    // manifest prune crashed — recommit a manifest still listing seg 1
-    IvfPqIndex.compact(spark, dir)
-    val root = s"$dir/_graft_segs"
-    val mv = IndexVersions.nextVersion(spark, root)
-    Seq(1L).toDF("seg").write
-      .parquet(IndexVersions.versionDir(root, mv))
-    IndexVersions.commit(spark, root, mv)
-    assert(IvfPqIndex.liveSegs(spark, dir).isEmpty,
-      "a manifest row at or below segs_upto must be ignored")
-    assert(probeAll(dir) == bruteAll,
-      "the unpruned-manifest window must probe exactly")
-    // an empty append heals: stale manifest row dropped, orphan dir
-    // reclaimed
-    IvfPqIndex.append(spark, dir, e.filter($"vec_id" < 0))
-    assert(!new java.io.File(orphan).exists(),
-      "heal must reclaim the crashed append's orphan dir")
-    assert(probeAll(dir) == bruteAll)
-  }
-
   test("drift under frozen centroids flags a shifted batch; a rebuild " +
       "publishes the next generation behind the pointer") {
     val dir = tmpDir("ivfpqdrift")

@@ -24,6 +24,19 @@ class StreamingSpec extends SparkSpec {
     d
   }
 
+  test("readStreamEvents refuses a session that reads nanosecond " +
+      "timestamps natively, naming the conf, and leaves its conf as is") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    s.conf.set(key, "false")
+    val err = intercept[IllegalArgumentException] {
+      EventStreams.readStreamEvents(s, eventsDir)
+    }
+    assert(err.getMessage.contains(key))
+    assert(s.conf.get(key) == "false")
+    assert(spark.conf.get(key) == "true")
+  }
+
   test("streaming hourly windowed agg == batch result (complete mode)") {
     val stream = EventStreams.readStreamEvents(spark, eventsDir)
     assert(stream.isStreaming)
