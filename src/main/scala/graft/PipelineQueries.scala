@@ -983,10 +983,7 @@ object PipelineQueries {
       a1.select($"vec_id", $"embedding")
         .write.mode("overwrite").parquet(s"$outDir/batch=0")
       graft.streaming.EmbedIngestStream.compact(s, c0, path, outDir)
-      val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
-        s.sparkContext.hadoopConfiguration)
-      val leftover = fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-        .count(_.getPath.getName.startsWith("batch="))
+      val leftover = graft.streaming.IngestStream.batchDirs(s, outDir).size
       require(leftover == 0,
         s"embed compact left $leftover accepted batch dirs behind")
       graft.streaming.EmbedIngestStream.applyBatch(s, b2, None, path,
@@ -1022,10 +1019,7 @@ object PipelineQueries {
       a1.select($"doc_id", $"text")
         .write.mode("overwrite").parquet(s"$outDir/batch=0")
       graft.streaming.IngestStream.compact(s, c0, prefix, outDir)
-      val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
-        s.sparkContext.hadoopConfiguration)
-      val leftover = fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-        .count(_.getPath.getName.startsWith("batch="))
+      val leftover = graft.streaming.IngestStream.batchDirs(s, outDir).size
       require(leftover == 0,
         s"compact left $leftover accepted batch dirs behind")
       val res = graft.streaming.IngestStream.applyBatch(s, b2, None,
@@ -1742,7 +1736,7 @@ object PipelineQueries {
     // arrival batches (split by event_id mod 3 — deliberately NOT
     // time-ordered) folded through the order-insensitive ts-conditional
     // MERGE converge to the batch latest-per-key snapshot. The true
-    // streaming foreachBatch run of the same fold (streaming/UpsertSink,
+    // streaming micro-batch run of the same fold (streaming/UpsertSink,
     // versioned parquet state + pointer commit) is proven equal batch-by
     // -batch in StreamingSpec.
     "stream_upsert" -> { (s, dir) =>
@@ -1892,10 +1886,7 @@ object PipelineQueries {
       val a1 = stream.applyBatch(s, b1, None, table, maxDist = 8)
       a1.write.mode("overwrite").parquet(s"$outDir/batch=0")
       stream.compact(s, c0, table, outDir)
-      val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
-        s.sparkContext.hadoopConfiguration)
-      val leftover = fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-        .count(_.getPath.getName.startsWith("batch="))
+      val leftover = graft.streaming.IngestStream.batchDirs(s, outDir).size
       require(leftover == 0,
         s"media compact left $leftover accepted batch dirs behind")
       val res = stream.applyBatch(s, b2, None, table, maxDist = 8)

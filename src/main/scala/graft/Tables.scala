@@ -32,6 +32,14 @@ object Tables {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** Refuse (rather than reconfigure) a session that reads parquet
+    * nanosecond timestamps natively; `reader` names the caller. */
+  def requireNanosAsLong(spark: SparkSession, reader: String): Unit = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    require(spark.conf.get(key, "false").toBoolean,
+      s"$reader needs $key=true on the session")
+  }
+
   /** Two generator drifts handled:
     *   - `ts` as raw Long nanos (legacy nanosAsLong read) → truncate to
     *     micros with integer `div`, not `/` — nanos-since-epoch exceeds

@@ -99,7 +99,7 @@ object Scd {
     * regresses state when a replayed/late batch lands after a newer
     * one; this variant makes the fold order-insensitive, so folding any
     * permutation of change batches converges to the same state — the
-    * property an incremental `foreachBatch` materialization needs
+    * property an incremental micro-batch materialization needs
     * ([[graft.streaming.UpsertSink]]).
     *
     * Same single full-outer join and whole-row CASE as [[mergeUpsert]];

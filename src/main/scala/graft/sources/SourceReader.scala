@@ -34,9 +34,11 @@ class SourceReader(spark: SparkSession, baseDir: String,
     * directory).
     */
   override def table(name: String): DataFrame = {
-    // parquet TIMESTAMP(NANOS) columns: read as raw nanos, truncate to
-    // micros at ingest (Spark's timestamp precision) — see Tables.read
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // parquet TIMESTAMP(NANOS) columns: read as raw nanos (a session
+    // conf every graft.LocalSpark session sets), truncated to micros
+    // (Spark's timestamp precision) by normalize
+    if (format.equalsIgnoreCase("parquet"))
+      graft.Tables.requireNanosAsLong(spark, "SourceReader")
     graft.Tables.normalize(
       spark.read.options(readOptions).format(format).load(path(name)))
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{IndexVersions, IvfPqIndex, SegmentedIndex}
 
@@ -111,12 +110,11 @@ object AnnIngestStream {
     drift
   }
 
-  /** Drain `srcDir` through the maintenance pipeline (AvailableNow
-    * trigger — swap for a processing-time trigger in an always-on
-    * deployment). Restart-safe: the checkpoint tracks consumed files
-    * and the pinned segment numbering makes replayed appends converge
-    * (see the object doc). `nlist` ≤ 0 re-derives the √n rule on a
-    * drift-triggered rebuild. */
+  /** Drain `srcDir` through the maintenance pipeline
+    * ([[IngestStream.drain]]). Restart-safe: the checkpoint tracks
+    * consumed files and the pinned segment numbering makes replayed
+    * appends converge (see the object doc). `nlist` ≤ 0 re-derives the
+    * √n rule on a drift-triggered rebuild. */
   def run(spark: SparkSession, srcDir: String, indexPath: String,
       checkpointDir: String, driftDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -126,25 +124,17 @@ object AnnIngestStream {
       fitSamplePerCell: Int = 256): Unit = {
     val base = segBase(spark, checkpointDir, indexPath)
     IngestStream.mkdirs(spark, driftDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    IngestStream.drain(spark, srcDir, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
         applyBatch(spark, batch, batchId, indexPath, base, driftDir,
           idCol, vecCol, maxLiveSegments, retrainRatio, rebuildCorpus,
           nlist, fitSamplePerCell): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The drift trail this stream has logged so far — one row per
-    * batch, (batch_id, seg, n, build_mse, batch_mse, ratio). */
-  def driftLog(spark: SparkSession, driftDir: String): Option[DataFrame] = {
-    val dirs = IngestStream.batchDirs(spark, driftDir)
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs.map(_._2): _*))
-  }
+    * batch, (batch_id, seg, n, build_mse, batch_mse, ratio); the same
+    * `batch=<id>` layout as a dedup stream's accepted set. */
+  def driftLog(spark: SparkSession, driftDir: String): Option[DataFrame] =
+    IngestStream.accepted(spark, driftDir)
 }

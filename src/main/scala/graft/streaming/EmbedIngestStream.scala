@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, IndexVersions, Similarity}
 
 /** Continuous near-duplicate ingest for EMBEDDINGS — the vector-side
   * mirror of [[IngestStream]], probing the persisted
@@ -23,25 +22,13 @@ import graft.operators.{Dedup, Similarity}
   *     so a near-dup arriving two batches after its original is caught
   *     even though the frozen index has neither.
   *
-  * Sink/replay semantics are [[IngestStream]]'s: survivors land in
-  * `outDir/batch=<id>/` written with overwrite, so a foreachBatch retry
-  * rewrites the same directory — append-exactly-once without a
-  * transaction log. The accepted-set probe grows with accepted arrivals
-  * only; periodic re-index ([[Similarity.writeSignIndex]] over corpus ∪
-  * accepted) folds it back to empty on the deployment's cadence.
+  * The micro-batch driver and the compaction fold are
+  * [[IngestStream]]'s; this object brings the vector kernels and the
+  * sign-index writer. The accepted-set probe grows with accepted
+  * arrivals only; periodic re-index ([[compact]]) folds it back to
+  * empty on the deployment's cadence.
   */
 object EmbedIngestStream {
-
-  /** Rows of `batch` surviving the within-batch exact pass: the min-id
-    * keeper per identical embedding array (grouping on the float array
-    * is exact — same bytes, same vector).
-    */
-  private def exactWithinBatch(batch: DataFrame, idCol: String,
-      vecCol: String): DataFrame =
-    batch.join(
-      batch.groupBy(col(vecCol)).agg(min(col(idCol)).as(idCol))
-        .select(col(idCol)),
-      Seq(idCol))
 
   /** One micro-batch through the three dedup stages — factored out so
     * tests and backfills can replay it batch-exactly. `accepted` is the
@@ -60,17 +47,12 @@ object EmbedIngestStream {
       accepted: Option[DataFrame], indexPath: String, idCol: String,
       vecCol: String, dims: Int, threshold: Double, probeHamming: Int,
       seed: Long, nearWithinBatch: Boolean = false): DataFrame = {
-    val b1e = exactWithinBatch(batch, idCol, vecCol)
+    val b1e = IngestStream.exactWithinBatch(batch, idCol, col(vecCol))
     val b1 =
       if (!nearWithinBatch) b1e
-      else {
-        val drops = Dedup.connectedComponents(
-            Dedup.embeddingNearDupPairsAuto(b1e, idCol, vecCol, dims,
-              threshold = threshold, seed = seed))
-          .filter(col("id") =!= col("comp"))
-          .select(col("id").as(idCol))
-        b1e.join(drops, Seq(idCol), "left_anti")
-      }
+      else IngestStream.keepComponentMin(b1e, idCol,
+        Dedup.embeddingNearDupPairsAuto(b1e, idCol, vecCol, dims,
+          threshold = threshold, seed = seed))
     val newVsCorpus = Dedup.incrementalNewNearDupEmbedDisk(spark,
       indexPath, b1, idCol, vecCol, dims, numPlanes = 0,
       threshold = threshold, probeHamming = probeHamming, seed = seed)
@@ -90,13 +72,9 @@ object EmbedIngestStream {
     }
   }
 
-  /** Drain `srcDir` through the ingest pipeline (AvailableNow trigger —
-    * swap for a processing-time trigger in an always-on deployment).
-    * `dims`/`seed` must match the index build; the plane count is read
-    * from the index sidecar. Restart-safe: the checkpoint tracks
-    * consumed files, per-batch overwrite makes replays idempotent.
-    * Restarting over an existing `outDir` with a FRESH checkpoint is
-    * refused, same contract (and same guard) as [[IngestStream.run]].
+  /** Drain `srcDir` through the ingest pipeline
+    * ([[IngestStream.runDedup]]). `dims`/`seed` must match the index
+    * build; the plane count is read from the index sidecar.
     */
   def run(spark: SparkSession, srcDir: String, indexPath: String,
       dims: Int, outDir: String, checkpointDir: String,
@@ -104,104 +82,37 @@ object EmbedIngestStream {
       threshold: Double = 0.4, probeHamming: Int = 1, seed: Long = 42L,
       maxFilesPerTrigger: Int = 1,
       compactCorpus: Option[DataFrame] = None,
-      compactMaxBytes: Long = Long.MaxValue,
       compactMaxRows: Long = Long.MaxValue,
-      nearWithinBatch: Boolean = false,
-      compactCorpusCount: Long = -1L): Unit = {
+      nearWithinBatch: Boolean = false): Unit = {
     require(Similarity.signIndexMeta(spark, indexPath).isDefined,
       s"no sign index (with sidecar) at $indexPath")
-    val next = IngestStream.nextBatchId(spark, checkpointDir)
-    val stale = IngestStream.batchDirs(spark, outDir).filter(_._1 >= next)
-    require(stale.isEmpty,
-      s"output dir $outDir already holds batches " +
-        s"${stale.map(_._1).sorted.mkString(",")} at or past this " +
-        s"checkpoint's next batch id $next — restarting would bypass " +
-        "them for dedup and overwrite them; resume with the original " +
-        "checkpoint dir or use a fresh output dir")
-    IngestStream.mkdirs(spark, outDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a retry of batch N must not probe N's own half-written
-        // output: only strictly-older batches count as accepted
-        val acceptedDirs = IngestStream.batchDirs(spark, outDir)
-          .filter(_._1 < batchId).map(_._2)
-        val accepted =
-          if (acceptedDirs.isEmpty) None
-          else Some(spark.read.parquet(acceptedDirs: _*))
+    IngestStream.runDedup(spark, srcDir, outDir, checkpointDir,
+      maxFilesPerTrigger, compactMaxRows, compactCorpus.map(corpus => () =>
+        compact(spark, corpus, indexPath, outDir, idCol, vecCol))) {
+      (batch, accepted) =>
         applyBatch(spark, batch, accepted, indexPath, idCol, vecCol,
           dims, threshold, probeHamming, seed, nearWithinBatch)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        // opt-in auto-compact between micro-batches — the versioned
-        // pointer commit keeps a mid-compaction crash invisible to the
-        // stream (next batch still probes version N)
-        if (compactCorpus.isDefined && IngestStream.shouldCompact(
-            spark, outDir, compactMaxBytes, compactMaxRows)) {
-          compact(spark, compactCorpus.get, indexPath, outDir,
-            idCol, vecCol, corpusCount = compactCorpusCount): Unit
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
-  /** Everything the stream has accepted so far (shared layout with the
-    * text-side stream). */
-  def accepted(spark: SparkSession, outDir: String): Option[DataFrame] =
-    IngestStream.accepted(spark, outDir)
-
-  /** Fold the accepted vectors into the next version of the sign index
-    * — the vector-side mirror of [[IngestStream.compact]], same
-    * crash-safe order (archive → build version N+1 beside N → POINTER
-    * FLIP → clear batch dirs; [[graft.operators.IndexVersions]]) and
-    * same contract: after the flip the rebuilt INDEX catches what the
-    * accepted-set probe was catching, stage 3 restarts empty, and a
-    * crash anywhere before the flip leaves every probe on version N.
-    * `corpus` is the frozen generation-zero corpus; earlier
-    * compactions' archives fold in automatically. Dims and seed come
-    * from the current index's sidecar (the probe side must match the
-    * write side bit-for-bit); the plane count re-derives from the
-    * GROWN corpus size ([[Similarity.writeSignIndex]] auto mode) —
-    * `corpusCount` ≥ 0 skips that sizing count's corpus re-scan (the
-    * archive count reads parquet footers only). `newIndexPath`
-    * non-empty = build there instead, unversioned (caller-managed).
-    * Returns the max batch id folded, or -1 when there was nothing to
-    * compact.
+  /** [[IngestStream.fold]] the accepted vectors into the sign-index
+    * version `<indexPath>/_ixv<N+1>`. Dims and seed come from the
+    * current index's sidecar (the probe side must match the write side
+    * bit-for-bit); the plane count re-derives from the GROWN corpus
+    * size ([[Similarity.writeSignIndex]] auto mode) — `corpusCount` ≥ 0
+    * spares that sizing its corpus re-scan.
     */
   def compact(spark: SparkSession, corpus: DataFrame, indexPath: String,
       outDir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding", newIndexPath: String = "",
-      corpusCount: Long = -1L): Long = {
+      vecCol: String = "embedding", corpusCount: Long = -1L): Long = {
     val (_, dims, seed) = Similarity.signIndexMeta(spark, indexPath)
       .getOrElse(throw new IllegalArgumentException(
         s"no sign index (with sidecar) at $indexPath"))
-    val dirs = IngestStream.batchDirs(spark, outDir)
-    if (dirs.isEmpty) return -1L
-    val maxId = dirs.map(_._1).max
-    val archived = spark.read.parquet(
-      IngestStream.archiveAccepted(spark, outDir, dirs,
-        Seq(idCol, vecCol)): _*)
-    val known =
-      if (corpusCount >= 0) corpusCount + archived.count() else -1L
-    val next = graft.operators.IndexVersions.nextVersion(spark, indexPath)
-    val target =
-      if (newIndexPath.nonEmpty) newIndexPath
-      else graft.operators.IndexVersions.versionDir(indexPath, next)
-    Similarity.writeSignIndex(
-      corpus.select(col(idCol), col(vecCol)).unionByName(archived),
-      target, dims, numPlanes = 0, seed = seed,
-      idCol = idCol, vecCol = vecCol, knownCount = known)
-    if (newIndexPath.isEmpty)
-      graft.operators.IndexVersions.commit(spark, indexPath, next)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dirs.foreach { case (_, p) =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true): Unit
+    IngestStream.fold(spark, corpus, outDir, Seq(idCol, vecCol), indexPath,
+      IndexVersions.versionDir(indexPath, _), corpusCount) {
+      (rows, target, known) =>
+        Similarity.writeSignIndex(rows, target, dims, numPlanes = 0,
+          seed = seed, idCol = idCol, vecCol = vecCol, knownCount = known)
     }
-    maxId
   }
 }

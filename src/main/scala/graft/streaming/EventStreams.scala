@@ -223,9 +223,7 @@ object EventStreams {
     * rather than reconfigured.
     */
   def readStreamEvents(spark: SparkSession, path: String): DataFrame = {
-    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
-    require(spark.conf.get(nanosAsLong, "false").toBoolean,
-      s"readStreamEvents needs $nanosAsLong=true on the session")
+    graft.Tables.requireNanosAsLong(spark, "readStreamEvents")
     val schema = spark.read.parquet(path).schema
     graft.Tables.normalize(
       spark.readStream.schema(schema).parquet(path))

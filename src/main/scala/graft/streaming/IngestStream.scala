@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.Dedup
+import graft.functions.TextFunctions
+import graft.operators.{Dedup, IndexVersions}
 
 /** Continuous near-duplicate ingest — the persisted-index arrival
   * pipeline (BASELINE.md round-10/11 ingest decades) as ONE streaming
@@ -22,31 +23,44 @@ import graft.operators.Dedup
   *     batches after its original is caught even though the frozen
   *     corpus index has neither.
   *
-  * Survivors land in `outDir/batch=<id>/`, written with overwrite so a
-  * foreachBatch retry after a crash rewrites the same directory —
-  * append-exactly-once without a transaction log. The accepted-set
-  * probe (step 3) reads the accumulated output; it grows with accepted
-  * arrivals only, which at a 100 TB deployment is orders of magnitude
-  * smaller than the corpus the index covers, and the operator it feeds
-  * is the asymmetric PPJoin whose per-arrival cost is batch-sized.
-  * Periodic re-index folds the accepted set into the next corpus
-  * version, resetting step 3 to empty — the compaction cadence is the
+  * The accepted-set probe (step 3) grows with accepted arrivals only,
+  * which at a 100 TB deployment is orders of magnitude smaller than the
+  * corpus the index covers, and the operator it feeds is the asymmetric
+  * PPJoin whose per-arrival cost is batch-sized. Periodic re-index
+  * ([[compact]]) folds the accepted set into the next corpus version,
+  * resetting step 3 to empty — the compaction cadence is the
   * deployment's knob, not this operator's.
   *
   * Within-batch NEAR-dups (two different-id, similar-text docs in one
-  * arrival) are intentionally not resolved here: that is the symmetric
-  * [[graft.operators.Dedup.ngramJaccardPairs]] on a batch-sized frame,
-  * composable before this sink when the arrival source needs it.
+  * arrival) are resolved only on request (`nearWithinBatch`): that is
+  * the symmetric [[graft.operators.Dedup.ngramJaccardPairs]] on a
+  * batch-sized frame.
+  *
+  * What the three dedup streams share lives here: the micro-batch
+  * driver ([[runDedup]]), the compaction fold ([[fold]]) and the
+  * within-batch exact and stage-1.5 helpers.
   */
 object IngestStream {
 
   /** Rows of `batch` that survive the within-batch exact pass: the
-    * min-id keeper per fingerprint (the [[Dedup.exact]] contract). */
-  private def exactWithinBatch(batch: DataFrame, idCol: String,
-      textCol: String): DataFrame =
+    * min-id keeper per value of `key` — the text fingerprint (the
+    * [[Dedup.exact]] contract), the embedding array (exact: same bytes,
+    * same vector) or a payload hash (so no payload shuffles). */
+  private[streaming] def exactWithinBatch(batch: DataFrame, idCol: String,
+      key: Column): DataFrame =
     batch.join(
-      Dedup.exact(batch, idCol, textCol).select(col("keep_id").as(idCol)),
+      batch.groupBy(key).agg(min(col(idCol)).as(idCol)).select(col(idCol)),
       Seq(idCol))
+
+  /** Stage 1.5: drop every row of `batch` that is in a near-dup
+    * component of `pairs` (id_a, id_b) but is not that component's min
+    * id — connected components, min-id keeper. */
+  private[streaming] def keepComponentMin(batch: DataFrame, idCol: String,
+      pairs: DataFrame): DataFrame =
+    batch.join(
+      Dedup.connectedComponents(pairs)
+        .filter(col("id") =!= col("comp")).select(col("id").as(idCol)),
+      Seq(idCol), "left_anti")
 
   /** One micro-batch through the three dedup stages. Factored out of
     * the stream so tests (and backfills) can replay it batch-exactly.
@@ -84,16 +98,12 @@ object IngestStream {
           .filter(col("score_q") > modelThreshold)
           .drop("n_terms", "score_q")
     }
-    val b1e = exactWithinBatch(b0, idCol, textCol)
+    val b1e = exactWithinBatch(b0, idCol,
+      TextFunctions.fingerprint(col(textCol)))
     val b1 =
       if (!nearWithinBatch) b1e
-      else {
-        val drops = Dedup.connectedComponents(
-            Dedup.ngramJaccardPairs(b1e, idCol, textCol, n, threshold))
-          .filter(col("id") =!= col("comp"))
-          .select(col("id").as(idCol))
-        b1e.join(drops, Seq(idCol), "left_anti")
-      }
+      else keepComponentMin(b1e, idCol,
+        Dedup.ngramJaccardPairs(b1e, idCol, textCol, n, threshold))
     val dupVsCorpus = Dedup.probeNgramIndexBucketed(spark,
         indexTablePrefix, b1, idCol, textCol, n, threshold)
       .select(col("id_batch").as(idCol)).distinct()
@@ -108,34 +118,85 @@ object IngestStream {
     }
   }
 
-  /** Run the ingest stream to completion over whatever is in `srcDir`
-    * (AvailableNow — the drain-the-backlog trigger; swap for a
-    * processing-time trigger in an always-on deployment). The bucketed
-    * index tables are attached on entry when this session doesn't know
-    * them yet ([[Dedup.attachNgramIndexBucketed]]; `indexBuckets` ≤ 0
-    * self-configures from the index sidecars). Restart-safe: checkpoint
-    * tracks consumed files, per-batch overwrite makes replays
-    * idempotent. Restarting over an existing `outDir` with a FRESH
-    * checkpoint is refused: batch ids would restart at 0, so prior
-    * accepted batches would be both bypassed for dedup (nothing is
-    * "strictly older" than batch 0) and clobbered by the per-batch
-    * overwrite — resume with the original checkpoint, or point the
-    * restart at an empty output dir.
+  /** Run the ingest stream ([[runDedup]]) to completion over whatever
+    * is in `srcDir`. The bucketed index tables are attached on entry
+    * when this session doesn't know them yet
+    * ([[Dedup.attachNgramIndexBucketed]]; `indexBuckets` ≤ 0
+    * self-configures from the index sidecars).
     */
   def run(spark: SparkSession, srcDir: String, indexTablePrefix: String,
       indexBuckets: Int = 0, outDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
       threshold: Double = 0.5, maxFilesPerTrigger: Int = 1,
       compactCorpus: Option[DataFrame] = None,
-      compactMaxBytes: Long = Long.MaxValue,
       compactMaxRows: Long = Long.MaxValue,
       nearWithinBatch: Boolean = false,
-      compactCorpusCount: Long = -1L,
       modelPath: Option[String] = None,
       modelThreshold: Long = 0L): Unit = {
     require(
       Dedup.attachNgramIndexBucketed(spark, indexTablePrefix, indexBuckets),
       s"no bucketed n-gram index under table prefix $indexTablePrefix")
+    runDedup(spark, srcDir, outDir, checkpointDir, maxFilesPerTrigger,
+      compactMaxRows, compactCorpus.map(corpus => () =>
+        compact(spark, corpus, indexTablePrefix, outDir,
+          idCol, textCol, n, threshold))) { (batch, accepted) =>
+      applyBatch(spark, batch, accepted, indexTablePrefix,
+        idCol, textCol, n, threshold, nearWithinBatch,
+        modelPath, modelThreshold)
+    }
+  }
+
+  /** Drain the parquet files under `srcDir` (normalized by
+    * [[graft.Tables.normalize]]) through `f`, one call per micro-batch
+    * with its id, and return when the backlog is consumed (AvailableNow;
+    * an always-on deployment swaps in a processing-time trigger). The
+    * checkpoint tracks consumed files: a batch that crashed before its
+    * checkpoint commit is redelivered under the SAME id, so `f` must
+    * make redelivery idempotent.
+    */
+  private[streaming] def drain(spark: SparkSession, srcDir: String,
+      checkpointDir: String, maxFilesPerTrigger: Int)(
+      f: (DataFrame, Long) => Unit): Unit = {
+    val schema = graft.Tables.read(spark, srcDir).schema
+    graft.Tables.normalize(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir))
+      .writeStream
+      .foreachBatch(f)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+  }
+
+  /** The micro-batch driver of the three dedup streams, on [[drain]].
+    *
+    * Sink/replay: `dedup(batch, accepted)` sees as `accepted` only the
+    * STRICTLY-OLDER `batch=` dirs (a retry of batch N must not probe N's
+    * own half-written output), and its survivors land in
+    * `outDir/batch=<id>/`, written with overwrite, so a retry after a
+    * crash rewrites the same directory — append-exactly-once without a
+    * transaction log.
+    *
+    * Restart: resume with the original checkpoint, or point the
+    * restart at an empty output dir. A FRESH checkpoint over an existing
+    * `outDir` is refused: batch ids would restart at 0, so prior
+    * accepted batches would be both bypassed for dedup (nothing is
+    * "strictly older" than batch 0) and clobbered by the overwrite.
+    *
+    * Auto-compact (`compact` given — a stream's `compactCorpus`): when
+    * the accepted set holds more than `compactMaxRows` rows after a
+    * batch, `compact` folds it into the next index version BETWEEN
+    * micro-batches. A crash there leaves the stream probing version N.
+    * A crash in the compact→checkpoint-commit window replays batch N
+    * against the index that already HOLDS its accepted rows, so the
+    * replayed output is empty: every accepted row lives exactly once,
+    * in the compaction archive, and nothing is admitted twice or lost.
+    */
+  private[streaming] def runDedup(spark: SparkSession, srcDir: String,
+      outDir: String, checkpointDir: String, maxFilesPerTrigger: Int,
+      compactMaxRows: Long, compact: Option[() => Long])(
+      dedup: (DataFrame, Option[DataFrame]) => DataFrame): Unit = {
     val next = nextBatchId(spark, checkpointDir)
     val stale = batchDirs(spark, outDir).filter(_._1 >= next)
     require(stale.isEmpty,
@@ -145,164 +206,112 @@ object IngestStream {
         "them for dedup and overwrite them; resume with the original " +
         "checkpoint dir or use a fresh output dir")
     mkdirs(spark, outDir)
-    val schema = graft.Tables.read(spark, srcDir).schema
-    val stream = graft.Tables.normalize(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir))
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a retry of batch N must not probe N's own half-written
-        // output: only strictly-older batches count as accepted
-        val acceptedDirs =
-          batchDirs(spark, outDir).filter(_._1 < batchId).map(_._2)
-        val accepted =
-          if (acceptedDirs.isEmpty) None
-          else Some(spark.read.parquet(acceptedDirs: _*))
-        applyBatch(spark, batch, accepted, indexTablePrefix,
-          idCol, textCol, n, threshold, nearWithinBatch,
-          modelPath, modelThreshold)
+    drain(spark, srcDir, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        dedup(batch, acceptedBefore(spark, outDir, batchId))
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        // opt-in auto-compact: when the accepted set outgrows its
-        // thresholds, fold it into the next index version BETWEEN
-        // micro-batches — the trigger policy the doc advice used to
-        // leave to the caller's memory. The versioned commit makes a
-        // crash here harmless: the stream keeps probing version N.
-        // A crash in the compact→checkpoint-commit window replays
-        // batch N against the index that already HOLDS its accepted
-        // rows, so the replayed output is empty — every accepted doc
-        // then lives exactly once, in the compaction archive, and the
-        // dedup contract (nothing admitted twice, nothing lost) holds
-        // through the replay.
-        if (compactCorpus.isDefined &&
-            shouldCompact(spark, outDir, compactMaxBytes, compactMaxRows)) {
-          // compactCorpusCount >= 0 spares every auto-compaction the
-          // bucket-sizing re-scan of the frozen corpus (the caller
-          // knows its count; the archive side is footer-counted)
-          compact(spark, compactCorpus.get, indexTablePrefix, outDir,
-            idCol, textCol, n, threshold,
-            corpusCount = compactCorpusCount): Unit
+        compact.foreach { c =>
+          if (shouldCompact(spark, outDir, compactMaxRows)) c(): Unit
         }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Compaction trigger policy: true when the stream's accepted set —
-    * the rows every stage-3 probe pays for — has outgrown either
-    * threshold. Bytes come from filesystem metadata (free at any
-    * scale); the row check reads only parquet footers and runs only
-    * when a row threshold is actually set. No thresholds set = never
-    * (compaction stays fully manual).
+    * the rows every stage-3 probe pays for — holds more than
+    * `maxAcceptedRows` rows (a parquet-footer count). No threshold =
+    * never: compaction stays manual.
     */
   def shouldCompact(spark: SparkSession, outDir: String,
-      maxAcceptedBytes: Long = Long.MaxValue,
-      maxAcceptedRows: Long = Long.MaxValue): Boolean = {
-    if (maxAcceptedBytes == Long.MaxValue && maxAcceptedRows == Long.MaxValue)
-      return false
-    val dirs = batchDirs(spark, outDir)
-    if (dirs.isEmpty) return false
-    if (maxAcceptedBytes != Long.MaxValue) {
-      val fs = new org.apache.hadoop.fs.Path(outDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes = dirs.map { case (_, p) =>
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
-      }.sum
-      if (bytes > maxAcceptedBytes) return true
-    }
+      maxAcceptedRows: Long = Long.MaxValue): Boolean =
     maxAcceptedRows != Long.MaxValue &&
-      spark.read.parquet(dirs.map(_._2): _*).count() > maxAcceptedRows
-  }
+      accepted(spark, outDir).exists(_.count() > maxAcceptedRows)
 
   /** Everything the stream has accepted so far. */
-  def accepted(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val dirs = batchDirs(spark, outDir).map(_._2)
+  def accepted(spark: SparkSession, outDir: String): Option[DataFrame] =
+    acceptedBefore(spark, outDir, Long.MaxValue)
+
+  private def acceptedBefore(spark: SparkSession, outDir: String,
+      batchId: Long): Option[DataFrame] = {
+    val dirs = batchDirs(spark, outDir).filter(_._1 < batchId).map(_._2)
     if (dirs.isEmpty) None
     else Some(spark.read.parquet(dirs: _*))
   }
 
-  /** Fold everything the stream has ACCEPTED into the next corpus
-    * version of the persisted index — the periodic re-index the stream
-    * docs promise, as an operator instead of a doc comment. The
+  /** [[fold]] the accepted set into the n-gram index version under
+    * table prefix `<prefix>_ixv<N+1>` (the index tables hold shingle
+    * structures, not raw text, so the fold needs the `corpus` rows).
+    * The bucket count re-derives from the GROWN corpus size
+    * ([[Dedup.writeNgramIndexBucketed]] auto mode) unless pinned;
+    * `corpusCount` ≥ 0 spares that sizing its corpus re-scan.
+    */
+  def compact(spark: SparkSession, corpus: DataFrame,
+      indexTablePrefix: String, outDir: String,
+      idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
+      threshold: Double = 0.5, buckets: Int = 0,
+      corpusCount: Long = -1L): Long =
+    fold(spark, corpus, outDir, Seq(idCol, textCol),
+      IndexVersions.tableRoot(spark, indexTablePrefix),
+      IndexVersions.versionPrefix(indexTablePrefix, _), corpusCount) {
+      (rows, target, known) =>
+        Dedup.writeNgramIndexBucketed(rows, target, idCol, textCol, n,
+          threshold, buckets, knownCount = known)
+    }
+
+  /** The compaction fold every dedup stream's `compact` runs. The
     * accepted-set probe (stage 3) grows with every accepted arrival;
-    * without this fold it grows without bound. After compaction the
-    * duplicates it was catching are caught one stage earlier, by the
-    * rebuilt INDEX (stage 2), and stage 3 restarts empty.
+    * after this fold the duplicates it was catching are caught one stage
+    * earlier, by the rebuilt INDEX (stage 2), and stage 3 restarts
+    * empty.
     *
-    * `corpus` is the frozen GENERATION-ZERO corpus (the caller's corpus
-    * store — the index tables hold shingle structures, not raw text, so
-    * the fold needs the source rows). Accepted rows archived by EARLIER
-    * compactions are folded in automatically (every
-    * `outDir/compacted/upto=*` dir), so repeated compactions never need
-    * the caller to grow the corpus frame. Steps, in crash-safe order:
+    * `corpus` is the frozen generation-zero corpus; accepted rows
+    * archived by EARLIER compactions (every `outDir/compacted/upto=*`
+    * dir) fold in automatically. Steps, in crash-safe order:
     *
-    *  1. archive the NOT-yet-archived accepted rows under
+    *  1. archive the NOT-yet-archived accepted rows (`cols`, the
+    *     (id, payload) projection) under
     *     `outDir/compacted/upto=<maxBatchId>` — they are the next
     *     generation's delta; deleting them unarchived would lose the
-    *     stream's output. Batches already covered by a committed
-    *     archive are skipped and partial archives from a crashed write
-    *     are rebuilt, so a compaction retry after ANY crash folds each
+    *     stream's output. A compaction retry after ANY crash folds each
     *     accepted row exactly once ([[archiveAccepted]]);
-    *  2. build index version N+1 BESIDE version N over corpus ∪ all
-    *     archives (reading the ARCHIVED copies, so the rebuild never
-    *     races a deletion), under table prefix
-    *     `<prefix>_ixv<N+1>` ([[graft.operators.IndexVersions]]), then
-    *     FLIP THE POINTER — write-temp + atomic rename, the
-    *     [[UpsertSink]] commit pattern. A crash anywhere before the
-    *     flip leaves every probe on version N: the rebuild crash window
-    *     is zero and rollback is moving the pointer back. The bucket
-    *     count re-derives from the GROWN corpus size
-    *     ([[Dedup.writeNgramIndexBucketed]] auto mode) unless pinned;
-    *     `corpusCount` ≥ 0 skips that sizing count job — the rebuild
-    *     then pays ONE cheap parquet-footer count over the archives
-    *     instead of re-scanning the corpus it just materialized;
+    *  2. `write` version N+1 over corpus ∪ all archives (the ARCHIVED
+    *     copies, so the rebuild never races a deletion) at
+    *     `target(N+1)`, BESIDE version N, then FLIP THE POINTER under
+    *     `root` ([[IndexVersions.commit]]). A crash before the flip
+    *     leaves every probe on version N. `write` gets its input's row
+    *     count when `corpusCount` ≥ 0 (plus a parquet-footer count of
+    *     the archives), else -1;
     *  3. remove the `batch=` dirs, so [[accepted]] and the stage-3
     *     probe restart empty. A crash between 2 and 3 leaves both
     *     defenses active (index AND accepted set catch the same dups) —
     *     redundant, never wrong.
     *
     * A restarted stream keeps its checkpoint, so batch ids continue
-    * past the compaction point and the [[run]]-entry guard stays
+    * past the compaction point and the [[runDedup]] guard stays
     * satisfied. Returns the max batch id folded, or -1 when there was
     * nothing to compact.
     */
-  def compact(spark: SparkSession, corpus: DataFrame,
-      indexTablePrefix: String, outDir: String,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
-      threshold: Double = 0.5, buckets: Int = 0,
-      corpusCount: Long = -1L): Long = {
+  private[streaming] def fold(spark: SparkSession, corpus: DataFrame,
+      outDir: String, cols: Seq[String], root: String,
+      target: Int => String, corpusCount: Long = -1L)(
+      write: (DataFrame, String, Long) => Unit): Long = {
     val dirs = batchDirs(spark, outDir)
     if (dirs.isEmpty) return -1L
-    val maxId = dirs.map(_._1).max
-    val archives = archiveAccepted(spark, outDir, dirs,
-      Seq(idCol, textCol))
-    val archived = spark.read.parquet(archives: _*)
-    // knownCount spares the auto-bucket sizing its corpus re-scan: the
-    // archive count reads parquet footers only
+    val archived = spark.read.parquet(
+      archiveAccepted(spark, outDir, dirs, cols): _*)
     val known =
       if (corpusCount >= 0) corpusCount + archived.count() else -1L
-    val root = graft.operators.IndexVersions.tableRoot(spark,
-      indexTablePrefix)
-    val next = graft.operators.IndexVersions.nextVersion(spark, root)
-    Dedup.writeNgramIndexBucketed(
-      corpus.select(col(idCol), col(textCol)).unionByName(archived),
-      graft.operators.IndexVersions.versionPrefix(indexTablePrefix, next),
-      idCol, textCol, n, threshold, buckets, knownCount = known)
-    graft.operators.IndexVersions.commit(spark, root, next)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dirs.foreach { case (_, p) =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true): Unit
-    }
-    maxId
+    val next = IndexVersions.nextVersion(spark, root)
+    write(corpus.select(cols.map(col): _*).unionByName(archived),
+      target(next), known)
+    IndexVersions.commit(spark, root, next)
+    IndexVersions.deleteNumbered(spark, outDir, "batch=",
+      dirs.map(_._1).toSet)
+    dirs.map(_._1).max
   }
 
   /** Archive the NOT-YET-ARCHIVED accepted rows and return every
-    * archive dir the compaction rebuild should fold. Shared by both
-    * ingest-stream compacts ([[compact]],
-    * [[EmbedIngestStream.compact]]); `cols` is the (id, payload)
-    * projection the archive keeps.
+    * archive dir the compaction rebuild should fold ([[fold]] step 1);
+    * `cols` is the (id, payload) projection the archive keeps.
     *
     * The invariant this enforces is "every accepted doc lives exactly
     * once across the archives", against two crash shapes a naive
@@ -314,8 +323,8 @@ object IngestStream {
     *    `upto=M` would double-count them in every future rebuild (and
     *    in the `knownCount` bucket sizing). Only batches ABOVE the
     *    newest committed archive are archived here — batch ids are
-    *    monotonic (fresh-checkpoint restarts are refused at [[run]]
-    *    entry), so id ≤ N ⟺ already archived;
+    *    monotonic (fresh-checkpoint restarts are refused by
+    *    [[runDedup]]), so id ≤ N ⟺ already archived;
     *  - a compaction that crashed DURING its archive write leaves a
     *    partial `upto=` dir (no parquet-committer `_SUCCESS` marker —
     *    deployments that disable `mapreduce.fileoutputcommitter.
@@ -327,41 +336,34 @@ object IngestStream {
   private[graft] def archiveAccepted(spark: SparkSession,
       outDir: String, dirs: Seq[(Long, String)],
       cols: Seq[String]): Seq[String] = {
+    val compacted = s"$outDir/compacted"
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (committed, partial) = archiveDirs(spark, outDir).partition { d =>
-      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))
-    }
-    partial.foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(d), true): Unit
-    }
-    val prevUpto = committed.map(uptoOf).maxOption.getOrElse(-1L)
+    val (committed, partial) =
+      IndexVersions.numbered(spark, compacted, "upto=").partition { n =>
+        fs.exists(new org.apache.hadoop.fs.Path(s"$compacted/upto=$n",
+          "_SUCCESS"))
+      }
+    IndexVersions.deleteNumbered(spark, compacted, "upto=", partial.toSet)
+    val prevUpto = committed.maxOption.getOrElse(-1L)
     val fresh = dirs.filter(_._1 > prevUpto)
-    if (fresh.isEmpty) committed
-    else {
-      val archive = s"$outDir/compacted/upto=${dirs.map(_._1).max}"
-      spark.read.parquet(fresh.map(_._2): _*)
-        .select(cols.map(col): _*)
-        .write.mode("overwrite").parquet(archive)
-      committed :+ archive
-    }
+    val upto =
+      if (fresh.isEmpty) committed
+      else {
+        val maxId = dirs.map(_._1).max
+        spark.read.parquet(fresh.map(_._2): _*)
+          .select(cols.map(col): _*)
+          .write.mode("overwrite").parquet(s"$compacted/upto=$maxId")
+        committed :+ maxId
+      }
+    upto.map(n => s"$compacted/upto=$n")
   }
 
-  private def uptoOf(dir: String): Long =
-    new org.apache.hadoop.fs.Path(dir).getName.stripPrefix("upto=").toLong
-
-  /** All accepted-set archives under `outDir` (`compacted/upto=*`),
-    * Hadoop-FS-listed for the same HDFS-safety reason as [[batchDirs]].
-    */
+  /** All accepted-set archives under `outDir` (`compacted/upto=*`). */
   private[graft] def archiveDirs(spark: SparkSession,
-      outDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(outDir, "compacted")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("upto="))
-      .map(_.getPath.toString)
-  }
+      outDir: String): Seq[String] =
+    IndexVersions.numbered(spark, s"$outDir/compacted", "upto=")
+      .map(n => s"$outDir/compacted/upto=$n")
 
   /** The `batch=<id>` output dirs under `outDir` as (id, path), through
     * the HADOOP filesystem API — `java.io.File` only sees the local
@@ -369,16 +371,9 @@ object IngestStream {
     * accepted set to empty and silently skip cross-batch dedup.
     */
   private[graft] def batchDirs(spark: SparkSession,
-      outDir: String): Seq[(Long, String)] = {
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .map(st =>
-        (st.getPath.getName.stripPrefix("batch=").toLong,
-          st.getPath.toString))
-  }
+      outDir: String): Seq[(Long, String)] =
+    IndexVersions.numbered(spark, outDir, "batch=")
+      .map(n => (n, s"$outDir/batch=$n"))
 
   private[streaming] def mkdirs(spark: SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -387,17 +382,10 @@ object IngestStream {
 
   /** The batch id the stream engine will assign next under this
     * checkpoint: max committed-offset id + 1, or 0 for a fresh/absent
-    * checkpoint — the run()-entry guard's reference point.
+    * checkpoint — the [[runDedup]] guard's reference point.
     */
   private[streaming] def nextBatchId(spark: SparkSession,
-      checkpointDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(checkpointDir, "offsets")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).iterator
-      .map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong)
+      checkpointDir: String): Long =
+    IndexVersions.numbered(spark, s"$checkpointDir/offsets", "")
       .foldLeft(-1L)(math.max) + 1L
-  }
 }

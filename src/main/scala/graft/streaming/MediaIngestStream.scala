@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.{Bucketed, Dedup, IndexVersions, Multimodal}
+import graft.operators.{Bucketed, IndexVersions, Multimodal}
 
 /** Continuous near-duplicate ingest for MEDIA — the perceptual mirror
   * of [[IngestStream]] (text) and [[EmbedIngestStream]] (vectors),
@@ -26,12 +25,11 @@ import graft.operators.{Bucketed, Dedup, IndexVersions, Multimodal}
   *     transcode arriving two batches after its original is caught
   *     even though the frozen corpus index has neither.
   *
-  * Sink/replay semantics are [[IngestStream]]'s: survivors land in
-  * `outDir/batch=<id>/` written with overwrite, so a foreachBatch retry
-  * rewrites the same directory — append-exactly-once without a
-  * transaction log. The accepted-set probe grows with accepted arrivals
-  * only; [[compact]] folds it into the next index generation through
-  * the [[IndexVersions]] pointer, resetting stage 3 to empty.
+  * The micro-batch driver and the compaction fold are
+  * [[IngestStream]]'s; this object brings the perceptual kernels and
+  * the phash-index writer. The accepted-set probe grows with accepted
+  * arrivals only; [[compact]] folds it into the next index generation
+  * through the [[IndexVersions]] pointer, resetting stage 3 to empty.
   *
   * The decoder seam is [[Multimodal.perceptualSig]]'s: signatures hash
   * whatever sample stream the decode stage yields (here the payload
@@ -39,16 +37,6 @@ import graft.operators.{Bucketed, Dedup, IndexVersions, Multimodal}
   * luma/PCM first and this stream is unchanged.
   */
 object MediaIngestStream {
-
-  /** Rows of `batch` surviving the within-batch byte-exact pass: the
-    * min-id keeper per payload sha256 (collision-free in practice; the
-    * 32-byte key is what crosses the shuffle, not the payload). */
-  private def exactWithinBatch(batch: DataFrame, idCol: String,
-      contentCol: String): DataFrame =
-    batch.join(
-      batch.groupBy(sha2(col(contentCol), 256))
-        .agg(min(col(idCol)).as(idCol)).select(col(idCol)),
-      Seq(idCol))
 
   /** One micro-batch through the three dedup stages — factored out so
     * tests, gates, and backfills can replay it batch-exactly.
@@ -76,18 +64,14 @@ object MediaIngestStream {
             "explicitly"))
     val named = batch.withColumnRenamed(idCol, "media_id")
       .withColumnRenamed(contentCol, "content")
-    val b1e = exactWithinBatch(named, "media_id", "content")
+    val b1e = IngestStream.exactWithinBatch(named, "media_id",
+      sha2(col("content"), 256))
     val b1 =
       if (!nearWithinBatch) b1e
-      else {
-        val drops = Dedup.connectedComponents(
-            Multimodal.perceptualNearDupPairs(
-              Multimodal.perceptualSig(b1e), maxDist, effBands)
-              .select(col("id_a"), col("id_b")))
-          .filter(col("id") =!= col("comp"))
-          .select(col("id").as("media_id"))
-        b1e.join(drops, Seq("media_id"), "left_anti")
-      }
+      else IngestStream.keepComponentMin(b1e, "media_id",
+        Multimodal.perceptualNearDupPairs(
+            Multimodal.perceptualSig(b1e), maxDist, effBands)
+          .select(col("id_a"), col("id_b")))
     val dupVsCorpus = Multimodal.probePhashIndex(spark, indexTable,
         b1, maxDist, effBands)
       .select(col("media_id")).distinct()
@@ -106,83 +90,34 @@ object MediaIngestStream {
       .withColumnRenamed("content", contentCol)
   }
 
-  /** Drain `srcDir` (parquet of (idCol, contentCol)) through the ingest
-    * pipeline (AvailableNow trigger — swap for a processing-time
-    * trigger in an always-on deployment). The band count comes from
-    * the index sidecar; a mismatched explicit value is refused at the
-    * probe. Restart-safe: the checkpoint tracks consumed files,
-    * per-batch overwrite makes replays idempotent. Restarting over an
-    * existing `outDir` with a FRESH checkpoint is refused, same
-    * contract (and same guard) as [[IngestStream.run]].
+  /** Drain `srcDir` (parquet of (idCol, contentCol)) through the
+    * ingest pipeline ([[IngestStream.runDedup]]). The band count comes
+    * from the index sidecar.
     */
   def run(spark: SparkSession, srcDir: String, indexTable: String,
       outDir: String, checkpointDir: String,
       idCol: String = "media_id", contentCol: String = "content",
       maxDist: Int = 8, maxFilesPerTrigger: Int = 1,
       compactCorpus: Option[DataFrame] = None,
-      compactMaxBytes: Long = Long.MaxValue,
       compactMaxRows: Long = Long.MaxValue,
       nearWithinBatch: Boolean = false): Unit = {
     require(Multimodal.phashIndexMeta(spark, indexTable).isDefined,
       s"no phash index (with sidecar) at $indexTable")
-    val next = IngestStream.nextBatchId(spark, checkpointDir)
-    val stale = IngestStream.batchDirs(spark, outDir).filter(_._1 >= next)
-    require(stale.isEmpty,
-      s"output dir $outDir already holds batches " +
-        s"${stale.map(_._1).sorted.mkString(",")} at or past this " +
-        s"checkpoint's next batch id $next — restarting would bypass " +
-        "them for dedup and overwrite them; resume with the original " +
-        "checkpoint dir or use a fresh output dir")
-    IngestStream.mkdirs(spark, outDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a retry of batch N must not probe N's own half-written
-        // output: only strictly-older batches count as accepted
-        val acceptedDirs = IngestStream.batchDirs(spark, outDir)
-          .filter(_._1 < batchId).map(_._2)
-        val accepted =
-          if (acceptedDirs.isEmpty) None
-          else Some(spark.read.parquet(acceptedDirs: _*))
+    IngestStream.runDedup(spark, srcDir, outDir, checkpointDir,
+      maxFilesPerTrigger, compactMaxRows, compactCorpus.map(corpus => () =>
+        compact(spark, corpus, indexTable, outDir, idCol, contentCol))) {
+      (batch, accepted) =>
         applyBatch(spark, batch, accepted, indexTable, idCol, contentCol,
           maxDist, bands = 0, nearWithinBatch = nearWithinBatch)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        // opt-in auto-compact between micro-batches — the versioned
-        // pointer commit keeps a mid-compaction crash invisible to the
-        // stream (next batch still probes generation N)
-        if (compactCorpus.isDefined && IngestStream.shouldCompact(
-            spark, outDir, compactMaxBytes, compactMaxRows)) {
-          compact(spark, compactCorpus.get, indexTable, outDir,
-            idCol, contentCol): Unit
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
-  /** Everything the stream has accepted so far (shared layout with the
-    * text-side stream). */
-  def accepted(spark: SparkSession, outDir: String): Option[DataFrame] =
-    IngestStream.accepted(spark, outDir)
-
-  /** Fold the accepted media into the next GENERATION of the phash
-    * index — the media mirror of [[IngestStream.compact]], same
-    * crash-safe order (archive → build generation N+1 BESIDE N →
-    * POINTER FLIP → clear batch dirs; [[IndexVersions]]) and same
-    * contract: after the flip the rebuilt INDEX catches what the
-    * accepted-set probe was catching, stage 3 restarts empty, and a
-    * crash anywhere before the flip leaves every probe on generation
-    * N. `corpus` is the frozen generation-zero corpus (the index
-    * holds banded signature rows, not payloads, so the fold needs the
-    * source assets); earlier compactions' archives fold in
-    * automatically. Bands and bucket count replay the CURRENT
-    * generation's sidecars unless overridden (`buckets` > 0 — e.g. to
-    * grow bucket width with the corpus). Returns the max batch id
-    * folded, or -1 when there was nothing to compact.
+  /** [[IngestStream.fold]] the accepted media into the phash-index
+    * generation `<indexTable>_ixv<N+1>` (the index holds banded
+    * signature rows, not payloads, so the fold needs the `corpus`
+    * assets). Bands and bucket count replay the CURRENT generation's
+    * sidecars unless overridden (`buckets` > 0 — e.g. to grow bucket
+    * width with the corpus).
     */
   def compact(spark: SparkSession, corpus: DataFrame, indexTable: String,
       outDir: String, idCol: String = "media_id",
@@ -196,27 +131,13 @@ object MediaIngestStream {
       else Bucketed.bucketMeta(spark, resolved).map(_._1)
         .getOrElse(throw new IllegalArgumentException(
           s"no bucket sidecar under $resolved — pass buckets explicitly"))
-    val dirs = IngestStream.batchDirs(spark, outDir)
-    if (dirs.isEmpty) return -1L
-    val maxId = dirs.map(_._1).max
-    val archived = spark.read.parquet(
-      IngestStream.archiveAccepted(spark, outDir, dirs,
-        Seq(idCol, contentCol)): _*)
-    val root = Multimodal.phashIndexRoot(spark, indexTable)
-    val next = IndexVersions.nextVersion(spark, root)
-    Multimodal.writePhashIndex(
-      corpus.select(col(idCol).as("media_id"),
-          col(contentCol).as("content"))
-        .unionByName(archived.select(col(idCol).as("media_id"),
-          col(contentCol).as("content"))),
-      IndexVersions.versionPrefix(indexTable, next), effBuckets, bands)
-    IndexVersions.commit(spark, root, next)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dirs.foreach { case (_, p) =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true): Unit
+    IngestStream.fold(spark, corpus, outDir, Seq(idCol, contentCol),
+      Multimodal.phashIndexRoot(spark, indexTable),
+      IndexVersions.versionPrefix(indexTable, _)) { (rows, target, _) =>
+      Multimodal.writePhashIndex(
+        rows.select(col(idCol).as("media_id"), col(contentCol).as("content")),
+        target, effBuckets, bands)
     }
-    maxId
   }
 
   /** Drop a (possibly compacted) phash index: every generation's table

@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.operators.Scd
 
-/** Incremental materialized state: a streaming `foreachBatch` sink that
+/** Incremental materialized state: a streaming micro-batch sink that
   * folds each micro-batch of a change stream into a latest-per-key
   * parquet state table — the continuously-maintained "current snapshot"
   * every CDC / feature-store / crawl-frontier pipeline keeps.
@@ -136,8 +135,8 @@ object UpsertSink {
   }
 
   /** Run the stream to completion over whatever is in `srcDir`
-    * (AvailableNow), maintaining `stateDir`. Restart-safe via the
-    * checkpoint + idempotent [[applyBatch]].
+    * ([[IngestStream.drain]]), maintaining `stateDir`. Restart-safe via
+    * the checkpoint + idempotent [[applyBatch]].
     */
   def run(spark: SparkSession, srcDir: String, stateDir: String,
       checkpointDir: String, keyCol: String = "user_id",
@@ -145,19 +144,11 @@ object UpsertSink {
       tieCol: String = "event_id", maxFilesPerTrigger: Int = 1,
       deletedCol: Option[String] = None): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateDir))
-    val schema = graft.Tables.read(spark, srcDir).schema
-    val stream = graft.Tables.normalize(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir))
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    IngestStream.drain(spark, srcDir, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
         applyBatch(spark, stateDir,
           compactBatch(batch, keyCol, tsCol, valueCol, tieCol, deletedCol),
           batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 }

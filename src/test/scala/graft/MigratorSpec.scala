@@ -24,6 +24,20 @@ class MigratorSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/nation_out").count() == 25)
   }
 
+  test("SourceReader refuses a parquet read on a session that reads " +
+      "nanosecond timestamps natively, naming the conf, and leaves its " +
+      "conf as is") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    s.conf.set(key, "false")
+    val err = intercept[IllegalArgumentException] {
+      new SourceReader(s, sf001).table("region")
+    }
+    assert(err.getMessage.contains(key))
+    assert(s.conf.get(key) == "false")
+    assert(spark.conf.get(key) == "true")
+  }
+
   test("mapping: exclude + rename + computed + order flow through to sink") {
     val out = tmpDir("mig-map")
     val spec = MigrationSpec(

@@ -671,7 +671,7 @@ class StreamingSpec extends SparkSpec {
   test("embedding ingest stream: within-batch exact + vs-sign-index + " +
       "vs-accepted dedup == the sequential batch replay") {
     import graft.operators.{Dedup, Similarity}
-    import graft.streaming.EmbedIngestStream
+    import graft.streaming.{EmbedIngestStream, IngestStream}
     val dims = 64
     val emb = Tables(spark, sf001, "embeddings")
     val corpus = emb.filter(pmod($"vec_id", lit(10)) =!= 0)
@@ -732,7 +732,7 @@ class StreamingSpec extends SparkSpec {
     EmbedIngestStream.run(spark, srcDir, idxPath, dims,
       outDir = outDir, checkpointDir = tmpDir("embed-ingest-ckpt"),
       maxFilesPerTrigger = 1)
-    val got = EmbedIngestStream.accepted(spark, outDir).get
+    val got = IngestStream.accepted(spark, outDir).get
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(got === Set(1000001L, 1000003L), s"accepted set diverged: $got")
 
@@ -753,7 +753,7 @@ class StreamingSpec extends SparkSpec {
     // by the INDEX alone
     val folded = EmbedIngestStream.compact(spark, corpus, idxPath, outDir)
     assert(folded >= 0L)
-    assert(EmbedIngestStream.accepted(spark, outDir).isEmpty,
+    assert(IngestStream.accepted(spark, outDir).isEmpty,
       "accepted-set probe must be empty after compaction")
     assert(spark.read.parquet(s"$outDir/compacted")
       .select($"vec_id").collect().map(_.getLong(0)).toSet === got)
@@ -995,7 +995,7 @@ class StreamingSpec extends SparkSpec {
   test("versioned compaction (embeddings): killed rebuild leaves the " +
       "pointer on version N; retry commits and probes flip over") {
     import graft.operators.{IndexVersions, Similarity}
-    import graft.streaming.EmbedIngestStream
+    import graft.streaming.{EmbedIngestStream, IngestStream}
     val dims = 64
     val emb = Tables(spark, sf001, "embeddings")
     val corpus = emb.filter(pmod($"vec_id", lit(10)) =!= 0)
@@ -1023,7 +1023,7 @@ class StreamingSpec extends SparkSpec {
     // old index still serves: corpus dup dropped, accepted intact
     val probe = EmbedIngestStream.applyBatch(spark,
       Seq((3000002L, corpusVec)).toDF("vec_id", "embedding"),
-      EmbedIngestStream.accepted(spark, outDir), idxPath,
+      IngestStream.accepted(spark, outDir), idxPath,
       "vec_id", "embedding", dims, 0.4, 1, 42L)
     assert(probe.count() === 0L)
     // retry commits; the index alone catches the folded acceptance
@@ -1441,7 +1441,7 @@ class StreamingSpec extends SparkSpec {
       val ckptDir = tmpDir("mingest-ckpt")
       MediaIngestStream.run(spark, srcDir, table, outDir = outDir,
         checkpointDir = ckptDir, maxFilesPerTrigger = 1)
-      val got = MediaIngestStream.accepted(spark, outDir).get
+      val got = IngestStream.accepted(spark, outDir).get
         .select($"media_id").collect().map(_.getLong(0)).toSet
       assert(got === Set(1000001L, 1000003L, 1000006L),
         s"accepted set diverged: $got")
@@ -1466,7 +1466,7 @@ class StreamingSpec extends SparkSpec {
       // through the version pointer; stage 3 restarts empty
       val folded = MediaIngestStream.compact(spark, corpus, table, outDir)
       assert(folded >= 0L)
-      assert(MediaIngestStream.accepted(spark, outDir).isEmpty,
+      assert(IngestStream.accepted(spark, outDir).isEmpty,
         "accepted-set probe must be empty after compaction")
       assert(Multimodal.resolvePhashTable(spark, table) === s"${table}_ixv1",
         "probe resolution must land on the committed generation")
@@ -1487,9 +1487,77 @@ class StreamingSpec extends SparkSpec {
       promote("f3", 1000)
       MediaIngestStream.run(spark, srcDir, table, outDir = outDir,
         checkpointDir = ckptDir, maxFilesPerTrigger = 1)
-      val got3 = MediaIngestStream.accepted(spark, outDir).get
+      val got3 = IngestStream.accepted(spark, outDir).get
         .select($"media_id").collect().map(_.getLong(0)).toSet
       assert(got3 === Set(1000008L), s"post-compaction ingest: $got3")
+    } finally MediaIngestStream.dropPhashIndex(spark, table)
+  }
+
+  test("versioned compaction (media): killed rebuild leaves the pointer " +
+      "on generation N, probes and batch dirs intact; the retry folds " +
+      "each accepted asset exactly once") {
+    import graft.operators.{IndexVersions, Multimodal}
+    import graft.streaming.{IngestStream, MediaIngestStream}
+    def payload(stem: String): Array[Byte] = {
+      val b = new Array[Byte](256)
+      new scala.util.Random(stem.hashCode.toLong).nextBytes(b)
+      b
+    }
+    def transcode(p: Array[Byte]): Array[Byte] = {
+      val c = p.clone(); c(0) = (c(0) + 1).toByte; c
+    }
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select($"media_id").collect().map(_.getLong(0)).toSet
+    val corpus = (1L to 20L).map(i => (i, payload(s"k$i")))
+      .toDF("media_id", "content")
+    val table = "media_kill_test_idx"
+    try {
+      MediaIngestStream.dropPhashIndex(spark, table)
+      Multimodal.writePhashIndex(corpus, table, buckets = 4, bands = 4)
+      val root = Multimodal.phashIndexRoot(spark, table)
+      val a = payload("kalpha"); val b = payload("kbeta")
+      val outDir = tmpDir("media-kill-out")
+      MediaIngestStream.applyBatch(spark,
+          Seq((7000001L, a), (7000002L, b)).toDF("media_id", "content"),
+          None, table)
+        .write.mode("overwrite").parquet(s"$outDir/batch=0")
+      val batchDirs = IngestStream.batchDirs(spark, outDir)
+
+      val poisoned = corpus.select($"media_id",
+        raise_error(lit("injected rebuild failure")).cast("binary")
+          .as("content"))
+      intercept[Exception] {
+        MediaIngestStream.compact(spark, poisoned, table, outDir)
+      }
+      assert(IndexVersions.currentVersion(spark, root).isEmpty,
+        "a failed rebuild must not move the pointer")
+      assert(Multimodal.resolvePhashTable(spark, table) === table)
+      assert(IngestStream.batchDirs(spark, outDir) === batchDirs,
+        "batch dirs must survive a failed rebuild")
+      // probes unchanged: the old index drops the corpus transcode, the
+      // accepted set drops the transcode of an acceptance
+      val probe = MediaIngestStream.applyBatch(spark,
+        Seq((7000003L, transcode(a)),
+            (7000004L, transcode(payload("k5"))),
+            (7000005L, payload("kgamma"))).toDF("media_id", "content"),
+        IngestStream.accepted(spark, outDir), table)
+      assert(ids(probe) === Set(7000005L),
+        "probes must keep working after a dead rebuild")
+
+      // the retry commits generation 1 and folds each accepted asset
+      // exactly once (the archive written before the crash is reused)
+      assert(MediaIngestStream.compact(spark, corpus, table, outDir) === 0L)
+      assert(IndexVersions.currentVersion(spark, root) === Some(1))
+      assert(IngestStream.accepted(spark, outDir).isEmpty)
+      val archived = spark.read.parquet(s"$outDir/compacted")
+        .select($"media_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(archived === Seq(7000001L, 7000002L))
+      val viaIndex = MediaIngestStream.applyBatch(spark,
+        Seq((7000006L, transcode(a)), (7000007L, transcode(b)),
+          (7000008L, payload("kdelta"))).toDF("media_id", "content"),
+        None, table)
+      assert(ids(viaIndex) === Set(7000008L),
+        "the committed generation must catch both folded acceptances")
     } finally MediaIngestStream.dropPhashIndex(spark, table)
   }
 
