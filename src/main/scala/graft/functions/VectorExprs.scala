@@ -17,9 +17,18 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object VecOps {
 
+  /** The length both vectors of a pairwise kernel share; vectors of
+    * unequal length are refused, never compared on a common prefix. */
+  private def sameLength(a: ArrayData, b: ArrayData, kernel: String): Int = {
+    val n = a.numElements()
+    if (b.numElements() != n) throw new IllegalArgumentException(
+      s"$kernel: vectors of unequal length $n and ${b.numElements()}")
+    n
+  }
+
   /** Cosine similarity over two float vectors (0.0 when either is zero). */
   def cosine(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = sameLength(a, b, "cosine")
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -32,7 +41,7 @@ object VecOps {
   }
 
   def dot(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = sameLength(a, b, "dot")
     var s = 0.0
     var i = 0
     while (i < n) { s += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
@@ -385,11 +394,11 @@ object VecOps {
     new GenericArrayData(out)
   }
 
-  /** Per-cell IVF ranking score, bit-identical to the dataframe path it
-    * replaces (`2.0 * dot(v, c) − dot(c, c)` over [[dot]]'s double
-    * accumulation in ascending-index order): maximizing it minimizes
-    * ‖v−c‖². The two accumulators are independent, so fusing the loops
-    * changes no FP operation or order. */
+  /** The one IVF cell-ranking score ([[graft.operators.Quantizer]]),
+    * bit-identical to its column form `2.0 * dot(v, c) − dot(c, c)` over
+    * [[dot]]'s double accumulation in ascending-index order: maximizing
+    * it minimizes ‖v−c‖². The two accumulators are independent, so
+    * fusing the loops changes no FP operation or order. */
   private def negDistAt(v: ArrayData, centroids: Array[Float],
       off: Int, dims: Int): Double = {
     var d = 0.0; var cc = 0.0
@@ -422,9 +431,9 @@ object VecOps {
   }
 
   /** The `nprobe` nearest cells of `v`, ordered by (score desc, cell
-    * asc) — the probe-side mirror of [[nearestCell]], replacing the
-    * per-query crossJoin + bounded-heap rank with one kernel pass.
-    * Selection is O(nlist · nprobe) over ≤4096 cells. */
+    * asc) — the probe-side mirror of [[nearestCell]]: strict `>` over
+    * an ascending scan replicates the bounded-heap rank's tie-break
+    * exactly. Selection is O(nlist · nprobe) over ≤4096 cells. */
   def nearestCells(v: ArrayData, centroids: Array[Float], nlist: Int,
       dims: Int, nprobe: Int): ArrayData = {
     val n = math.min(nprobe, nlist)
@@ -434,63 +443,6 @@ object VecOps {
       scores(cell) = negDistAt(v, centroids, cell * dims, dims)
       cell += 1
     }
-    selectTop(scores, nlist, n)
-  }
-
-  /** The `nprobe` cells nearest to `v` by COSINE to the centroid,
-    * ordered (cosine desc, cell asc) — the raw-space mirror of
-    * [[nearestCells]] for the in-memory IVF operators, arithmetic
-    * bit-identical to [[cosine]] per cell. */
-  def nearestCellsCosine(v: ArrayData, centroids: Array[Float], nlist: Int,
-      dims: Int, nprobe: Int): ArrayData = {
-    val n = math.min(nprobe, nlist)
-    val scores = new Array[Double](nlist)
-    var cell = 0
-    while (cell < nlist) {
-      val off = cell * dims
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < dims) {
-        val x = v.getFloat(i).toDouble
-        val y = centroids(off + i).toDouble
-        dot += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      scores(cell) =
-        if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-      cell += 1
-    }
-    selectTop(scores, nlist, n)
-  }
-
-  /** The `nprobe` cells nearest to `v` by DOT product with the centroid
-    * ([[dot]]'s arithmetic per cell), ordered (dot desc, cell asc) —
-    * the residual-PQ cell ranking (query pre-normalized, centroid dot
-    * is the exact half of the ADC score). */
-  def nearestCellsDot(v: ArrayData, centroids: Array[Float], nlist: Int,
-      dims: Int, nprobe: Int): ArrayData = {
-    val n = math.min(nprobe, nlist)
-    val scores = new Array[Double](nlist)
-    var cell = 0
-    while (cell < nlist) {
-      val off = cell * dims
-      var s = 0.0
-      var i = 0
-      while (i < dims) {
-        s += v.getFloat(i).toDouble * centroids(off + i).toDouble
-        i += 1
-      }
-      scores(cell) = s
-      cell += 1
-    }
-    selectTop(scores, nlist, n)
-  }
-
-  /** Top-`n` indices of `scores` by (score desc, index asc) — strict
-    * `>` over an ascending scan replicates the bounded-heap rank's
-    * tie-break exactly. */
-  private def selectTop(scores: Array[Double], nlist: Int,
-      n: Int): ArrayData = {
     val taken = new Array[Boolean](nlist)
     val out = new Array[Any](n)
     var r = 0
@@ -628,142 +580,88 @@ case class RademacherSig(child: Expression, numPlanes: Int, dims: Int,
     copy(child = newChild)
 }
 
-/** pq_encode(array<float>) → array<int> of m sub-codebook indices. The
-  * codebook rides the plan as a broadcast-referenced object (same
-  * pattern as [[RademacherSig]]'s sign matrix).
+/** A unary array<float> kernel with one plan-embedded float[] operand
+  * (a centroid matrix, codebook or rotation: a few KB, carried by the
+  * plan as a broadcast-referenced object) and one static [[VecOps]]
+  * call: `call` names it over the generated vector and matrix terms,
+  * `run` makes it when the expression is interpreted.
   */
+abstract class FloatMatrixKernel extends UnaryExpression
+    with ImplicitCastInputTypes {
+  def matrix: Seq[Float]
+  protected def call(v: String, m: String): String
+  protected def run(v: ArrayData, m: Array[Float]): Any
+  @transient private lazy val mat: Array[Float] = matrix.toArray
+  override def inputTypes: Seq[org.apache.spark.sql.graftshim.ExprBridge.AbstractType] =
+    Seq(ArrayType(FloatType))
+  override protected def nullSafeEval(t: Any): Any =
+    run(t.asInstanceOf[ArrayData], mat)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("floatMatrix", mat, "float[]")
+    defineCodeGen(ctx, ev, t => s"graft.functions.VecOps.${call(t, ref)}")
+  }
+}
+
 /** rotate_vec(array<float>) → array<float>: y = R·x for a broadcast
   * row-major rotation matrix (OPQ pre-rotation).
   */
 case class RotateVec(child: Expression, matrix: Seq[Float], dims: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftshim.ExprBridge.AbstractType] =
-    Seq(ArrayType(FloatType))
-  @transient private lazy val mat: Array[Float] = matrix.toArray
+    extends FloatMatrixKernel {
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override protected def nullSafeEval(t: Any): Any =
-    VecOps.matVec(t.asInstanceOf[ArrayData], mat, dims)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("rotMatrix", mat, "float[]")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.VecOps.matVec($t, $ref, $dims)")
-  }
+  protected def call(v: String, m: String): String = s"matVec($v, $m, $dims)"
+  protected def run(v: ArrayData, m: Array[Float]): Any =
+    VecOps.matVec(v, m, dims)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
+/** pq_encode(array<float>) → array<int> of m sub-codebook indices. */
 case class PqEncode(child: Expression, codebook: Seq[Float],
     m: Int, ksub: Int, dsub: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftshim.ExprBridge.AbstractType] =
-    Seq(ArrayType(FloatType))
-  @transient private lazy val cb: Array[Float] = codebook.toArray
+    extends FloatMatrixKernel {
+  def matrix: Seq[Float] = codebook
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(t: Any): Any =
-    VecOps.pqEncode(t.asInstanceOf[ArrayData], cb, m, ksub, dsub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCodebook", cb, "float[]")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.VecOps.pqEncode($t, $ref, $m, $ksub, $dsub)")
-  }
+  protected def call(v: String, cb: String): String =
+    s"pqEncode($v, $cb, $m, $ksub, $dsub)"
+  protected def run(v: ArrayData, cb: Array[Float]): Any =
+    VecOps.pqEncode(v, cb, m, ksub, dsub)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 /** nearest_cell(array<float>) → int: IVF coarse assignment against a
   * plan-embedded row-major [nlist][dims] centroid matrix (≤ 4096×dims
-  * floats — the [[RotateVec]] broadcast-object pattern). One narrow
-  * codegen pass; replaces a crossJoin + bounded-heap argmin + join-back
-  * (two exchanges) with zero shuffles. Ranking score and tie-break are
-  * bit-identical to that path — see [[VecOps.nearestCell]].
+  * floats). One narrow codegen pass with zero shuffles; score and
+  * tie-break are [[VecOps.nearestCell]]'s.
   */
 case class NearestCell(child: Expression, centroids: Seq[Float],
     nlist: Int, dims: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftshim.ExprBridge.AbstractType] =
-    Seq(ArrayType(FloatType))
-  @transient private lazy val cents: Array[Float] = centroids.toArray
+    extends FloatMatrixKernel {
+  def matrix: Seq[Float] = centroids
   override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(t: Any): Any =
-    VecOps.nearestCell(t.asInstanceOf[ArrayData], cents, nlist, dims)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfCentroids", cents, "float[]")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.VecOps.nearestCell($t, $ref, $nlist, $dims)")
-  }
+  protected def call(v: String, c: String): String =
+    s"nearestCell($v, $c, $nlist, $dims)"
+  protected def run(v: ArrayData, cents: Array[Float]): Any =
+    VecOps.nearestCell(v, cents, nlist, dims)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 /** nearest_cells(array<float>) → array<int>: the `nprobe` nearest cells
   * by the [[NearestCell]] ranking, ordered (score desc, cell asc) — the
-  * probe-side cell ranking as one kernel pass instead of a per-query
+  * only probe-side cell ranking kernel, one pass instead of a per-query
   * crossJoin + bounded-heap rank exchange.
   */
 case class NearestCells(child: Expression, centroids: Seq[Float],
     nlist: Int, dims: Int, nprobe: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
+    extends FloatMatrixKernel {
   require(nprobe > 0, s"nprobe must be positive: $nprobe")
-  override def inputTypes: Seq[org.apache.spark.sql.graftshim.ExprBridge.AbstractType] =
-    Seq(ArrayType(FloatType))
-  @transient private lazy val cents: Array[Float] = centroids.toArray
+  def matrix: Seq[Float] = centroids
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(t: Any): Any =
-    VecOps.nearestCells(t.asInstanceOf[ArrayData], cents, nlist, dims, nprobe)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfCentroids", cents, "float[]")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.VecOps.nearestCells($t, $ref, $nlist, $dims, $nprobe)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** nearest_cells_cosine(array<float>) → array<int>: the `nprobe`
-  * nearest cells by COSINE to the centroid, ordered (cosine desc, cell
-  * asc) — the raw-space cell ranking of the in-memory IVF operators as
-  * one kernel pass ([[NearestCells]]'s pattern).
-  */
-case class NearestCellsCosine(child: Expression, centroids: Seq[Float],
-    nlist: Int, dims: Int, nprobe: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(nprobe > 0, s"nprobe must be positive: $nprobe")
-  override def inputTypes: Seq[org.apache.spark.sql.graftshim.ExprBridge.AbstractType] =
-    Seq(ArrayType(FloatType))
-  @transient private lazy val cents: Array[Float] = centroids.toArray
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(t: Any): Any =
-    VecOps.nearestCellsCosine(
-      t.asInstanceOf[ArrayData], cents, nlist, dims, nprobe)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfCentroids", cents, "float[]")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.VecOps.nearestCellsCosine($t, $ref, $nlist, $dims, $nprobe)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** nearest_cells_dot(array<float>) → array<int>: the `nprobe` nearest
-  * cells by dot product with the centroid, ordered (dot desc, cell
-  * asc) — the residual-PQ cell ranking as one kernel pass.
-  */
-case class NearestCellsDot(child: Expression, centroids: Seq[Float],
-    nlist: Int, dims: Int, nprobe: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(nprobe > 0, s"nprobe must be positive: $nprobe")
-  override def inputTypes: Seq[org.apache.spark.sql.graftshim.ExprBridge.AbstractType] =
-    Seq(ArrayType(FloatType))
-  @transient private lazy val cents: Array[Float] = centroids.toArray
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(t: Any): Any =
-    VecOps.nearestCellsDot(
-      t.asInstanceOf[ArrayData], cents, nlist, dims, nprobe)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfCentroids", cents, "float[]")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.VecOps.nearestCellsDot($t, $ref, $nlist, $dims, $nprobe)")
-  }
+  protected def call(v: String, c: String): String =
+    s"nearestCells($v, $c, $nlist, $dims, $nprobe)"
+  protected def run(v: ArrayData, cents: Array[Float]): Any =
+    VecOps.nearestCells(v, cents, nlist, dims, nprobe)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -771,18 +669,13 @@ case class NearestCellsDot(child: Expression, centroids: Seq[Float],
 /** pq_lut(array<float>) → array<double> ADC table for one query. */
 case class PqLut(child: Expression, codebook: Seq[Float],
     m: Int, ksub: Int, dsub: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftshim.ExprBridge.AbstractType] =
-    Seq(ArrayType(FloatType))
-  @transient private lazy val cb: Array[Float] = codebook.toArray
+    extends FloatMatrixKernel {
+  def matrix: Seq[Float] = codebook
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def nullSafeEval(t: Any): Any =
-    VecOps.pqLut(t.asInstanceOf[ArrayData], cb, m, ksub, dsub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCodebook", cb, "float[]")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.functions.VecOps.pqLut($t, $ref, $m, $ksub, $dsub)")
-  }
+  protected def call(q: String, cb: String): String =
+    s"pqLut($q, $cb, $m, $ksub, $dsub)"
+  protected def run(q: ArrayData, cb: Array[Float]): Any =
+    VecOps.pqLut(q, cb, m, ksub, dsub)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -860,12 +753,6 @@ object VectorFunctions {
   def nearestCells(v: Column, centroids: Seq[Float], nlist: Int,
       dims: Int, nprobe: Int): Column =
     toCol(NearestCells(toExpr(v), centroids, nlist, dims, nprobe))
-  def nearestCellsCosine(v: Column, centroids: Seq[Float], nlist: Int,
-      dims: Int, nprobe: Int): Column =
-    toCol(NearestCellsCosine(toExpr(v), centroids, nlist, dims, nprobe))
-  def nearestCellsDot(v: Column, centroids: Seq[Float], nlist: Int,
-      dims: Int, nprobe: Int): Column =
-    toCol(NearestCellsDot(toExpr(v), centroids, nlist, dims, nprobe))
   def simhash64(tokens: Column): Column = toCol(SimHash64(toExpr(tokens)))
   def anyBandCollides(a: Column, b: Column, h: Int): Column =
     toCol(AnyBandCollides(toExpr(a), toExpr(b), h))

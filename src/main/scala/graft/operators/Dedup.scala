@@ -593,8 +593,8 @@ object Dedup {
     val index = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
       VectorFunctions.rademacherSig(col(vecCol), numPlanes, dims, seed)
         .as("bucket"))
-    val qb = batchProbeBuckets(batch, idCol, vecCol, dims, numPlanes,
-      probeHamming, seed)
+    val qb = Similarity.probeBuckets(batch, Seq(col(idCol).as("bid")),
+      col(vecCol), numPlanes, dims, seed, probeHamming)
     signNearDupNew(index, qb, batch, idCol, vecCol, threshold)
   }
 
@@ -620,8 +620,8 @@ object Dedup {
     // join silently finds nothing
     val planes = Similarity.resolveSignPlanes(spark, path, numPlanes,
       dims, seed)
-    val qb = batchProbeBuckets(batch, idCol, vecCol, dims, planes,
-      probeHamming, seed)
+    val qb = Similarity.probeBuckets(batch, Seq(col(idCol).as("bid")),
+      col(vecCol), planes, dims, seed, probeHamming)
     // the committed generation: compacted indexes resolve through the
     // version pointer (IndexVersions), legacy flat layouts through
     // themselves — same resolution the sidecar read above used
@@ -637,21 +637,6 @@ object Dedup {
     val index = pruned.select(col("id"), col("vec"),
       col("bucket").cast("long").as("bucket"))
     signNearDupNew(index, qb, batch, idCol, vecCol, threshold)
-  }
-
-  /** Batch-side probe buckets: one signature per row, exploded over the
-    * hamming-ball XOR masks — slim (id, bucket) rows only; the vector
-    * never rides the explode.
-    */
-  private def batchProbeBuckets(batch: DataFrame, idCol: String,
-      vecCol: String, dims: Int, numPlanes: Int, probeHamming: Int,
-      seed: Long): DataFrame = {
-    val flips = Similarity.hammingFlips(numPlanes, probeHamming)
-    batch.select(col(idCol).as("bid"),
-        VectorFunctions.rademacherSig(col(vecCol), numPlanes, dims, seed)
-          .as("qsig"))
-      .withColumn("flip", explode(lit(flips.toArray)))
-      .select(col("bid"), col("qsig").bitwiseXOR(col("flip")).as("bucket"))
   }
 
   /** Shared verify + anti-join half of the embedding ingest probes:
@@ -1048,8 +1033,8 @@ object Dedup {
     * tradeoff the semantic-dedup literature picked for web-scale
     * corpora.
     *
-    * Scale shape: the quantizer fits on a bounded sample of the input
-    * on every call; assignment is one broadcast matvec per row; the
+    * Scale shape: the [[Quantizer]] fits on a bounded sample of the
+    * input on every call; assignment is one broadcast matvec per row; the
     * self-join equi-keys on `cell`, so pair generation co-partitions by
     * cell and is quadratic only within a cell (nlist grows with the
     * corpus to hold cell size ~constant; hot cells split by AQE).
@@ -1068,13 +1053,9 @@ object Dedup {
     val assigned = if (nlist <= 1) {
       vecs.select(col("id"), col("vec"), lit(0).as("cell"))
     } else {
-      // driver-side Lloyd fit + NearestCell kernel assignment (argmin
-      // L2, ties to the lowest cell) — no MLlib fit/transform jobs
-      val cents = Similarity.fitQuantizer(vecs.select(col("vec")), "vec",
-        nlist, seed)
-      vecs.select(col("id"), col("vec"),
-        VectorFunctions.nearestCell(col("vec"), cents.flatten.toSeq,
-          cents.length, cents(0).length).as("cell"))
+      // the one coarse quantizer, over the raw column as given
+      val quant = Quantizer.fit(vecs, "vec", nlist, seed, normalize = false)
+      vecs.select(col("id"), col("vec"), quant.assign(col("vec")).as("cell"))
     }
     pairsWithinCells(assigned, threshold)
   }

@@ -3,12 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
-
 /** PERSISTED inverted-file (IVF) ANN index — the build-once/probe-many
-  * deployment shape of [[Similarity.ivfTopK]]. Every quantizer-based
-  * operator in [[Similarity]] fits k-means per call; a real ANN
-  * service clusters the corpus ONCE, persists (centroids,
+  * deployment shape of [[Similarity.ivfTopK]], over the same
+  * [[Quantizer]]. The one-shot operators in [[Similarity]] fit k-means
+  * per call; a real ANN service clusters the corpus ONCE, persists (centroids,
   * cell-partitioned vectors), and serves every probe afterwards from
   * the committed layout — re-clustering 100 TB per query batch is not
   * a plan. This is the embedding-search mirror of the text n-gram /
@@ -23,17 +21,14 @@ import graft.functions.VectorFunctions
   *    half-written index and rollback is moving the pointer back;
   *    generations older than N−1 are dropped (the model-artifact
   *    retention rule).
-  *  - METRIC COHERENCE: the quantizer trains on L2-NORMALIZED vectors
-  *    and assignment/probe both rank cells by exact squared-L2 on that
-  *    normalized space, through the SAME dot-product kernel — so an
-  *    arriving duplicate of a corpus vector provably lands in (and
-  *    probes first) its twin's cell. Raw-space cosine ranks hyperplane
-  *    cells inconsistently with a Euclidean quantizer when vector norms
-  *    vary; candidate SCORING stays exact cosine on the RAW vectors.
-  *    The k-means model itself is only the centroid source: build-side
-  *    assignment uses the same expression as [[assignCells]]
-  *    ([[SegmentedIndex.assignWith]]), so build and arrival assignment
-  *    can never drift.
+  *  - METRIC COHERENCE: the [[Quantizer]] trains on L2-NORMALIZED
+  *    vectors and assignment/probe both rank cells by its one rule,
+  *    exact squared-L2 on that normalized space — so an arriving
+  *    duplicate of a corpus vector provably lands in (and probes first)
+  *    its twin's cell. Candidate SCORING stays exact cosine on the RAW
+  *    vectors ([[Similarity.exactTopK]]). Build-side assignment uses the
+  *    same expression as [[assignCells]] ([[SegmentedIndex.assignWith]]),
+  *    so build and arrival assignment can never drift.
   *  - PROBE: nprobe cells per query ranked by one narrow kernel pass
   *    over the broadcast centroid matrix (no per-query window task,
   *    [[SegmentedIndex.probe]]); the vectors scan is pruned to the probed cells by a
@@ -165,7 +160,7 @@ object IvfIndex {
       dims: Int = 0): DataFrame = {
     SegmentedIndex.requireMeta(spark, path, Layout, dims)
     SegmentedIndex.assignWith(SegmentedIndex.arrivals(batch, idCol, vecCol),
-        SegmentedIndex.readCentroids(spark, path))
+        Quantizer.fromFrame(SegmentedIndex.readCentroids(spark, path)))
       .select(col("id").as(idCol), col("cell"))
   }
 
@@ -174,20 +169,16 @@ object IvfIndex {
     * `nprobe` ≥ nlist probes every cell (provably exact — the gate
     * configuration). The vectors scan reads only the probed cells'
     * directories ([[SegmentedIndex.probe]]); candidates are scored by
-    * exact cosine on the RAW vectors. */
+    * exact cosine on the RAW vectors ([[Similarity.exactTopK]]). */
   def probe(spark: SparkSession, path: String, queries: DataFrame, k: Int,
       nprobe: Int = 8, dims: Int = 0, qidCol: String = "qid",
       vecCol: String = "embedding",
       maxCellLiterals: Int = 1024): DataFrame = {
     val p = SegmentedIndex.probe(spark, path, Layout, queries, qidCol,
       vecCol, nprobe, dims, maxCellLiterals)
-    val qcells = p.cells
-      .join(p.queries.select(col("qid"), col("qvec")), Seq("qid"))
-    val scored = p.index.join(broadcast(qcells), Seq("cell"))
-      .select(col("qid"), col("id"),
-        VectorFunctions.cosineSim(col("vec"), col("qvec")).as("cosine"))
-      .filter(col("qid") =!= col("id"))
-    Similarity.topKRank(scored, k, "cosine")
+    Similarity.exactTopK(p.index.withColumnRenamed("vec", "cvec")
+      .join(broadcast(p.cells.select(col("qid"), col("qvec"), col("cell"))),
+        Seq("cell")), k)
   }
 
   /** Quantization-drift frame of an arrival batch under the FROZEN

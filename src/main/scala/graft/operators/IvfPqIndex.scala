@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
-
 /** PERSISTED IVF-PQ ANN index — the compressed-codes deployment shape
   * of [[Similarity.Pq.ivfTopK]] (the classic billion-vector layout:
   * FAISS `IndexIVFPQ`, Jégou et al. TPAMI 2011 + Johnson et al. 2017).
@@ -29,13 +27,15 @@ import graft.functions.VectorFunctions
   *    kernel or dims mismatch REFUSES instead of silently mis-scoring.
   *  - SCORING: dot(q,v) = dot(q,c) + dot(q,r) — the approximate score
   *    is the EXACT centroid dot plus the residual's ADC lookup-table
-  *    sum ([[VectorFunctions.pqAdc]]: m table adds per corpus row, no
-  *    float multiplies). Residual PQ quantizes a far tighter
+  *    sum ([[graft.functions.VectorFunctions.pqAdc]]: m table adds per
+  *    corpus row, no float multiplies). Residual PQ quantizes a far tighter
   *    distribution than raw vectors, so the same code budget gives
-  *    better recall. Cells are RANKED by exact squared-L2 on the
-  *    normalized space ([[SegmentedIndex.probe]]) — the same distance
-  *    the coarse build/arrival assignment uses, so build and probe can
-  *    never rank cells inconsistently.
+  *    better recall. Cells are RANKED by the one [[Quantizer]]'s rule,
+  *    exact squared-L2 on the normalized space ([[SegmentedIndex.probe]])
+  *    — the same rule the coarse build/arrival assignment uses, so build
+  *    and probe can never rank cells inconsistently. The residual train,
+  *    encode and ADC scan are [[Similarity.Pq.ivfTopK]]'s own, and the
+  *    exact rerank is [[Similarity.rerankTopK]].
   *  - TRAINING: coarse centroids via [[SegmentedIndex.build]]
   *    (bounded deterministic sample); the residual codebook via
   *    [[Similarity.Pq.train]] on a bounded hash-ordered sample of
@@ -72,23 +72,6 @@ object IvfPqIndex {
   private val Layout = SegmentedIndex.Layout("_graft_ivfpq_meta.json",
     "ivfpq-l2n-residual-adc", "IVF-PQ", "codes", params = Seq("m", "ksub"))
 
-  /** `nvec − centroid` as float — the residual every code encodes. */
-  private def residual(nvec: org.apache.spark.sql.Column,
-      centroid: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    zip_with(nvec, centroid, (a, b) => (a - b).cast("float"))
-
-  /** (id, codes, cell) of assigned (id, nvec, cell) rows: the residual
-    * to the row's centroid, PQ-encoded under codebook `cb`. */
-  private def encode(assigned: DataFrame, centroids: DataFrame,
-      cb: Seq[Float], m: Int, ksub: Int, dims: Int): DataFrame =
-    assigned.select(col("id"), col("nvec"), col("cell"))
-      .join(broadcast(centroids), Seq("cell"))
-      .select(col("id"),
-        VectorFunctions.pqEncode(
-          residual(col("nvec"), col("centroid")), cb, m, ksub, dims / m)
-          .as("codes"),
-        col("cell"))
-
   private def writeCodebook(spark: SparkSession, cb: Seq[Float],
       dir: String): Unit = {
     import spark.implicits._
@@ -119,13 +102,10 @@ object IvfPqIndex {
       // the codebook trains on a bounded content-ordered sample of the
       // residuals; the deterministic sample/kernel make the encode pass's
       // recomputation of the same residuals bit-identical
-      val cb = Similarity.Pq.train(
-        assigned.join(broadcast(centroids), Seq("cell"))
-          .withColumn("res", residual(col("nvec"), col("centroid"))),
-        dims, m, ksub, seed, sampleN = pqSampleN, vecCol = "res",
-        preNormalized = true).toSeq
+      val cb = Similarity.Pq.trainResidual(assigned, centroids, dims, m,
+        ksub, seed, pqSampleN)
       writeCodebook(spark, cb, dir)
-      encode(assigned, centroids, cb, m, ksub, dims)
+      Similarity.Pq.encodeResidual(assigned, centroids, cb, m, ksub, dims)
     }
   }
 
@@ -175,8 +155,9 @@ object IvfPqIndex {
       dims: Int = 0, atSeg: Long = -1L): Long =
     SegmentedIndex.append(spark, path, Layout, batch, idCol, vecCol, dims,
         atSeg) { (assigned, centroids, meta) =>
-      encode(assigned, centroids, readCodebook(spark, path),
-        meta.param("m"), meta.param("ksub"), meta.dims)
+      Similarity.Pq.encodeResidual(assigned, centroids,
+        readCodebook(spark, path), meta.param("m"), meta.param("ksub"),
+        meta.dims)
     }
 
   /** PURE-FOLD compaction: re-write base ∪ live segments as one
@@ -218,30 +199,11 @@ object IvfPqIndex {
     require(rerank >= k, s"rerank=$rerank < k=$k")
     val p = SegmentedIndex.probe(spark, path, Layout, queries, qidCol,
       vecCol, nprobe, dims, maxCellLiterals)
-    val (pm, ksub) = (p.meta.param("m"), p.meta.param("ksub"))
-    val cb = readCodebook(spark, path)
-    // per-(query, probed cell): the exact centroid dot + the query's
-    // shared residual LUT — a bounded frame (queries × nprobe rows)
-    val qcells = p.cells
-      .join(p.queries.select(col("qid"), col("qn")), Seq("qid"))
-      .join(broadcast(p.centroids), Seq("cell"))
-      .select(col("qid"), col("cell"),
-        VectorFunctions.dotProduct(col("qn"), col("centroid")).as("qdotc"),
-        VectorFunctions.pqLut(col("qn"), cb, pm, ksub, p.meta.dims / pm)
-          .as("lut"))
-    val approx = p.index.join(broadcast(qcells), Seq("cell"))
-      .select(col("qid"), col("id"),
-        (col("qdotc") + VectorFunctions.pqAdc(col("codes"), col("lut"), ksub))
-          .as("adc"))
-      .filter(col("qid") =!= col("id"))
-    val cands = Similarity.topKRank(approx, rerank, "adc")
-      .select(col("qid"), col("id"))
-    val cvecs = rerankFrom.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-    val scored = cands.join(cvecs, "id")
-      .join(broadcast(p.queries.select(col("qid"), col("qvec"))), "qid")
-      .select(col("qid"), col("id"),
-        VectorFunctions.cosineSim(col("cvec"), col("qvec")).as("cosine"))
-    Similarity.topKRank(scored, k, "cosine")
+    val approx = Similarity.Pq.residualAdc(p.index, p.cells, p.centroids,
+      readCodebook(spark, path), p.meta.param("m"), p.meta.param("ksub"),
+      p.meta.dims)
+    Similarity.rerankTopK(approx, rerank, k, rerankFrom, queries, idCol,
+      vecCol, qidCol)
   }
 
   /** Coarse-quantization drift of an arrival batch under the FROZEN

@@ -11,9 +11,10 @@ import graft.functions.VectorFunctions
   * stored as, and how a compaction rebuilds the base; everything else
   * lives here once:
   *
-  *  - the coarse quantizer: a bounded deterministic k-means fit, the
-  *    narrow nearest-cell assignment kernel every build, arrival, drift
-  *    and probe shares, and the exact squared-L2 quantization error;
+  *  - the coarse quantizer: the one [[Quantizer]] (fit on a bounded
+  *    deterministic sample, one cell rule for build, arrival, drift and
+  *    probe) over L2-normalized vectors, and the exact squared-L2
+  *    quantization error;
   *  - the sidecar (`nlist`, `dims`, the index's own integer params,
   *    `seed`, `kernel`, `build_mse`, `segs_upto`), written as JSON and
   *    read back with the kernel and dims checks;
@@ -116,83 +117,36 @@ private[graft] object SegmentedIndex {
     df.repartition(col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(dir)
 
-  /** Exact squared L2 distance between two float vectors, computed from
-    * three native dot products — the identity ‖a−b‖² = a·a − 2a·b + b·b
-    * keeps every leg inside the codegen'd DotProd kernel. */
+  /** Exact squared L2 distance ‖a−b‖² = a·a − (2a·b − b·b): the
+    * [[Quantizer.score]] arithmetic, every leg inside the codegen'd
+    * DotProd kernel. */
   private def sqDist(a: Column, b: Column): Column =
-    VectorFunctions.dotProduct(a, a) -
-      lit(2.0) * VectorFunctions.dotProduct(a, b) +
-      VectorFunctions.dotProduct(b, b)
+    VectorFunctions.dotProduct(a, a) - Quantizer.score(a, b)
 
-  /** Derive nlist: caller's value, or the √n occupancy rule (capped at
-    * 4096); `knownCount` skips the count job. */
-  private def deriveNlist(corpus: DataFrame, idCol: String, nlist: Int,
-      knownCount: Long): Int =
-    if (nlist > 0) nlist
-    else {
-      val n = if (knownCount >= 0) knownCount
-        else corpus.select(col(idCol)).count()
-      math.min(4096, math.max(8, math.sqrt(n.toDouble).toInt))
-    }
-
-  /** Fit the coarse quantizer on a bounded DETERMINISTIC sample of `c`
-    * (id, nvec — see [[IvfIndex.write]]'s fitSamplePerCell doc) and
-    * return the (cell, centroid) frame. */
-  private def fitCentroids(c: DataFrame, cells: Int, seed: Long,
-      fitSamplePerCell: Int): DataFrame = {
-    val spark = c.sparkSession
-    import spark.implicits._
+  /** Fit the coarse quantizer of a build: on the whole corpus, or on
+    * its first `fitSamplePerCell × cells` rows by `xxhash64(id)` (see
+    * [[IvfIndex.write]]'s fitSamplePerCell doc), always L2-normalized. */
+  private def fit(corpus: DataFrame, idCol: String, vecCol: String,
+      cells: Int, seed: Long, fitSamplePerCell: Int): Quantizer = {
     val trainCap = math.min(Int.MaxValue.toLong,
       fitSamplePerCell.toLong * cells).toInt
-    // the id-hash TakeOrderedAndProject bounds the fit input in one
-    // narrow pass; the fit itself runs DRIVER-SIDE (Similarity.lloyd —
-    // seeded k-means++ over a content-ordered re-sample), so a build
-    // schedules NO per-init-round / per-iteration cluster jobs. The
-    // former MLlib fit was ~2–3 s of fixed job overhead per cold build
-    // at sf0.1 and ~94% of the 2M-vector build wall (guide §1.2 / §5
-    // driver rules; BASELINE.md round 16).
+    val c = corpus.select(col(idCol), col(vecCol))
     val trainSet =
       if (fitSamplePerCell == 0) c
-      else c.orderBy(xxhash64(col("id"))).limit(trainCap)
-    val cents = Similarity.fitQuantizer(trainSet, "nvec", cells, seed)
-    cents.zipWithIndex.map { case (v, i) => (i, v) }
-      .toSeq.toDF("cell", "centroid")
-  }
-
-  /** The (flat row-major matrix, nlist, dims) of a bounded centroid
-    * frame — ≤ nlist ≤ 4096 rows collected driver-side, cells required
-    * contiguous 0..n−1 (the build writes them that way). Shared by the
-    * narrow assignment and probe kernels. */
-  private def centroidMatrix(
-      centroids: DataFrame): (Seq[Float], Int, Int) = {
-    val rows = centroids.select(col("cell"), col("centroid")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1)))
-      .sortBy(_._1)
-    require(rows.nonEmpty, "empty centroid frame")
-    require(rows.head._1 == 0 && rows.last._1 == rows.length - 1,
-      s"centroid cells must be contiguous 0..n-1, got " +
-        s"${rows.head._1}..${rows.last._1} over ${rows.length} rows")
-    val dims = rows.head._2.length
-    (rows.flatMap(_._2).toSeq, rows.length, dims)
+      else c.orderBy(xxhash64(col(idCol))).limit(trainCap)
+    Quantizer.fit(trainSet, vecCol, cells, seed, normalize = true)
   }
 
   /** Nearest-cell assignment of `batch` (with an `nvec` column) under
-    * FROZEN `centroids`: the shared build/arrival kernel, as ONE narrow
-    * codegen pass — the centroid matrix (≤ 4096 × dims floats) rides the
-    * plan as a broadcast object ([[graft.functions.NearestCell]]), score
-    * and tie-break (lowest cell id) identical for build and arrival, so
-    * a duplicate of a corpus vector provably lands in its twin's cell.
-    * Adds `cell`. */
-  def assignWith(batch: DataFrame, centroids: DataFrame): DataFrame = {
-    val (flat, nlist, dims) = centroidMatrix(centroids)
-    // null vectors: the former crossJoin + rank assignment dropped them
-    // at its inner join; the kernel's nullSafeEval would instead emit a
-    // null cell, landing the row in the Hive default partition where no
-    // pruned probe can reach it (ADVICE r16) — keep the drop semantics
+    * the FROZEN quantizer `q`: one narrow codegen pass, the same score
+    * and tie-break for build and arrival, so a duplicate of a corpus
+    * vector provably lands in its twin's cell. Adds `cell`. */
+  def assignWith(batch: DataFrame, q: Quantizer): DataFrame =
+    // null vectors are dropped: the kernel would emit a null cell,
+    // landing the row in the Hive default partition where no pruned
+    // probe can reach it (ADVICE r16)
     batch.filter(col("nvec").isNotNull)
-      .withColumn("cell",
-        VectorFunctions.nearestCell(col("nvec"), flat, nlist, dims))
-  }
+      .withColumn("cell", q.assign(col("nvec")))
 
   /** Publish the next base generation: `writeBase` fills the version
     * dir and returns its sidecar, whose `segs_upto` is replaced here — a
@@ -234,14 +188,14 @@ private[graft] object SegmentedIndex {
     import spark.implicits._
     require(dims > 0, s"dims: $dims")
     require(fitSamplePerCell >= 0, s"fitSamplePerCell: $fitSamplePerCell")
-    val cells = deriveNlist(corpus, idCol, nlist, knownCount)
-    val c = arrivals(corpus, idCol, vecCol)
-    val centroids = fitCentroids(c, cells, seed, fitSamplePerCell)
+    val cells = Quantizer.nlistFor(corpus, idCol, nlist, knownCount)
+    val quant = fit(corpus, idCol, vecCol, cells, seed, fitSamplePerCell)
+    val centroids = quant.frame(spark)
     publish(spark, path, layout, subsumedUpto) { dir =>
-      // NOT persisted (r17): assignment is a narrow scan+map since the
-      // NearestCell kernel, so the consumers below recompute it cheaper
-      // than a corpus-sized cache materializes, bit-identically
-      val assigned = assignWith(c, centroids)
+      // NOT persisted (r17): assignment is a narrow scan+map, so the
+      // consumers below recompute it cheaper than a corpus-sized cache
+      // materializes, bit-identically
+      val assigned = assignWith(arrivals(corpus, idCol, vecCol), quant)
       writeCells(payload(assigned, centroids, dir), s"$dir/${layout.leg}")
       writeCentroids(centroids, dir)
       val buildMse = assigned
@@ -333,8 +287,8 @@ private[graft] object SegmentedIndex {
     if (b.isEmpty) return -1L
     val n = if (atSeg >= 0) atSeg else (committed :+ m.segsUpto).max + 1
     val centroids = readCentroids(spark, path)
-    writeCells(encode(assignWith(b, centroids), centroids, m),
-      segDir(path, n))
+    writeCells(encode(assignWith(b, Quantizer.fromFrame(centroids)),
+      centroids, m), segDir(path, n))
     IndexVersions.afterStep("segment-written")
     commitSegs(spark, path, (live.toSet + n).toSeq.sorted)
     IndexVersions.afterStep("manifest-flipped")
@@ -371,7 +325,7 @@ private[graft] object SegmentedIndex {
       dims: Int): DataFrame = {
     val buildMse = requireMeta(spark, path, layout, dims).buildMse
     val centroids = readCentroids(spark, path)
-    assignWith(arrivals(batch, idCol, vecCol), centroids)
+    assignWith(arrivals(batch, idCol, vecCol), Quantizer.fromFrame(centroids))
       .join(broadcast(centroids), Seq("cell"))
       .select(sqDist(col("nvec"), col("centroid")).as("d2"))
       .agg(count(lit(1)).as("n"), avg(col("d2")).as("batch_mse"))
@@ -380,16 +334,15 @@ private[graft] object SegmentedIndex {
           .otherwise(col("batch_mse") / lit(buildMse)).as("ratio"))
   }
 
-  /** A probe's cell selection: the committed sidecar, the queries as
-    * (qid, qvec, qn), the centroids, the (qid, cell) probe pairs, and
-    * the base ∪ live-segment legs pruned to the probed cells (`cell`
-    * as int). */
-  case class Probe(meta: Meta, queries: DataFrame, centroids: DataFrame,
-      cells: DataFrame, index: DataFrame)
+  /** A probe's cell selection: the committed sidecar, the centroids,
+    * the (qid, qvec, qn, cell) probe rows, and the base ∪ live-segment
+    * legs pruned to the probed cells (`cell` as int). */
+  case class Probe(meta: Meta, centroids: DataFrame, cells: DataFrame,
+      index: DataFrame)
 
-  /** Rank `nprobe` cells per query (one narrow kernel pass — exact
-    * squared L2 on the normalized space, lowest cell on ties; the query
-    * side never shuffles to pick its cells) and prune every leg's scan
+  /** Rank `nprobe` cells per query ([[Quantizer.probe]]: one narrow
+    * kernel pass, the build's cell rule on the normalized space; the
+    * query side never shuffles to pick its cells) and prune every leg's scan
     * by a bounded literal IN over the distinct probed cells. A full
     * probe (nprobe ≥ nlist) needs no job to list its cells; a probe set
     * past `maxCellLiterals` distinct cells skips the prune (at that
@@ -402,12 +355,11 @@ private[graft] object SegmentedIndex {
     require(maxCellLiterals >= 0, s"maxCellLiterals: $maxCellLiterals")
     val meta = requireMeta(spark, path, layout, dims)
     val centroids = readCentroids(spark, path)
-    val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"),
-      Embeddings.normalize(col(vecCol)).as("qn"))
-    val (cflat, cn, cdims) = centroidMatrix(centroids)
-    val cells = q.select(col("qid"),
-      explode(VectorFunctions.nearestCells(col("qn"), cflat, cn, cdims,
-        math.min(nprobe, meta.nlist))).as("cell"))
+    val quant = Quantizer.fromFrame(centroids)
+    val cells = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"),
+        Embeddings.normalize(col(vecCol)).as("qn"))
+      .select(col("qid"), col("qvec"), col("qn"),
+        explode(quant.probe(col("qn"), nprobe)).as("cell"))
     // bounded collect: distinct probed cells ≤ nlist ≤ 4096 by
     // construction, limit(cap + 1) bounds the driver materialization
     val cellLits =
@@ -419,7 +371,7 @@ private[graft] object SegmentedIndex {
       if (cellLits.length <= maxCellLiterals)
         raw.filter(col("cell").isin(cellLits.map(Int.box): _*))
       else raw
-    Probe(meta, q, centroids, cells,
+    Probe(meta, centroids, cells,
       pruned.withColumn("cell", col("cell").cast("int")))
   }
 }

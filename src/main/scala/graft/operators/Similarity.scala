@@ -1,19 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TopKAgg, VectorFunctions}
+import graft.functions.{TopKAgg, VecOps, VectorFunctions}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * Scale design: queries are the SMALL side — always broadcast; the
   * corpus is scanned exactly once (brute force) or pre-bucketed (LSH).
-  * Ranking is a TWO-STAGE exact top-k (see [[topKRank]]): a bounded-heap
-  * aggregate prunes to k rows per (query, partition) map-side, so no
-  * single task ever ranks |corpus| rows and the rank shuffle moves
-  * k·partitions rows per query instead of the scored corpus.
+  * Every top-k operator here, and the persisted indexes' probes, ends in
+  * ONE exact-rerank tail, [[exactTopK]]: (qid, id) candidates scored by
+  * exact cosine on the raw vectors, self-matches dropped, ranked by the
+  * TWO-STAGE exact top-k [[topKRank]] — a bounded-heap aggregate prunes
+  * to k rows per (query, partition) map-side, so no single task ever
+  * ranks |corpus| rows and the rank shuffle moves k·partitions rows per
+  * query instead of the scored corpus. Every IVF operator picks its
+  * cells through the one coarse quantizer, [[Quantizer]].
   *
   *  - bruteForceTopK: exact. One corpus scan × |Q| cosine evals, all
   *    inside whole-stage codegen via the native CosineSim expression.
@@ -23,210 +27,6 @@ import graft.functions.{TopKAgg, VectorFunctions}
   *    signature (multi-probe trades compute for recall).
   */
 object Similarity {
-
-  /** Order-independent bounded training sample: rank rows by a hash of
-    * the vector itself and take the top-N. A bare `.limit(N)` is
-    * partition-order dependent — the same corpus written with a
-    * different file layout (or read on a different cluster layout)
-    * trains a DIFFERENT codebook, so two builds of "the same" index
-    * disagree. Hash-ranked top-N returns the identical sample for any
-    * physical layout; `orderBy(...).limit(n)` plans as
-    * TakeOrderedAndProject (per-partition heap + driver merge — one
-    * narrow pass at train time only, no full sort shuffle). The vector
-    * column is the tiebreak for (astronomically rare) hash collisions
-    * at the boundary, making the pick fully deterministic.
-    */
-  private[operators] def deterministicSample(corpus: DataFrame,
-      vexpr: org.apache.spark.sql.Column, sampleN: Int): Array[Array[Float]] =
-    corpus.select(vexpr.as("v"))
-      .orderBy(xxhash64(col("v")), col("v"))
-      .limit(sampleN)
-      .collect().map(_.getSeq[Float](0).toArray)
-
-  /** Fit the coarse quantizer: a DRIVER-SIDE Lloyd's k-means over a
-    * bounded content-ordered sample of `vecs(vecCol)`, computed from
-    * the input on every call. The former MLlib fit scheduled
-    * ~(kmeans|| init rounds + 10 Lloyd iterations) of cluster jobs over
-    * a ≤ 256·k-row sample: pure fixed job overhead (guide §1.2 / §5
-    * driver rules) — measured 2–3 s of every cold index build at sf0.1
-    * and ~94% of the 2M-vector build wall (BASELINE.md round 16). The
-    * sample is content-hash-ordered ([[deterministicSample]]) so the
-    * same content fits the same centroids under ANY physical layout,
-    * and the fit is deterministic end-to-end (seeded k-means++ init
-    * over that order, fixed-chunk FP reduction in [[lloyd]]). Nothing
-    * is cached: a cache keyed on the plan identifies a file scan by its
-    * path, not its content, and the fit costs one sample pass anyway.
-    * Centroids steer only layout/recall: every declared gate probes
-    * nprobe = nlist / reranks ≥ corpus, which is provably exact under
-    * any centroids; production-nprobe recall is pinned in the specs.
-    * The sample holds 256·k rows (the public FAISS training guidance),
-    * floored at 2048 and capped at 2^20. */
-  private[graft] def fitQuantizer(vecs: DataFrame, vecCol: String,
-      nlist: Int, seed: Long): Array[Array[Float]] = {
-    val cap = math.min(1L << 20, math.max(2048L, 256L * nlist)).toInt
-    lloyd(deterministicSample(vecs, col(vecCol), cap), nlist, seed)
-  }
-
-  /** Driver-side Lloyd's k-means with restarts: `nRedo` independent
-    * (seeded k-means++ init → Lloyd to convergence) runs, keeping the
-    * lowest-SSE fit — the FAISS `nredo` practice; a single k-means++
-    * start can land in a noticeably worse local optimum than MLlib's
-    * multi-candidate kmeans|| init did (measured: SemDeDup recall 0.38
-    * vs ≥ 0.5 on the 500-vector spec corpus at one restart).
-    * Deterministic for a fixed (sample order, k, seed). */
-  private[graft] def lloyd(sample: Array[Array[Float]], k: Int,
-      seed: Long, maxIter: Int = 10, nRedo: Int = 3): Array[Array[Float]] = {
-    var best: Array[Array[Float]] = null
-    var bestSse = Double.PositiveInfinity
-    var r = 0
-    while (r < nRedo) {
-      val (cents, sse) = lloydOnce(sample, k, seed + 7919L * r, maxIter)
-      if (sse < bestSse) { bestSse = sse; best = cents }
-      r += 1
-    }
-    best
-  }
-
-  /** One (k-means++ init → Lloyd) run; returns (centroids, SSE of the
-    * final assignment). ≤ `maxIter` assignment/update rounds with early
-    * exit once no assignment moves. Deterministic for a fixed (sample
-    * order, k, seed): the assignment pass parallelizes over FIXED
-    * 16384-row chunks whose partial sums merge in chunk-index order, so
-    * thread scheduling cannot reorder FP accumulation. Returns exactly
-    * `k` float32 centroids: a sample with fewer than `k` distinct rows
-    * pads the init deterministically, and an empty cell keeps its
-    * previous position. */
-  private def lloydOnce(sample: Array[Array[Float]], k: Int,
-      seed: Long, maxIter: Int): (Array[Array[Float]], Double) = {
-    require(sample.nonEmpty, "empty quantizer training sample")
-    require(k > 0, s"k must be positive: $k")
-    val n = sample.length
-    val dims = sample(0).length
-    val cents = Array.ofDim[Double](k, dims)
-    def d2(row: Array[Float], c: Array[Double]): Double = {
-      var d = 0.0; var i = 0
-      while (i < dims) { val x = row(i) - c(i); d += x * x; i += 1 }
-      d
-    }
-    // seeded k-means++ (Arthur & Vassilvitskii 2007, public): first
-    // center uniform, each next ∝ current squared distance — one pass
-    // per center, k·n·dims total (≈ one Lloyd iteration)
-    val rnd = new java.util.Random(seed)
-    val first = sample(rnd.nextInt(n))
-    var j = 0
-    while (j < dims) { cents(0)(j) = first(j); j += 1 }
-    val minD = new Array[Double](n)
-    var i = 0
-    while (i < n) { minD(i) = d2(sample(i), cents(0)); i += 1 }
-    var cIdx = 1
-    while (cIdx < k) {
-      var total = 0.0
-      i = 0
-      while (i < n) { total += minD(i); i += 1 }
-      val pick =
-        if (total <= 0.0) sample(cIdx % n) // < k distinct rows: pad
-        else {
-          val r = rnd.nextDouble() * total
-          var acc = 0.0; var p = n - 1; var q = 0
-          var found = false
-          while (q < n && !found) {
-            acc += minD(q)
-            if (acc >= r) { p = q; found = true }
-            q += 1
-          }
-          sample(p)
-        }
-      j = 0
-      while (j < dims) { cents(cIdx)(j) = pick(j); j += 1 }
-      if (total > 0.0) {
-        i = 0
-        while (i < n) {
-          val d = d2(sample(i), cents(cIdx))
-          if (d < minD(i)) minD(i) = d
-          i += 1
-        }
-      }
-      cIdx += 1
-    }
-    val assign = new Array[Int](n)
-    java.util.Arrays.fill(assign, -1)
-    val chunk = 16384
-    val nChunks = (n + chunk - 1) / chunk
-    var it = 0
-    var changedAny = true
-    var sse = Double.PositiveInfinity
-    while (it < maxIter && changedAny) {
-      val partSums = new Array[Array[Double]](nChunks)
-      val partCounts = new Array[Array[Long]](nChunks)
-      val partChanged = new Array[Int](nChunks)
-      val partSse = new Array[Double](nChunks)
-      def doChunk(ci: Int): Unit = {
-        val lo = ci * chunk
-        val hi = math.min(n, lo + chunk)
-        val sums = new Array[Double](k * dims)
-        val counts = new Array[Long](k)
-        var changed = 0
-        var se = 0.0
-        var r = lo
-        while (r < hi) {
-          val row = sample(r)
-          var best = 0
-          var bestD = d2(row, cents(0))
-          var c = 1
-          while (c < k) {
-            val d = d2(row, cents(c))
-            if (d < bestD) { bestD = d; best = c } // ties → lowest cell
-            c += 1
-          }
-          if (assign(r) != best) { assign(r) = best; changed += 1 }
-          counts(best) += 1
-          se += bestD
-          val off = best * dims
-          var x = 0
-          while (x < dims) { sums(off + x) += row(x); x += 1 }
-          r += 1
-        }
-        partSums(ci) = sums
-        partCounts(ci) = counts
-        partChanged(ci) = changed
-        partSse(ci) = se
-      }
-      if (nChunks == 1) doChunk(0)
-      else java.util.stream.IntStream.range(0, nChunks).parallel()
-        .forEach(ci => doChunk(ci))
-      val sums = new Array[Double](k * dims)
-      val counts = new Array[Long](k)
-      var changed = 0
-      var ci = 0
-      sse = 0.0
-      while (ci < nChunks) {
-        val s = partSums(ci)
-        val c2 = partCounts(ci)
-        var x = 0
-        while (x < k * dims) { sums(x) += s(x); x += 1 }
-        var c = 0
-        while (c < k) { counts(c) += c2(c); c += 1 }
-        changed += partChanged(ci)
-        sse += partSse(ci)
-        ci += 1
-      }
-      var c = 0
-      while (c < k) {
-        if (counts(c) > 0) {
-          var x = 0
-          while (x < dims) {
-            cents(c)(x) = sums(c * dims + x) / counts(c)
-            x += 1
-          }
-        }
-        c += 1
-      }
-      changedAny = changed > 0
-      it += 1
-    }
-    (Array.tabulate(k)(c => Array.tabulate(dims)(x => cents(c)(x).toFloat)),
-      sse)
-  }
 
   /** Exact per-query top-k over a scored frame (qid, id, scoreCol).
     *
@@ -246,6 +46,41 @@ object Similarity {
       .select(col("qid"), col("e.id").as("id"),
         col("e.score").as(scoreCol), col("e.rank").as("rank"))
 
+  /** The exact-rerank tail of every top-k operator: score (qid, id)
+    * candidate rows carrying the corpus vector `cvec` and the query
+    * vector `qvec` by exact cosine, drop self-matches (a probe whose qid
+    * equals a corpus id is the same vector), and rank the top `k` per
+    * query with [[topKRank]] → (qid, id, cosine, rank ≤ k). */
+  private[graft] def exactTopK(cands: DataFrame, k: Int): DataFrame =
+    topKRank(cands.filter(col("qid") =!= col("id"))
+      .select(col("qid"), col("id"),
+        VectorFunctions.cosineSim(col("cvec"), col("qvec")).as("cosine")),
+      k, "cosine")
+
+  /** [[exactTopK]] over slim (qid, id) candidates: the vectors join back
+    * by key, `corpus(idCol, vecCol)` as `cvec` and `queries(qidCol,
+    * vecCol)` as `qvec` (a caller with a small query side passes it
+    * `broadcast`). */
+  private[graft] def exactTopK(cands: DataFrame, k: Int, corpus: DataFrame,
+      queries: DataFrame, idCol: String, vecCol: String,
+      qidCol: String): DataFrame =
+    exactTopK(cands
+      .join(corpus.select(col(idCol).as("id"), col(vecCol).as("cvec")), "id")
+      .join(queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec")),
+        "qid"), k)
+
+  /** The compressed-domain scans' tail: self-matches leave the
+    * approximate (qid, id, approx) scores BEFORE the cut to the top
+    * `rerank` per query, whose candidates get [[exactTopK]] against the
+    * ORIGINAL corpus vectors and the broadcast queries. `rerank` ≥ the
+    * corpus makes the result exact under any codebook. */
+  private[graft] def rerankTopK(approx: DataFrame, rerank: Int, k: Int,
+      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      qidCol: String): DataFrame =
+    exactTopK(topKRank(approx.filter(col("qid") =!= col("id")), rerank,
+        "approx").select(col("qid"), col("id")),
+      k, corpus, broadcast(queries), idCol, vecCol, qidCol)
+
   /** Exact cosine top-k. corpus(idCol, vecCol), queries(qidCol, vecCol) →
     * (qid, id, cosine, rank ≤ k).
     */
@@ -254,11 +89,7 @@ object Similarity {
       qidCol: String = "qid"): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
     val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("qid"), col("id"),
-        VectorFunctions.cosineSim(col("cvec"), col("qvec")).as("cosine"))
-      .filter(col("qid") =!= col("id"))
-    topKRank(scored, k, "cosine")
+    exactTopK(c.crossJoin(broadcast(q)), k)
   }
 
   /** LSH-bucketed ANN top-k with multi-probe. Same output shape as
@@ -274,27 +105,29 @@ object Similarity {
       numPlanes: Int = 12, probeHamming: Int = 1, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       qidCol: String = "qid"): DataFrame = {
-    val sig = (v: org.apache.spark.sql.Column) =>
-      VectorFunctions.rademacherSig(v, numPlanes, dims, seed)
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"),
-      sig(col(vecCol)).as("bucket"))
-
-    // multi-probe: each query expands to its signature + all signatures
-    // within hamming <= probeHamming (numPlanes choose <=h buckets)
-    val flips: Seq[Long] = hammingFlips(numPlanes, probeHamming)
-    val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"),
-        sig(col(vecCol)).as("qsig"))
-      .withColumn("flip", explode(lit(flips.toArray)))
-      .select(col("qid"), col("qvec"),
-        col("qsig").bitwiseXOR(col("flip")).as("bucket"))
-
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .select(col("qid"), col("id"),
-        VectorFunctions.cosineSim(col("cvec"), col("qvec")).as("cosine"))
-      .filter(col("qid") =!= col("id"))
-      .groupBy("qid", "id").agg(max("cosine").as("cosine")) // dedupe probes
-    topKRank(scored, k, "cosine")
+      VectorFunctions.rademacherSig(col(vecCol), numPlanes, dims, seed)
+        .as("bucket"))
+    val q = probeBuckets(queries, Seq(col(qidCol).as("qid"),
+      col(vecCol).as("qvec")), col(vecCol), numPlanes, dims, seed, probeHamming)
+    // each corpus row sits in one bucket and a query's probe buckets
+    // are distinct, so a (qid, id) pair meets at most once: no dedup
+    exactTopK(c.join(broadcast(q), Seq("bucket")), k)
   }
+
+  /** The multi-probe side of the sign-bucket operators: the `keep`
+    * columns of each row, once per signature within hamming ≤
+    * `probeHamming` of `vec`'s ([[hammingFlips]]), as `bucket`. A vector
+    * not in `keep` never rides the explode. */
+  private[operators] def probeBuckets(rows: DataFrame, keep: Seq[Column],
+      vec: Column, planes: Int, dims: Int, seed: Long,
+      probeHamming: Int): DataFrame =
+    rows.select(keep :+ VectorFunctions.rademacherSig(vec, planes, dims, seed)
+        .as("qsig"): _*)
+      .withColumn("flip",
+        explode(lit(hammingFlips(planes, probeHamming).toArray)))
+      .withColumn("bucket", col("qsig").bitwiseXOR(col("flip")))
+      .drop("qsig", "flip")
 
   /** kNN JOIN: top-k nearest corpus vectors for EVERY probe row — the
     * kNN-graph / SemDeDup-prep / diversity-sampling workload where the
@@ -366,12 +199,12 @@ object Similarity {
     // a double hash aggregate + exchange over ~|probes|·flips·bands·
     // occupancy rows (~1e9 at 200k probes × 16 bands) — and is now zero
     // shuffles (BASELINE.md round-12 kNN table).
-    val bandSig = (v: org.apache.spark.sql.Column, bnd: Int) =>
+    val bandSig = (v: Column, bnd: Int) =>
       VectorFunctions.rademacherSig(v, planes, dims, seed + bnd * 7919L)
     val withPrefix = bands > 1
     // one struct per band: (band, that band's signature, the prefix of
     // earlier-band signatures when bands > 1)
-    def bandStructs(sigs: org.apache.spark.sql.Column) =
+    def bandStructs(sigs: Column) =
       array((0 until bands).map { bnd =>
         if (withPrefix)
           struct(lit(bnd).as("band"), sigs(bnd).as("sig"),
@@ -415,18 +248,12 @@ object Similarity {
     // corpus side builds a small per-partition table and neither side
     // benefits from a sort.
     val joined = cb.hint("shuffle_hash").join(qb, Seq("band", "bucket"))
-      .filter(col("qid") =!= col("id"))
     val cand = (if (withPrefix)
         joined.filter(!VectorFunctions.anyBandCollides(
           col("qprefix"), col("cprefix"), effHamming))
       else joined)
       .select(col("qid"), col("id"))
-    val cv = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-    val qv = probes.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
-    val scored = cand.join(cv, "id").join(qv, "qid")
-      .select(col("qid"), col("id"),
-        VectorFunctions.cosineSim(col("cvec"), col("qvec")).as("cosine"))
-    topKRank(scored, k, "cosine")
+    exactTopK(cand, k, corpus, probes, idCol, vecCol, qidCol)
   }
 
   /** IVF kNN JOIN: top-k nearest corpus vectors for every probe row via
@@ -438,76 +265,42 @@ object Similarity {
     * no banding multiplier. Measured head-to-head with the banded LSH
     * join in BASELINE.md round-11.
     *
-    * Scale shape: centroids broadcast (nlist ≤ 4096 × dims floats); the
-    * per-probe cell ranking reduces |probes|·nlist slim (qid, cell,
-    * score) rows through the bounded-heap [[topKRank]] aggregate (no
-    * per-qid window task ceiling); the candidate equi-join on `cell`
-    * moves only id/qid pairs and each corpus vector lives in exactly
-    * ONE cell, so candidates need no dedup; vectors join back by key
-    * for the exact cosine, once per candidate.
+    * Scale shape: the [[Quantizer]] fits in memory on normalized
+    * vectors, assigns each corpus row its cell in one narrow pass, and
+    * ranks each probe's cells under the same rule; the candidate
+    * equi-join on `cell` moves only id/qid pairs and each corpus vector
+    * lives in exactly ONE cell, so candidates need no dedup; vectors
+    * join back by key for the exact cosine ([[exactTopK]]), once per
+    * candidate.
     *
-    * `nlist` ≤ 0 derives √n (the per-cell-occupancy rule, capped at
-    * 4096); `nprobe = nlist` probes every cell, which makes the result
-    * PROVABLY equal to brute force (the gate configuration — same
-    * argument as sim_topk_ivf's oracle).
+    * `nlist` ≤ 0 derives √n ([[Quantizer.nlistFor]]); `nprobe = nlist`
+    * probes every cell, which makes the result PROVABLY equal to brute
+    * force (the gate configuration — same argument as sim_topk_ivf's
+    * oracle).
     */
   def knnJoinIvf(corpus: DataFrame, probes: DataFrame, k: Int,
       nlist: Int = 0, nprobe: Int = 8, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       qidCol: String = "qid", knownCount: Long = -1L): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cells =
-      if (nlist > 0) nlist
-      else {
-        val n = if (knownCount >= 0) knownCount
-          else corpus.select(col(idCol)).count()
-        math.min(4096, math.max(8, math.sqrt(n.toDouble).toInt))
-      }
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-    // driver-side Lloyd fit (see fitQuantizer); corpus assignment is the
-    // NearestCell kernel — argmin L2 over the plan-embedded centroid
-    // matrix, one narrow pass, no MLlib transform job
-    val cents = fitQuantizer(c.select(col("cvec")), "cvec", cells, seed)
-    val cflat = cents.flatten.toSeq
-    val assigned = c.select(col("id"),
-      VectorFunctions.nearestCell(col("cvec"), cflat, cents.length,
-        cents(0).length).cast("long").as("cell"))
-    val centroids = cents.zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }
-      .toSeq.toDF("cell", "centroid")
-    // nprobe nearest cells per probe, via the map-side-combine top-k
-    // aggregate over slim rows (a per-qid row_number window would put
-    // one task per qid on the table — the ceiling topKRank exists for).
-    // DELIBERATELY kept on the exchange path rather than the
-    // NearestCellsCosine kernel: this operator's candidate join streams
-    // probeCells (the corpus side broadcasts when small / can't
-    // broadcast at scale), so the rank exchange is what WIDTHS the
-    // downstream cosine-verify stage — the r16 kernel variant collapsed
-    // the 4M-candidate verify onto the probe scan's partition count
-    // (2.1 s → 2.9 s warm). Re-attempted in r17 per the VERDICT with an
-    // explicit repartition restoring the width (same-JVM 3-way A/B at
-    // 32c, recorded in OPTIMIZATION_r17.md): exchange 2.0–2.7 s vs
-    // kernel+repartition(qid) 3.3–3.6 s vs
-    // kernel+repartition(defaultParallelism, qid) 3.3–3.8 s — the
-    // explicit exchange costs the same as the rank exchange it
-    // replaces while losing the aggregate's output statistics, so the
-    // exchange path stays.
-    val q = probes.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
-    val cellScores = q.crossJoin(broadcast(centroids))
-      .select(col("qid"), col("cell").as("id"),
-        VectorFunctions.cosineSim(col("qvec"), col("centroid")).as("ccos"))
-    val probeCells = topKRank(cellScores, math.min(nprobe, cells), "ccos")
-      .select(col("qid"), col("id").as("cell"))
+    val quant = Quantizer.fit(corpus, vecCol,
+      Quantizer.nlistFor(corpus, idCol, nlist, knownCount), seed,
+      normalize = true)
+    val assigned = corpus.select(col(idCol).as("id"),
+      quant.assign(Embeddings.normalize(col(vecCol))).as("cell"))
+    // the probe cells go through the rank EXCHANGE (Quantizer.probeRanked,
+    // the kernel's own score and tie-break), not the NearestCells kernel:
+    // the candidate join streams the probe side, so the exchange is what
+    // sets the width of the downstream cosine-verify stage. A kernel pass
+    // collapsed the 4M-candidate verify onto the probe scan's partition
+    // count (2.1 s → 2.9 s warm, OPTIMIZATION_r16.md), and a kernel plus
+    // an explicit repartition cost 3.3–3.8 s against the exchange's
+    // 2.0–2.7 s at 32 cores (OPTIMIZATION_r17.md): an explicit exchange
+    // costs what the rank exchange does and loses its output statistics.
+    val probeCells = quant.probeRanked(probes.select(col(qidCol).as("qid"),
+      Embeddings.normalize(col(vecCol)).as("qn")), nprobe)
     val cand = assigned.join(probeCells, Seq("cell"))
-      .filter(col("qid") =!= col("id"))
       .select(col("qid"), col("id"))
-    val cv = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-    val qv = probes.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
-    val scored = cand.join(cv, "id").join(qv, "qid")
-      .select(col("qid"), col("id"),
-        VectorFunctions.cosineSim(col("cvec"), col("qvec")).as("cosine"))
-    topKRank(scored, k, "cosine")
+    exactTopK(cand, k, corpus, probes, idCol, vecCol, qidCol)
   }
 
   /** XOR masks enumerating all signatures within hamming distance
@@ -616,7 +409,7 @@ object Similarity {
     * than `maxBucketLiterals` (default 1024) distinct buckets skips the
     * filter instead of building an unbounded IN-list + driver
     * round-trip (the [[Dedup.incrementalNewNearDupEmbedDisk]] cap — at
-    * that occupancy pruning buys nothing anyway). Scoring/dedup/rank
+    * that occupancy pruning buys nothing anyway). Scoring and rank
     * semantics are exactly [[lshTopK]]'s.
     */
   def probeSignIndex(spark: SparkSession, path: String,
@@ -626,13 +419,8 @@ object Similarity {
       maxBucketLiterals: Int = 1024): DataFrame = {
     require(maxBucketLiterals >= 0, s"maxBucketLiterals: $maxBucketLiterals")
     val planes = resolveSignPlanes(spark, path, numPlanes, dims, seed)
-    val flips = hammingFlips(planes, probeHamming)
-    val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"),
-        VectorFunctions.rademacherSig(col(vecCol), planes, dims, seed)
-          .as("qsig"))
-      .withColumn("flip", explode(lit(flips.toArray)))
-      .select(col("qid"), col("qvec"),
-        col("qsig").bitwiseXOR(col("flip")).as("bucket"))
+    val q = probeBuckets(queries, Seq(col(qidCol).as("qid"),
+      col(vecCol).as("qvec")), col(vecCol), planes, dims, seed, probeHamming)
     // bounded collect: distinct probe buckets, CAPPED — limit(cap+1)
     // bounds the driver materialization no matter how large the query
     // set is; past the cap the unpruned scan wins anyway
@@ -645,54 +433,34 @@ object Similarity {
     val pruned =
       if (buckets.length <= maxLits) raw.filter(col("bucket").isin(buckets: _*))
       else raw
-    val index = pruned
-      // partition-dir values type-infer as INT when they fit; normalize
-      // so the bucket join below needs no implicit cast
-      .withColumn("bucket", col("bucket").cast("long"))
-    val scored = index.join(broadcast(q), Seq("bucket"))
-      .select(col("qid"), col("id"),
-        VectorFunctions.cosineSim(col("vec"), col("qvec")).as("cosine"))
-      .filter(col("qid") =!= col("id"))
-      .groupBy("qid", "id").agg(max("cosine").as("cosine"))
-    topKRank(scored, k, "cosine")
+    // partition-dir values type-infer as INT when they fit; normalize
+    // so the bucket join below needs no implicit cast
+    val index = pruned.select(col("id"), col("vec").as("cvec"),
+      col("bucket").cast("long").as("bucket"))
+    exactTopK(index.join(broadcast(q), Seq("bucket")), k)
   }
 
-  /** IVF (inverted-file) ANN: k-means coarse quantizer over the corpus,
-    * each query probes its `nprobe` nearest cells. The 100-TB shape: the
-    * corpus is clustered ONCE (and would be written out partitioned by
-    * cell — probing then prunes whole partitions at scan time); per-query
+  /** IVF (inverted-file) ANN: the [[Quantizer]] fits in memory on the
+    * normalized corpus, assigns every row its cell, and each query
+    * probes its `nprobe` nearest cells under the same rule; candidates
+    * get [[exactTopK]] on the raw vectors. The one-shot form of
+    * [[IvfIndex]]: with `fitSamplePerCell = 0` there, an index built
+    * with the same `nlist` and `seed` probes to the same rows. Per-query
     * work is nprobe/nlist of the corpus.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       qidCol: String = "qid"): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-    // driver-side Lloyd fit (see fitQuantizer); corpus assignment is the
-    // NearestCell kernel (argmin L2, ties to the lowest cell) — one
-    // narrow pass, no MLlib transform job
-    val cents = fitQuantizer(c.select(col("cvec")), "cvec", nlist, seed)
-    val cflat = cents.flatten.toSeq
-    val ncells = cents.length
-    val dims = cents(0).length
-    val assigned = c.select(col("id"), col("cvec"),
-      VectorFunctions.nearestCell(col("cvec"), cflat, ncells, dims)
+    val quant = Quantizer.fit(corpus, vecCol, nlist, seed, normalize = true)
+    val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"),
+      quant.assign(Embeddings.normalize(col(vecCol))).as("cell"))
+    // one narrow kernel pass per query picks its cells: the query side
+    // never shuffles
+    val probes = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"),
+      explode(quant.probe(Embeddings.normalize(col(vecCol)), nprobe))
         .as("cell"))
-
-    // each query → nprobe nearest cells by cosine to the centroid, as
-    // ONE narrow kernel pass over the plan-embedded centroid matrix
-    // (ordering identical to the former per-query row_number window:
-    // cosine desc, cell asc) — the query side never shuffles
-    val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
-    val probes = q.select(col("qid"), col("qvec"),
-      explode(VectorFunctions.nearestCellsCosine(col("qvec"), cflat,
-        ncells, dims, math.min(nprobe, ncells))).as("cell"))
-
-    val scored = assigned.join(broadcast(probes), Seq("cell"))
-      .select(col("qid"), col("id"),
-        VectorFunctions.cosineSim(col("cvec"), col("qvec")).as("cosine"))
-      .filter(col("qid") =!= col("id"))
-    topKRank(scored, k, "cosine")
+    exactTopK(assigned.join(broadcast(probes), Seq("cell")), k)
   }
 
   /** Scalar quantization (SQ8, the FAISS `SQ8` layout): one byte per
@@ -710,9 +478,8 @@ object Similarity {
     def train(corpus: DataFrame, dims: Int, sampleN: Int = 20000,
         vecCol: String = "embedding",
         preNormalized: Boolean = false): (Seq[Float], Seq[Float]) = {
-      val vexpr =
-        if (preNormalized) col(vecCol) else Embeddings.normalize(col(vecCol))
-      val sample = deterministicSample(corpus, vexpr, sampleN)
+      val sample = Quantizer.deterministicSample(corpus, vecCol, sampleN,
+        normalize = !preNormalized)
       val mins = Array.fill(dims)(Float.MaxValue)
       val maxs = Array.fill(dims)(Float.MinValue)
       sample.foreach { v =>
@@ -744,17 +511,8 @@ object Similarity {
       val approx = encoded.crossJoin(broadcast(q))
         .select(col("qid"), col("id"),
           VectorFunctions.sq8Dot(col("codes"), col("qn"), mins, scales)
-            .as("adot"))
-        .filter(col("qid") =!= col("id"))
-      val cands = topKRank(approx, rerank, "adot").select(col("qid"), col("id"))
-      val cvecs = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-      val scored = cands
-        .join(cvecs, "id")
-        .join(broadcast(queries.select(col(qidCol).as("qid"),
-          col(vecCol).as("qv2"))), "qid")
-        .select(col("qid"), col("id"),
-          VectorFunctions.cosineSim(col("cvec"), col("qv2")).as("cosine"))
-      topKRank(scored, k, "cosine")
+            .as("approx"))
+      rerankTopK(approx, rerank, k, corpus, queries, idCol, vecCol, qidCol)
     }
   }
 
@@ -781,17 +539,13 @@ object Similarity {
     def train(corpus: DataFrame, dims: Int, m: Int = 8, ksub: Int = 16,
         seed: Long = 42L, sampleN: Int = 20000,
         vecCol: String = "embedding", iters: Int = 12,
-        preNormalized: Boolean = false): Array[Float] = {
-      val vexpr =
-        if (preNormalized) col(vecCol) else Embeddings.normalize(col(vecCol))
-      val sample: Array[Array[Float]] =
-        deterministicSample(corpus, vexpr, sampleN)
-      fitCodebook(sample, dims, m, ksub, seed, iters)
-    }
+        preNormalized: Boolean = false): Array[Float] =
+      fitCodebook(Quantizer.deterministicSample(corpus, vecCol, sampleN,
+        normalize = !preNormalized), dims, m, ksub, seed, iters)
 
     /** Per-subspace k-means on an in-memory sample → flat
       * [m][ksub][dsub] codebook (driver-side; the sample is bounded):
-      * one [[lloyd]] fit per subspace, seeded `seed + sub`.
+      * one [[Quantizer.lloyd]] fit per subspace, seeded `seed + sub`.
       */
     private def fitCodebook(sample: Array[Array[Float]],
         dims: Int, m: Int, ksub: Int, seed: Long,
@@ -802,7 +556,7 @@ object Similarity {
       var sub = 0
       while (sub < m) {
         val lo = sub * dsub
-        val cents = lloyd(sample.map(_.slice(lo, lo + dsub)), ksub,
+        val cents = Quantizer.lloyd(sample.map(_.slice(lo, lo + dsub)), ksub,
           seed + sub, maxIter = iters)
         var c = 0
         while (c < ksub) {
@@ -815,29 +569,17 @@ object Similarity {
       codebook
     }
 
-    /** PQ-reconstruction of `v` under `cb` (nearest sub-centroid per
-      * subspace) — used by OPQ training and quantization-error tests.
+    /** PQ-reconstruction of `v` under `cb` (the sub-centroids
+      * [[VecOps.pqEncode]] picks) — used by OPQ training and
+      * quantization-error tests.
       */
     private[graft] def reconstruct(v: Array[Float], cb: Array[Float],
         dims: Int, m: Int, ksub: Int): Array[Float] = {
       val dsub = dims / m
+      val codes = VecOps.pqEncode(new GenericArrayData(v), cb, m, ksub, dsub)
       val out = new Array[Float](dims)
-      var sub = 0
-      while (sub < m) {
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < ksub) {
-          val off = (sub * ksub + c) * dsub
-          var d = 0.0; var i = 0
-          while (i < dsub) {
-            val diff = v(sub * dsub + i) - cb(off + i); d += diff * diff; i += 1
-          }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        System.arraycopy(cb, (sub * ksub + best) * dsub, out, sub * dsub, dsub)
-        sub += 1
-      }
+      (0 until m).foreach(sub => System.arraycopy(cb,
+        (sub * ksub + codes.getInt(sub)) * dsub, out, sub * dsub, dsub))
       out
     }
 
@@ -856,8 +598,8 @@ object Similarity {
         vecCol: String = "embedding", iters: Int = 12,
         opqIters: Int = 6): (Array[Float], Array[Float]) = {
       import breeze.linalg.{svd, DenseMatrix, DenseVector}
-      val sample: Array[Array[Float]] = deterministicSample(corpus,
-        Embeddings.normalize(col(vecCol)), sampleN)
+      val sample = Quantizer.deterministicSample(corpus, vecCol, sampleN,
+        normalize = true)
       require(sample.nonEmpty, "empty training sample")
       var r = DenseMatrix.eye[Double](dims)
       def rotated(x: Array[Float]): Array[Float] = {
@@ -906,31 +648,76 @@ object Similarity {
         m: Int = 8, ksub: Int = 16, rerank: Int = 100, seed: Long = 42L,
         idCol: String = "vec_id", vecCol: String = "embedding",
         qidCol: String = "qid", opqIters: Int = 6): DataFrame = {
-      val dsub = dims / m
-      val (rot, cb0) = trainOpq(corpus, dims, m, ksub, seed,
+      val (rot, cb) = trainOpq(corpus, dims, m, ksub, seed,
         vecCol = vecCol, opqIters = opqIters)
-      val cb = cb0.toSeq
-      val prep = (c: org.apache.spark.sql.Column) =>
-        VectorFunctions.rotateVec(Embeddings.normalize(c), rot.toSeq, dims)
+      adcTopK(corpus, queries, k, rerank, cb.toSeq, m, ksub, dims,
+        c => VectorFunctions.rotateVec(Embeddings.normalize(c), rot.toSeq,
+          dims), idCol, vecCol, qidCol)
+    }
 
+    /** The flat ADC scan of [[topK]] and [[opqTopK]]: every corpus row's
+      * PQ code of `prep(v)` against every broadcast query's lookup table
+      * of `prep(q)` — scores come from the codes table alone — then
+      * [[rerankTopK]] joins the full vectors for the candidates only. */
+    private def adcTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+        rerank: Int, cb: Seq[Float], m: Int, ksub: Int, dims: Int,
+        prep: Column => Column, idCol: String, vecCol: String,
+        qidCol: String): DataFrame = {
       val encoded = corpus.select(col(idCol).as("id"),
-        VectorFunctions.pqEncode(prep(col(vecCol)), cb, m, ksub, dsub).as("codes"))
+        VectorFunctions.pqEncode(prep(col(vecCol)), cb, m, ksub, dims / m)
+          .as("codes"))
       val q = queries.select(col(qidCol).as("qid"),
-        VectorFunctions.pqLut(prep(col(vecCol)), cb, m, ksub, dsub).as("lut"))
-
+        VectorFunctions.pqLut(prep(col(vecCol)), cb, m, ksub, dims / m)
+          .as("lut"))
       val approx = encoded.crossJoin(broadcast(q))
         .select(col("qid"), col("id"),
-          VectorFunctions.pqAdc(col("codes"), col("lut"), ksub).as("adc"))
-        .filter(col("qid") =!= col("id"))
-      val cands = topKRank(approx, rerank, "adc").select(col("qid"), col("id"))
+          VectorFunctions.pqAdc(col("codes"), col("lut"), ksub).as("approx"))
+      rerankTopK(approx, rerank, k, corpus, queries, idCol, vecCol, qidCol)
+    }
 
-      val cvecs = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-      val scored = cands
-        .join(cvecs, "id")
-        .join(broadcast(queries.select(col(qidCol).as("qid"), col(vecCol).as("qv2"))), "qid")
+    /** `nvec − centroid` as float — the residual every IVF-PQ code
+      * encodes. */
+    private def residual(nvec: Column, centroid: Column): Column =
+      zip_with(nvec, centroid, (a, b) => (a - b).cast("float"))
+
+    /** The residual codebook of assigned (id, nvec, cell) rows: [[train]]
+      * on the bounded content-ordered sample of their residuals. */
+    private[operators] def trainResidual(assigned: DataFrame,
+        centroids: DataFrame, dims: Int, m: Int, ksub: Int, seed: Long,
+        sampleN: Int): Seq[Float] =
+      train(assigned.join(broadcast(centroids), Seq("cell"))
+          .withColumn("res", residual(col("nvec"), col("centroid"))),
+        dims, m, ksub, seed, sampleN = sampleN, vecCol = "res",
+        preNormalized = true).toSeq
+
+    /** (id, codes, cell) of assigned (id, nvec, cell) rows: the residual
+      * to the row's centroid, PQ-encoded under codebook `cb`. */
+    private[operators] def encodeResidual(assigned: DataFrame,
+        centroids: DataFrame, cb: Seq[Float], m: Int, ksub: Int,
+        dims: Int): DataFrame =
+      assigned.select(col("id"), col("nvec"), col("cell"))
+        .join(broadcast(centroids), Seq("cell"))
+        .select(col("id"),
+          VectorFunctions.pqEncode(
+            residual(col("nvec"), col("centroid")), cb, m, ksub, dims / m)
+            .as("codes"),
+          col("cell"))
+
+    /** The residual-ADC scan of (id, codes, cell) rows over the probed
+      * (qid, qn, cell) pairs: per pair the EXACT q·centroid plus the
+      * query's residual lookup table, then m table adds per corpus row —
+      * the (qid, id, approx) frame [[rerankTopK]] cuts. */
+    private[operators] def residualAdc(codes: DataFrame, probes: DataFrame,
+        centroids: DataFrame, cb: Seq[Float], m: Int, ksub: Int,
+        dims: Int): DataFrame = {
+      val qcells = probes.join(broadcast(centroids), Seq("cell"))
+        .select(col("qid"), col("cell"),
+          VectorFunctions.dotProduct(col("qn"), col("centroid")).as("qdotc"),
+          VectorFunctions.pqLut(col("qn"), cb, m, ksub, dims / m).as("lut"))
+      codes.join(broadcast(qcells), Seq("cell"))
         .select(col("qid"), col("id"),
-          VectorFunctions.cosineSim(col("cvec"), col("qv2")).as("cosine"))
-      topKRank(scored, k, "cosine")
+          (col("qdotc") + VectorFunctions.pqAdc(col("codes"), col("lut"), ksub))
+            .as("approx"))
     }
 
     /** IVF+PQ composition — the classic billion-vector layout: k-means
@@ -941,72 +728,30 @@ object Similarity {
       * the approximate score is the exact centroid dot plus the
       * residual ADC — residual PQ quantizes a much tighter distribution
       * than raw vectors, so the same code budget gives better recall.
-      * Exact cosine rerank on `rerank` candidates per query.
+      * Cells come from the one [[Quantizer]] (fit, assign and probe on
+      * normalized vectors); exact cosine rerank on `rerank` candidates
+      * per query. The one-shot form of [[IvfPqIndex]]: with
+      * `fitSamplePerCell = 0` there, the same parameters probe to the
+      * same rows.
       */
     def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, dims: Int,
         nlist: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16,
         rerank: Int = 100, seed: Long = 42L,
         idCol: String = "vec_id", vecCol: String = "embedding",
         qidCol: String = "qid"): DataFrame = {
-      val dsub = dims / m
-      val spark = corpus.sparkSession
-      import spark.implicits._
-
-      // 1. coarse quantizer over normalized vectors — driver-side Lloyd
-      // fit (see fitQuantizer); assignment via the NearestCell kernel
-      // (argmin L2, ties to the lowest cell), one narrow pass
-      val cNorm = corpus.select(col(idCol).as("id"),
-        Embeddings.normalize(col(vecCol)).as("nvec"), col(vecCol).as("cvec"))
-      val cents = fitQuantizer(cNorm.select(col("nvec")), "nvec", nlist, seed)
-      val cflat = cents.flatten.toSeq
-      val ncells = cents.length
-      val centroids = cents.zipWithIndex
-        .map { case (v, i) => (i, v) }
-        .toSeq.toDF("cell", "centroid")
-      val assigned = cNorm.select(col("id"), col("nvec"), col("cvec"),
-        VectorFunctions.nearestCell(col("nvec"), cflat, ncells, dims)
-          .as("cell"))
-
-      // 2. residuals (nvec - centroid) + PQ codebook trained on them
-      val residual = org.apache.spark.sql.functions.zip_with(
-        col("nvec"), col("centroid"), (a, b) => (a - b).cast("float"))
-      val withRes = assigned.join(broadcast(centroids), Seq("cell"))
-        .withColumn("res", residual)
-      val cb = train(withRes, dims, m, ksub, seed, vecCol = "res",
-        preNormalized = true).toSeq
-      val encoded = withRes.select(col("id"), col("cell"),
-        VectorFunctions.pqEncode(col("res"), cb, m, ksub, dsub).as("codes"))
-
-      // 3. per-query: nprobe nearest cells by centroid dot + shared LUT
-      // — cell pick as one narrow kernel pass over the plan-embedded
-      // centroid matrix (ordering identical to the former per-query
-      // row_number window: dot desc, cell asc); the broadcast join back
-      // to centroids recomputes the exact qdotc the scoring needs
-      val qn = queries.select(col(qidCol).as("qid"),
-        Embeddings.normalize(col(vecCol)).as("qn"), col(vecCol).as("qvec"))
-      val probes = qn.select(col("qid"), col("qn"),
-          explode(VectorFunctions.nearestCellsDot(col("qn"), cflat,
-            ncells, dims, math.min(nprobe, ncells))).as("cell"))
-        .join(broadcast(centroids), Seq("cell"))
-        .select(col("qid"), col("cell"),
-          VectorFunctions.dotProduct(col("qn"), col("centroid")).as("qdotc"),
-          VectorFunctions.pqLut(col("qn"), cb, m, ksub, dsub).as("lut"))
-
-      // 4. compressed-domain scoring within probed cells only
-      val approx = encoded.join(broadcast(probes), Seq("cell"))
-        .select(col("qid"), col("id"),
-          (col("qdotc") + VectorFunctions.pqAdc(col("codes"), col("lut"), ksub))
-            .as("adc"))
-        .filter(col("qid") =!= col("id"))
-      val cands = topKRank(approx, rerank, "adc").select(col("qid"), col("id"))
-
-      // 5. exact rerank
-      val cvecs = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-      val scored = cands.join(cvecs, "id")
-        .join(broadcast(queries.select(col(qidCol).as("qid"), col(vecCol).as("qv2"))), "qid")
-        .select(col("qid"), col("id"),
-          VectorFunctions.cosineSim(col("cvec"), col("qv2")).as("cosine"))
-      topKRank(scored, k, "cosine")
+      val quant = Quantizer.fit(corpus, vecCol, nlist, seed, normalize = true)
+      val centroids = quant.frame(corpus.sparkSession)
+      val assigned = corpus.select(col(idCol).as("id"),
+          Embeddings.normalize(col(vecCol)).as("nvec"))
+        .withColumn("cell", quant.assign(col("nvec")))
+      val cb = trainResidual(assigned, centroids, dims, m, ksub, seed,
+        sampleN = 20000)
+      val qn = Embeddings.normalize(col(vecCol))
+      val probes = queries.select(col(qidCol).as("qid"), qn.as("qn"),
+        explode(quant.probe(qn, nprobe)).as("cell"))
+      rerankTopK(residualAdc(encodeResidual(assigned, centroids, cb, m, ksub,
+          dims), probes, centroids, cb, m, ksub, dims),
+        rerank, k, corpus, queries, idCol, vecCol, qidCol)
     }
 
     /** ADC top-k with exact rerank: compressed-domain scan → top
@@ -1016,32 +761,9 @@ object Similarity {
     def topK(corpus: DataFrame, queries: DataFrame, k: Int, dims: Int,
         m: Int = 8, ksub: Int = 16, rerank: Int = 100, seed: Long = 42L,
         idCol: String = "vec_id", vecCol: String = "embedding",
-        qidCol: String = "qid"): DataFrame = {
-      val dsub = dims / m
-      val cb = train(corpus, dims, m, ksub, seed, vecCol = vecCol).toSeq
-
-      val encoded = corpus.select(col(idCol).as("id"),
-        VectorFunctions.pqEncode(
-          Embeddings.normalize(col(vecCol)), cb, m, ksub, dsub).as("codes"))
-      val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"),
-        VectorFunctions.pqLut(
-          Embeddings.normalize(col(vecCol)), cb, m, ksub, dsub).as("lut"))
-
-      // compressed-domain scan: scores come from the codes table alone
-      val approx = encoded.crossJoin(broadcast(q.select(col("qid"), col("lut"))))
-        .select(col("qid"), col("id"),
-          VectorFunctions.pqAdc(col("codes"), col("lut"), ksub).as("adc"))
-        .filter(col("qid") =!= col("id"))
-      val cands = topKRank(approx, rerank, "adc").select(col("qid"), col("id"))
-
-      // exact rerank joins the full vectors for the candidates only
-      val cvecs = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
-      val scored = cands
-        .join(cvecs, "id")
-        .join(broadcast(queries.select(col(qidCol).as("qid"), col(vecCol).as("qv2"))), "qid")
-        .select(col("qid"), col("id"),
-          VectorFunctions.cosineSim(col("cvec"), col("qv2")).as("cosine"))
-      topKRank(scored, k, "cosine")
-    }
+        qidCol: String = "qid"): DataFrame =
+      adcTopK(corpus, queries, k, rerank,
+        train(corpus, dims, m, ksub, seed, vecCol = vecCol).toSeq, m, ksub,
+        dims, Embeddings.normalize, idCol, vecCol, qidCol)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity, Skew}
+import graft.operators.{Dedup, Quantizer, Similarity, Skew}
 
 class SkewAndIvfSpec extends SparkSpec {
   import spark.implicits._
@@ -51,7 +51,8 @@ class SkewAndIvfSpec extends SparkSpec {
 
   test("fitQuantizer over a rewritten parquet path fits its new content") {
     def fit(df: DataFrame) =
-      Similarity.fitQuantizer(df, "vec", 4, 42L).map(_.toSeq).toSeq
+      Quantizer.fit(df, "vec", 4, 42L, normalize = false).centroids
+        .map(_.toSeq).toSeq
     val path = tmpDir("quantizer-rewrite") + "/vecs"
     val oldCents = fit(writtenBlobs(path, 0))
     val cents = fit(writtenBlobs(path, 2))

@@ -1,18 +1,19 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.operators.Similarity
+import graft.operators.{Quantizer, Similarity}
 
-/** The narrow cell-ranking kernels (NearestCell / NearestCells /
-  * NearestCellsCosine / NearestCellsDot) replaced crossJoin +
-  * bounded-heap-rank / window subtrees in the IVF family. Each kernel
-  * must reproduce the ORDER the exchange-based path produced —
-  * same score arithmetic, same (score desc, cell asc) tie-break —
-  * or assignments/probe sets silently drift from the specs that pin
-  * recall. This spec replays both paths over real embeddings and a
-  * crafted exact-tie matrix.
+/** The narrow cell-ranking kernels (NearestCell / NearestCells) replaced
+  * crossJoin + bounded-heap-rank subtrees in the IVF family, and
+  * knnJoinIvf still ranks through that exchange
+  * (Quantizer.probeRanked). Kernel and exchange must produce the same
+  * ORDER — same score arithmetic, same (score desc, cell asc)
+  * tie-break — or assignments/probe sets silently drift from the specs
+  * that pin recall. This spec replays both paths over real embeddings
+  * and a crafted exact-tie matrix.
   */
 class VectorKernelSpec extends SparkSpec {
   import spark.implicits._
@@ -57,47 +58,35 @@ class VectorKernelSpec extends SparkSpec {
       "exact tie must break to the lowest cell id")
   }
 
-  test("nearestCellsCosine reproduces the (cosine desc, cell asc) " +
-      "window ranking on real embeddings") {
-    val q = emb.filter($"vec_id" < 20)
-      .select($"vec_id".as("id"), $"embedding".as("nvec"))
-    val cents64 = emb.filter($"vec_id" % 97 === 0).limit(8)
-      .select($"embedding").collect().map(_.getSeq[Float](0))
-    val flat64 = cents64.flatten.toSeq
-    val cdf = cents64.zipWithIndex.toSeq.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-    val kernel = q.select($"id",
-        posexplode(VectorFunctions.nearestCellsCosine(
-          $"nvec", flat64, cents64.length, 64, 3)))
-      .select($"id", $"pos", $"col".as("cell"))
-      .orderBy($"id", $"pos").collect().map(_.toSeq).toSeq
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"id")
-      .orderBy($"ccos".desc, $"cell".asc)
-    val viaWindow = q.crossJoin(broadcast(cdf))
-      .withColumn("ccos",
-        VectorFunctions.cosineSim($"nvec", $"centroid"))
-      .withColumn("prk", row_number().over(w)).filter($"prk" <= 3)
-      .select($"id", ($"prk" - 1).as("pos"), $"cell")
-      .orderBy($"id", $"pos").collect().map(_.toSeq).toSeq
-    assert(kernel.nonEmpty && kernel == viaWindow)
-  }
-
-  test("nearestCellsDot reproduces the (dot desc, cell asc) window " +
-      "ranking") {
-    val kernel = vecs.select($"id",
-        posexplode(VectorFunctions.nearestCellsDot($"nvec", flat, 6,
-          dims, 4)))
-      .select($"id", $"pos", $"col".as("cell"))
-      .orderBy($"id", $"pos").collect().map(_.toSeq).toSeq
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"id")
-      .orderBy($"qdotc".desc, $"cell".asc)
-    val viaWindow = vecs.crossJoin(broadcast(centDF))
-      .withColumn("qdotc",
-        VectorFunctions.dotProduct($"nvec", $"centroid"))
-      .withColumn("prk", row_number().over(w)).filter($"prk" <= 4)
-      .select($"id", ($"prk" - 1).as("pos"), $"cell")
-      .orderBy($"id", $"pos").collect().map(_.toSeq).toSeq
-    assert(kernel == viaWindow)
+  test("knnJoinIvf's exchange score picks the same cells as " +
+      "nearestCells, ties included") {
+    // per query, the first n kernel cells as a set must equal the
+    // exchange's nprobe = n pick for EVERY n — equal top-n sets for all
+    // n is equal order, and the crafted tie (cells 2 and 5 for vector 2)
+    // must go to cell 2 at n = 1 on both paths
+    def agree(q: Quantizer, vs: DataFrame): Unit = {
+      val kernel = vs.select($"id", q.probe($"nvec", q.nlist))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+      for (n <- 1 to q.nlist) {
+        val exchange = q.probeRanked(
+            vs.select($"id".as("qid"), $"nvec".as("qn")), n)
+          .collect().groupBy(_.getLong(0))
+          .map { case (id, rs) => id -> rs.map(_.getInt(1)).toSet }
+        assert(exchange == kernel.map { case (id, cs) =>
+          id -> cs.take(n).toSet }, s"nprobe = $n")
+      }
+    }
+    val tie = Quantizer(cents.map(_.toArray).toArray)
+    agree(tie, vecs)
+    assert(tie.probeRanked(vecs.filter($"id" === 2L)
+        .select($"id".as("qid"), $"nvec".as("qn")), 1)
+      .collect().map(_.getInt(1)).toSeq == Seq(2))
+    // real embeddings: 20 normalized queries, 8 normalized corpus
+    // vectors as centroids
+    val norm = graft.operators.Embeddings.normalize($"embedding")
+    agree(Quantizer(emb.filter($"vec_id" % 97 === 0).limit(8).select(norm)
+        .collect().map(_.getSeq[Float](0).toArray)),
+      emb.filter($"vec_id" < 20).select($"vec_id".as("id"), norm.as("nvec")))
   }
 
   test("nearestCell equals rank-1 of nearestCells") {
