@@ -980,8 +980,8 @@ object PipelineQueries {
       val a1 = graft.streaming.EmbedIngestStream.applyBatch(s, b1, None,
         path, "vec_id", "embedding", dims = 64, threshold = 0.4,
         probeHamming = 1, seed = 42L)
-      a1.select($"vec_id", $"embedding")
-        .write.mode("overwrite").parquet(s"$outDir/batch=0")
+      graft.operators.IndexVersions.writeParquet(
+        a1.select($"vec_id", $"embedding"), s"$outDir/batch=0")
       graft.streaming.EmbedIngestStream.compact(s, c0, path, outDir)
       val leftover = graft.streaming.IngestStream.batchDirs(s, outDir).size
       require(leftover == 0,
@@ -1016,8 +1016,8 @@ object PipelineQueries {
         n = 3, threshold = 0.5)
       val a1 = graft.streaming.IngestStream.applyBatch(s, b1, None,
         prefix, "doc_id", "text", 3, 0.5)
-      a1.select($"doc_id", $"text")
-        .write.mode("overwrite").parquet(s"$outDir/batch=0")
+      graft.operators.IndexVersions.writeParquet(
+        a1.select($"doc_id", $"text"), s"$outDir/batch=0")
       graft.streaming.IngestStream.compact(s, c0, prefix, outDir)
       val leftover = graft.streaming.IngestStream.batchDirs(s, outDir).size
       require(leftover == 0,
@@ -1884,7 +1884,7 @@ object PipelineQueries {
       stream.dropPhashIndex(s, table) // re-run starts from nothing
       Multimodal.writePhashIndex(c0, table, buckets = 8, bands = 4)
       val a1 = stream.applyBatch(s, b1, None, table, maxDist = 8)
-      a1.write.mode("overwrite").parquet(s"$outDir/batch=0")
+      graft.operators.IndexVersions.writeParquet(a1, s"$outDir/batch=0")
       stream.compact(s, c0, table, outDir)
       val leftover = graft.streaming.IngestStream.batchDirs(s, outDir).size
       require(leftover == 0,

@@ -412,19 +412,42 @@ object VecOps {
     2.0 * d - cc
   }
 
+  /** [[negDistAt]] of `v` against every one of `nlist` cells. A vector
+    * whose length is not `dims`, or that has a non-finite score (a NaN
+    * or infinite component), is refused: every score of such a vector
+    * is NaN or ±Inf, so ranking it would file it in an arbitrary cell. */
+  private def cellScores(v: ArrayData, centroids: Array[Float], nlist: Int,
+      dims: Int): Array[Double] = {
+    if (v.numElements() != dims) throw new IllegalArgumentException(
+      s"vector has ${v.numElements()} elements; the centroids have " +
+        s"dims=$dims")
+    val scores = new Array[Double](nlist)
+    var cell = 0
+    while (cell < nlist) {
+      val s = negDistAt(v, centroids, cell * dims, dims)
+      if (s.isNaN || s.isInfinite) throw new IllegalArgumentException(
+        s"vector has no finite score against cell $cell (a NaN or " +
+          "infinite component)")
+      scores(cell) = s
+      cell += 1
+    }
+    scores
+  }
+
   /** Nearest-centroid cell of `v` over a row-major [nlist][dims] matrix:
     * argmax of [[negDistAt]], ties to the LOWEST cell (strict `>` over
     * ascending cells) — exactly the `topKRank(k=1)` ordering (score
     * desc, id asc) of the exchange-based assignment this kernel
-    * replaces. One narrow pass per row; no shuffle, no join-back. */
+    * replaces. One narrow pass per row; no shuffle, no join-back. A
+    * vector of the wrong length or with a non-finite score throws
+    * ([[cellScores]]). */
   def nearestCell(v: ArrayData, centroids: Array[Float], nlist: Int,
       dims: Int): Int = {
+    val scores = cellScores(v, centroids, nlist, dims)
     var best = 0
-    var bestS = Double.NegativeInfinity
-    var cell = 0
+    var cell = 1
     while (cell < nlist) {
-      val s = negDistAt(v, centroids, cell * dims, dims)
-      if (s > bestS) { bestS = s; best = cell }
+      if (scores(cell) > scores(best)) best = cell
       cell += 1
     }
     best
@@ -433,16 +456,13 @@ object VecOps {
   /** The `nprobe` nearest cells of `v`, ordered by (score desc, cell
     * asc) — the probe-side mirror of [[nearestCell]]: strict `>` over
     * an ascending scan replicates the bounded-heap rank's tie-break
-    * exactly. Selection is O(nlist · nprobe) over ≤4096 cells. */
+    * exactly. Selection is O(nlist · nprobe) over ≤4096 cells. A vector
+    * of the wrong length or with a non-finite score throws
+    * ([[cellScores]]). */
   def nearestCells(v: ArrayData, centroids: Array[Float], nlist: Int,
       dims: Int, nprobe: Int): ArrayData = {
     val n = math.min(nprobe, nlist)
-    val scores = new Array[Double](nlist)
-    var cell = 0
-    while (cell < nlist) {
-      scores(cell) = negDistAt(v, centroids, cell * dims, dims)
-      cell += 1
-    }
+    val scores = cellScores(v, centroids, nlist, dims)
     val taken = new Array[Boolean](nlist)
     val out = new Array[Any](n)
     var r = 0
@@ -453,16 +473,6 @@ object VecOps {
       while (c < nlist) {
         if (!taken(c) && scores(c) > bestS) { bestS = scores(c); best = c }
         c += 1
-      }
-      if (best == -1) {
-        // non-finite scores: NaN never wins strict `>` against -Inf, so
-        // a query vector with NaN/±Inf components can leave every
-        // remaining cell unselected — fall back to the lowest un-taken
-        // cell (ADVICE r16). Finite inputs never reach this branch, so
-        // the (score desc, cell asc) contract is unchanged for them.
-        var c2 = 0
-        while (c2 < nlist && taken(c2)) c2 += 1
-        best = c2
       }
       taken(best) = true
       out(r) = best

@@ -300,11 +300,11 @@ object Dedup {
     try {
       materializeIndexFrames(dfC)
       awaitAll(corpus.sparkSession, Seq(
-        () => dfC.write.mode("overwrite").parquet(s"$path/df"),
-        () => prefix.repartition(col("h"))
-          .write.mode("overwrite").parquet(s"$path/prefix"),
-        () => shC.repartition(col("id"))
-          .write.mode("overwrite").parquet(s"$path/shingles")))
+        () => IndexVersions.writeParquet(dfC, s"$path/df"),
+        () => IndexVersions.writeParquet(prefix.repartition(col("h")),
+          s"$path/prefix"),
+        () => IndexVersions.writeParquet(shC.repartition(col("id")),
+          s"$path/shingles")))
     } finally unpersistIndexFrames(dfC, shC)
   }
 
@@ -391,9 +391,9 @@ object Dedup {
   def probeNgramIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5): DataFrame =
-    probeNgramFrames(spark.read.parquet(s"$path/df"),
-      spark.read.parquet(s"$path/prefix"),
-      spark.read.parquet(s"$path/shingles"),
+    probeNgramFrames(IndexVersions.readParquet(spark, Seq(s"$path/df")),
+      IndexVersions.readParquet(spark, Seq(s"$path/prefix")),
+      IndexVersions.readParquet(spark, Seq(s"$path/shingles")),
       batch, idCol, textCol, n, threshold)
 
   /** [[writeNgramIndex]] into BUCKETED catalog tables
@@ -625,17 +625,15 @@ object Dedup {
     // the committed generation: compacted indexes resolve through the
     // version pointer (IndexVersions), legacy flat layouts through
     // themselves — same resolution the sidecar read above used
-    val raw = spark.read.parquet(IndexVersions.resolvePath(spark, path))
+    val raw = IndexVersions.readParquet(spark,
+      Seq(IndexVersions.resolvePath(spark, path)))
     val maxLits = 1024
     val probed = qb.select("bucket").distinct().limit(maxLits + 1)
       .collect().map(_.getLong(0))
     val pruned =
       if (probed.length <= maxLits) raw.filter(col("bucket").isin(probed: _*))
       else raw
-    // partition-dir values type-infer as INT when they fit; normalize
-    // so the bucket join needs no implicit cast
-    val index = pruned.select(col("id"), col("vec"),
-      col("bucket").cast("long").as("bucket"))
+    val index = pruned.select(col("id"), col("vec"), col("bucket"))
     signNearDupNew(index, qb, batch, idCol, vecCol, threshold)
   }
 

@@ -1,6 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Versioned-index pointer commits — the [[graft.streaming.UpsertSink]]
   * exactly-once pattern applied to the persisted dedup indexes: a
@@ -39,6 +49,15 @@ import org.apache.spark.sql.SparkSession
   * Retention: old versions are kept (the rollback target). Deleting
   * versions older than N−1 is the same retention job any snapshot
   * store runs — deployment cadence, not operator behavior.
+  *
+  * Parquet artifacts: every parquet dir graft writes for itself (index
+  * legs, centroids, codebooks, model weights, shard layouts, ingest
+  * `batch=`/`upto=` dirs) goes through [[writeParquet]], which records
+  * the analyzed frame's schema as `_graft_schema` in the same dir, and
+  * is read back through [[readParquet]] with that record and a
+  * driver-side listing — no schema-inference job and no parallel
+  * listing job, whatever the partition count. A dir without a record
+  * is refused, not inferred.
   */
 object IndexVersions {
 
@@ -53,7 +72,7 @@ object IndexVersions {
     * create-if-absent record. */
   private[graft] def writeText(spark: SparkSession, dir: String,
       file: String, text: String, overwrite: Boolean = true): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, file)
+    val p = new Path(dir, file)
     val out = p.getFileSystem(hadoopConf(spark)).create(p, overwrite)
     try out.write(text.getBytes("UTF-8")) finally out.close()
   }
@@ -61,7 +80,7 @@ object IndexVersions {
   /** The UTF-8 text of `dir/file`, or None when the file is absent. */
   private[graft] def readText(spark: SparkSession, dir: String,
       file: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir, file)
+    val p = new Path(dir, file)
     val fs = p.getFileSystem(hadoopConf(spark))
     if (!fs.exists(p)) None
     else {
@@ -69,6 +88,181 @@ object IndexVersions {
       try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       finally in.close()
     }
+  }
+
+  /** The schema record a [[writeParquet]] leaves in the dir it wrote
+    * (hidden from Spark's listing by its `_` prefix), written after the
+    * data: a dir with a record holds a complete write. */
+  val SchemaFile = "_graft_schema"
+
+  /** The schema a graft writer recorded for one parquet dir: the data
+    * columns in file order and the partition columns in `partitionBy`
+    * order, every level nullable — exactly what a plain parquet read of
+    * that dir infers, known without reading it. */
+  private[graft] case class Recorded(data: StructType,
+      partition: StructType) {
+    def render: String = s"${data.json}\n${partition.json}\n"
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** The record a write of a frame with `schema`, partitioned by
+    * `partitionBy`, leaves. */
+  private[graft] def recordOf(schema: StructType,
+      partitionBy: Seq[String]): Recorded = {
+    val s = nullable(schema).asInstanceOf[StructType]
+    Recorded(StructType(s.fields.filterNot(f => partitionBy.contains(f.name))),
+      StructType(partitionBy.map(s(_))))
+  }
+
+  /** The record in `dir`, or None when it has none. */
+  private[graft] def recordIn(spark: SparkSession, dir: String): Option[Recorded] =
+    readText(spark, dir, SchemaFile).map { txt =>
+      val Array(data, part) = txt.trim.split("\n")
+      Recorded(DataType.fromJson(data).asInstanceOf[StructType],
+        DataType.fromJson(part).asInstanceOf[StructType])
+    }
+
+  /** The record in `dir`; a dir without one is refused with a message
+    * naming it — its schema is not guessed. */
+  private[graft] def recordedSchema(spark: SparkSession,
+      dir: String): Recorded =
+    recordIn(spark, dir).getOrElse(throw new IllegalArgumentException(
+      s"no recorded schema ($SchemaFile) at $dir — the artifact was not " +
+        "written by this version of graft or its write did not finish; " +
+        "rebuild it"))
+
+  /** Refuse, before anything is written, a write of `schema` into a
+    * layout whose committed record at `dir` differs. */
+  private[graft] def requireRecord(spark: SparkSession, dir: String,
+      schema: StructType, partitionBy: Seq[String]): Unit = {
+    val want = recordedSchema(spark, dir)
+    val got = recordOf(schema, partitionBy)
+    require(got == want,
+      s"refusing to write ${got.data.toDDL} / ${got.partition.toDDL} " +
+        s"beside the layout at $dir, recorded as ${want.data.toDDL} / " +
+        want.partition.toDDL)
+  }
+
+  /** Write `df` as parquet at `dir` (overwrite; `partitionBy` columns as
+    * `k=v` dirs, `dynamic` replacing only the partitions it writes),
+    * then record its schema there. The record comes from the analyzed
+    * frame: no job. */
+  private[graft] def writeParquet(df: DataFrame, dir: String,
+      partitionBy: Seq[String] = Nil, dynamic: Boolean = false): Unit = {
+    val w = df.write.mode("overwrite").partitionBy(partitionBy: _*)
+    (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
+      .parquet(dir)
+    writeText(df.sparkSession, dir, SchemaFile,
+      recordOf(df.schema, partitionBy).render)
+  }
+
+  /** Spark's listing rule: `_`/`.`-prefixed names are hidden, except
+    * `_k=v` partition dirs. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** The visible data files under `dir`, listed on the driver. Built
+    * the way Spark's own listing builds them: `listStatus` plus block
+    * locations, never reading owner or permissions, which the local
+    * filesystem loads by forking a process per file (on a local disk,
+    * `FileSystem.listFiles` took about 200 ms for a 36-cell leg). */
+  private def leafFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath.getName))
+      .flatMap { st =>
+        if (st.isDirectory) leafFiles(fs, st.getPath)
+        else Seq(new LocatedFileStatus(st.getLen, false, st.getReplication,
+          st.getBlockSize, st.getModificationTime, 0L, null, null, null,
+          null, st.getPath, fs.getFileBlockLocations(st, 0L, st.getLen)))
+      }
+
+  /** Refuse a dir whose files lack a recorded data column (a pinned
+    * schema would read that column as nulls): one footer, on the
+    * driver. */
+  private def checkFooter(spark: SparkSession, dir: String,
+      file: FileStatus, rec: Recorded): Unit = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
+        hadoopConf(spark)))
+    val names =
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
+        .map(_.getName).toSet
+      finally reader.close()
+    val missing = rec.data.fieldNames.filterNot(names)
+    if (missing.nonEmpty) throw new IllegalStateException(
+      s"${file.getPath} under $dir lacks the recorded column(s) " +
+        s"${missing.mkString(", ")} — the files do not match the " +
+        "artifact's schema record; rebuild it")
+  }
+
+  /** The partition values of the leaf dir `dir` under `root`, parsed
+    * from its `k=v` path segments and typed by the record. */
+  private def partitionOf(spark: SparkSession, root: Path, dir: Path,
+      rec: Recorded): PartitionPath = {
+    val kv = Iterator.iterate(dir)(_.getParent)
+      .takeWhile(_.depth() > root.depth()).map(_.getName.split("=", 2))
+      .collect { case Array(k, v) => k -> v }.toMap
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    PartitionPath(InternalRow.fromSeq(rec.partition.fields.toSeq.map { f =>
+      val raw = kv.getOrElse(f.name, throw new IllegalStateException(
+        s"$dir has no `${f.name}=` segment under $root, a recorded " +
+          "partition column; rebuild the artifact"))
+      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+      else Cast(Literal(ExternalCatalogUtils.unescapePathName(raw)),
+        f.dataType, tz).eval()
+    }), dir)
+  }
+
+  /** Read graft-written parquet dirs (one or more roots of the same
+    * layout, e.g. an index leg and its segments) as ONE relation with
+    * the schema their writer recorded. The leaf files are listed on the
+    * driver through the Hadoop FS API and handed to the file index with
+    * their partitions, so neither a schema-inference job nor a
+    * parallel-listing job runs, whatever the partition count; partition
+    * values come from the `k=v` paths, typed by the record. Every dir
+    * must carry the same record, and one footer per dir must hold every
+    * recorded column. */
+  private[graft] def readParquet(spark: SparkSession,
+      dirs: Seq[String]): DataFrame = {
+    require(dirs.nonEmpty, "readParquet: no dirs")
+    val rec = recordedSchema(spark, dirs.head)
+    val conf = hadoopConf(spark)
+    val listed = dirs.map { d =>
+      val r = if (d == dirs.head) rec else recordedSchema(spark, d)
+      require(r == rec, s"$d is recorded as ${r.data.toDDL}, but " +
+        s"${dirs.head} as ${rec.data.toDDL} — one read needs one schema")
+      val p = new Path(d)
+      val fs = p.getFileSystem(conf)
+      val root = fs.makeQualified(p)
+      val files = leafFiles(fs, root)
+      files.headOption.foreach(checkFooter(spark, d, _, rec))
+      (root, files.toArray)
+    }
+    val partitions = listed.flatMap { case (root, files) =>
+      files.map(_.getPath.getParent).distinct
+        .map(partitionOf(spark, root, _, rec))
+    }
+    // answers the file index's first listing; a refresh (a write to a
+    // path a cached plan reads) invalidates it and Spark lists again
+    val listing = new FileStatusCache {
+      @volatile private var byRoot = listed.toMap
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        byRoot.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = byRoot = Map.empty
+    }
+    val index = new InMemoryFileIndex(spark, listed.map(_._1), Map.empty,
+      Some(StructType(rec.data.fields ++ rec.partition.fields)), listing,
+      Some(PartitionSpec(rec.partition, partitions)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, rec.partition,
+      rec.data, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** Commit `lines` as `file` of the next generation under `rootDir`
@@ -102,7 +296,7 @@ object IndexVersions {
     * `dir` (none when `dir` is absent) — one listing, no data read. */
   private[graft] def numbered(spark: SparkSession, dir: String,
       prefix: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     val fs = p.getFileSystem(hadoopConf(spark))
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toIndexedSeq.map(_.getPath.getName)
@@ -115,10 +309,10 @@ object IndexVersions {
     * satisfies `drop`; returns the deleted numbers. */
   private[graft] def deleteNumbered(spark: SparkSession, dir: String,
       prefix: String, drop: Long => Boolean): Seq[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
+    val fs = new Path(dir)
       .getFileSystem(hadoopConf(spark))
     numbered(spark, dir, prefix).filter(drop).map { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"$prefix$n"), true)
+      fs.delete(new Path(dir, s"$prefix$n"), true)
       n
     }
   }
@@ -189,13 +383,13 @@ object IndexVersions {
     * after the flip (their removal can never lower the max).
     */
   def commit(spark: SparkSession, rootDir: String, v: Int): Unit = {
-    val root = new org.apache.hadoop.fs.Path(rootDir)
+    val root = new Path(rootDir)
     writeText(spark, rootDir, s"$Marker$v", v.toString)
-    val tmp = new org.apache.hadoop.fs.Path(root, s"$PointerFile.tmp$v")
+    val tmp = new Path(root, s"$PointerFile.tmp$v")
     writeText(spark, rootDir, tmp.getName, v.toString)
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       root.toUri, hadoopConf(spark))
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(root, PointerFile),
+    fc.rename(tmp, new Path(root, PointerFile),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     deleteNumbered(spark, rootDir, Marker, _ < v): Unit
   }
@@ -223,7 +417,7 @@ object IndexVersions {
     * stale pointer is what keeps readers on the last committed
     * generation instead of a half-written one. */
   def clearPointer(spark: SparkSession, rootDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(rootDir, PointerFile)
+    val p = new Path(rootDir, PointerFile)
     val fs = p.getFileSystem(hadoopConf(spark))
     if (fs.exists(p)) fs.delete(p, false): Unit
     deleteNumbered(spark, rootDir, Marker, _ => true): Unit
@@ -247,7 +441,7 @@ object IndexVersions {
         s"no committed version at $rootDir — nothing is newer than the " +
           "flat layout, refusing to delete it"))
     val floor = cur - keepPrevious
-    val root = new org.apache.hadoop.fs.Path(rootDir)
+    val root = new Path(rootDir)
     val fs = root.getFileSystem(hadoopConf(spark))
     val deleted = scala.collection.mutable.Buffer.empty[String]
     fs.listStatus(root).foreach { st =>

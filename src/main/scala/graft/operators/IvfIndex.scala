@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   *  - LAYOUT: `<root>/_ixvN/centroids` (≤ nlist rows, broadcast at
   *    probe time) + `<root>/_ixvN/vectors/cell=K/` (raw vectors
   *    partitioned by their coarse cell) + a `_graft_ivf_meta.json`
-  *    sidecar pinning (nlist, dims, kernel, build_mse). Committed
+  *    sidecar pinning (nlist, dims, kernel, build_mse). The centroids
+  *    and vectors dirs (and every segment) record their schema when
+  *    written, so a probe or compaction reads them with no schema and
+  *    no listing job ([[IndexVersions.readParquet]]). Committed
   *    through the [[IndexVersions]] pointer: a rebuild publishes
   *    generation N+1 BESIDE N and flips last, so probes never see a
   *    half-written index and rollback is moving the pointer back;

@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   *    `_graft_ivfpq_meta.json` sidecar pinning (nlist, dims, m, ksub,
   *    seed, kernel, build_mse, segs_upto). Committed through the
   *    [[IndexVersions]] pointer (flip LAST, keep-last-2 retention) —
-  *    probes never see a half-written generation. The probe
+  *    probes never see a half-written generation. The centroids,
+  *    codebook and codes dirs (and every segment) record their schema
+  *    when written, so probes, appends and compactions read them with
+  *    no schema and no listing job ([[IndexVersions.readParquet]]). The probe
   *    SELF-CONFIGURES from the sidecar: there is no caller-supplied
   *    m/ksub/nlist to mismatch (the phash-index bands lesson), and a
   *    kernel or dims mismatch REFUSES instead of silently mis-scoring.
@@ -75,8 +78,8 @@ object IvfPqIndex {
   private def writeCodebook(spark: SparkSession, cb: Seq[Float],
       dir: String): Unit = {
     import spark.implicits._
-    Seq(Tuple1(cb)).toDF("codebook").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
+    IndexVersions.writeParquet(Seq(Tuple1(cb)).toDF("codebook").coalesce(1),
+      s"$dir/codebook")
   }
 
   /** Build and COMMIT the next index generation over `corpus`.
@@ -122,10 +125,10 @@ object IvfPqIndex {
       (x.nlist, x.dims, x.param("m"), x.param("ksub"), x.buildMse))
 
   /** The committed generation's flat [m][ksub][dsub] codebook — one
-    * bounded driver row. */
+    * bounded driver row, read with its recorded schema. */
   private def readCodebook(spark: SparkSession, path: String): Seq[Float] =
-    spark.read.parquet(
-        s"${IndexVersions.resolvePath(spark, path)}/codebook")
+    IndexVersions.readParquet(spark,
+        Seq(s"${IndexVersions.resolvePath(spark, path)}/codebook"))
       .select(col("codebook")).head().getSeq[Float](0)
 
   private[graft] def liveSegs(spark: SparkSession,

@@ -20,12 +20,20 @@ import graft.functions.VectorFunctions
   *    read back with the kernel and dims checks;
   *  - the base generation: `<root>/_ixvN/{centroids, <leg>/cell=K/}`
   *    committed through the [[IndexVersions]] pointer (sidecar → flip →
-  *    retention of current + one rollback target);
+  *    retention of current + one rollback target). Every parquet dir of
+  *    a generation or segment records its schema as it is written
+  *    ([[IndexVersions.writeParquet]]), before the sidecar and the flip,
+  *    so the centroids and the legs are read with that record and a
+  *    driver-side listing: no schema job and no listing job, whatever
+  *    the cell count ([[IndexVersions.readParquet]]). A leg without a
+  *    record, or whose files lack a recorded column, is refused;
   *  - the segments (the ingest path): an append assigns an arrival batch
   *    under the FROZEN committed centroids, writes it as
   *    `<root>/segments/segN/cell=K/` and commits the segment manifest
   *    (`segs.txt` under `<root>/_graft_segs`, its own pointer); probes
-  *    read base ∪ live segments with the same cell prune on every leg;
+  *    read base ∪ live segments as one relation with the same cell
+  *    prune on every leg. An append whose segment schema differs from
+  *    the base leg's record is refused before it writes;
   *  - the crash contract: a segment dir without a manifest row is
   *    invisible (crashed append); a manifest row ≤ the base sidecar's
   *    `segs_upto` is ignored (compaction flipped the base, prune
@@ -97,13 +105,15 @@ private[graft] object SegmentedIndex {
     m
   }
 
+  /** The committed generation's (cell, centroid) frame, read with its
+    * recorded schema ([[IndexVersions.readParquet]]: no metadata job). */
   def readCentroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(
-      s"${IndexVersions.resolvePath(spark, path)}/centroids")
+    IndexVersions.readParquet(spark,
+      Seq(s"${IndexVersions.resolvePath(spark, path)}/centroids"))
 
   /** Write the (cell, centroid) frame into version dir `dir`. */
   def writeCentroids(centroids: DataFrame, dir: String): Unit =
-    centroids.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    IndexVersions.writeParquet(centroids.coalesce(1), s"$dir/centroids")
 
   /** An index's working projection of a corpus or arrival batch:
     * (id, vec, nvec) with `nvec` the L2-normalized vector. */
@@ -114,8 +124,7 @@ private[graft] object SegmentedIndex {
   /** Write an (id, payload, cell) frame as `cell=`-partitioned parquet:
     * one exchange by cell, then directory-local sequential writes. */
   def writeCells(df: DataFrame, dir: String): Unit =
-    df.repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(dir)
+    IndexVersions.writeParquet(df.repartition(col("cell")), dir, Seq("cell"))
 
   /** Exact squared L2 distance ‖a−b‖² = a·a − (2a·b − b·b): the
     * [[Quantizer.score]] arithmetic, every leg inside the codegen'd
@@ -235,17 +244,22 @@ private[graft] object SegmentedIndex {
   }
 
   /** The probe/compaction read: the base leg ∪ live segments. Every leg
-    * is `cell=`-partitioned, so a probe's bounded IN prune pushes into
-    * each leg's directory listing. */
+    * is `cell=`-partitioned, so a probe's bounded IN prune selects
+    * `cell=K` dirs from the driver-side listing. */
   def view(spark: SparkSession, path: String, layout: Layout): DataFrame =
     legs(spark, path, layout, liveSegs(spark, path, layout))
 
+  private def baseLeg(spark: SparkSession, path: String,
+      layout: Layout): String =
+    s"${IndexVersions.resolvePath(spark, path)}/${layout.leg}"
+
+  /** The base leg and the `live` segments as ONE relation, read with
+    * the schema their writers recorded ([[IndexVersions.readParquet]]):
+    * no schema job, no listing job, one footer check per leg. */
   private def legs(spark: SparkSession, path: String, layout: Layout,
       live: Seq[Long]): DataFrame =
-    live.foldLeft(spark.read.parquet(
-        s"${IndexVersions.resolvePath(spark, path)}/${layout.leg}")) {
-      (acc, n) => acc.unionByName(spark.read.parquet(segDir(path, n)))
-    }
+    IndexVersions.readParquet(spark,
+      baseLeg(spark, path, layout) +: live.map(segDir(path, _)))
 
   def dirsOnDisk(spark: SparkSession, path: String): Seq[Long] =
     IndexVersions.numbered(spark, s"$path/$SegmentsDir", "seg")
@@ -287,8 +301,13 @@ private[graft] object SegmentedIndex {
     if (b.isEmpty) return -1L
     val n = if (atSeg >= 0) atSeg else (committed :+ m.segsUpto).max + 1
     val centroids = readCentroids(spark, path)
-    writeCells(encode(assignWith(b, Quantizer.fromFrame(centroids)),
-      centroids, m), segDir(path, n))
+    val seg = encode(assignWith(b, Quantizer.fromFrame(centroids)),
+      centroids, m)
+    // a segment is read as part of the base's relation: its schema must
+    // be the base leg's record
+    IndexVersions.requireRecord(spark, baseLeg(spark, path, layout),
+      seg.schema, Seq("cell"))
+    writeCells(seg, segDir(path, n))
     IndexVersions.afterStep("segment-written")
     commitSegs(spark, path, (live.toSet + n).toSeq.sorted)
     IndexVersions.afterStep("manifest-flipped")
@@ -336,19 +355,19 @@ private[graft] object SegmentedIndex {
 
   /** A probe's cell selection: the committed sidecar, the centroids,
     * the (qid, qvec, qn, cell) probe rows, and the base ∪ live-segment
-    * legs pruned to the probed cells (`cell` as int). */
+    * legs pruned to the probed cells (`cell` is the recorded int). */
   case class Probe(meta: Meta, centroids: DataFrame, cells: DataFrame,
       index: DataFrame)
 
   /** Rank `nprobe` cells per query ([[Quantizer.probe]]: one narrow
     * kernel pass, the build's cell rule on the normalized space; the
     * query side never shuffles to pick its cells) and prune every leg's scan
-    * by a bounded literal IN over the distinct probed cells. A full
-    * probe (nprobe ≥ nlist) needs no job to list its cells; a probe set
-    * past `maxCellLiterals` distinct cells skips the prune (at that
-    * occupancy the unpruned scan wins anyway — the probeSignIndex cap
-    * contract). Each corpus row lives in exactly one cell, so
-    * candidates need no dedup. */
+    * by a bounded literal IN over the distinct probed cells, listed by
+    * one narrow job. A full probe (nprobe ≥ nlist) needs no job to list
+    * its cells; a probe set past `maxCellLiterals` distinct cells skips
+    * the prune (at that occupancy the unpruned scan wins anyway — the
+    * probeSignIndex cap contract). Each corpus row lives in exactly one
+    * cell, so candidates need no dedup. */
   def probe(spark: SparkSession, path: String, layout: Layout,
       queries: DataFrame, qidCol: String, vecCol: String, nprobe: Int,
       dims: Int, maxCellLiterals: Int): Probe = {
@@ -360,18 +379,23 @@ private[graft] object SegmentedIndex {
         Embeddings.normalize(col(vecCol)).as("qn"))
       .select(col("qid"), col("qvec"), col("qn"),
         explode(quant.probe(col("qn"), nprobe)).as("cell"))
-    // bounded collect: distinct probed cells ≤ nlist ≤ 4096 by
-    // construction, limit(cap + 1) bounds the driver materialization
+    // one narrow job: each partition emits its distinct cells, capped
+    // at cap + 1, and the driver merges them — at most partitions ×
+    // min(nlist, cap + 1) ints, no exchange
+    val cap = maxCellLiterals + 1
     val cellLits =
       if (nprobe >= meta.nlist) (0 until meta.nlist).toArray
-      else cells.select(col("cell")).distinct()
-        .limit(maxCellLiterals + 1).collect().map(_.getInt(0))
+      else {
+        import spark.implicits._
+        cells.select(col("cell")).as[Int]
+          .mapPartitions(_.distinct.take(cap))
+          .collect().distinct.take(cap)
+      }
     val raw = view(spark, path, layout)
     val pruned =
       if (cellLits.length <= maxCellLiterals)
         raw.filter(col("cell").isin(cellLits.map(Int.box): _*))
       else raw
-    Probe(meta, centroids, cells,
-      pruned.withColumn("cell", col("cell").cast("int")))
+    Probe(meta, centroids, cells, pruned)
   }
 }

@@ -109,16 +109,17 @@ object Shards {
   private def writeAssigned(assigned: DataFrame, outDir: String,
       dynamic: Boolean): DataFrame = {
     val spark = assigned.sparkSession
+    // an append joins the layout's one relation: refuse, before the
+    // write, a frame whose schema is not the layout's record
+    if (dynamic) IndexVersions.requireRecord(spark, outDir, assigned.schema,
+      Seq("shard"))
     val obs = org.apache.spark.sql.Observation()
-    val writer = assigned
+    IndexVersions.writeParquet(assigned
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col("cum_mass"))
       .observe(obs, graft.functions.ManifestAgg
-        .shardStats(col("shard"), col("doc_mass")).as("manifest"))
-      .write.mode("overwrite")
-    val w = if (dynamic) writer.option("partitionOverwriteMode", "dynamic")
-      else writer
-    w.partitionBy("shard").parquet(outDir)
+        .shardStats(col("shard"), col("doc_mass")).as("manifest")),
+      outDir, Seq("shard"), dynamic)
     IndexVersions.afterStep("shards-written")
     manifestFrame(spark, obs.get("manifest")
       .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
@@ -169,9 +170,9 @@ object Shards {
       sys.error(s"empty shard layout at $outDir — nothing to read")
     val dead = IndexVersions.numbered(spark, outDir, "shard=")
       .filterNot(committed)
-    val raw = spark.read.parquet(outDir)
+    val raw = read(spark, outDir)
     if (dead.isEmpty) raw
-    else raw.filter(!col("shard").cast("long").isin(dead: _*))
+    else raw.filter(!col("shard").isin(dead: _*))
   }
 
   /** Delete `shard=N` dirs the committed manifest does not describe —
@@ -290,8 +291,8 @@ object Shards {
     // stored rows already carry doc_mass; shardByMass re-derives it
     // from itself (withColumn replaces in place) on the fresh line
     val folded = shardByMass(
-        spark.read.parquet(outDir)
-          .filter(col("shard").cast("long").isin(small.toIndexedSeq: _*))
+        read(spark, outDir)
+          .filter(col("shard").isin(small.toIndexedSeq: _*))
           .drop("shard", "cum_mass"),
         idCol, col("doc_mass"), shardMass, buckets, epoch = epoch)
       .withColumn("shard", col("shard") + lit(base))
@@ -313,9 +314,14 @@ object Shards {
     */
   def readShard(spark: SparkSession, outDir: String,
       shard: Long): DataFrame =
-    spark.read.parquet(outDir)
+    read(spark, outDir)
       .filter(col("shard") === shard)
       .sort(col("cum_mass"))
+
+  /** Every `shard=N` dir on disk, with the layout's recorded schema
+    * (`shard` as the LONG the writer assigned) and no metadata job. */
+  private def read(spark: SparkSession, outDir: String): DataFrame =
+    IndexVersions.readParquet(spark, Seq(outDir))
 
   /** Write `rows` as the next manifest generation and flip the pointer
     * (the [[IndexVersions]] protocol: version dir beside the previous

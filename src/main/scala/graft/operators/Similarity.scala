@@ -354,11 +354,12 @@ object Similarity {
       else Dedup.scaledPlanes(
         if (knownCount >= 0) knownCount
         else corpus.select(col(idCol)).count())
-    corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
-        VectorFunctions.rademacherSig(col(vecCol), planes, dims, seed)
-          .as("bucket"))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
+    IndexVersions.writeParquet(
+      corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
+          VectorFunctions.rademacherSig(col(vecCol), planes, dims, seed)
+            .as("bucket"))
+        .repartition(col("bucket")),
+      path, Seq("bucket"))
     IndexVersions.writeText(corpus.sparkSession, path, SignMetaFile,
       s"""{"planes":$planes,"dims":$dims,"seed":$seed}""")
   }
@@ -429,14 +430,15 @@ object Similarity {
       .collect().map(_.getLong(0))
     // read the COMMITTED generation: a compacted index resolves through
     // its version pointer, a legacy flat layout through itself
-    val raw = spark.read.parquet(IndexVersions.resolvePath(spark, path))
+    val raw = IndexVersions.readParquet(spark,
+      Seq(IndexVersions.resolvePath(spark, path)))
     val pruned =
       if (buckets.length <= maxLits) raw.filter(col("bucket").isin(buckets: _*))
       else raw
-    // partition-dir values type-infer as INT when they fit; normalize
-    // so the bucket join below needs no implicit cast
+    // `bucket` is read as the LONG the writer recorded, the probe
+    // side's type: the join needs no cast
     val index = pruned.select(col("id"), col("vec").as("cvec"),
-      col("bucket").cast("long").as("bucket"))
+      col("bucket"))
     exactTopK(index.join(broadcast(q), Seq("bucket")), k)
   }
 

@@ -81,8 +81,9 @@ object TextModel {
     val spark = weights.sparkSession
     val v = IndexVersions.nextVersion(spark, path)
     val dir = IndexVersions.versionDir(path, v)
-    weights.select(col("bucket").cast("int"), col("weight").cast("long"))
-      .write.mode("overwrite").parquet(dir)
+    IndexVersions.writeParquet(
+      weights.select(col("bucket").cast("int"), col("weight").cast("long")),
+      dir)
     IndexVersions.writeText(spark, dir, ModelMetaFile,
       s"""{"buckets":$buckets,"bigrams":$bigrams,""" +
         s""""kernel":"$Kernel","scale":$Scale}""")
@@ -117,7 +118,8 @@ object TextModel {
         s"no $ModelMetaFile under the committed generation of $path — " +
           "not a model artifact"))
     val dense = new Array[Long](buckets)
-    spark.read.parquet(IndexVersions.resolvePath(spark, path))
+    IndexVersions.readParquet(spark,
+        Seq(IndexVersions.resolvePath(spark, path)))
       .select(col("bucket").cast("int"), col("weight").cast("long"))
       .collect().foreach { r =>
         val b = r.getInt(0)

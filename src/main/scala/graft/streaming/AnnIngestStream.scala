@@ -89,7 +89,7 @@ object AnnIngestStream {
       .select(lit(batchId).as("batch_id"), lit(seg).as("seg"),
         col("n"), col("build_mse"), col("batch_mse"), col("ratio"))
       .localCheckpoint(true)
-    drift.write.mode("overwrite").parquet(s"$driftDir/batch=$batchId")
+    IndexVersions.writeParquet(drift, s"$driftDir/batch=$batchId")
     if (IvfPqIndex.liveSegs(spark, indexPath).size > maxLiveSegments)
       IvfPqIndex.compact(spark, indexPath): Unit
     val ratio = drift.select(col("ratio")).head().getDouble(0)

@@ -176,7 +176,10 @@ object IngestStream {
     * own half-written output), and its survivors land in
     * `outDir/batch=<id>/`, written with overwrite, so a retry after a
     * crash rewrites the same directory — append-exactly-once without a
-    * transaction log.
+    * transaction log. Each `batch=` dir records its schema
+    * ([[IndexVersions.writeParquet]]), so the accepted read lists the
+    * older dirs on the driver and runs no metadata job
+    * ([[IndexVersions.readParquet]]).
     *
     * Restart: resume with the original checkpoint, or point the
     * restart at an empty output dir. A FRESH checkpoint over an existing
@@ -208,8 +211,9 @@ object IngestStream {
     mkdirs(spark, outDir)
     drain(spark, srcDir, checkpointDir, maxFilesPerTrigger) {
       (batch, batchId) =>
-        dedup(batch, acceptedBefore(spark, outDir, batchId))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        IndexVersions.writeParquet(
+          dedup(batch, acceptedBefore(spark, outDir, batchId)),
+          s"$outDir/batch=$batchId")
         compact.foreach { c =>
           if (shouldCompact(spark, outDir, compactMaxRows)) c(): Unit
         }
@@ -234,7 +238,7 @@ object IngestStream {
       batchId: Long): Option[DataFrame] = {
     val dirs = batchDirs(spark, outDir).filter(_._1 < batchId).map(_._2)
     if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs: _*))
+    else Some(IndexVersions.readParquet(spark, dirs))
   }
 
   /** [[fold]] the accepted set into the n-gram index version under
@@ -296,8 +300,8 @@ object IngestStream {
       write: (DataFrame, String, Long) => Unit): Long = {
     val dirs = batchDirs(spark, outDir)
     if (dirs.isEmpty) return -1L
-    val archived = spark.read.parquet(
-      archiveAccepted(spark, outDir, dirs, cols): _*)
+    val archived = IndexVersions.readParquet(spark,
+      archiveAccepted(spark, outDir, dirs, cols))
     val known =
       if (corpusCount >= 0) corpusCount + archived.count() else -1L
     val next = IndexVersions.nextVersion(spark, root)
@@ -326,24 +330,19 @@ object IngestStream {
     *    monotonic (fresh-checkpoint restarts are refused by
     *    [[runDedup]]), so id ≤ N ⟺ already archived;
     *  - a compaction that crashed DURING its archive write leaves a
-    *    partial `upto=` dir (no parquet-committer `_SUCCESS` marker —
-    *    deployments that disable `mapreduce.fileoutputcommitter.
-    *    marksuccessfuljobs` must not point compaction at this layout).
-    *    Folding it would lose rows silently; it is deleted and its
-    *    batches re-archived (their dirs still exist — deletion is the
-    *    LAST compaction step).
+    *    partial `upto=` dir (no schema record: [[IndexVersions
+    *    .writeParquet]] records it after the data). Folding it would
+    *    lose rows silently; it is deleted and its batches re-archived
+    *    (their dirs still exist — deletion is the LAST compaction
+    *    step).
     */
   private[graft] def archiveAccepted(spark: SparkSession,
       outDir: String, dirs: Seq[(Long, String)],
       cols: Seq[String]): Seq[String] = {
     val compacted = s"$outDir/compacted"
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (committed, partial) =
-      IndexVersions.numbered(spark, compacted, "upto=").partition { n =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$compacted/upto=$n",
-          "_SUCCESS"))
-      }
+      IndexVersions.numbered(spark, compacted, "upto=").partition(n =>
+        IndexVersions.recordIn(spark, s"$compacted/upto=$n").isDefined)
     IndexVersions.deleteNumbered(spark, compacted, "upto=", partial.toSet)
     val prevUpto = committed.maxOption.getOrElse(-1L)
     val fresh = dirs.filter(_._1 > prevUpto)
@@ -351,9 +350,10 @@ object IngestStream {
       if (fresh.isEmpty) committed
       else {
         val maxId = dirs.map(_._1).max
-        spark.read.parquet(fresh.map(_._2): _*)
-          .select(cols.map(col): _*)
-          .write.mode("overwrite").parquet(s"$compacted/upto=$maxId")
+        IndexVersions.writeParquet(
+          IndexVersions.readParquet(spark, fresh.map(_._2))
+            .select(cols.map(col): _*),
+          s"$compacted/upto=$maxId")
         committed :+ maxId
       }
     upto.map(n => s"$compacted/upto=$n")

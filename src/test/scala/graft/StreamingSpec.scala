@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions.{expr, lit, max, pmod, raise_error, timestamp_micros, unix_micros}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.operators.IndexVersions
 import graft.streaming.{EventStreams, UpsertSink}
 
 /** Structured Streaming: the same logical plans produce identical results
@@ -922,9 +923,8 @@ class StreamingSpec extends SparkSpec {
       val corpusText = corpus.select($"text").head().getString(0)
       val outDir = tmpDir("kill-out")
       val b1 = Seq((2000001L, a)).toDF("doc_id", "text")
-      IngestStream.applyBatch(spark, b1, None, idxPrefix,
-          "doc_id", "text", 3, 0.5)
-        .write.mode("overwrite").parquet(s"$outDir/batch=0")
+      IndexVersions.writeParquet(IngestStream.applyBatch(spark, b1, None,
+          idxPrefix, "doc_id", "text", 3, 0.5), s"$outDir/batch=0")
 
       // KILL the rebuild mid-flight: a corpus whose evaluation raises
       // poisons the index build after the archive step
@@ -969,8 +969,8 @@ class StreamingSpec extends SparkSpec {
       // SECOND generation: accept c, compact again → version 2 must
       // still catch generation-1's acceptance (ALL archives fold in,
       // not just the newest — losing a into v2 would re-admit it)
-      viaIndex.select($"doc_id", $"text")
-        .write.mode("overwrite").parquet(s"$outDir/batch=1")
+      IndexVersions.writeParquet(viaIndex.select($"doc_id", $"text"),
+        s"$outDir/batch=1")
       assert(IngestStream.compact(spark, corpus, idxPrefix, outDir,
         buckets = 4) === 1L)
       assert(IndexVersions.currentVersion(spark, root) === Some(2))
@@ -1009,10 +1009,9 @@ class StreamingSpec extends SparkSpec {
       val r = new scala.util.Random(7)
       Array.fill(dims)(r.nextGaussian().toFloat)
     }
-    EmbedIngestStream.applyBatch(spark,
+    IndexVersions.writeParquet(EmbedIngestStream.applyBatch(spark,
         Seq((3000001L, fresh)).toDF("vec_id", "embedding"), None, idxPath,
-        "vec_id", "embedding", dims, 0.4, 1, 42L)
-      .write.mode("overwrite").parquet(s"$outDir/batch=0")
+        "vec_id", "embedding", dims, 0.4, 1, 42L), s"$outDir/batch=0")
     val poisoned = corpus.select($"vec_id",
       raise_error(lit("injected rebuild failure")).cast("array<float>")
         .as("embedding"))
@@ -1219,8 +1218,9 @@ class StreamingSpec extends SparkSpec {
     def synthText(stem: String): String =
       (0 until 20).map(i => s"qqv$stem$i").mkString(" ")
     def stage(id: Long, batch: Long, stem: String): Unit =
-      Seq((id, synthText(stem))).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batch")
+      IndexVersions.writeParquet(
+        Seq((id, synthText(stem))).toDF("doc_id", "text"),
+        s"$outDir/batch=$batch")
     def archiveRows() = spark.read.parquet(
       IngestStream.archiveDirs(spark, outDir): _*)
     try {
@@ -1240,17 +1240,19 @@ class StreamingSpec extends SparkSpec {
         archiveRows().select($"doc_id").distinct().count() === 2L,
         "batch 0 must be archived exactly once across upto=0 and upto=1")
 
-      // CRASH SHAPE 2 — archive write died mid-flight (no _SUCCESS):
-      // the partial dir is dropped and its rows re-archived from the
-      // still-present batch dirs
+      // CRASH SHAPE 2 — archive write died mid-flight (no _SUCCESS,
+      // no schema record): the partial dir is dropped and its rows
+      // re-archived from the still-present batch dirs
       stage(5000003L, 2L, "rc")
       IngestStream.archiveAccepted(spark, outDir,
         IngestStream.batchDirs(spark, outDir), Seq("doc_id", "text"))
       val fs = new org.apache.hadoop.fs.Path(outDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fs.delete(new org.apache.hadoop.fs.Path(
-        s"$outDir/compacted/upto=2/_SUCCESS"), false),
-        "test setup: make upto=2 a partial archive")
+      Seq("_SUCCESS", IndexVersions.SchemaFile).foreach { f =>
+        assert(fs.delete(new org.apache.hadoop.fs.Path(
+          s"$outDir/compacted/upto=2/$f"), false),
+          "test setup: make upto=2 a partial archive")
+      }
       stage(5000004L, 3L, "rd")
       assert(IngestStream.compact(spark, corpus, idxPrefix, outDir,
         buckets = 4) === 3L)
@@ -1517,10 +1519,9 @@ class StreamingSpec extends SparkSpec {
       val root = Multimodal.phashIndexRoot(spark, table)
       val a = payload("kalpha"); val b = payload("kbeta")
       val outDir = tmpDir("media-kill-out")
-      MediaIngestStream.applyBatch(spark,
+      IndexVersions.writeParquet(MediaIngestStream.applyBatch(spark,
           Seq((7000001L, a), (7000002L, b)).toDF("media_id", "content"),
-          None, table)
-        .write.mode("overwrite").parquet(s"$outDir/batch=0")
+          None, table), s"$outDir/batch=0")
       val batchDirs = IngestStream.batchDirs(spark, outDir)
 
       val poisoned = corpus.select($"media_id",
