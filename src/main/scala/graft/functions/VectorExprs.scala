@@ -412,42 +412,41 @@ object VecOps {
     2.0 * d - cc
   }
 
-  /** [[negDistAt]] of `v` against every one of `nlist` cells. A vector
-    * whose length is not `dims`, or that has a non-finite score (a NaN
-    * or infinite component), is refused: every score of such a vector
-    * is NaN or ±Inf, so ranking it would file it in an arbitrary cell. */
-  private def cellScores(v: ArrayData, centroids: Array[Float], nlist: Int,
-      dims: Int): Array[Double] = {
+  /** Refuse a vector whose length is not `dims`: [[negDistAt]] would
+    * read past its end or rank it by a prefix. */
+  private def requireDims(v: ArrayData, dims: Int): Unit =
     if (v.numElements() != dims) throw new IllegalArgumentException(
       s"vector has ${v.numElements()} elements; the centroids have " +
         s"dims=$dims")
-    val scores = new Array[Double](nlist)
-    var cell = 0
-    while (cell < nlist) {
-      val s = negDistAt(v, centroids, cell * dims, dims)
-      if (s.isNaN || s.isInfinite) throw new IllegalArgumentException(
-        s"vector has no finite score against cell $cell (a NaN or " +
-          "infinite component)")
-      scores(cell) = s
-      cell += 1
-    }
-    scores
+
+  /** [[negDistAt]] of `v` against `cell`, refused when not finite (a NaN
+    * or infinite component makes every score NaN or ±Inf, so ranking
+    * the vector would file it in an arbitrary cell). */
+  private def finiteScore(v: ArrayData, centroids: Array[Float], cell: Int,
+      dims: Int): Double = {
+    val s = negDistAt(v, centroids, cell * dims, dims)
+    if (s.isNaN || s.isInfinite) throw new IllegalArgumentException(
+      s"vector has no finite score against cell $cell (a NaN or " +
+        "infinite component)")
+    s
   }
 
   /** Nearest-centroid cell of `v` over a row-major [nlist][dims] matrix:
     * argmax of [[negDistAt]], ties to the LOWEST cell (strict `>` over
     * ascending cells) — exactly the `topKRank(k=1)` ordering (score
     * desc, id asc) of the exchange-based assignment this kernel
-    * replaces. One narrow pass per row; no shuffle, no join-back. A
-    * vector of the wrong length or with a non-finite score throws
-    * ([[cellScores]]). */
+    * replaces. One narrow pass per row, allocating nothing; no shuffle,
+    * no join-back. A vector of the wrong length or with a non-finite
+    * score throws. */
   def nearestCell(v: ArrayData, centroids: Array[Float], nlist: Int,
       dims: Int): Int = {
-    val scores = cellScores(v, centroids, nlist, dims)
+    requireDims(v, dims)
     var best = 0
-    var cell = 1
+    var bestS = Double.NegativeInfinity
+    var cell = 0
     while (cell < nlist) {
-      if (scores(cell) > scores(best)) best = cell
+      val s = finiteScore(v, centroids, cell, dims)
+      if (s > bestS) { bestS = s; best = cell }
       cell += 1
     }
     best
@@ -457,12 +456,17 @@ object VecOps {
     * asc) — the probe-side mirror of [[nearestCell]]: strict `>` over
     * an ascending scan replicates the bounded-heap rank's tie-break
     * exactly. Selection is O(nlist · nprobe) over ≤4096 cells. A vector
-    * of the wrong length or with a non-finite score throws
-    * ([[cellScores]]). */
+    * of the wrong length or with a non-finite score throws. */
   def nearestCells(v: ArrayData, centroids: Array[Float], nlist: Int,
       dims: Int, nprobe: Int): ArrayData = {
     val n = math.min(nprobe, nlist)
-    val scores = cellScores(v, centroids, nlist, dims)
+    requireDims(v, dims)
+    val scores = new Array[Double](nlist)
+    var cell = 0
+    while (cell < nlist) {
+      scores(cell) = finiteScore(v, centroids, cell, dims)
+      cell += 1
+    }
     val taken = new Array[Boolean](nlist)
     val out = new Array[Any](n)
     var r = 0

@@ -24,8 +24,8 @@ import graft.functions.VectorFunctions
   *    a generation or segment records its schema as it is written
   *    ([[IndexVersions.writeParquet]]), before the sidecar and the flip,
   *    so the centroids and the legs are read with that record and a
-  *    driver-side listing: no schema job and no listing job, whatever
-  *    the cell count ([[IndexVersions.readParquet]]). A leg without a
+  *    driver-side listing: no schema job and no listing job, up to the
+  *    4096-cell cap ([[IndexVersions.readParquet]]). A leg without a
   *    record, or whose files lack a recorded column, is refused;
   *  - the segments (the ingest path): an append assigns an arrival batch
   *    under the FROZEN committed centroids, writes it as

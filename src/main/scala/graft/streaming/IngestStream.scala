@@ -329,21 +329,35 @@ object IngestStream {
     *    newest committed archive are archived here — batch ids are
     *    monotonic (fresh-checkpoint restarts are refused by
     *    [[runDedup]]), so id ≤ N ⟺ already archived;
-    *  - a compaction that crashed DURING its archive write leaves a
-    *    partial `upto=` dir (no schema record: [[IndexVersions
-    *    .writeParquet]] records it after the data). Folding it would
-    *    lose rows silently; it is deleted and its batches re-archived
-    *    (their dirs still exist — deletion is the LAST compaction
-    *    step).
+    *  - a compaction that crashed DURING its archive write leaves an
+    *    `upto=N` dir with no schema record ([[IndexVersions
+    *    .writeParquet]] records it after the data) and every batch it
+    *    was archiving still present (deletion is the LAST compaction
+    *    step). Folding it could lose rows silently; it is deleted and
+    *    those batches re-archived.
+    *
+    * An unrecorded `upto=N` with no batch left in (newest recorded
+    * archive below N, N] is not a partial write: it is a complete
+    * archive without a record (written before archives recorded their
+    * schema), whose batches are gone. It is refused, not deleted —
+    * deleting it would drop its rows from every later generation.
     */
   private[graft] def archiveAccepted(spark: SparkSession,
       outDir: String, dirs: Seq[(Long, String)],
       cols: Seq[String]): Seq[String] = {
     val compacted = s"$outDir/compacted"
-    val (committed, partial) =
+    val (committed, unrecorded) =
       IndexVersions.numbered(spark, compacted, "upto=").partition(n =>
         IndexVersions.recordIn(spark, s"$compacted/upto=$n").isDefined)
-    IndexVersions.deleteNumbered(spark, compacted, "upto=", partial.toSet)
+    unrecorded.foreach { n =>
+      val below = committed.filter(_ < n).maxOption.getOrElse(-1L)
+      if (!dirs.exists { case (id, _) => id > below && id <= n })
+        throw new IllegalStateException(s"$compacted/upto=$n has no " +
+          s"recorded schema (${IndexVersions.SchemaFile}) and none of its " +
+          "batches is left to re-archive it from — an archive written " +
+          "without a record; rebuild the index and the accepted archives")
+    }
+    IndexVersions.deleteNumbered(spark, compacted, "upto=", unrecorded.toSet)
     val prevUpto = committed.maxOption.getOrElse(-1L)
     val fresh = dirs.filter(_._1 > prevUpto)
     val upto =

@@ -1279,6 +1279,34 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("compaction refuses, and keeps, a complete upto= archive that " +
+      "has no schema record and no batch left to re-archive it from") {
+    import graft.operators.IndexVersions
+    import graft.streaming.IngestStream
+    val outDir = tmpDir("unrecorded-archive-out")
+    // an archive of batch 0 as an unrecording writer left it: complete
+    // (_SUCCESS) but without a record, its batch dir already cleared
+    Seq((6000001L, "qqv archived row")).toDF("doc_id", "text")
+      .write.parquet(s"$outDir/compacted/upto=0")
+    IndexVersions.writeParquet(
+      Seq((6000002L, "qqv fresh row")).toDF("doc_id", "text"),
+      s"$outDir/batch=1")
+    val corpus = Seq((1L, "qqv corpus row")).toDF("doc_id", "text")
+    val e = intercept[IllegalStateException] {
+      IngestStream.compact(spark, corpus, "unrecorded_archive_idx", outDir)
+    }
+    assert(e.getMessage.contains("compacted/upto=0") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
+    val fs = new org.apache.hadoop.fs.Path(outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(
+      s"$outDir/compacted/upto=0/_SUCCESS")),
+      "the refused archive must be left in place")
+    assert(IngestStream.archiveDirs(spark, outDir) ===
+      Seq(s"$outDir/compacted/upto=0"), "no archive written or deleted")
+    assert(IngestStream.batchDirs(spark, outDir).map(_._1) === Seq(1L))
+  }
+
   test("ingest -> serialization loop: accepted batches append to the " +
       "shard layout; duplicate re-arrivals never double-serialize; " +
       "an all-dup batch appends nothing") {
