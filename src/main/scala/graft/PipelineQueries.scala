@@ -313,8 +313,9 @@ object PipelineQueries {
     },
 
     // Duplicate CLUSTERS from the exact pair set: connected components
-    // via iterative min-label propagation; the oracle replays it as a
-    // DuckDB recursive CTE over the identical pair SQL.
+    // (large-star/small-star rounds to a star forest, comp = min id);
+    // the oracle replays it as a DuckDB recursive CTE over the
+    // identical pair SQL.
     "dedup_components" -> { (s, dir) =>
       import s.implicits._
       val pairs = Dedup.ngramJaccardPairs(Tables(s, dir, "documents"),
@@ -326,14 +327,15 @@ object PipelineQueries {
         .select($"id", $"comp", $"comp_size")
     },
 
-    // Same cluster contract via the O(log n) large-star/small-star
-    // alternation (the deep-chain-safe variant) — gated against the
-    // identical recursive-CTE oracle as the min-propagation operator.
+    // The same pairs handed over with their columns SWAPPED (every
+    // edge reversed), gated against the identical recursive-CTE oracle
+    // as `dedup_components`: pins that the clusters do not depend on
+    // edge direction.
     "dedup_components_star" -> { (s, dir) =>
       import s.implicits._
       val pairs = Dedup.ngramJaccardPairs(Tables(s, dir, "documents"),
         "doc_id", "text", n = 3, threshold = 0.5).select($"id_a", $"id_b")
-      val comp = Dedup.connectedComponentsLogStar(pairs)
+      val comp = Dedup.connectedComponents(pairs, aCol = "id_b", bCol = "id_a")
       val sizes = comp.groupBy($"comp".as("c"))
         .agg(count(lit(1)).as("comp_size"))
       comp.join(sizes, $"comp" === $"c")
@@ -361,7 +363,7 @@ object PipelineQueries {
     // clusters BRIDGE across signals (a text-pair and an embed-pair
     // sharing a doc merge into one cluster — one representative
     // survives, not two). Pure composition of the gated pair operators
-    // + the gated min-propagation components; the oracle replays both
+    // + the gated components operator; the oracle replays both
     // pair constructions AND the bridged reachability end-to-end.
     // Scale shape: the two pair sets are each anti-quadratic (PPJoin
     // prefix filter / banded LSH); the union is a slim id-pair frame.
@@ -1810,8 +1812,8 @@ object PipelineQueries {
 
     // Perceptual CLUSTERS → keepers: the transcode pair set collapsed
     // to one representative per connected component (min media_id —
-    // the same min-propagation operator the text components gate
-    // pins), i.e. the drop-list a media dedup stage actually applies.
+    // the same components operator the text components gate pins),
+    // i.e. the drop-list a media dedup stage actually applies.
     "mm_near_dedup_groups" -> { (s, dir) =>
       import s.implicits._
       val pairs = Multimodal.perceptualNearDupPairs(
@@ -2044,8 +2046,10 @@ object PipelineQueries {
       |        FROM documents))""".stripMargin
 
   /** Duplicate-cluster oracle (recursive min-label reachability over the
-    * exact jaccard pair set) — shared verbatim by `dedup_components` and
-    * `dedup_components_star`: both operators promise the same output.
+    * exact jaccard pair set, undirected) — shared verbatim by
+    * `dedup_components` and `dedup_components_star`, which hands the
+    * operator the same pairs reversed: the output must not depend on
+    * edge direction.
     */
   private val ComponentsOracle: String =
     Shingles.replaceFirst("WITH sh", "WITH RECURSIVE sh") +
@@ -3198,7 +3202,7 @@ object PipelineQueries {
 
     "dedup_components" -> ComponentsOracle,
 
-    // the log-star variant has the identical output contract
+    // the same pairs reversed: the identical undirected output
     "dedup_components_star" -> ComponentsOracle,
 
     // reuses the byte-identical sh + pairs fragments (the cross-split

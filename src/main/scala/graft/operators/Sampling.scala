@@ -753,10 +753,10 @@ object Sampling {
     * min id, stable under growth until clusters merge — adding new
     * documents never reassigns an existing cluster across splits.
     *
-    * Scale: components shuffle (id, label) pairs only
-    * ([[Dedup.connectedComponents]]); the membership join keys on the
-    * doc id; the split itself is the same narrow integer-hash
-    * projection as [[hashSplit]].
+    * Scale: components shuffle slim (node, neighbour) rows only
+    * ([[Dedup.connectedComponents]], large-star/small-star rounds); the
+    * membership join keys on the doc id; the split itself is the same
+    * narrow integer-hash projection as [[hashSplit]].
     *
     * Output: input columns + (grp, split).
     */

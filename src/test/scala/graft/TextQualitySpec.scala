@@ -112,20 +112,21 @@ class TextQualitySpec extends SparkSpec {
     // end-to-end and checks the checkpoint data actually hit the dir.
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "suite assumes no ambient ckpt dir")
+    val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L),
+      (31L, 32L), (32L, 33L), (33L, 34L)).toDF("id_a", "id_b")
+    // the same operator on the default localCheckpoint path
+    val viaLocal = graft.operators.Dedup.connectedComponents(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dir = new java.io.File(tmpDir("graft_ckpt"))
     sc.setCheckpointDir(dir.getAbsolutePath)
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
     }
     try {
-      val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L),
-        (31L, 32L), (32L, 33L), (33L, 34L)).toDF("id_a", "id_b")
       val got = graft.operators.Dedup.connectedComponents(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got(3L) == 1L && got(11L) == 10L && got(34L) == 31L)
-      val star = graft.operators.Dedup.connectedComponentsLogStar(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == got)
+      assert(got == viaLocal)
       def rddDirs(f: java.io.File): Int =
         (if (f.isDirectory && f.getName.startsWith("rdd-")) 1 else 0) +
           Option(f.listFiles()).map(_.map(rddDirs).sum).getOrElse(0)
@@ -182,24 +183,45 @@ class TextQualitySpec extends SparkSpec {
     assert(res.count() == docs.count() - nMembers + nClusters)
   }
 
-  test("log-star components == min-propagation on random graphs; deep chain in few rounds") {
+  test("connected components == a driver-side union-find on a table of graphs") {
+    // reference: union-find over the non-self pairs; comp = min member
+    def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.filter(p => p._1 != p._2).foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
     val rnd = new scala.util.Random(23)
-    val randomPairs = (1 to 150).map { _ =>
-      val a = rnd.nextInt(120).toLong; val b = rnd.nextInt(120).toLong
-      (math.min(a, b), math.max(a, b))
-    }.filter(p => p._1 != p._2).distinct.toDF("id_a", "id_b")
-    val viaProp = graft.operators.Dedup.connectedComponents(randomPairs, maxIter = 50)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaStar = graft.operators.Dedup.connectedComponentsLogStar(randomPairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar == viaProp && viaStar.nonEmpty)
-
-    // a 64-node chain has diameter 63: min-propagation would need ~63
-    // rounds, the star alternation collapses it within 8
-    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = graft.operators.Dedup.connectedComponentsLogStar(chain, maxIter = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((0L to 63L).forall(got(_) == 0L))
+    def randomGraph(nodes: Int, edges: Int): Seq[(Long, Long)] =
+      (1 to edges).map(_ =>
+        (rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
+    val cases = Seq(
+      "100-node path" -> (0L until 99L).map(i => (i, i + 1)),
+      "64-node chain" -> (0L until 63L).map(i => (i, i + 1)),
+      "random, 150 pairs over 120 nodes" -> randomGraph(120, 150),
+      "random, 400 pairs over 300 nodes" -> randomGraph(300, 400),
+      "star centred at its min" -> (1L to 20L).map(i => (0L, i)),
+      "star centred at its max" -> (1L to 20L).map(i => (i, 50L)),
+      "2-node component" -> Seq((7L, 3L)),
+      "no pairs" -> Seq.empty[(Long, Long)],
+      // a self-pair adds no node: 9 pairs only with itself, so it is
+      // absent from the reference and must be absent from the output
+      "reversed, repeated and self pairs" -> Seq((2L, 1L), (1L, 2L),
+        (2L, 1L), (3L, 2L), (3L, 3L), (9L, 9L), (5L, 4L), (4L, 5L)))
+    for ((name, pairs) <- cases) {
+      val rows = graft.operators.Dedup.connectedComponents(
+          pairs.toDF("id_a", "id_b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(rows.length == rows.map(_._1).distinct.length,
+        s"$name: an id appears twice")
+      assert(rows.toMap == unionFind(pairs), name)
+    }
   }
 
   test("incremental ingest: anti-join keeps only genuinely-new fingerprints") {
