@@ -431,7 +431,7 @@ object PipelineQueries {
         .select($"id_a", $"id_b")
     },
 
-    // The AUTO operator end-to-end: planes-per-band derived from the
+    // The default plane count end-to-end: planes-per-band derived from the
     // corpus count (scaledPlanes — integer-exact: smallest p with
     // 2^p·occupancy ≥ n), so THE SAME registered query holds its
     // anti-quadratic shape at every SF the driver runs. The oracle
@@ -440,9 +440,9 @@ object PipelineQueries {
     // 2000 → 7).
     "dedup_embed_auto" -> { (s, dir) =>
       import s.implicits._
-      Dedup.embeddingNearDupPairsAuto(Tables(s, dir, "embeddings"),
+      Dedup.embeddingNearDupPairs(Tables(s, dir, "embeddings"),
           "vec_id", "embedding", dims = 64, threshold = 0.4,
-          bands = 16, targetOccupancy = 30, seed = 42L)
+          bands = 16, seed = 42L)
         .select($"id_a", $"id_b")
     },
 
@@ -535,8 +535,7 @@ object PipelineQueries {
       val path = tmpIndexPath(dir)
       Similarity.writeSignIndex(e, path, dims = 64, numPlanes = 6,
         seed = 42L)
-      Similarity.probeSignIndex(s, path, queries, k = 5, dims = 64,
-          numPlanes = 6, probeHamming = 2, seed = 42L)
+      Similarity.probeSignIndex(s, path, queries, k = 5, probeHamming = 2)
         .select($"qid", $"id", $"rank")
     },
 
@@ -897,8 +896,7 @@ object PipelineQueries {
       val path = tmpIndexPath(dir, "graft_ngram_index")
       Dedup.writeNgramIndex(corpus, path, "doc_id", "text",
         n = 3, threshold = 0.5)
-      val dup = Dedup.probeNgramIndex(s, path, batch, "doc_id", "text",
-          n = 3, threshold = 0.5)
+      val dup = Dedup.probeNgramIndex(s, path, batch, "doc_id", "text")
         .select($"id_batch".as("doc_id")).distinct()
       batch.select($"doc_id").join(dup, Seq("doc_id"), "left_anti")
     },
@@ -924,7 +922,7 @@ object PipelineQueries {
       Dedup.writeNgramIndexBucketed(corpus, prefix, "doc_id", "text",
         n = 3, threshold = 0.5)
       val dup = Dedup.probeNgramIndexBucketed(s, prefix, batch,
-          "doc_id", "text", n = 3, threshold = 0.5)
+          "doc_id", "text")
         .select($"id_batch".as("doc_id")).distinct()
       val res = batch.select($"doc_id")
         .join(dup, Seq("doc_id"), "left_anti")
@@ -953,8 +951,7 @@ object PipelineQueries {
       Similarity.writeSignIndex(corpus, path, dims = 64, numPlanes = 6,
         seed = 42L)
       Dedup.incrementalNewNearDupEmbedDisk(s, path, batch,
-        "vec_id", "embedding", dims = 64, numPlanes = 6,
-        threshold = 0.4, probeHamming = 1, seed = 42L)
+        "vec_id", "embedding", threshold = 0.4, probeHamming = 1)
     },
 
     // EMBEDDING-side ingest compaction end-to-end (the vector mirror of
@@ -980,8 +977,7 @@ object PipelineQueries {
       Similarity.writeSignIndex(c0, path, dims = 64, numPlanes = 6,
         seed = 42L)
       val a1 = graft.streaming.EmbedIngestStream.applyBatch(s, b1, None,
-        path, "vec_id", "embedding", dims = 64, threshold = 0.4,
-        probeHamming = 1, seed = 42L)
+        path, "vec_id", "embedding", threshold = 0.4, probeHamming = 1)
       graft.operators.IndexVersions.writeParquet(
         a1.select($"vec_id", $"embedding"), s"$outDir/batch=0")
       graft.streaming.EmbedIngestStream.compact(s, c0, path, outDir)
@@ -989,8 +985,7 @@ object PipelineQueries {
       require(leftover == 0,
         s"embed compact left $leftover accepted batch dirs behind")
       graft.streaming.EmbedIngestStream.applyBatch(s, b2, None, path,
-          "vec_id", "embedding", dims = 64, threshold = 0.4,
-          probeHamming = 1, seed = 42L)
+          "vec_id", "embedding", threshold = 0.4, probeHamming = 1)
         .select($"vec_id").localCheckpoint(true)
     },
 
@@ -1017,7 +1012,7 @@ object PipelineQueries {
       Dedup.writeNgramIndexBucketed(c0, prefix, "doc_id", "text",
         n = 3, threshold = 0.5)
       val a1 = graft.streaming.IngestStream.applyBatch(s, b1, None,
-        prefix, "doc_id", "text", 3, 0.5)
+        prefix, "doc_id", "text")
       graft.operators.IndexVersions.writeParquet(
         a1.select($"doc_id", $"text"), s"$outDir/batch=0")
       graft.streaming.IngestStream.compact(s, c0, prefix, outDir)
@@ -1025,7 +1020,7 @@ object PipelineQueries {
       require(leftover == 0,
         s"compact left $leftover accepted batch dirs behind")
       val res = graft.streaming.IngestStream.applyBatch(s, b2, None,
-        prefix, "doc_id", "text", 3, 0.5)
+        prefix, "doc_id", "text")
         .select($"doc_id").localCheckpoint(true)
       Seq("df", "prefix", "shingles").foreach { sfx =>
         s.sql(s"DROP TABLE IF EXISTS ${prefix}_$sfx"): Unit
@@ -1947,7 +1942,7 @@ object PipelineQueries {
       Multimodal.writeVideoFrameIndex(corpus, table, buckets = 8,
         frameBytes = 64, bands = 2)
       val res = Multimodal.probeVideoFrameIndex(s, table, batch,
-          frameBytes = 64, maxDist = 6, minContainPct = 50)
+          maxDist = 6, minContainPct = 50)
         .localCheckpoint(true)
       graft.operators.Bucketed.dropBucketed(s, table)
       res

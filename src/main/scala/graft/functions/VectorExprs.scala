@@ -164,11 +164,14 @@ object VecOps {
     * so an external SQL engine recomputes IDENTICAL buckets — this is
     * what flips the ANN-LSH gate from recall-only to a full oracle.
     * |t| <= ~2^31 per component and dims <= ~2^20 keep the dot far from
-    * long overflow.
+    * long overflow. A vector whose length is not `dims` is refused: a
+    * prefix or a short vector would sign into a bucket no twin shares.
     */
   def rademacherSig(v: ArrayData, signs: Array[Int],
       numPlanes: Int, dims: Int): Long = {
-    val n = math.min(v.numElements(), dims)
+    val n = v.numElements()
+    if (n != dims) throw new IllegalArgumentException(
+      s"vector has $n elements; the signature planes have dims=$dims")
     val t = new Array[Long](n)
     var i = 0
     while (i < n) { t(i) = roundAwayScaled(v.getFloat(i)); i += 1 }

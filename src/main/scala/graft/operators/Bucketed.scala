@@ -22,12 +22,12 @@ object Bucketed {
     * stale location is removed explicitly before the write.
     *
     * The bucket count and key are recorded in a `_graft_buckets.json`
-    * sidecar inside the table directory: a bucketed layout whose reader
-    * guesses the bucket count wrong produces silently-empty bucket
-    * joins (rows hashed mod N_old read as if placed mod N_new), so the
-    * layout carries its own configuration and [[registerBucketed]]
-    * refuses a mismatch — the sign-index sidecar contract applied to
-    * bucketed tables.
+    * layout record inside the table directory: a bucketed layout whose
+    * reader guesses the bucket count wrong produces silently-empty
+    * bucket joins (rows hashed mod N_old read as if placed mod N_new),
+    * so the layout carries its own configuration and
+    * [[registerBucketed]] takes the count from it — the sign-index
+    * record contract applied to bucketed tables.
     *
     * `filesPerBucket` trades probe-side open cost for build-side
     * parallelism. 1 (default) repartitions to exactly `buckets` tasks
@@ -75,41 +75,24 @@ object Bucketed {
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-    IndexVersions.writeText(spark, loc.toString, BucketMetaFile,
-      s"""{"buckets":$buckets,"key":"$key"}""")
+    IndexVersions.writeLayout(spark, loc.toString, BucketMetaFile,
+      "buckets" -> buckets, "key" -> key)
   }
 
   private val BucketMetaFile = "_graft_buckets.json"
 
-  /** The (buckets, key) a [[writeBucketed]] table was written with, from
-    * its sidecar — None when the directory is missing or pre-sidecar. */
-  def bucketMeta(spark: SparkSession, table: String): Option[(Int, String)] = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(ident))
-    IndexVersions.readText(spark, loc.toString, BucketMetaFile).flatMap {
-      txt =>
-        val re = """"buckets":(\d+),"key":"([^"]*)"""".r
-        re.findFirstMatchIn(txt).map(m => (m.group(1).toInt, m.group(2)))
-    }
-  }
+  private def location(spark: SparkSession,
+      table: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(spark.sessionState.catalog.defaultTablePath(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)))
 
-  /** Largest bucket id encoded in the surviving data file names
-    * (`part-…_00007.c000…` → 7), or -1 when no bucketed file is found —
-    * the sidecar-less fallback evidence for the real bucket count.
-    * Only a LOWER bound (trailing buckets can be empty), so it can
-    * refute a too-small declared count but never confirm one.
-    */
-  private def maxBucketIdInFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      loc: org.apache.hadoop.fs.Path): Int = {
-    val re = """_(\d{5})(?:\.c\d+)?\.""".r
-    fs.listStatus(loc).iterator
-      .filter(_.isFile)
-      .map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      .flatMap(n => re.findFirstMatchIn(n).map(_.group(1).toInt))
-      .foldLeft(-1)(math.max)
+  /** The (buckets, key) a [[writeBucketed]] table was written with, from
+    * its record — refused with the table's path and "rebuild" when it
+    * has none. */
+  def bucketMeta(spark: SparkSession, table: String): (Int, String) = {
+    val r = IndexVersions.layout(spark, location(spark, table).toString,
+      BucketMetaFile)
+    (r.int("buckets"), r("key"))
   }
 
   /** Re-attach a session to a bucketed table written by
@@ -125,48 +108,26 @@ object Bucketed {
     * Returns true when the table is usable afterwards (already in the
     * catalog, or attached here); false when no data exists to attach.
     *
-    * `buckets` ≤ 0 self-configures from the sidecar the write recorded
-    * — the safe default. An EXPLICIT count is validated against the
-    * sidecar (and, for pre-sidecar layouts, against the max bucket id
-    * in the surviving file names) and REFUSED on mismatch: declaring
-    * the wrong count makes Spark read rows hashed mod N_old as if
-    * placed mod N_new, so bucket-aware joins silently drop matches
-    * while staying Exchange-free — the worst failure mode a layout can
-    * have, converted here into a loud error.
+    * The bucket count comes from the table's record, the only place it
+    * is known: declaring any other count makes Spark read rows hashed
+    * mod N_old as if placed mod N_new, so bucket-aware joins silently
+    * drop matches while staying Exchange-free. A table without a record
+    * is refused, and so is a `key` the record does not name.
     */
-  def registerBucketed(spark: SparkSession, table: String, key: String,
-      buckets: Int = 0): Boolean = {
+  def registerBucketed(spark: SparkSession, table: String,
+      key: String): Boolean = {
     if (spark.catalog.tableExists(table)) return true
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(ident))
+    val loc = location(spark, table)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(loc)) return false
-    val meta = bucketMeta(spark, table)
-    meta.foreach { case (mb, mk) =>
-      require(mk.equalsIgnoreCase(key),
-        s"bucketed table $table was written bucketed by `$mk`; " +
-          s"register called with key `$key`")
-      if (buckets > 0) require(mb == buckets,
-        s"bucketed table $table was written with $mb buckets; " +
-          s"register called with $buckets — a mismatched count reads " +
-          "rows placed mod " + mb + " as if placed mod " + buckets +
-          " and silently drops join matches")
-    }
-    val effective = if (buckets > 0) buckets
-      else meta.map(_._1).getOrElse(throw new IllegalArgumentException(
-        s"no $BucketMetaFile under $loc — pass buckets explicitly"))
-    if (meta.isEmpty) {
-      // pre-sidecar layout: the file names are the only evidence; a max
-      // bucket id at or past the declared count refutes it outright
-      val maxId = maxBucketIdInFiles(fs, loc)
-      require(maxId < effective,
-        s"bucketed table $table has a data file for bucket id $maxId " +
-          s"but register was called with $effective buckets")
-    }
+    val (buckets, written) = bucketMeta(spark, table)
+    require(written.equalsIgnoreCase(key),
+      s"bucketed table $table was written bucketed by `$written`; " +
+        s"register called with key `$key`")
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     val ddl = spark.read.parquet(loc.toString).schema.toDDL
     spark.sql(s"CREATE TABLE ${ident.quotedString} ($ddl) USING parquet " +
-      s"CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $effective BUCKETS " +
+      s"CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $buckets BUCKETS " +
       s"LOCATION '${loc.toString}'")
     true
   }

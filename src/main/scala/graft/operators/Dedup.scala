@@ -290,7 +290,10 @@ object Dedup {
     * Layout under `path`: `df/` (h, df — the frozen global order),
     * `prefix/` (id, n_sh, h — repartitioned by h, the probe join key,
     * so a metastore deployment can declare it bucketed), `shingles/`
-    * (id, shingles, n_sh — the verify side, clustered by id).
+    * (id, shingles, n_sh — the verify side, clustered by id). `n` and
+    * `threshold` shape the prefix rows, so they are part of the index:
+    * the `df/` dir records them ([[ngramIndexMeta]]) after all three
+    * writes, and the probe replays them.
     */
   def writeNgramIndex(corpus: DataFrame, path: String, idCol: String,
       textCol: String, n: Int = 3, threshold: Double = 0.5): Unit = {
@@ -306,7 +309,36 @@ object Dedup {
         () => IndexVersions.writeParquet(shC.repartition(col("id")),
           s"$path/shingles")))
     } finally unpersistIndexFrames(dfC, shC)
+    writeNgramMeta(corpus.sparkSession, s"$path/df", n, threshold)
   }
+
+  private val NgramMetaFile = "_graft_ngram_meta.json"
+
+  /** Record (n, threshold) in the index's df dir — written last, so a
+    * build that did not finish has no record. Both writers replace the
+    * df dir first, so a rebuild never keeps an older record. */
+  private def writeNgramMeta(spark: SparkSession, dfDir: String, n: Int,
+      threshold: Double): Unit =
+    IndexVersions.writeLayout(spark, dfDir, NgramMetaFile, "n" -> n,
+      "threshold" -> threshold)
+
+  /** The (n, threshold) an n-gram index was built with, from the record
+    * in its df dir (`<path>/df`, or the committed generation's `_df`
+    * table dir) — refused with the path and "rebuild" when it has
+    * none: PPJoin's prefix length is a function of the threshold, so a
+    * probe at any other (n, threshold) silently finds other pairs. */
+  private[graft] def ngramIndexMeta(spark: SparkSession,
+      dfDir: String): (Int, Double) = {
+    val r = IndexVersions.layout(spark, dfDir, NgramMetaFile)
+    (r.int("n"), r.double("threshold"))
+  }
+
+  /** The df table dir of the committed generation of the bucketed
+    * n-gram index under `tablePrefix`. */
+  private[graft] def ngramDfDir(spark: SparkSession,
+      tablePrefix: String): String =
+    IndexVersions.tableRoot(spark,
+      s"${IndexVersions.resolveTablePrefix(spark, tablePrefix)}_df")
 
   /** Force the pinned parents ONCE before the concurrent writes: the
     * count over the pinned df table materializes the shC cache on the
@@ -383,18 +415,22 @@ object Dedup {
     * (corpus-df, h) order is IN the index, so results are identical —
     * asserted in PipelineSpec), but the corpus-side work is a read.
     *
+    * `n` and `threshold` are the ones the index recorded.
+    *
     * NOTE plain parquet loses its partitioning on read, so this probe
     * re-shuffles the index frames per call (measured 98 s cold / 29 s
     * warm vs 48 s build at 500k docs); [[probeNgramIndexBucketed]] is
     * the layout that actually makes probes cheap.
     */
   def probeNgramIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5): DataFrame =
+      path: String, batch: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val (n, threshold) = ngramIndexMeta(spark, s"$path/df")
     probeNgramFrames(IndexVersions.readParquet(spark, Seq(s"$path/df")),
       IndexVersions.readParquet(spark, Seq(s"$path/prefix")),
       IndexVersions.readParquet(spark, Seq(s"$path/shingles")),
       batch, idCol, textCol, n, threshold)
+  }
 
   /** [[writeNgramIndex]] into BUCKETED catalog tables
     * (`<tablePrefix>_df` / `_prefix` bucketed by `h`, `_shingles`
@@ -410,8 +446,9 @@ object Dedup {
     * caps build and probe parallelism a decade later; the count
     * actually used is recorded per table in a `_graft_buckets.json`
     * sidecar ([[Bucketed.writeBucketed]]) that attach/probe sessions
-    * self-configure from and refuse to mismatch — the sign-index
-    * sidecar contract applied to the text-side index.
+    * self-configure from, and `n`/`threshold` in the `_df` table dir
+    * ([[ngramIndexMeta]]) after all three writes, before the pointer
+    * of a compaction flips.
     */
   def writeNgramIndexBucketed(corpus: DataFrame, tablePrefix: String,
       idCol: String, textCol: String, n: Int = 3,
@@ -439,6 +476,9 @@ object Dedup {
         () => Bucketed.writeBucketed(shC, s"${tablePrefix}_shingles", "id",
           b)))
     } finally unpersistIndexFrames(dfC, shC)
+    writeNgramMeta(corpus.sparkSession,
+      IndexVersions.tableRoot(corpus.sparkSession, s"${tablePrefix}_df"), n,
+      threshold)
     // a FRESH flat build resets the prefix to generation zero: a stale
     // version pointer from an earlier compaction would silently shadow
     // the tables just written. Cleared LAST — while the three writes
@@ -452,24 +492,22 @@ object Dedup {
 
   /** Attach a session to a [[writeNgramIndexBucketed]] index built by
     * an earlier session (in-memory catalog: the entries died with that
-    * JVM, the bucketed warehouse data did not). Metadata-only. `buckets`
-    * ≤ 0 (the default) self-configures each table from its sidecar; an
-    * explicit count is validated against the sidecars and refused on
-    * mismatch ([[Bucketed.registerBucketed]]). True iff all three
-    * tables are usable — partial indexes (a build that died between
-    * table writes) attach nothing and return false so the caller
-    * rebuilds.
+    * JVM, the bucketed warehouse data did not). Metadata-only: each
+    * table's bucket count comes from its record
+    * ([[Bucketed.registerBucketed]]). True iff all three tables are
+    * usable — when a table's data is missing nothing is attached and
+    * the caller rebuilds.
     */
   def attachNgramIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, buckets: Int = 0): Boolean = {
+      tablePrefix: String): Boolean = {
     // a compacted index resolves through its version pointer to the
     // committed generation's tables (IndexVersions); legacy = the bare
     // prefix. Generation N−1 tables stay behind as the rollback target.
     val p = IndexVersions.resolveTablePrefix(spark, tablePrefix)
     val ok =
-      Bucketed.registerBucketed(spark, s"${p}_df", "h", buckets) &&
-      Bucketed.registerBucketed(spark, s"${p}_prefix", "h", buckets) &&
-      Bucketed.registerBucketed(spark, s"${p}_shingles", "id", buckets)
+      Bucketed.registerBucketed(spark, s"${p}_df", "h") &&
+      Bucketed.registerBucketed(spark, s"${p}_prefix", "h") &&
+      Bucketed.registerBucketed(spark, s"${p}_shingles", "id")
     if (!ok) Seq("df", "prefix", "shingles").foreach { s =>
       spark.sql(s"DROP TABLE IF EXISTS ${p}_$s"): Unit
     }
@@ -481,15 +519,19 @@ object Dedup {
     * scan (no Exchange on it, asserted in PipelineSpec). Resolves the
     * COMMITTED index generation per call (and re-attaches it if this
     * session hasn't yet), so a probe issued right after a compaction
-    * pointer flip reads version N+1 with no caller involvement.
+    * pointer flip reads version N+1 with no caller involvement, at the
+    * `n` and `threshold` that generation recorded.
     */
   def probeNgramIndexBucketed(spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String, batch: DataFrame, idCol: String,
-      textCol: String, n: Int = 3, threshold: Double = 0.5): DataFrame = {
+      textCol: String): DataFrame = {
     val p = IndexVersions.resolveTablePrefix(spark, tablePrefix)
     if (!spark.catalog.tableExists(s"${p}_df"))
       require(attachNgramIndexBucketed(spark, tablePrefix),
         s"no usable bucketed n-gram index under table prefix $tablePrefix")
+    // the record of the very generation whose tables the probe reads
+    val (n, threshold) = ngramIndexMeta(spark,
+      IndexVersions.tableRoot(spark, s"${p}_df"))
     probeNgramFrames(spark.table(s"${p}_df"),
       spark.table(s"${p}_prefix"),
       spark.table(s"${p}_shingles"),
@@ -602,38 +644,27 @@ object Dedup {
     * [[Similarity.writeSignIndex]] layout — the embedding side of the
     * ingest storage story: the corpus is signed and partitioned by
     * bucket once per corpus version, and each arriving batch probes the
-    * index paying only its own (batch-sized) signature work. When the
-    * batch's probe-bucket set is small, the scan is directory-pruned
-    * with a literal IN-filter (the [[Similarity.probeSignIndex]]
-    * shape); a large arrival batch touches most buckets, so past 1024
-    * distinct probe buckets the filter is skipped rather than exploding
-    * the literal list — at that occupancy pruning buys nothing anyway.
+    * index paying only its own (batch-sized) signature work, replaying
+    * the planes, dims and seed the index's record names. The scan is
+    * directory-pruned to the batch's probe buckets
+    * ([[IndexVersions.pruneToProbed]], the [[Similarity.probeSignIndex]]
+    * shape); a large arrival batch touches most buckets, so past
+    * [[IndexVersions.MaxProbeKeys]] distinct probe buckets it is
+    * unpruned — at that occupancy pruning buys nothing anyway.
     */
   def incrementalNewNearDupEmbedDisk(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, vecCol: String, dims: Int,
-      numPlanes: Int = 0, threshold: Double = 0.4, probeHamming: Int = 1,
-      seed: Long = 42L): DataFrame = {
-    // ≤ 0: read the plane count the index was WRITTEN with from its
-    // sidecar (an explicit value is validated against it) — the probe
-    // must replay the write-side signature bit-for-bit or the bucket
-    // join silently finds nothing
-    val planes = Similarity.resolveSignPlanes(spark, path, numPlanes,
-      dims, seed)
+      batch: DataFrame, idCol: String, vecCol: String,
+      threshold: Double = 0.4, probeHamming: Int = 1): DataFrame = {
+    val (planes, dims, seed) = Similarity.signIndexMeta(spark, path)
     val qb = Similarity.probeBuckets(batch, Seq(col(idCol).as("bid")),
       col(vecCol), planes, dims, seed, probeHamming)
     // the committed generation: compacted indexes resolve through the
     // version pointer (IndexVersions), legacy flat layouts through
-    // themselves — same resolution the sidecar read above used
-    val raw = IndexVersions.readParquet(spark,
-      Seq(IndexVersions.resolvePath(spark, path)))
-    val maxLits = 1024
-    val probed = qb.select("bucket").distinct().limit(maxLits + 1)
-      .collect().map(_.getLong(0))
-    val pruned =
-      if (probed.length <= maxLits) raw.filter(col("bucket").isin(probed: _*))
-      else raw
-    val index = pruned.select(col("id"), col("vec"), col("bucket"))
+    // themselves — same resolution the record read above used
+    val index = IndexVersions.pruneToProbed(IndexVersions.readParquet(spark,
+        Seq(IndexVersions.resolvePath(spark, path))), qb, "bucket")
+      .select(col("id"), col("vec"), col("bucket"))
     signNearDupNew(index, qb, batch, idCol, vecCol, threshold)
   }
 
@@ -907,7 +938,7 @@ object Dedup {
       .filter(col("cosine") >= threshold)
   }
 
-  /** Planes-per-band for [[embeddingNearDupPairsAuto]]: the smallest
+  /** Planes-per-band for [[embeddingNearDupPairs]]' default: the smallest
     * plane count that holds expected bucket occupancy at or below
     * `targetOccupancy` — `ceil(log2(n / target))`, clamped. Random sign
     * buckets split a corpus of n into ~2^planes cells, so candidate
@@ -933,26 +964,6 @@ object Dedup {
     var p = minPlanes
     while (p < maxPlanes && p < 62 && (1L << p) < cells) p += 1
     p
-  }
-
-  /** [[embeddingNearDupPairs]] with the planes-per-band knob driven by
-    * corpus size (one count job, then [[scaledPlanes]]) instead of a
-    * hand-tuned constant. The count is the only extra cost — a metadata
-    * scan of one column — and it is what makes the operator safe to
-    * point at a corpus whose size the caller doesn't know within a
-    * decade. Same output contract as the fixed-plane operator at the
-    * chosen plane count. Pass `knownCount` when the caller already has
-    * the row count (a catalog stat is free at 100 TB; the extra scan
-    * isn't) — the derived plane count is then identical to what the
-    * count job would have produced.
-    */
-  def embeddingNearDupPairsAuto(df: DataFrame, idCol: String,
-      vecCol: String, dims: Int, threshold: Double = 0.95, bands: Int = 16,
-      targetOccupancy: Int = 30, seed: Long = 42L,
-      knownCount: Long = -1L): DataFrame = {
-    val n = if (knownCount >= 0) knownCount else df.select(col(idCol)).count()
-    embeddingNearDupPairs(df, idCol, vecCol, dims, threshold, bands,
-      scaledPlanes(n, targetOccupancy), seed)
   }
 
   /** EXACT edit-distance self-join: all pairs with

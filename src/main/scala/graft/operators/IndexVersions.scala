@@ -12,7 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType,
+  StructType}
 
 /** Versioned-index pointer commits — the [[graft.streaming.UpsertSink]]
   * exactly-once pattern applied to the persisted dedup indexes: a
@@ -59,6 +61,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * is read back through [[readParquet]] with that record and a
   * driver-side listing — no schema-inference job and no parallel
   * listing job. A dir without a record is refused, not inferred.
+  *
+  * Layout records: every persisted index records the values its
+  * readers must replay (sign planes/dims/seed, phash bands and kernel,
+  * bucket count and key, n-gram `n`/`threshold`, IVF nlist/dims/params,
+  * model buckets) through [[writeLayout]], inside the generation it
+  * describes and before the pointer flip, and every reader takes them
+  * from the committed generation's record through [[layout]] — no
+  * reader takes a layout value as a parameter, since each has exactly
+  * one correct value, the writer's. A layout without its record is
+  * refused with its path and "rebuild"; a kernel mismatch refuses.
   */
 object IndexVersions {
 
@@ -68,7 +80,7 @@ object IndexVersions {
     spark.sparkContext.hadoopConfiguration
 
   /** Write `text` (UTF-8) as `dir/file` — the one writer of graft's
-    * small text artifacts (sidecars, pointers, manifests). With
+    * small text artifacts (layout records, pointers, manifests). With
     * `overwrite = false` the create fails when the file exists: a
     * create-if-absent record. */
   private[graft] def writeText(spark: SparkSession, dir: String,
@@ -88,6 +100,89 @@ object IndexVersions {
       val in = fs.open(p)
       try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       finally in.close()
+    }
+  }
+
+  /** The values a reader of one persisted index must replay — the
+    * flat `{"k":v,...}` object (numbers, booleans and quoted strings)
+    * its writer left as `file` in `dir`. */
+  private[graft] case class LayoutRecord(dir: String, file: String,
+      fields: Map[String, String]) {
+    def apply(k: String): String = fields.getOrElse(k,
+      throw new IllegalArgumentException(
+        s"$file at $dir has no `$k` — rebuild the index"))
+    def int(k: String): Int = apply(k).toInt
+    def long(k: String): Long = apply(k).toLong
+    def double(k: String): Double = apply(k).toDouble
+    def boolean(k: String): Boolean = apply(k).toBoolean
+
+    /** Refuse a layout whose signature or scoring kernel is not the one
+      * `what` computes: same layout shape, none of the semantics. */
+    def requireKernel(kernel: String, what: String): Unit =
+      require(apply("kernel") == kernel,
+        s"$what at $dir was built with kernel `${apply("kernel")}`; this " +
+          s"reader computes `$kernel`")
+  }
+
+  /** The text of a layout record: `fields` in order, strings quoted,
+    * every other value as its `toString` (the bytes each index kind has
+    * always written). */
+  private[graft] def renderLayout(fields: (String, Any)*): String =
+    fields.map {
+      case (k, s: String) =>
+        require(!s.exists(c => c == '"' || c == '\\'),
+          s"layout value `$s` of `$k` cannot be recorded")
+        s""""$k":"$s""""
+      case (k, v) => s""""$k":$v"""
+    }.mkString("{", ",", "}")
+
+  /** Write the layout record `file` into `dir` ([[renderLayout]]). */
+  private[graft] def writeLayout(spark: SparkSession, dir: String,
+      file: String, fields: (String, Any)*): Unit =
+    writeText(spark, dir, file, renderLayout(fields: _*))
+
+  private val LayoutField = """"(\w+)":("[^"]*"|[^,}]*)""".r
+
+  /** The layout record `file` in `dir`, or None when it has none. */
+  private[graft] def layoutIn(spark: SparkSession, dir: String,
+      file: String): Option[LayoutRecord] =
+    readText(spark, dir, file).map(txt => LayoutRecord(dir, file,
+      LayoutField.findAllMatchIn(txt).map(m =>
+        m.group(1) -> m.group(2).stripPrefix("\"").stripSuffix("\"")).toMap))
+
+  /** The layout record `file` in `dir`. A layout without one is refused,
+    * naming the dir: every value a reader replays comes from the record
+    * its writer left, none from the caller and none guessed. */
+  private[graft] def layout(spark: SparkSession, dir: String,
+      file: String): LayoutRecord =
+    layoutIn(spark, dir, file).getOrElse(throw new IllegalArgumentException(
+      s"no layout record ($file) at $dir — the index was not written by " +
+        "this version of graft or its write did not finish; rebuild it"))
+
+  /** The most distinct keys (cells, sign buckets, band keys) a probe
+    * filters an index scan by. Past it the scan is unpruned: at that
+    * occupancy the prune reads most of the index anyway, and the
+    * literal list would grow with the query set. */
+  private[graft] val MaxProbeKeys = 1024
+
+  /** `index` pruned to the `key` values `probes` carries by a literal
+    * IN, which drops partition dirs or bucket files at scan time; past
+    * [[MaxProbeKeys]] distinct values, `index` unpruned. The values are
+    * listed by one narrow job: each partition emits its distinct keys,
+    * capped at the cap + 1, and the driver merges them — no exchange.
+    * The probe's own join on `key` selects the same rows either way. */
+  private[graft] def pruneToProbed(index: DataFrame, probes: DataFrame,
+      key: String): DataFrame = {
+    val cap = MaxProbeKeys + 1
+    val long = org.apache.spark.sql.Encoders.scalaLong
+    val keys = probes.filter(col(key).isNotNull)
+      .select(col(key).cast(LongType).as(key)).as(long)
+      .mapPartitions(_.distinct.take(cap))(long)
+      .collect().distinct
+    if (keys.length > MaxProbeKeys) index
+    else {
+      val t = index.schema(key).dataType
+      index.filter(col(key).isin(keys.toSeq.map(lit(_).cast(t)): _*))
     }
   }
 

@@ -34,11 +34,13 @@ import org.apache.spark.sql.functions._
   *    so build and arrival assignment can never drift.
   *  - PROBE: nprobe cells per query ranked by one narrow kernel pass
   *    over the broadcast centroid matrix (no per-query window task,
-  *    [[SegmentedIndex.probe]]); the vectors scan is pruned to the probed cells by a
-  *    bounded literal IN-filter (distinct probed cells ≤ nlist ≤ 4096 —
-  *    Catalyst prunes `cell=K` directories at scan time), capped by the
-  *    [[Similarity.probeSignIndex]] literal-cap contract; candidates
-  *    need no dedup (each corpus vector lives in exactly one cell).
+  *    [[SegmentedIndex.probe]]); the vectors scan is pruned to the
+  *    probed cells by the one capped literal IN-filter
+  *    ([[IndexVersions.pruneToProbed]] — Catalyst prunes `cell=K`
+  *    directories at scan time); candidates need no dedup (each corpus
+  *    vector lives in exactly one cell). Dims, nlist and seed come from
+  *    the sidecar, never from the caller; a query of the wrong length
+  *    throws in the cell kernel.
   *  - DRIFT: the sidecar records the build-time mean squared
   *    quantization error; [[drift]] compares an arrival batch's error
   *    under the FROZEN centroids against it — the "retrain the
@@ -129,8 +131,8 @@ object IvfIndex {
     */
   def appendVectors(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      dims: Int = 0, atSeg: Long = -1L): Long =
-    SegmentedIndex.append(spark, path, Layout, batch, idCol, vecCol, dims,
+      atSeg: Long = -1L): Long =
+    SegmentedIndex.append(spark, path, Layout, batch, idCol, vecCol,
         atSeg) { (a, _, _) =>
       a.select(col("id"), col("vec"), col("cell"))
     }
@@ -142,10 +144,9 @@ object IvfIndex {
     * commit order is [[SegmentedIndex.compact]]'s. `nlist` 0 re-derives
     * the √n occupancy rule over the grown corpus. Returns the new base
     * version. */
-  def compact(spark: SparkSession, path: String, dims: Int = 0,
-      nlist: Int = 0, seed: Long = 42L,
-      fitSamplePerCell: Int = 256): Int =
-    SegmentedIndex.compact(spark, path, Layout, dims) { (m, view, upto) =>
+  def compact(spark: SparkSession, path: String, nlist: Int = 0,
+      seed: Long = 42L, fitSamplePerCell: Int = 256): Int =
+    SegmentedIndex.compact(spark, path, Layout) { (m, view, upto) =>
       write(view.select(col("id").as("vec_id"), col("vec").as("embedding")),
         path, m.dims, nlist, seed, fitSamplePerCell = fitSamplePerCell,
         subsumedUpto = upto)
@@ -159,9 +160,8 @@ object IvfIndex {
     * cell their corpus twin was built into: same kernel, same
     * tie-break (lowest cell id). */
   def assignCells(spark: SparkSession, path: String, batch: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      dims: Int = 0): DataFrame = {
-    SegmentedIndex.requireMeta(spark, path, Layout, dims)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    SegmentedIndex.requireMeta(spark, path, Layout)
     SegmentedIndex.assignWith(SegmentedIndex.arrivals(batch, idCol, vecCol),
         Quantizer.fromFrame(SegmentedIndex.readCentroids(spark, path)))
       .select(col("id").as(idCol), col("cell"))
@@ -174,11 +174,10 @@ object IvfIndex {
     * directories ([[SegmentedIndex.probe]]); candidates are scored by
     * exact cosine on the RAW vectors ([[Similarity.exactTopK]]). */
   def probe(spark: SparkSession, path: String, queries: DataFrame, k: Int,
-      nprobe: Int = 8, dims: Int = 0, qidCol: String = "qid",
-      vecCol: String = "embedding",
-      maxCellLiterals: Int = 1024): DataFrame = {
+      nprobe: Int = 8, qidCol: String = "qid",
+      vecCol: String = "embedding"): DataFrame = {
     val p = SegmentedIndex.probe(spark, path, Layout, queries, qidCol,
-      vecCol, nprobe, dims, maxCellLiterals)
+      vecCol, nprobe)
     Similarity.exactTopK(p.index.withColumnRenamed("vec", "cvec")
       .join(broadcast(p.cells.select(col("qid"), col("qvec"), col("cell"))),
         Seq("cell")), k)
@@ -189,7 +188,6 @@ object IvfIndex {
     * ratio ≫ 1 means the quantizer deserves a retrain (publish
     * generation N+1; probes never pause). See [[SegmentedIndex.drift]]. */
   def drift(spark: SparkSession, path: String, batch: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      dims: Int = 0): DataFrame =
-    SegmentedIndex.drift(spark, path, Layout, batch, idCol, vecCol, dims)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    SegmentedIndex.drift(spark, path, Layout, batch, idCol, vecCol)
 }

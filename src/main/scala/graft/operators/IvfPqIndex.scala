@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   *    when written, so probes, appends and compactions read them with
   *    no schema and no listing job ([[IndexVersions.readParquet]]). The probe
   *    SELF-CONFIGURES from the sidecar: there is no caller-supplied
-  *    m/ksub/nlist to mismatch (the phash-index bands lesson), and a
-  *    kernel or dims mismatch REFUSES instead of silently mis-scoring.
+  *    m/ksub/nlist/dims to mismatch (the phash-index bands lesson), a
+  *    kernel mismatch REFUSES instead of silently mis-scoring, and a
+  *    query of the wrong length throws in the cell kernel.
   *  - SCORING: dot(q,v) = dot(q,c) + dot(q,r) — the approximate score
   *    is the EXACT centroid dot plus the residual's ADC lookup-table
   *    sum ([[graft.functions.VectorFunctions.pqAdc]]: m table adds per
@@ -155,8 +156,8 @@ object IvfPqIndex {
     */
   def append(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      dims: Int = 0, atSeg: Long = -1L): Long =
-    SegmentedIndex.append(spark, path, Layout, batch, idCol, vecCol, dims,
+      atSeg: Long = -1L): Long =
+    SegmentedIndex.append(spark, path, Layout, batch, idCol, vecCol,
         atSeg) { (assigned, centroids, meta) =>
       Similarity.Pq.encodeResidual(assigned, centroids,
         readCodebook(spark, path), meta.param("m"), meta.param("ksub"),
@@ -172,8 +173,8 @@ object IvfPqIndex {
     * quantizer refresh is an explicit [[write]] rebuild from the
     * source corpus. Commit order is [[SegmentedIndex.compact]]'s.
     * Returns the new base version. */
-  def compact(spark: SparkSession, path: String, dims: Int = 0): Int =
-    SegmentedIndex.compact(spark, path, Layout, dims) { (meta, view, upto) =>
+  def compact(spark: SparkSession, path: String): Int =
+    SegmentedIndex.compact(spark, path, Layout) { (meta, view, upto) =>
       val centroids = SegmentedIndex.readCentroids(spark, path)
       val cb = readCodebook(spark, path)
       SegmentedIndex.publish(spark, path, Layout, upto) { dir =>
@@ -197,11 +198,11 @@ object IvfPqIndex {
     */
   def probe(spark: SparkSession, path: String, queries: DataFrame,
       rerankFrom: DataFrame, k: Int, nprobe: Int = 8, rerank: Int = 100,
-      dims: Int = 0, qidCol: String = "qid", idCol: String = "vec_id",
-      vecCol: String = "embedding", maxCellLiterals: Int = 1024): DataFrame = {
+      qidCol: String = "qid", idCol: String = "vec_id",
+      vecCol: String = "embedding"): DataFrame = {
     require(rerank >= k, s"rerank=$rerank < k=$k")
     val p = SegmentedIndex.probe(spark, path, Layout, queries, qidCol,
-      vecCol, nprobe, dims, maxCellLiterals)
+      vecCol, nprobe)
     val approx = Similarity.Pq.residualAdc(p.index, p.cells, p.centroids,
       readCodebook(spark, path), p.meta.param("m"), p.meta.param("ksub"),
       p.meta.dims)
@@ -215,7 +216,6 @@ object IvfPqIndex {
     * explicit [[write]] rebuild from the source corpus). See
     * [[SegmentedIndex.drift]]. */
   def drift(spark: SparkSession, path: String, batch: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      dims: Int = 0): DataFrame =
-    SegmentedIndex.drift(spark, path, Layout, batch, idCol, vecCol, dims)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    SegmentedIndex.drift(spark, path, Layout, batch, idCol, vecCol)
 }

@@ -217,11 +217,10 @@ object Multimodal {
     * silently finds ~nothing — the same recall-collapse failure mode
     * the `_graft_sign_meta.json` / `_graft_buckets.json` sidecars were
     * built against. So the build records `(bands, kernel)` in a
-    * `_graft_phash_meta.json` sidecar inside the table directory and
-    * [[probePhashIndex]] self-configures from it (or REFUSES an
-    * explicit mismatch). `kernel` names the signature function for
-    * forward evolution — a future dHash index must not be probed with
-    * blockhash keys either.
+    * `_graft_phash_meta.json` layout record inside the table directory
+    * and [[probePhashIndex]] takes both from it. `kernel` names the
+    * signature function for forward evolution — a future dHash index
+    * must not be probed with blockhash keys either.
     */
   def writePhashIndex(media: DataFrame, table: String, buckets: Int,
       bands: Int = 4): Unit =
@@ -239,8 +238,8 @@ object Multimodal {
     Bucketed.writeBucketed(
       bandedKeys(sigs, bands), table, "key", buckets)
     val spark = sigs.sparkSession
-    IndexVersions.writeText(spark, tableLocation(spark, table).toString,
-      PhashMetaFile, s"""{"bands":$bands,"kernel":"$kernel"}""")
+    IndexVersions.writeLayout(spark, tableLocation(spark, table).toString,
+      PhashMetaFile, "bands" -> bands, "kernel" -> kernel)
     // a FRESH flat build resets the index to generation zero: a stale
     // version pointer from an earlier compaction would silently shadow
     // the table just written. Cleared LAST — while the write is in
@@ -277,45 +276,39 @@ object Multimodal {
         spark.sessionState.sqlParser.parseTableIdentifier(table)))
 
   /** The (bands, kernel) a [[writePhashIndex]] layout was written with,
-    * from its sidecar — None for a pre-sidecar index. `table` may be a
-    * COMPACTED index's base name: resolution goes through the
-    * [[IndexVersions]] pointer to the committed generation's sidecar,
-    * same as the sign-index meta lookup. */
-  def phashIndexMeta(spark: SparkSession,
-      table: String): Option[(Int, String)] =
-    IndexVersions.readText(spark,
-        tableLocation(spark, resolvePhashTable(spark, table)).toString,
-        PhashMetaFile).flatMap { txt =>
-      val re = """"bands":(\d+),"kernel":"([^"]*)"""".r
-      re.findFirstMatchIn(txt).map(m => (m.group(1).toInt, m.group(2)))
-    }
+    * from its record — refused with the table's path and "rebuild" when
+    * it has none. `table` may be a COMPACTED index's base name:
+    * resolution goes through the [[IndexVersions]] pointer to the
+    * committed generation's record, same as the sign-index lookup. */
+  def phashIndexMeta(spark: SparkSession, table: String): (Int, String) = {
+    val r = IndexVersions.layout(spark,
+      tableLocation(spark, resolvePhashTable(spark, table)).toString,
+      PhashMetaFile)
+    (r.int("bands"), r("kernel"))
+  }
 
   /** Probe a [[writePhashIndex]] layout with an arriving batch: every
     * (batch, corpus) pair sharing a band within `maxDist` Hamming —
-    * (media_id = the arrival, dup_of = the corpus asset, dist).
-    * `bands` ≤ 0 (the default) self-configures from the build's
-    * sidecar; an explicit value is validated against it and a mismatch
-    * REFUSED — a bands-mismatched probe would band the query
-    * signatures into keys the index never wrote and return ~empty
-    * instead of erroring.
+    * (media_id = the arrival, dup_of = the corpus asset, dist). The band
+    * count is the one the index recorded, the only banding under which
+    * the batch's keys are the index's keys.
     *
-    * SMALL batches prune the index scan: when the batch's distinct
-    * band keys fit `maxKeyLiterals` (the capped-literal contract of
-    * the sign-index / n-gram probes), they become an IN filter on the
-    * bucket column — Spark's bucket pruning then reads only the
-    * matching bucket files and parquet row-group stats skip within
-    * them, so an always-on stream probing a 100 TB index with a few
-    * hundred arrivals reads a key-proportional slice, not the corpus
-    * (measured: the UNPRUNED 20k-batch probe costs 29 s against a
-    * 100M-sig index — linear in the corpus — BASELINE.md round-16).
-    * Past the cap the unpruned bucketed join wins anyway.
+    * SMALL batches prune the index scan: the batch's distinct band keys
+    * become an IN filter on the bucket column
+    * ([[IndexVersions.pruneToProbed]]) — Spark's bucket pruning then
+    * reads only the matching bucket files and parquet row-group stats
+    * skip within them, so an always-on stream probing a 100 TB index
+    * with a few hundred arrivals reads a key-proportional slice, not
+    * the corpus (measured: the UNPRUNED 20k-batch probe costs 29 s
+    * against a 100M-sig index — linear in the corpus — BASELINE.md
+    * round-16). Past the cap the unpruned bucketed join wins anyway.
     */
   def probePhashIndex(spark: SparkSession, table: String,
-      batch: DataFrame, maxDist: Int, bands: Int = 0,
-      maxKeyLiterals: Int = 1024): DataFrame = {
+      batch: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist >= 0 && maxDist <= 64, s"maxDist: $maxDist")
-    probeJoin(spark, table, perceptualSig(batch), bands, maxKeyLiterals,
-        PhashKernel)
+    val (resolved, bands, _) = probedIndex(spark, table, _ == PhashKernel,
+      PhashKernel)
+    probeJoin(spark, resolved, perceptualSig(batch), bands)
       .select(col("q_id").as("media_id"),
         col("media_id").as("dup_of"),
         bit_count(col("q_phash").bitwiseXOR(col("phash")))
@@ -324,49 +317,35 @@ object Multimodal {
       .distinct()                     // ahead of the dedup shuffle
   }
 
-  /** Resolve, validate, prune, and band-join a probe against a
-    * persisted signature index — the shared core of the asset probe
-    * and the video frame probe. Output: the candidate rows
-    * (band, key, media_id, phash, q_id, q_phash), distance NOT yet
-    * verified. */
-  private def probeJoin(spark: SparkSession, table: String,
-      batchSigs: DataFrame, bands: Int, maxKeyLiterals: Int,
-      kernel: String): DataFrame = {
-    require(maxKeyLiterals >= 0, s"maxKeyLiterals: $maxKeyLiterals")
-    // a compacted index resolves through its version pointer to the
-    // committed generation's table; an uncompacted one to itself —
-    // probes pick up a committed fold with no caller involvement
+  /** Resolve a signature index to its committed generation's table
+    * (a compacted index through its version pointer, an uncompacted one
+    * to itself — probes pick up a committed fold with no caller
+    * involvement), attach it, and return it with its recorded band
+    * count once its recorded kernel passes `accepts` (`what` names the
+    * kernel the probe computes). */
+  private def probedIndex(spark: SparkSession, table: String,
+      accepts: String => Boolean, what: String): (String, Int, String) = {
     val resolved = resolvePhashTable(spark, table)
     require(Bucketed.registerBucketed(spark, resolved, "key"),
       s"no phash index at $table")
-    val meta = phashIndexMeta(spark, resolved)
-    meta.foreach { case (mb, mk) =>
-      require(mk == kernel,
-        s"phash index $table was written with kernel `$mk`; this probe " +
-          s"computes `$kernel` signatures")
-      if (bands > 0) require(mb == bands,
-        s"phash index $table was written with $mb bands; probe called " +
-          s"with $bands — mismatched banding silently finds nothing")
-    }
-    val effBands = if (bands > 0) bands
-      else meta.map(_._1).getOrElse(throw new IllegalArgumentException(
-        s"no $PhashMetaFile under phash index $table — pass bands " +
-          "explicitly"))
-    val qb = bandedKeys(batchSigs, effBands)
+    val (bands, kernel) = phashIndexMeta(spark, table)
+    require(accepts(kernel),
+      s"phash index $table was written with kernel `$kernel`; this probe " +
+        s"computes `$what` signatures")
+    (resolved, bands, kernel)
+  }
+
+  /** Prune and band-join a probe against a persisted signature index —
+    * the shared core of the asset probe and the video frame probe.
+    * Output: the candidate rows (band, key, media_id, phash, q_id,
+    * q_phash), distance NOT yet verified. */
+  private def probeJoin(spark: SparkSession, resolved: String,
+      batchSigs: DataFrame, bands: Int): DataFrame = {
+    val qb = bandedKeys(batchSigs, bands)
       .withColumnRenamed("media_id", "q_id")
       .withColumnRenamed("phash", "q_phash")
-    // bounded collect: distinct probe keys, CAPPED — limit(cap+1)
-    // bounds the driver materialization no matter how large the batch
-    // is; at or under the cap the IN filter lets Spark prune bucket
-    // FILES (the filter is on the bucket column) and row groups
-    val keys = qb.select(col("key")).distinct()
-      .limit(maxKeyLiterals + 1).collect().map(_.getLong(0))
-    val raw = spark.table(resolved)
-    val idx =
-      if (keys.length <= maxKeyLiterals)
-        raw.filter(col("key").isin(keys.toIndexedSeq: _*))
-      else raw
-    idx.join(qb, Seq("band", "key"))
+    IndexVersions.pruneToProbed(spark.table(resolved), qb, "key")
+      .join(qb, Seq("band", "key"))
   }
 
   /** VIDEO-level perceptual near-dup: two videos are near-duplicates
@@ -441,8 +420,8 @@ object Multimodal {
       .distinct()
   }
 
-  private def frameKernel(frameBytes: Int): String =
-    s"$PhashKernel-frame$frameBytes"
+  /** Kernel id prefix of a frame index; the frame size follows it. */
+  private val FrameKernel = s"$PhashKernel-frame"
 
   /** PERSIST the video catalog's FRAME index: every video's distinct
     * frame signatures, banded and bucketed exactly like the asset
@@ -457,7 +436,7 @@ object Multimodal {
   def writeVideoFrameIndex(media: DataFrame, table: String, buckets: Int,
       frameBytes: Int = 64, bands: Int = 2): Unit =
     writePhashIndexSigs(frameSigs(media, frameBytes), table, buckets,
-      bands, frameKernel(frameBytes))
+      bands, s"$FrameKernel$frameBytes")
 
   /** Probe a [[writeVideoFrameIndex]] catalog with arriving videos:
     * (media_id = the arrival, dup_of = the catalog video, matched =
@@ -467,21 +446,23 @@ object Multimodal {
     * frames — the [[videoNearDupPairs]] containment rule, computed
     * ARRIVAL-side only (the catalog's per-video frame counts never
     * load). Small batches prune the index scan through the same
-    * capped key literals as [[probePhashIndex]]. `frameBytes` must
-    * match the build (validated via the kernel id in the sidecar).
+    * capped key literals as [[probePhashIndex]]. The frame size and the
+    * band count are the build's, read from the record (the frame size
+    * is part of its kernel id).
     */
   def probeVideoFrameIndex(spark: SparkSession, table: String,
-      batch: DataFrame, frameBytes: Int = 64, maxDist: Int = 6,
-      minContainPct: Int = 50, bands: Int = 0,
-      maxKeyLiterals: Int = 1024): DataFrame = {
+      batch: DataFrame, maxDist: Int = 6,
+      minContainPct: Int = 50): DataFrame = {
     require(maxDist >= 0 && maxDist <= 64, s"maxDist: $maxDist")
     require(minContainPct >= 0 && minContainPct <= 100,
       s"minContainPct: $minContainPct")
-    val qsigs = frameSigs(batch, frameBytes)
+    val (resolved, bands, kernel) = probedIndex(spark, table,
+      k => k.startsWith(FrameKernel) && k.drop(FrameKernel.length).toIntOption
+        .exists(_ >= 1), s"${FrameKernel}N")
+    val qsigs = frameSigs(batch, kernel.drop(FrameKernel.length).toInt)
     val nf = qsigs.groupBy(col("media_id"))
       .agg(count(lit(1)).as("frames"))
-    probeJoin(spark, table, qsigs, bands, maxKeyLiterals,
-        frameKernel(frameBytes))
+    probeJoin(spark, resolved, qsigs, bands)
       .filter(bit_count(col("q_phash").bitwiseXOR(col("phash")))
         <= maxDist)
       .select(col("q_id"), col("q_phash"), col("media_id").as("dup_of"))

@@ -16,8 +16,10 @@ import graft.functions.VectorFunctions
   *    probe) over L2-normalized vectors, and the exact squared-L2
   *    quantization error;
   *  - the sidecar (`nlist`, `dims`, the index's own integer params,
-  *    `seed`, `kernel`, `build_mse`, `segs_upto`), written as JSON and
-  *    read back with the kernel and dims checks;
+  *    `seed`, `kernel`, `build_mse`, `segs_upto`), the index's layout
+  *    record ([[IndexVersions.writeLayout]]): every probe, append and
+  *    compaction takes its layout from it, a generation without one is
+  *    refused, and a kernel mismatch refuses;
   *  - the base generation: `<root>/_ixvN/{centroids, <leg>/cell=K/}`
   *    committed through the [[IndexVersions]] pointer (sidecar → flip →
   *    retention of current + one rollback target). Every parquet dir of
@@ -61,15 +63,11 @@ private[graft] object SegmentedIndex {
   }
 
   private def writeMeta(spark: SparkSession, dir: String, layout: Layout,
-      m: Meta): Unit = {
-    val fields = Seq("nlist" -> m.nlist.toString, "dims" -> m.dims.toString) ++
-      m.params.map { case (k, v) => k -> v.toString } ++
-      Seq("seed" -> m.seed.toString, "kernel" -> s""""${layout.kernel}"""",
-        "build_mse" -> m.buildMse.toString,
-        "segs_upto" -> m.segsUpto.toString)
-    IndexVersions.writeText(spark, dir, layout.metaFile,
-      fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
-  }
+      m: Meta): Unit =
+    IndexVersions.writeLayout(spark, dir, layout.metaFile,
+      Seq("nlist" -> m.nlist, "dims" -> m.dims) ++ m.params ++
+        Seq("seed" -> m.seed, "kernel" -> layout.kernel,
+          "build_mse" -> m.buildMse, "segs_upto" -> m.segsUpto): _*)
 
   /** Sidecar of the COMMITTED generation — None when the resolved
     * generation has none (not an index of this kind). A kernel mismatch
@@ -77,33 +75,21 @@ private[graft] object SegmentedIndex {
     * `segs_upto` = 0. */
   def metaFull(spark: SparkSession, path: String,
       layout: Layout): Option[Meta] =
-    IndexVersions.readText(spark, IndexVersions.resolvePath(spark, path),
-        layout.metaFile).map { txt =>
-      val kv = """"(\w+)":("[^"]*"|[^,}]*)""".r.findAllMatchIn(txt)
-        .map(g => g.group(1) -> g.group(2).stripPrefix("\"")
-          .stripSuffix("\"")).toMap
-      def field(k: String): String = kv.getOrElse(k,
-        throw new IllegalArgumentException(
-          s"${layout.metaFile} at $path has no `$k`: $txt"))
-      require(field("kernel") == layout.kernel,
-        s"${layout.name} index at $path was built with kernel " +
-          s"`${field("kernel")}`; this index computes `${layout.kernel}`")
-      Meta(field("nlist").toInt, field("dims").toInt, field("seed").toLong,
-        field("build_mse").toDouble, kv.get("segs_upto").fold(0L)(_.toLong),
-        layout.params.map(k => k -> field(k).toInt))
-    }
+    IndexVersions.layoutIn(spark, IndexVersions.resolvePath(spark, path),
+      layout.metaFile).map(metaOf(layout))
 
-  def requireMeta(spark: SparkSession, path: String, layout: Layout,
-      dims: Int): Meta = {
-    val m = metaFull(spark, path, layout).getOrElse(
-      throw new IllegalArgumentException(
-        s"no ${layout.metaFile} under the committed generation of $path " +
-          s"— not an ${layout.name} index"))
-    if (dims > 0) require(m.dims == dims,
-      s"${layout.name} index at $path was built with dims=${m.dims}; " +
-        s"called with dims=$dims")
-    m
+  private def metaOf(layout: Layout)(r: IndexVersions.LayoutRecord): Meta = {
+    r.requireKernel(layout.kernel, s"${layout.name} index")
+    Meta(r.int("nlist"), r.int("dims"), r.long("seed"),
+      r.double("build_mse"), r.fields.get("segs_upto").fold(0L)(_.toLong),
+      layout.params.map(k => k -> r.int(k)))
   }
+
+  /** Sidecar of the COMMITTED generation; a generation without one is
+    * refused with its path and "rebuild". */
+  def requireMeta(spark: SparkSession, path: String, layout: Layout): Meta =
+    metaOf(layout)(IndexVersions.layout(spark,
+      IndexVersions.resolvePath(spark, path), layout.metaFile))
 
   /** The committed generation's (cell, centroid) frame, read with its
     * recorded schema ([[IndexVersions.readParquet]]: no metadata job). */
@@ -287,9 +273,9 @@ private[graft] object SegmentedIndex {
     * deterministic) and the manifest commit is a set-union. The caller
     * owns the numbering (single writer). */
   def append(spark: SparkSession, path: String, layout: Layout,
-      batch: DataFrame, idCol: String, vecCol: String, dims: Int,
+      batch: DataFrame, idCol: String, vecCol: String,
       atSeg: Long)(encode: (DataFrame, DataFrame, Meta) => DataFrame): Long = {
-    val m = requireMeta(spark, path, layout, dims)
+    val m = requireMeta(spark, path, layout)
     if (atSeg >= 0 && atSeg <= m.segsUpto) return -2L
     val committed = committedSegs(spark, path)
     val live = committed.filter(_ > m.segsUpto)
@@ -320,9 +306,9 @@ private[graft] object SegmentedIndex {
     * manifest prune — so a crash between base flip and prune still
     * probes exactly, and the next mutation heals the leftover dirs.
     * Returns the new base version. */
-  def compact(spark: SparkSession, path: String, layout: Layout,
-      dims: Int)(rebuild: (Meta, DataFrame, Long) => Int): Int = {
-    val m = requireMeta(spark, path, layout, dims)
+  def compact(spark: SparkSession, path: String, layout: Layout)(
+      rebuild: (Meta, DataFrame, Long) => Int): Int = {
+    val m = requireMeta(spark, path, layout)
     val live = committedSegs(spark, path).filter(_ > m.segsUpto)
     val v = rebuild(m, legs(spark, path, layout, live),
       (live :+ m.segsUpto).max)
@@ -340,9 +326,8 @@ private[graft] object SegmentedIndex {
     * deserves a retrain. Zero-batch guarded; no collect of the batch
     * (one broadcast join, one agg row). */
   def drift(spark: SparkSession, path: String, layout: Layout,
-      batch: DataFrame, idCol: String, vecCol: String,
-      dims: Int): DataFrame = {
-    val buildMse = requireMeta(spark, path, layout, dims).buildMse
+      batch: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val buildMse = requireMeta(spark, path, layout).buildMse
     val centroids = readCentroids(spark, path)
     assignWith(arrivals(batch, idCol, vecCol), Quantizer.fromFrame(centroids))
       .join(broadcast(centroids), Seq("cell"))
@@ -361,41 +346,24 @@ private[graft] object SegmentedIndex {
 
   /** Rank `nprobe` cells per query ([[Quantizer.probe]]: one narrow
     * kernel pass, the build's cell rule on the normalized space; the
-    * query side never shuffles to pick its cells) and prune every leg's scan
-    * by a bounded literal IN over the distinct probed cells, listed by
-    * one narrow job. A full probe (nprobe ≥ nlist) needs no job to list
-    * its cells; a probe set past `maxCellLiterals` distinct cells skips
-    * the prune (at that occupancy the unpruned scan wins anyway — the
-    * probeSignIndex cap contract). Each corpus row lives in exactly one
-    * cell, so candidates need no dedup. */
+    * query side never shuffles to pick its cells) and prune every leg's
+    * scan to the probed cells ([[IndexVersions.pruneToProbed]]). A full
+    * probe (nprobe ≥ nlist) reads every cell and lists none. Each corpus
+    * row lives in exactly one cell, so candidates need no dedup. */
   def probe(spark: SparkSession, path: String, layout: Layout,
-      queries: DataFrame, qidCol: String, vecCol: String, nprobe: Int,
-      dims: Int, maxCellLiterals: Int): Probe = {
-    require(maxCellLiterals >= 0, s"maxCellLiterals: $maxCellLiterals")
-    val meta = requireMeta(spark, path, layout, dims)
+      queries: DataFrame, qidCol: String, vecCol: String,
+      nprobe: Int): Probe = {
+    val meta = requireMeta(spark, path, layout)
     val centroids = readCentroids(spark, path)
     val quant = Quantizer.fromFrame(centroids)
     val cells = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"),
         Embeddings.normalize(col(vecCol)).as("qn"))
       .select(col("qid"), col("qvec"), col("qn"),
         explode(quant.probe(col("qn"), nprobe)).as("cell"))
-    // one narrow job: each partition emits its distinct cells, capped
-    // at cap + 1, and the driver merges them — at most partitions ×
-    // min(nlist, cap + 1) ints, no exchange
-    val cap = maxCellLiterals + 1
-    val cellLits =
-      if (nprobe >= meta.nlist) (0 until meta.nlist).toArray
-      else {
-        import spark.implicits._
-        cells.select(col("cell")).as[Int]
-          .mapPartitions(_.distinct.take(cap))
-          .collect().distinct.take(cap)
-      }
     val raw = view(spark, path, layout)
-    val pruned =
-      if (cellLits.length <= maxCellLiterals)
-        raw.filter(col("cell").isin(cellLits.map(Int.box): _*))
-      else raw
-    Probe(meta, centroids, cells, pruned)
+    val index =
+      if (nprobe >= meta.nlist) raw
+      else IndexVersions.pruneToProbed(raw, cells, "cell")
+    Probe(meta, centroids, cells, index)
   }
 }

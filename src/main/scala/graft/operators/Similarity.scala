@@ -339,11 +339,10 @@ object Similarity {
     * vectors has 2,800-vector buckets, and a 20k-row batch probe costs
     * 89 s of cosine verification — BASELINE.md round-11). The planes /
     * dims / seed actually used are recorded in a `_graft_sign_meta.json`
-    * sidecar, which [[probeSignIndex]] and
-    * [[Dedup.incrementalNewNearDupEmbedDisk]] read back when THEIR
-    * `numPlanes` is left ≤ 0 — the probe side must match the write side
-    * bit-for-bit, so the index carries its own configuration the way
-    * any real index format does.
+    * layout record, the only source [[probeSignIndex]] and
+    * [[Dedup.incrementalNewNearDupEmbedDisk]] take them from — the
+    * probe side must match the write side bit-for-bit, so the index
+    * carries its own configuration the way any real index format does.
     */
   def writeSignIndex(corpus: DataFrame, path: String, dims: Int,
       numPlanes: Int = 8, seed: Long = 42L,
@@ -360,85 +359,47 @@ object Similarity {
             .as("bucket"))
         .repartition(col("bucket")),
       path, Seq("bucket"))
-    IndexVersions.writeText(corpus.sparkSession, path, SignMetaFile,
-      s"""{"planes":$planes,"dims":$dims,"seed":$seed}""")
+    IndexVersions.writeLayout(corpus.sparkSession, path, SignMetaFile,
+      "planes" -> planes, "dims" -> dims, "seed" -> seed)
   }
 
   private val SignMetaFile = "_graft_sign_meta.json"
 
-  /** The (planes, dims, seed) a [[writeSignIndex]] layout was written
-    * with, from its sidecar — None for pre-sidecar indexes. `path` is
+  /** The (planes, dims, seed) the committed generation of a
+    * [[writeSignIndex]] layout was written with, from its layout record
+    * — refused with the path and "rebuild" when it has none. `path` is
     * the index ROOT: a compacted index resolves through its version
-    * pointer ([[IndexVersions]]) to the committed generation's sidecar.
+    * pointer ([[IndexVersions]]) to the committed generation's record.
     */
-  def signIndexMeta(spark: SparkSession,
-      path: String): Option[(Int, Int, Long)] =
-    IndexVersions.readText(spark, IndexVersions.resolvePath(spark, path),
-        SignMetaFile).flatMap { txt =>
-      val re = """"planes":(\d+),"dims":(\d+),"seed":(-?\d+)""".r
-      re.findFirstMatchIn(txt).map(m =>
-        (m.group(1).toInt, m.group(2).toInt, m.group(3).toLong))
-    }
-
-  /** Resolve the plane count for probing `path`: an explicit value wins
-    * (and is validated against the sidecar when one exists — a
-    * mismatched probe returns silently-wrong empty joins, the worst
-    * failure mode an index can have); ≤ 0 requires the sidecar.
-    */
-  private[operators] def resolveSignPlanes(spark: SparkSession,
-      path: String, numPlanes: Int, dims: Int, seed: Long): Int = {
-    val meta = signIndexMeta(spark, path)
-    meta.foreach { case (mp, md, ms) =>
-      require(md == dims && ms == seed,
-        s"sign index at $path was written with dims=$md seed=$ms; " +
-          s"probe called with dims=$dims seed=$seed")
-      if (numPlanes > 0) require(mp == numPlanes,
-        s"sign index at $path was written with $mp planes; " +
-          s"probe called with $numPlanes")
-    }
-    if (numPlanes > 0) numPlanes
-    else meta.map(_._1).getOrElse(throw new IllegalArgumentException(
-      s"no $SignMetaFile under $path — pass numPlanes explicitly"))
+  def signIndexMeta(spark: SparkSession, path: String): (Int, Int, Long) = {
+    val r = IndexVersions.layout(spark,
+      IndexVersions.resolvePath(spark, path), SignMetaFile)
+    (r.int("planes"), r.int("dims"), r.long("seed"))
   }
 
-  /** Multi-probe ANN top-k over a [[writeSignIndex]] layout. The probe
-    * bucket set (|queries| × (1 + p + p(p−1)/2) longs, queries are
-    * small by the ANN contract) is collected to a LITERAL IN-filter so
-    * Catalyst prunes index directories at scan time — the scan reads
-    * nprobe/2^p of the corpus, which is the property that survives a
-    * 1000-executor scale-up. A query set large enough to probe more
-    * than `maxBucketLiterals` (default 1024) distinct buckets skips the
-    * filter instead of building an unbounded IN-list + driver
-    * round-trip (the [[Dedup.incrementalNewNearDupEmbedDisk]] cap — at
-    * that occupancy pruning buys nothing anyway). Scoring and rank
+  /** Multi-probe ANN top-k over a [[writeSignIndex]] layout, replaying
+    * the signature its record names. The probe buckets (|queries| ×
+    * (1 + p + p(p−1)/2) longs, queries are small by the ANN contract)
+    * become a literal IN-filter, so Catalyst prunes index directories at
+    * scan time — the scan reads nprobe/2^p of the corpus, which is the
+    * property that survives a 1000-executor scale-up. Past
+    * [[IndexVersions.MaxProbeKeys]] distinct buckets the scan is
+    * unpruned ([[IndexVersions.pruneToProbed]]). Scoring and rank
     * semantics are exactly [[lshTopK]]'s.
     */
   def probeSignIndex(spark: SparkSession, path: String,
-      queries: DataFrame, k: Int, dims: Int, numPlanes: Int = 0,
-      probeHamming: Int = 1, seed: Long = 42L,
-      qidCol: String = "qid", vecCol: String = "embedding",
-      maxBucketLiterals: Int = 1024): DataFrame = {
-    require(maxBucketLiterals >= 0, s"maxBucketLiterals: $maxBucketLiterals")
-    val planes = resolveSignPlanes(spark, path, numPlanes, dims, seed)
+      queries: DataFrame, k: Int, probeHamming: Int = 1,
+      qidCol: String = "qid", vecCol: String = "embedding"): DataFrame = {
+    val (planes, dims, seed) = signIndexMeta(spark, path)
     val q = probeBuckets(queries, Seq(col(qidCol).as("qid"),
       col(vecCol).as("qvec")), col(vecCol), planes, dims, seed, probeHamming)
-    // bounded collect: distinct probe buckets, CAPPED — limit(cap+1)
-    // bounds the driver materialization no matter how large the query
-    // set is; past the cap the unpruned scan wins anyway
-    val maxLits = maxBucketLiterals
-    val buckets = q.select("bucket").distinct().limit(maxLits + 1)
-      .collect().map(_.getLong(0))
     // read the COMMITTED generation: a compacted index resolves through
-    // its version pointer, a legacy flat layout through itself
-    val raw = IndexVersions.readParquet(spark,
-      Seq(IndexVersions.resolvePath(spark, path)))
-    val pruned =
-      if (buckets.length <= maxLits) raw.filter(col("bucket").isin(buckets: _*))
-      else raw
-    // `bucket` is read as the LONG the writer recorded, the probe
-    // side's type: the join needs no cast
-    val index = pruned.select(col("id"), col("vec").as("cvec"),
-      col("bucket"))
+    // its version pointer, a legacy flat layout through itself. `bucket`
+    // is read as the LONG the writer recorded, the probe side's type:
+    // the join needs no cast
+    val index = IndexVersions.pruneToProbed(IndexVersions.readParquet(spark,
+        Seq(IndexVersions.resolvePath(spark, path))), q, "bucket")
+      .select(col("id"), col("vec").as("cvec"), col("bucket"))
     exactTopK(index.join(broadcast(q), Seq("bucket")), k)
   }
 

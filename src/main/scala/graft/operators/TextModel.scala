@@ -84,27 +84,24 @@ object TextModel {
     IndexVersions.writeParquet(
       weights.select(col("bucket").cast("int"), col("weight").cast("long")),
       dir)
-    IndexVersions.writeText(spark, dir, ModelMetaFile,
-      s"""{"buckets":$buckets,"bigrams":$bigrams,""" +
-        s""""kernel":"$Kernel","scale":$Scale}""")
+    IndexVersions.writeLayout(spark, dir, ModelMetaFile,
+      "buckets" -> buckets, "bigrams" -> bigrams, "kernel" -> Kernel,
+      "scale" -> Scale)
     IndexVersions.commit(spark, path, v)
     IndexVersions.dropOldPathVersions(spark, path, keepPrevious = 1): Unit
   }
 
   /** The (buckets, bigrams) the committed model generation was written
-    * with — None when no sidecar exists at the resolved generation. */
+    * with — None when no sidecar exists at the resolved generation. A
+    * model trained with another hash kernel is refused. */
   def modelMeta(spark: SparkSession, path: String): Option[(Int, Boolean)] =
-    IndexVersions.readText(spark, IndexVersions.resolvePath(spark, path),
-        ModelMetaFile).flatMap { txt =>
-      val re = (""""buckets":(\d+),"bigrams":(true|false),""" +
-        """"kernel":"([^"]*)"""").r
-      re.findFirstMatchIn(txt).map { m =>
-        require(m.group(3) == Kernel,
-          s"model at $path was trained with hash kernel `${m.group(3)}`; " +
-            s"this scorer computes `$Kernel` buckets")
-        (m.group(1).toInt, m.group(2).toBoolean)
-      }
-    }
+    IndexVersions.layoutIn(spark, IndexVersions.resolvePath(spark, path),
+      ModelMetaFile).map(modelOf)
+
+  private def modelOf(r: IndexVersions.LayoutRecord): (Int, Boolean) = {
+    r.requireKernel(Kernel, "model")
+    (r.int("buckets"), r.boolean("bigrams"))
+  }
 
   /** Load the committed generation's weights as the dense vector the
     * scoring kernel broadcasts (absent buckets → 0). Bounded by the
@@ -113,10 +110,8 @@ object TextModel {
     * and out-of-range bucket ids (a corrupt or foreign weight file). */
   def readWeights(spark: SparkSession,
       path: String): (IndexedSeq[Long], Boolean) = {
-    val (buckets, bigrams) = modelMeta(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no $ModelMetaFile under the committed generation of $path — " +
-          "not a model artifact"))
+    val (buckets, bigrams) = modelOf(IndexVersions.layout(spark,
+      IndexVersions.resolvePath(spark, path), ModelMetaFile))
     val dense = new Array[Long](buckets)
     IndexVersions.readParquet(spark,
         Seq(IndexVersions.resolvePath(spark, path)))

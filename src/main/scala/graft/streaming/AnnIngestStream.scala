@@ -58,11 +58,8 @@ object AnnIngestStream {
     * lock). */
   private[graft] def segBase(spark: SparkSession, checkpointDir: String,
       indexPath: String): Long =
-    IndexVersions.readText(spark, checkpointDir, BaseFile) match {
-      case Some(txt) =>
-        """"seg_base":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-          .getOrElse(throw new IllegalStateException(
-            s"unparseable $BaseFile under $checkpointDir: $txt"))
+    IndexVersions.layoutIn(spark, checkpointDir, BaseFile) match {
+      case Some(r) => r.long("seg_base")
       case None =>
         val meta = IvfPqIndex.metaFull(spark, indexPath).getOrElse(
           throw new IllegalArgumentException(
@@ -70,7 +67,7 @@ object AnnIngestStream {
         val base = (SegmentedIndex.committedSegs(spark, indexPath) :+
           meta.segsUpto).max
         IndexVersions.writeText(spark, checkpointDir, BaseFile,
-          s"""{"seg_base":$base}""", overwrite = false)
+          IndexVersions.renderLayout("seg_base" -> base), overwrite = false)
         base
     }
 

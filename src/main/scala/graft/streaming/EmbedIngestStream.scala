@@ -39,32 +39,31 @@ object EmbedIngestStream {
     * contract on the vector side), for arrival sources that can emit
     * two near-identical vectors in one micro-batch; off by default
     * because it pays the symmetric batch×batch banding cost per
-    * arrival. The plane count auto-derives from the BATCH size
-    * ([[Dedup.embeddingNearDupPairsAuto]]) — batch occupancy, not
-    * corpus occupancy, is what bounds this stage's bucket width.
+    * arrival. Its plane count derives from the BATCH size
+    * ([[Dedup.embeddingNearDupPairs]]' default) — batch occupancy, not
+    * corpus occupancy, is what bounds this stage's bucket width. Dims,
+    * seed and the stage-2/3 plane count are the index record's.
     */
   private[graft] def applyBatch(spark: SparkSession, batch: DataFrame,
       accepted: Option[DataFrame], indexPath: String, idCol: String,
-      vecCol: String, dims: Int, threshold: Double, probeHamming: Int,
-      seed: Long, nearWithinBatch: Boolean = false): DataFrame = {
+      vecCol: String, threshold: Double, probeHamming: Int,
+      nearWithinBatch: Boolean = false): DataFrame = {
+    val (planes, dims, seed) = Similarity.signIndexMeta(spark, indexPath)
     val b1e = IngestStream.exactWithinBatch(batch, idCol, col(vecCol))
     val b1 =
       if (!nearWithinBatch) b1e
       else IngestStream.keepComponentMin(b1e, idCol,
-        Dedup.embeddingNearDupPairsAuto(b1e, idCol, vecCol, dims,
+        Dedup.embeddingNearDupPairs(b1e, idCol, vecCol, dims,
           threshold = threshold, seed = seed))
     val newVsCorpus = Dedup.incrementalNewNearDupEmbedDisk(spark,
-      indexPath, b1, idCol, vecCol, dims, numPlanes = 0,
-      threshold = threshold, probeHamming = probeHamming, seed = seed)
+      indexPath, b1, idCol, vecCol, threshold = threshold,
+      probeHamming = probeHamming)
     val b2 = b1.join(newVsCorpus, Seq(idCol))
     accepted match {
       case None => b2
       case Some(acc) =>
-        // the accepted-set probe replays the index's own plane count so
+        // the accepted-set probe replays the index's own signature so
         // stage 2 and stage 3 share one signature definition
-        val planes = Similarity.signIndexMeta(spark, indexPath)
-          .map(_._1).getOrElse(throw new IllegalArgumentException(
-            s"no sign-index sidecar under $indexPath"))
         val newVsAccepted = Dedup.incrementalNewNearDupEmbed(acc, b2,
           idCol, vecCol, dims, numPlanes = planes, threshold = threshold,
           probeHamming = probeHamming, seed = seed)
@@ -73,31 +72,31 @@ object EmbedIngestStream {
   }
 
   /** Drain `srcDir` through the ingest pipeline
-    * ([[IngestStream.runDedup]]). `dims`/`seed` must match the index
-    * build; the plane count is read from the index sidecar.
+    * ([[IngestStream.runDedup]]). Dims, seed and the plane count are
+    * the index record's.
     */
   def run(spark: SparkSession, srcDir: String, indexPath: String,
-      dims: Int, outDir: String, checkpointDir: String,
+      outDir: String, checkpointDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      threshold: Double = 0.4, probeHamming: Int = 1, seed: Long = 42L,
+      threshold: Double = 0.4, probeHamming: Int = 1,
       maxFilesPerTrigger: Int = 1,
       compactCorpus: Option[DataFrame] = None,
       compactMaxRows: Long = Long.MaxValue,
       nearWithinBatch: Boolean = false): Unit = {
-    require(Similarity.signIndexMeta(spark, indexPath).isDefined,
-      s"no sign index (with sidecar) at $indexPath")
+    // an index without its record is refused before the stream starts
+    Similarity.signIndexMeta(spark, indexPath): Unit
     IngestStream.runDedup(spark, srcDir, outDir, checkpointDir,
       maxFilesPerTrigger, compactMaxRows, compactCorpus.map(corpus => () =>
         compact(spark, corpus, indexPath, outDir, idCol, vecCol))) {
       (batch, accepted) =>
         applyBatch(spark, batch, accepted, indexPath, idCol, vecCol,
-          dims, threshold, probeHamming, seed, nearWithinBatch)
+          threshold, probeHamming, nearWithinBatch)
     }
   }
 
   /** [[IngestStream.fold]] the accepted vectors into the sign-index
     * version `<indexPath>/_ixv<N+1>`. Dims and seed come from the
-    * current index's sidecar (the probe side must match the write side
+    * current index's record (the probe side must match the write side
     * bit-for-bit); the plane count re-derives from the GROWN corpus
     * size ([[Similarity.writeSignIndex]] auto mode) — `corpusCount` ≥ 0
     * spares that sizing its corpus re-scan.
@@ -106,8 +105,6 @@ object EmbedIngestStream {
       outDir: String, idCol: String = "vec_id",
       vecCol: String = "embedding", corpusCount: Long = -1L): Long = {
     val (_, dims, seed) = Similarity.signIndexMeta(spark, indexPath)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no sign index (with sidecar) at $indexPath"))
     IngestStream.fold(spark, corpus, outDir, Seq(idCol, vecCol), indexPath,
       IndexVersions.versionDir(indexPath, _), corpusCount) {
       (rows, target, known) =>

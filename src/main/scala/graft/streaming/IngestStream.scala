@@ -84,13 +84,19 @@ object IngestStream {
     * .promoteIfBetter]]) applies from the next micro-batch with no
     * stream restart — the weights collect it pays per batch is
     * bounded by the sidecar's bucket count.
+    *
+    * Every stage shingles and thresholds at the `n` and `threshold` the
+    * committed index generation recorded ([[Dedup.ngramIndexMeta]], a
+    * driver-side read of one small file per batch), so a compaction
+    * that rebuilt the index applies from the next batch.
     */
   private[graft] def applyBatch(spark: SparkSession, batch: DataFrame,
       accepted: Option[DataFrame], indexTablePrefix: String,
-      idCol: String, textCol: String, n: Int,
-      threshold: Double, nearWithinBatch: Boolean = false,
+      idCol: String, textCol: String, nearWithinBatch: Boolean = false,
       modelPath: Option[String] = None,
       modelThreshold: Long = 0L): DataFrame = {
+    val (n, threshold) = Dedup.ngramIndexMeta(spark,
+      Dedup.ngramDfDir(spark, indexTablePrefix))
     val b0 = modelPath match {
       case None => batch
       case Some(p) =>
@@ -105,7 +111,7 @@ object IngestStream {
       else keepComponentMin(b1e, idCol,
         Dedup.ngramJaccardPairs(b1e, idCol, textCol, n, threshold))
     val dupVsCorpus = Dedup.probeNgramIndexBucketed(spark,
-        indexTablePrefix, b1, idCol, textCol, n, threshold)
+        indexTablePrefix, b1, idCol, textCol)
       .select(col("id_batch").as(idCol)).distinct()
     val b2 = b1.join(dupVsCorpus, Seq(idCol), "left_anti")
     accepted match {
@@ -121,28 +127,26 @@ object IngestStream {
   /** Run the ingest stream ([[runDedup]]) to completion over whatever
     * is in `srcDir`. The bucketed index tables are attached on entry
     * when this session doesn't know them yet
-    * ([[Dedup.attachNgramIndexBucketed]]; `indexBuckets` ≤ 0
-    * self-configures from the index sidecars).
+    * ([[Dedup.attachNgramIndexBucketed]]: bucket counts from the index
+    * records); `n` and `threshold` are the index's own.
     */
   def run(spark: SparkSession, srcDir: String, indexTablePrefix: String,
-      indexBuckets: Int = 0, outDir: String, checkpointDir: String,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
-      threshold: Double = 0.5, maxFilesPerTrigger: Int = 1,
+      outDir: String, checkpointDir: String,
+      idCol: String = "doc_id", textCol: String = "text",
+      maxFilesPerTrigger: Int = 1,
       compactCorpus: Option[DataFrame] = None,
       compactMaxRows: Long = Long.MaxValue,
       nearWithinBatch: Boolean = false,
       modelPath: Option[String] = None,
       modelThreshold: Long = 0L): Unit = {
-    require(
-      Dedup.attachNgramIndexBucketed(spark, indexTablePrefix, indexBuckets),
+    require(Dedup.attachNgramIndexBucketed(spark, indexTablePrefix),
       s"no bucketed n-gram index under table prefix $indexTablePrefix")
     runDedup(spark, srcDir, outDir, checkpointDir, maxFilesPerTrigger,
       compactMaxRows, compactCorpus.map(corpus => () =>
         compact(spark, corpus, indexTablePrefix, outDir,
-          idCol, textCol, n, threshold))) { (batch, accepted) =>
+          idCol, textCol))) { (batch, accepted) =>
       applyBatch(spark, batch, accepted, indexTablePrefix,
-        idCol, textCol, n, threshold, nearWithinBatch,
-        modelPath, modelThreshold)
+        idCol, textCol, nearWithinBatch, modelPath, modelThreshold)
     }
   }
 
@@ -244,19 +248,21 @@ object IngestStream {
   /** [[fold]] the accepted set into the n-gram index version under
     * table prefix `<prefix>_ixv<N+1>` (the index tables hold shingle
     * structures, not raw text, so the fold needs the `corpus` rows).
-    * The bucket count re-derives from the GROWN corpus size
+    * `n` and `threshold` replay the committed generation's record. The
+    * bucket count re-derives from the GROWN corpus size
     * ([[Dedup.writeNgramIndexBucketed]] auto mode) unless pinned;
     * `corpusCount` ≥ 0 spares that sizing its corpus re-scan.
     */
   def compact(spark: SparkSession, corpus: DataFrame,
       indexTablePrefix: String, outDir: String,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
-      threshold: Double = 0.5, buckets: Int = 0,
+      idCol: String = "doc_id", textCol: String = "text", buckets: Int = 0,
       corpusCount: Long = -1L): Long =
     fold(spark, corpus, outDir, Seq(idCol, textCol),
       IndexVersions.tableRoot(spark, indexTablePrefix),
       IndexVersions.versionPrefix(indexTablePrefix, _), corpusCount) {
       (rows, target, known) =>
+        val (n, threshold) = Dedup.ngramIndexMeta(spark,
+          Dedup.ngramDfDir(spark, indexTablePrefix))
         Dedup.writeNgramIndexBucketed(rows, target, idCol, textCol, n,
           threshold, buckets, knownCount = known)
     }

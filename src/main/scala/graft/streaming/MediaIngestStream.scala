@@ -47,21 +47,15 @@ object MediaIngestStream {
     * min-id keeper), for arrival sources that can emit two transcodes
     * of the same asset in one micro-batch; off by default because it
     * pays the symmetric batch×batch banding cost per arrival, which a
-    * source that only re-emits byte-identical files never needs.
-    * `bands` ≤ 0 reads the index sidecar (the one signature
+    * source that only re-emits byte-identical files never needs. Every
+    * stage bands at the count the index recorded (the one signature
     * definition all three stages share).
     */
   private[graft] def applyBatch(spark: SparkSession, batch: DataFrame,
       accepted: Option[DataFrame], indexTable: String,
       idCol: String = "media_id", contentCol: String = "content",
-      maxDist: Int = 8, bands: Int = 0,
-      nearWithinBatch: Boolean = false): DataFrame = {
-    val effBands =
-      if (bands > 0) bands
-      else Multimodal.phashIndexMeta(spark, indexTable).map(_._1)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no phash-index sidecar under $indexTable — pass bands " +
-            "explicitly"))
+      maxDist: Int = 8, nearWithinBatch: Boolean = false): DataFrame = {
+    val (bands, _) = Multimodal.phashIndexMeta(spark, indexTable)
     val named = batch.withColumnRenamed(idCol, "media_id")
       .withColumnRenamed(contentCol, "content")
     val b1e = IngestStream.exactWithinBatch(named, "media_id",
@@ -70,10 +64,10 @@ object MediaIngestStream {
       if (!nearWithinBatch) b1e
       else IngestStream.keepComponentMin(b1e, "media_id",
         Multimodal.perceptualNearDupPairs(
-            Multimodal.perceptualSig(b1e), maxDist, effBands)
+            Multimodal.perceptualSig(b1e), maxDist, bands)
           .select(col("id_a"), col("id_b")))
     val dupVsCorpus = Multimodal.probePhashIndex(spark, indexTable,
-        b1, maxDist, effBands)
+        b1, maxDist)
       .select(col("media_id")).distinct()
     val b2 = b1.join(dupVsCorpus, Seq("media_id"), "left_anti")
     val out = accepted match {
@@ -82,7 +76,7 @@ object MediaIngestStream {
         val accNamed = acc.withColumnRenamed(idCol, "media_id")
           .withColumnRenamed(contentCol, "content")
         val dupVsAccepted = Multimodal.perceptualNearDupPairsAcross(
-            accNamed, b2, maxDist, effBands)
+            accNamed, b2, maxDist, bands)
           .select(col("id_b").as("media_id")).distinct()
         b2.join(dupVsAccepted, Seq("media_id"), "left_anti")
     }
@@ -92,7 +86,7 @@ object MediaIngestStream {
 
   /** Drain `srcDir` (parquet of (idCol, contentCol)) through the
     * ingest pipeline ([[IngestStream.runDedup]]). The band count comes
-    * from the index sidecar.
+    * from the index record.
     */
   def run(spark: SparkSession, srcDir: String, indexTable: String,
       outDir: String, checkpointDir: String,
@@ -101,14 +95,14 @@ object MediaIngestStream {
       compactCorpus: Option[DataFrame] = None,
       compactMaxRows: Long = Long.MaxValue,
       nearWithinBatch: Boolean = false): Unit = {
-    require(Multimodal.phashIndexMeta(spark, indexTable).isDefined,
-      s"no phash index (with sidecar) at $indexTable")
+    // an index without its record is refused before the stream starts
+    Multimodal.phashIndexMeta(spark, indexTable): Unit
     IngestStream.runDedup(spark, srcDir, outDir, checkpointDir,
       maxFilesPerTrigger, compactMaxRows, compactCorpus.map(corpus => () =>
         compact(spark, corpus, indexTable, outDir, idCol, contentCol))) {
       (batch, accepted) =>
         applyBatch(spark, batch, accepted, indexTable, idCol, contentCol,
-          maxDist, bands = 0, nearWithinBatch = nearWithinBatch)
+          maxDist, nearWithinBatch)
     }
   }
 
@@ -116,21 +110,16 @@ object MediaIngestStream {
     * generation `<indexTable>_ixv<N+1>` (the index holds banded
     * signature rows, not payloads, so the fold needs the `corpus`
     * assets). Bands and bucket count replay the CURRENT generation's
-    * sidecars unless overridden (`buckets` > 0 — e.g. to grow bucket
-    * width with the corpus).
+    * records unless the bucket count is chosen (`buckets` > 0 — e.g. to
+    * grow bucket width with the corpus).
     */
   def compact(spark: SparkSession, corpus: DataFrame, indexTable: String,
       outDir: String, idCol: String = "media_id",
       contentCol: String = "content", buckets: Int = 0): Long = {
     val resolved = Multimodal.resolvePhashTable(spark, indexTable)
     val (bands, _) = Multimodal.phashIndexMeta(spark, indexTable)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no phash index (with sidecar) at $indexTable"))
     val effBuckets =
-      if (buckets > 0) buckets
-      else Bucketed.bucketMeta(spark, resolved).map(_._1)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no bucket sidecar under $resolved — pass buckets explicitly"))
+      if (buckets > 0) buckets else Bucketed.bucketMeta(spark, resolved)._1
     IngestStream.fold(spark, corpus, outDir, Seq(idCol, contentCol),
       Multimodal.phashIndexRoot(spark, indexTable),
       IndexVersions.versionPrefix(indexTable, _)) { (rows, target, _) =>

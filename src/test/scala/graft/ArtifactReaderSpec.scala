@@ -68,8 +68,8 @@ class ArtifactReaderSpec extends SparkSpec {
   private def ivf(): String = {
     val dir = tmpDir("reader-ivf")
     IvfIndex.write(vectors(2000, 0L, 7L), dir, dims = 16, nlist = 40)
-    IvfIndex.appendVectors(spark, dir, vectors(100, 100000L, 8L), dims = 16)
-    IvfIndex.appendVectors(spark, dir, vectors(100, 200000L, 9L), dims = 16)
+    IvfIndex.appendVectors(spark, dir, vectors(100, 100000L, 8L))
+    IvfIndex.appendVectors(spark, dir, vectors(100, 200000L, 9L))
     assert(IvfIndex.liveSegs(spark, dir).size == 2)
     dir
   }
@@ -78,8 +78,8 @@ class ArtifactReaderSpec extends SparkSpec {
     val dir = tmpDir("reader-ivfpq")
     IvfPqIndex.write(vectors(2000, 0L, 7L), dir, dims = 16, nlist = 40,
       m = 4, ksub = 16)
-    IvfPqIndex.append(spark, dir, vectors(100, 100000L, 8L), dims = 16)
-    IvfPqIndex.append(spark, dir, vectors(100, 200000L, 9L), dims = 16)
+    IvfPqIndex.append(spark, dir, vectors(100, 100000L, 8L))
+    IvfPqIndex.append(spark, dir, vectors(100, 200000L, 9L))
     assert(IvfPqIndex.liveSegs(spark, dir).size == 2)
     dir
   }
@@ -162,7 +162,7 @@ class ArtifactReaderSpec extends SparkSpec {
         new java.io.File(tmp).delete()
       }
       val out = tmpDir("reader-ingest-out")
-      IngestStream.run(spark, src, idx, indexBuckets = 4, outDir = out,
+      IngestStream.run(spark, src, idx, outDir = out,
         checkpointDir = tmpDir("reader-ingest-ckpt"), maxFilesPerTrigger = 1)
       var accepted: Option[DataFrame] = None
       val read = jobsIn { accepted = IngestStream.accepted(spark, out) }
@@ -197,7 +197,7 @@ class ArtifactReaderSpec extends SparkSpec {
     val intIds = vectors(10, 300000L, 10L)
       .select($"vec_id".cast("int").as("vec_id"), $"embedding")
     val e = intercept[IllegalArgumentException] {
-      IvfIndex.appendVectors(spark, dir, intIds, dims = 16)
+      IvfIndex.appendVectors(spark, dir, intIds)
     }
     assert(e.getMessage.contains("refusing"), e.getMessage)
     assert(SegmentedIndex.dirsOnDisk(spark, dir) == before,
@@ -231,7 +231,7 @@ class ArtifactReaderSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val append = intercept[Exception] {
       IvfIndex.appendVectors(spark, dir,
-        vectors(10, 400000L, 3L).unionByName(nan), dims = 16)
+        vectors(10, 400000L, 3L).unionByName(nan))
     }
     assert(messages(append).contains("no finite score"), messages(append))
     assert(IvfIndex.liveSegs(spark, dir).isEmpty,

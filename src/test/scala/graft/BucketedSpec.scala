@@ -67,13 +67,13 @@ class BucketedSpec extends SparkSpec {
     try {
       // no data for this name -> false, and nothing registered
       assert(!Bucketed.registerBucketed(spark, "li_reg_missing",
-        "l_orderkey", 8))
+        "l_orderkey"))
       assert(!spark.catalog.tableExists("li_reg_missing"))
       // attach over the surviving dir: metadata-only, and the join is
       // as Exchange-free as it was in the writing session
-      assert(Bucketed.registerBucketed(spark, "li_reg", "l_orderkey", 8))
+      assert(Bucketed.registerBucketed(spark, "li_reg", "l_orderkey"))
       // idempotent once attached
-      assert(Bucketed.registerBucketed(spark, "li_reg", "l_orderkey", 8))
+      assert(Bucketed.registerBucketed(spark, "li_reg", "l_orderkey"))
       val j = Bucketed.colocatedJoin(spark, "li_reg", "ord_reg", "l_orderkey")
       assert(Bucketed.countExchanges(j) == 0,
         "re-registered bucketed join must not shuffle")
@@ -84,74 +84,6 @@ class BucketedSpec extends SparkSpec {
       Bucketed.dropBucketed(spark, "li_reg")
       Bucketed.dropBucketed(spark, "ord_reg")
       assert(!fs.exists(loc), "dropBucketed removes external data too")
-    }
-  }
-
-  test("bucket sidecar: self-configure, refuse mismatch, multi-file build") {
-    val li = Tables(spark, sf001, "lineitem")
-      .select($"l_orderkey", $"l_quantity")
-    val ord = Tables(spark, sf001, "orders")
-      .select($"o_orderkey".as("l_orderkey"), $"o_totalprice")
-    // multi-file build mode: 2 files per bucket = 2x the write tasks
-    Bucketed.writeBucketed(li, "li_sc", "l_orderkey", buckets = 8,
-      filesPerBucket = 2)
-    Bucketed.writeBucketed(ord, "ord_sc", "l_orderkey", buckets = 8)
-    assert(Bucketed.bucketMeta(spark, "li_sc") === Some((8, "l_orderkey")))
-
-    val cat = spark.sessionState.catalog
-    val parse = spark.sessionState.sqlParser.parseTableIdentifier _
-    val loc = new org.apache.hadoop.fs.Path(cat.defaultTablePath(parse("li_sc")))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(loc).filter(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-    assert(dataFiles.length == 16,
-      s"8 buckets x 2 filesPerBucket should write 16 data files, " +
-        s"got ${dataFiles.length}")
-
-    val expected = li.join(ord, "l_orderkey").count()
-
-    // fresh-JVM simulation: stash data across the managed-table drop
-    val stash = new org.apache.hadoop.fs.Path(loc.getParent, "li_sc_stash")
-    assert(fs.rename(loc, stash))
-    spark.sql("DROP TABLE li_sc")
-    assert(fs.rename(stash, loc))
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      // explicit wrong count / wrong key: refused, nothing registered
-      intercept[IllegalArgumentException] {
-        Bucketed.registerBucketed(spark, "li_sc", "l_orderkey", 4)
-      }
-      intercept[IllegalArgumentException] {
-        Bucketed.registerBucketed(spark, "li_sc", "l_quantity", 8)
-      }
-      assert(!spark.catalog.tableExists("li_sc"))
-      // no buckets argument: self-configures from the sidecar, and the
-      // multi-file layout still joins Exchange-free
-      assert(Bucketed.registerBucketed(spark, "li_sc", "l_orderkey"))
-      val j = Bucketed.colocatedJoin(spark, "li_sc", "ord_sc", "l_orderkey")
-      assert(Bucketed.countExchanges(j) == 0,
-        "self-configured multi-file bucketed join must not shuffle")
-      assert(j.count() == expected)
-
-      // pre-sidecar layout: file names are the only evidence — a count
-      // the max bucket id refutes is rejected, a consistent one attaches
-      spark.sql("DROP TABLE li_sc") // external now: data survives
-      fs.delete(new org.apache.hadoop.fs.Path(loc, "_graft_buckets.json"),
-        false)
-      intercept[IllegalArgumentException] {
-        Bucketed.registerBucketed(spark, "li_sc", "l_orderkey") // no evidence
-      }
-      intercept[IllegalArgumentException] {
-        Bucketed.registerBucketed(spark, "li_sc", "l_orderkey", 4) // refuted
-      }
-      assert(Bucketed.registerBucketed(spark, "li_sc", "l_orderkey", 8))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      Bucketed.dropBucketed(spark, "li_sc")
-      Bucketed.dropBucketed(spark, "ord_sc")
     }
   }
 }

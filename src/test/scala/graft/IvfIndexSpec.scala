@@ -78,15 +78,6 @@ class IvfIndexSpec extends SparkSpec {
       .inputFiles.length
     assert(read > 0 && read < all,
       s"probe must prune cell directories (read $read of $all)")
-    // past the literal cap: no prune, identical results
-    val uncapped = IvfIndex.probe(spark, dir, twins, k = 1, nprobe = 1,
-        maxCellLiterals = 0)
-      .select("qid", "id", "rank").orderBy("qid")
-      .collect().map(_.toSeq).toSeq
-    val capped = got.select("qid", "id", "rank").orderBy("qid")
-      .collect().map(_.toSeq).toSeq
-    assert(uncapped == capped,
-      "skipping the prune must never change probe results")
   }
 
   test("sidecar self-config: wrong dims and non-index paths are " +
@@ -96,9 +87,16 @@ class IvfIndexSpec extends SparkSpec {
     val m = IvfIndex.meta(spark, dir)
     assert(m.exists { case (nlist, dims, mse) =>
       nlist == 8 && dims == 64 && mse > 0.0 })
-    intercept[IllegalArgumentException] {
-      IvfIndex.probe(spark, dir, queries, k = 3, nprobe = 2, dims = 32)
+    // a query of the wrong length is refused by the cell kernel: the
+    // dims are the sidecar's, not the caller's
+    val short = intercept[Exception] {
+      IvfIndex.probe(spark, dir, queries.select($"qid",
+        slice($"embedding", 1, 32).as("embedding")), k = 3, nprobe = 2)
+        .collect()
     }
+    assert(Iterator.iterate[Throwable](short)(_.getCause)
+      .takeWhile(_ != null).exists(t => String.valueOf(t.getMessage)
+        .contains("32 elements")), short)
     intercept[IllegalArgumentException] {
       IvfIndex.probe(spark, tmpDir("notanindex"), queries, k = 3)
     }

@@ -100,10 +100,16 @@ class IvfPqIndexSpec extends SparkSpec {
     IvfPqIndex.write(e, dir, dims = 64, nlist = 8, m = 16, ksub = 8)
     assert(IvfPqIndex.meta(spark, dir).exists {
       case (_, _, pm, ksub, _) => pm == 16 && ksub == 8 })
-    intercept[IllegalArgumentException] {
-      IvfPqIndex.probe(spark, dir, queries, rerankFrom = e, k = 3,
-        dims = 32)
+    // a query of the wrong length is refused by the cell kernel: the
+    // dims are the sidecar's, not the caller's
+    val short = intercept[Exception] {
+      IvfPqIndex.probe(spark, dir, queries.select($"qid",
+        slice($"embedding", 1, 32).as("embedding")), rerankFrom = e, k = 3)
+        .collect()
     }
+    assert(Iterator.iterate[Throwable](short)(_.getCause)
+      .takeWhile(_ != null).exists(t => String.valueOf(t.getMessage)
+        .contains("32 elements")), short)
     intercept[IllegalArgumentException] {
       IvfPqIndex.probe(spark, tmpDir("notpq"), queries, rerankFrom = e,
         k = 3)

@@ -60,7 +60,7 @@ class PipelineSpec extends SparkSpec {
       Dedup.writeNgramIndex(corpus, idx, "doc_id", "text",
         n = 3, threshold = 0.5)
       val plainProbe = Dedup.probeNgramIndex(spark, idx, batch,
-        "doc_id", "text", n = 3, threshold = 0.5)
+        "doc_id", "text")
       val viaDisk = plainProbe
         .select($"id_batch", $"id_corpus").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -73,8 +73,7 @@ class PipelineSpec extends SparkSpec {
         "doc_id", "text", n = 3, threshold = 0.5, buckets = 4)
       try {
         val bktProbe = Dedup.probeNgramIndexBucketed(spark,
-          "spec_ngram_idx", batch, "doc_id", "text", n = 3,
-          threshold = 0.5)
+          "spec_ngram_idx", batch, "doc_id", "text")
         val viaBkt = bktProbe.select($"id_batch", $"id_corpus").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(viaBkt === across)
@@ -87,10 +86,9 @@ class PipelineSpec extends SparkSpec {
         try {
           val exBkt = graft.operators.Bucketed.countExchanges(
             Dedup.probeNgramIndexBucketed(spark, "spec_ngram_idx", batch,
-              "doc_id", "text", n = 3, threshold = 0.5))
+              "doc_id", "text"))
           val exPlain = graft.operators.Bucketed.countExchanges(
-            Dedup.probeNgramIndex(spark, idx, batch,
-              "doc_id", "text", n = 3, threshold = 0.5))
+            Dedup.probeNgramIndex(spark, idx, batch, "doc_id", "text"))
           assert(exBkt < exPlain,
             s"bucketed probe should shuffle less: $exBkt vs $exPlain")
         } finally {
@@ -218,7 +216,11 @@ class PipelineSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val auto = pairs(Dedup.embeddingNearDupPairsAuto(
+    // the operator's DEFAULT is the occupancy rule (round-10: a
+    // hand-tuned constant default was the measured-quadratic footgun —
+    // planesPerBand ≤ 0 means "derive"), and it equals the fixed-plane
+    // construction at the derived count
+    val auto = pairs(Dedup.embeddingNearDupPairs(
       embeddings, "vec_id", "embedding", dims = 64, threshold = 0.4,
       bands = 4))
     val fixed = pairs(Dedup.embeddingNearDupPairs(
@@ -226,13 +228,6 @@ class PipelineSpec extends SparkSpec {
       bands = 4, planesPerBand = planes))
     assert(auto === fixed)
     assert(auto.subsetOf(exactPairs)) // cosine verify still exact
-    // the DEFAULT of the fixed-knob operator is the occupancy rule too
-    // (round-10: a hand-tuned constant default was the measured-
-    // quadratic footgun — planesPerBand ≤ 0 now means "derive")
-    val default = pairs(Dedup.embeddingNearDupPairs(
-      embeddings, "vec_id", "embedding", dims = 64, threshold = 0.4,
-      bands = 4))
-    assert(default === auto)
   }
 
   test("semantic (SemDeDup) pairs: subset of exact, nlist=1 degenerates " +
@@ -661,7 +656,7 @@ class PipelineSpec extends SparkSpec {
       Multimodal.writeVideoFrameIndex(corpus, table, buckets = 4,
         frameBytes = 64, bands = 2)
       val got = Multimodal.probeVideoFrameIndex(spark, table, batch,
-          frameBytes = 64, maxDist = 6, minContainPct = 50)
+          maxDist = 6, minContainPct = 50)
         .collect().map(_.toSeq).toSet
       // == the symmetric batch operator restricted to corpus x batch,
       // re-oriented to the arrival side (id_b = arrival there)
@@ -777,7 +772,8 @@ class PipelineSpec extends SparkSpec {
     import graft.operators.Bucketed
     val all = Multimodal.demoPerturbedMedia(docs)
     val corpus = all.filter($"media_id" < 10000000L)
-    val batch = all.filter($"media_id" >= 10000000L).limit(2)
+    val batch = all.filter($"media_id" >= 10000000L).orderBy($"media_id")
+      .limit(2)
     val table = "phash_idx_prune_spec"
     def selected(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
       val plan = df.queryExecution.executedPlan.toString
@@ -795,37 +791,18 @@ class PipelineSpec extends SparkSpec {
       val (sel, tot) = selected(pruned)
       assert(tot === 64 && sel <= 8 && sel > 0,
         s"small-batch probe must bucket-prune: read $sel of $tot")
-      val unpruned = Multimodal.probePhashIndex(spark, table, batch,
-        maxDist = 8, maxKeyLiterals = 0)
+      // the same two arrivals inside a batch whose band keys number past
+      // the literal cap (the whole corpus rides along: more than 1,024
+      // distinct keys) — the probe scans every bucket, and the two
+      // arrivals' rows are the pruned probe's
+      val unpruned = Multimodal.probePhashIndex(spark, table,
+        batch.unionByName(corpus), maxDist = 8)
       val (selU, totU) = selected(unpruned)
       assert(selU === totU, "literal-capped-out probe reads every bucket")
+      val arrivals = batch.select($"media_id").as[Long].collect().toSeq
       assert(pruned.collect().map(_.toSeq).toSet ===
-        unpruned.collect().map(_.toSeq).toSet)
-    } finally Bucketed.dropBucketed(spark, table)
-  }
-
-  test("phash index pins its band count: a bands-mismatched probe is " +
-      "REFUSED instead of silently finding nothing") {
-    import graft.operators.Bucketed
-    val all = Multimodal.demoPerturbedMedia(docs)
-    val corpus = all.filter($"media_id" < 10000000L)
-    val batch = all.filter($"media_id" >= 10000000L)
-    val table = "phash_idx_bands_spec"
-    try {
-      Multimodal.writePhashIndex(corpus, table, buckets = 4, bands = 4)
-      assert(Multimodal.phashIndexMeta(spark, table)
-        === Some((4, "blockhash64")))
-      val ex = intercept[IllegalArgumentException] {
-        Multimodal.probePhashIndex(spark, table, batch,
-          maxDist = 8, bands = 2)
-      }
-      assert(ex.getMessage.contains("4 bands"), ex.getMessage)
-      // matching explicit bands and sidecar self-config agree
-      val explicit = Multimodal.probePhashIndex(spark, table, batch,
-        maxDist = 8, bands = 4).count()
-      val fromSidecar = Multimodal.probePhashIndex(spark, table, batch,
-        maxDist = 8).count()
-      assert(explicit === fromSidecar && explicit > 0)
+        unpruned.filter($"media_id".isin(arrivals: _*))
+          .collect().map(_.toSeq).toSet)
     } finally Bucketed.dropBucketed(spark, table)
   }
 

@@ -20,7 +20,7 @@ class SignIndexSpec extends SparkSpec {
 
     Similarity.writeSignIndex(e, dir, dims = 64, numPlanes = 12)
     val disk = Similarity.probeSignIndex(spark, dir, queries, k = 5,
-      dims = 64, numPlanes = 12, probeHamming = 2)
+      probeHamming = 2)
     val mem = Similarity.lshTopK(e, queries, k = 5, dims = 64,
       numPlanes = 12, probeHamming = 2)
 
@@ -64,12 +64,14 @@ class SignIndexSpec extends SparkSpec {
     Similarity.writeSignIndex(e, dir, dims = 64, numPlanes = 12)
 
     val pruned = Similarity.probeSignIndex(spark, dir, queries, k = 5,
-      dims = 64, numPlanes = 12, probeHamming = 2)
-    // a cap below the probe-set size forces the skip path: the scan is
-    // unpruned (no bucket IN-list reaches the partition filters) but
-    // the bucket JOIN still restricts candidates — results identical
-    val uncapped = Similarity.probeSignIndex(spark, dir, queries, k = 5,
-      dims = 64, numPlanes = 12, probeHamming = 2, maxBucketLiterals = 1)
+      probeHamming = 2)
+    // every corpus vector as a query probes far more than the 1,024
+    // literal cap of distinct buckets (79 per query over 4,096), which
+    // forces the skip path: the scan is unpruned (no bucket IN-list
+    // reaches the partition filters) but the bucket JOIN still
+    // restricts candidates — each query's rows are identical
+    val uncapped = Similarity.probeSignIndex(spark, dir,
+      e.select($"vec_id".as("qid"), $"embedding"), k = 5, probeHamming = 2)
     uncapped.collect()
     // walk THROUGH AdaptiveSparkPlanExec (a leaf wrapping the real
     // subtree) — the joined probe plan is AQE-wrapped, unlike the
@@ -98,7 +100,8 @@ class SignIndexSpec extends SparkSpec {
       "over-cap probe must not build a bucket IN-list partition filter")
     val a = pruned.select("qid", "id", "rank").orderBy("qid", "rank")
       .collect().map(_.toSeq).toSeq
-    val b = uncapped.select("qid", "id", "rank").orderBy("qid", "rank")
+    val b = uncapped.filter($"qid" < 10)
+      .select("qid", "id", "rank").orderBy("qid", "rank")
       .collect().map(_.toSeq).toSeq
     assert(a.nonEmpty && a == b,
       "skipping the prune must never change probe results")
@@ -113,7 +116,7 @@ class SignIndexSpec extends SparkSpec {
     Similarity.writeSignIndex(corpus, dir, dims = 64, numPlanes = 6)
 
     val viaDisk = graft.operators.Dedup.incrementalNewNearDupEmbedDisk(
-        spark, dir, batch, "vec_id", "embedding", dims = 64)
+        spark, dir, batch, "vec_id", "embedding")
       .collect().map(_.getLong(0)).toSet
     val viaMem = graft.operators.Dedup.incrementalNewNearDupEmbed(
         corpus, batch, "vec_id", "embedding", dims = 64)
@@ -134,43 +137,5 @@ class SignIndexSpec extends SparkSpec {
         corpus, planted, "vec_id", "embedding", dims = 64)
       .collect().map(_.getLong(0)).toSet
     assert(got.isEmpty, s"planted exact duplicates escaped: $got")
-  }
-
-  test("sign index sidecar: auto planes derive the occupancy rule, the " +
-      "probe self-configures, and a mismatched probe is refused") {
-    val e = Tables(spark, sf001, "embeddings")
-    val corpus = e.filter(pmod($"vec_id", lit(10)) =!= 0)
-    val batch = e.filter(pmod($"vec_id", lit(10)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("signmeta").toString
-    // auto write records (planes, dims, seed); planes == the same
-    // scaledPlanes rule every auto LSH operator uses
-    Similarity.writeSignIndex(corpus, dir, dims = 64, numPlanes = 0)
-    val n = corpus.count()
-    val meta = Similarity.signIndexMeta(spark, dir)
-    assert(meta.contains((graft.operators.Dedup.scaledPlanes(n), 64, 42L)))
-    // auto probe (numPlanes omitted) == explicit probe at the recorded
-    // count: the sidecar IS the configuration
-    val auto = graft.operators.Dedup.incrementalNewNearDupEmbedDisk(
-        spark, dir, batch, "vec_id", "embedding", dims = 64)
-      .collect().map(_.getLong(0)).toSet
-    val explicit = graft.operators.Dedup.incrementalNewNearDupEmbedDisk(
-        spark, dir, batch, "vec_id", "embedding", dims = 64,
-        numPlanes = meta.get._1)
-      .collect().map(_.getLong(0)).toSet
-    assert(auto == explicit && auto.nonEmpty)
-    // a probe at the WRONG plane count replays a different signature —
-    // bucket join finds nothing and every dup escapes. That failure is
-    // silent, so the sidecar check must turn it into an error.
-    intercept[IllegalArgumentException] {
-      graft.operators.Dedup.incrementalNewNearDupEmbedDisk(
-        spark, dir, batch, "vec_id", "embedding", dims = 64,
-        numPlanes = meta.get._1 + 1)
-    }
-    // and so must a different seed (same reason, different axis)
-    intercept[IllegalArgumentException] {
-      Similarity.probeSignIndex(spark, dir,
-        batch.select($"vec_id".as("qid"), $"embedding"), k = 3,
-        dims = 64, seed = 43L)
-    }
   }
 }

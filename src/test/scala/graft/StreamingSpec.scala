@@ -599,7 +599,7 @@ class StreamingSpec extends SparkSpec {
 
       val outDir = tmpDir("ingest-out")
       val ckptDir = tmpDir("ingest-ckpt")
-      IngestStream.run(spark, srcDir, idxPrefix, indexBuckets = 4,
+      IngestStream.run(spark, srcDir, idxPrefix,
         outDir = outDir, checkpointDir = ckptDir,
         maxFilesPerTrigger = 1)
       val got = IngestStream.accepted(spark, outDir).get
@@ -611,10 +611,10 @@ class StreamingSpec extends SparkSpec {
       // nothing)
       val r1 = IngestStream.applyBatch(spark,
         spark.read.parquet(s"$srcDir/f1.parquet"), None, idxPrefix,
-        "doc_id", "text", 3, 0.5)
+        "doc_id", "text")
       val r2 = IngestStream.applyBatch(spark,
         spark.read.parquet(s"$srcDir/f2.parquet"), Some(r1), idxPrefix,
-        "doc_id", "text", 3, 0.5)
+        "doc_id", "text")
       val replay = (r1.select($"doc_id").collect() ++
         r2.select($"doc_id").collect()).map(_.getLong(0)).toSet
       assert(replay === got)
@@ -623,7 +623,7 @@ class StreamingSpec extends SparkSpec {
       // refused: batch ids would restart at 0, bypassing AND clobbering
       // the accepted batches
       val guard = intercept[IllegalArgumentException] {
-        IngestStream.run(spark, srcDir, idxPrefix, indexBuckets = 4,
+        IngestStream.run(spark, srcDir, idxPrefix,
           outDir = outDir, checkpointDir = tmpDir("ingest-ckpt-fresh"),
           maxFilesPerTrigger = 1)
       }
@@ -649,7 +649,7 @@ class StreamingSpec extends SparkSpec {
         (1000008L, d)   // fresh -> accepted
       ).toDF("doc_id", "text")
       val r3 = IngestStream.applyBatch(spark, f3, None, idxPrefix,
-        "doc_id", "text", 3, 0.5)
+        "doc_id", "text")
       assert(r3.select($"doc_id").collect().map(_.getLong(0)).toSet ===
         Set(1000008L), "rebuilt index must catch the compacted dup")
       // and through the ENGINE: resume with the ORIGINAL checkpoint —
@@ -657,7 +657,7 @@ class StreamingSpec extends SparkSpec {
       // stays satisfied, and only the fresh doc lands
       f3.coalesce(1).write.parquet(s"$srcDir/f3")
       promote("f3", 1000)
-      IngestStream.run(spark, srcDir, idxPrefix, indexBuckets = 4,
+      IngestStream.run(spark, srcDir, idxPrefix,
         outDir = outDir, checkpointDir = ckptDir, maxFilesPerTrigger = 1)
       val got3 = IngestStream.accepted(spark, outDir).get
         .select($"doc_id").collect().map(_.getLong(0)).toSet
@@ -730,7 +730,7 @@ class StreamingSpec extends SparkSpec {
     promote("f1", 60000); promote("f2", 30000)
 
     val outDir = tmpDir("embed-ingest-out")
-    EmbedIngestStream.run(spark, srcDir, idxPath, dims,
+    EmbedIngestStream.run(spark, srcDir, idxPath,
       outDir = outDir, checkpointDir = tmpDir("embed-ingest-ckpt"),
       maxFilesPerTrigger = 1)
     val got = IngestStream.accepted(spark, outDir).get
@@ -740,10 +740,10 @@ class StreamingSpec extends SparkSpec {
     // stream run == sequential applyBatch replay
     val r1 = EmbedIngestStream.applyBatch(spark,
       spark.read.parquet(s"$srcDir/f1.parquet"), None, idxPath,
-      "vec_id", "embedding", dims, 0.4, 1, 42L)
+      "vec_id", "embedding", 0.4, 1)
     val r2 = EmbedIngestStream.applyBatch(spark,
       spark.read.parquet(s"$srcDir/f2.parquet"), Some(r1), idxPath,
-      "vec_id", "embedding", dims, 0.4, 1, 42L)
+      "vec_id", "embedding", 0.4, 1)
     val replay = (r1.select($"vec_id").collect() ++
       r2.select($"vec_id").collect()).map(_.getLong(0)).toSet
     assert(replay === got)
@@ -764,7 +764,7 @@ class StreamingSpec extends SparkSpec {
       (1000007L, freshD)  // fresh -> accepted
     ).toDF("vec_id", "embedding")
     val r3 = EmbedIngestStream.applyBatch(spark, f3, None, idxPath,
-      "vec_id", "embedding", dims, 0.4, 1, 42L)
+      "vec_id", "embedding", 0.4, 1)
     assert(r3.select($"vec_id").collect().map(_.getLong(0)).toSet ===
       Set(1000007L), "rebuilt sign index must catch the compacted dup")
   }
@@ -789,12 +789,12 @@ class StreamingSpec extends SparkSpec {
         (5000003L, synthText("nbeta"))).toDF("doc_id", "text")
       // default: exact-only stage 1 keeps BOTH near twins
       val noOpt = IngestStream.applyBatch(spark, batch, None, idxPrefix,
-        "doc_id", "text", 3, 0.5)
+        "doc_id", "text")
       assert(noOpt.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(5000001L, 5000002L, 5000003L))
       // opted in: the cluster collapses to its min id
       val opt = IngestStream.applyBatch(spark, batch, None, idxPrefix,
-        "doc_id", "text", 3, 0.5, nearWithinBatch = true)
+        "doc_id", "text", nearWithinBatch = true)
       assert(opt.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(5000001L, 5000003L))
     } finally {
@@ -831,13 +831,13 @@ class StreamingSpec extends SparkSpec {
       ).toDF("doc_id", "text")
       // default: no stage 0 — both survive (neither is a dup)
       val off = IngestStream.applyBatch(spark, batch, None, idxPrefix,
-        "doc_id", "text", 3, 0.5)
+        "doc_id", "text")
       assert(off.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(6000001L, 6000002L))
       // opted in: the badtok doc scores below threshold and never
       // reaches the dedup probes; output schema is unchanged
       val on = IngestStream.applyBatch(spark, batch, None, idxPrefix,
-        "doc_id", "text", 3, 0.5, modelPath = Some(modelPath))
+        "doc_id", "text", modelPath = Some(modelPath))
       assert(on.columns.toSeq === batch.columns.toSeq)
       assert(on.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(6000001L))
@@ -847,7 +847,7 @@ class StreamingSpec extends SparkSpec {
         TextModel.trainLogOdds(labeled, "text", !$"lab", buckets = 512),
         modelPath, buckets = 512, bigrams = true)
       val after = IngestStream.applyBatch(spark, batch, None, idxPrefix,
-        "doc_id", "text", 3, 0.5, modelPath = Some(modelPath))
+        "doc_id", "text", modelPath = Some(modelPath))
       assert(after.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(6000002L))
     } finally {
@@ -894,12 +894,12 @@ class StreamingSpec extends SparkSpec {
       (6000003L, freshC)).toDF("vec_id", "embedding")
     // default: exact-only stage 1 keeps BOTH near twins
     val noOpt = EmbedIngestStream.applyBatch(spark, batch, None, idxPath,
-      "vec_id", "embedding", dims, 0.4, 1, 42L)
+      "vec_id", "embedding", 0.4, 1)
     assert(noOpt.select($"vec_id").collect().map(_.getLong(0)).toSet
       === Set(6000001L, 6000002L, 6000003L))
     // opted in: the near cluster collapses to its min id
     val opt = EmbedIngestStream.applyBatch(spark, batch, None, idxPath,
-      "vec_id", "embedding", dims, 0.4, 1, 42L, nearWithinBatch = true)
+      "vec_id", "embedding", 0.4, 1, nearWithinBatch = true)
     assert(opt.select($"vec_id").collect().map(_.getLong(0)).toSet
       === Set(6000001L, 6000003L))
   }
@@ -924,7 +924,7 @@ class StreamingSpec extends SparkSpec {
       val outDir = tmpDir("kill-out")
       val b1 = Seq((2000001L, a)).toDF("doc_id", "text")
       IndexVersions.writeParquet(IngestStream.applyBatch(spark, b1, None,
-          idxPrefix, "doc_id", "text", 3, 0.5), s"$outDir/batch=0")
+          idxPrefix, "doc_id", "text"), s"$outDir/batch=0")
 
       // KILL the rebuild mid-flight: a corpus whose evaluation raises
       // poisons the index build after the archive step
@@ -946,7 +946,7 @@ class StreamingSpec extends SparkSpec {
             (2000004L, c)           // fresh -> kept
         ).toDF("doc_id", "text"),
         IngestStream.accepted(spark, outDir), idxPrefix,
-        "doc_id", "text", 3, 0.5)
+        "doc_id", "text")
       assert(probe.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(2000004L), "probes must keep working after a dead rebuild")
       assert(IngestStream.accepted(spark, outDir).isDefined,
@@ -962,7 +962,7 @@ class StreamingSpec extends SparkSpec {
       // index alone (no accepted set) now catches the folded acceptance
       val viaIndex = IngestStream.applyBatch(spark,
         Seq((2000005L, a), (2000006L, c)).toDF("doc_id", "text"),
-        None, idxPrefix, "doc_id", "text", 3, 0.5)
+        None, idxPrefix, "doc_id", "text")
       assert(viaIndex.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(2000006L))
 
@@ -977,7 +977,7 @@ class StreamingSpec extends SparkSpec {
       val gen2 = IngestStream.applyBatch(spark,
         Seq((2000007L, a), (2000008L, c),
           (2000009L, synthText("kdelta"))).toDF("doc_id", "text"),
-        None, idxPrefix, "doc_id", "text", 3, 0.5)
+        None, idxPrefix, "doc_id", "text")
       assert(gen2.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(2000009L),
         "version 2 must hold BOTH archived generations")
@@ -1011,7 +1011,7 @@ class StreamingSpec extends SparkSpec {
     }
     IndexVersions.writeParquet(EmbedIngestStream.applyBatch(spark,
         Seq((3000001L, fresh)).toDF("vec_id", "embedding"), None, idxPath,
-        "vec_id", "embedding", dims, 0.4, 1, 42L), s"$outDir/batch=0")
+        "vec_id", "embedding", 0.4, 1), s"$outDir/batch=0")
     val poisoned = corpus.select($"vec_id",
       raise_error(lit("injected rebuild failure")).cast("array<float>")
         .as("embedding"))
@@ -1023,7 +1023,7 @@ class StreamingSpec extends SparkSpec {
     val probe = EmbedIngestStream.applyBatch(spark,
       Seq((3000002L, corpusVec)).toDF("vec_id", "embedding"),
       IngestStream.accepted(spark, outDir), idxPath,
-      "vec_id", "embedding", dims, 0.4, 1, 42L)
+      "vec_id", "embedding", 0.4, 1)
     assert(probe.count() === 0L)
     // retry commits; the index alone catches the folded acceptance
     assert(EmbedIngestStream.compact(spark, corpus, idxPath, outDir,
@@ -1031,7 +1031,7 @@ class StreamingSpec extends SparkSpec {
     assert(IndexVersions.currentVersion(spark, idxPath) === Some(1))
     val viaIndex = EmbedIngestStream.applyBatch(spark,
       Seq((3000003L, fresh)).toDF("vec_id", "embedding"), None, idxPath,
-      "vec_id", "embedding", dims, 0.4, 1, 42L)
+      "vec_id", "embedding", 0.4, 1)
     assert(viaIndex.count() === 0L,
       "compacted sign index must catch the folded acceptance")
     // retention: generation zero (the flat bucket dirs at the root) can
@@ -1043,7 +1043,7 @@ class StreamingSpec extends SparkSpec {
     assert(deleted.nonEmpty, "gen-0 flat data should have been retired")
     val afterRetention = EmbedIngestStream.applyBatch(spark,
       Seq((3000004L, fresh)).toDF("vec_id", "embedding"), None, idxPath,
-      "vec_id", "embedding", dims, 0.4, 1, 42L)
+      "vec_id", "embedding", 0.4, 1)
     assert(afterRetention.count() === 0L,
       "retention must not touch the committed version")
   }
@@ -1088,7 +1088,7 @@ class StreamingSpec extends SparkSpec {
       assert(!IngestStream.shouldCompact(spark, outDir,
         maxAcceptedRows = 0L))
 
-      IngestStream.run(spark, srcDir, idxPrefix, indexBuckets = 0,
+      IngestStream.run(spark, srcDir, idxPrefix,
         outDir = outDir, checkpointDir = ckptDir, maxFilesPerTrigger = 1,
         compactCorpus = Some(corpus), compactMaxRows = 0L)
       // every accepted batch crossed the 0-row threshold → compacted:
@@ -1104,7 +1104,7 @@ class StreamingSpec extends SparkSpec {
       val viaIndex = IngestStream.applyBatch(spark,
         Seq((4000004L, a), (4000005L, c),
           (4000006L, synthText("adelta"))).toDF("doc_id", "text"),
-        None, idxPrefix, "doc_id", "text", 3, 0.5)
+        None, idxPrefix, "doc_id", "text")
       assert(viaIndex.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(4000006L))
       // batch ids continue: resume the SAME checkpoint with a new file;
@@ -1114,7 +1114,7 @@ class StreamingSpec extends SparkSpec {
         .toDF("doc_id", "text")
       f3.coalesce(1).write.parquet(s"$srcDir/f3")
       promote("f3", 1000)
-      IngestStream.run(spark, srcDir, idxPrefix, indexBuckets = 0,
+      IngestStream.run(spark, srcDir, idxPrefix,
         outDir = outDir, checkpointDir = ckptDir, maxFilesPerTrigger = 1,
         compactCorpus = Some(corpus), compactMaxRows = 0L)
       assert(IndexVersions.currentVersion(spark, root) === Some(3))
@@ -1130,7 +1130,7 @@ class StreamingSpec extends SparkSpec {
       assert(!spark.catalog.tableExists(s"${idxPrefix}_ixv1_df"))
       val afterRetention = IngestStream.applyBatch(spark,
         Seq((4000009L, a), (4000010L, c)).toDF("doc_id", "text"),
-        None, idxPrefix, "doc_id", "text", 3, 0.5)
+        None, idxPrefix, "doc_id", "text")
       assert(afterRetention.count() === 0L,
         "retention must not touch the committed version")
     } finally {
@@ -1266,7 +1266,7 @@ class StreamingSpec extends SparkSpec {
         Seq((5000011L, synthText("ra")), (5000012L, synthText("rb")),
           (5000013L, synthText("rc")), (5000014L, synthText("rd")),
           (5000015L, synthText("re"))).toDF("doc_id", "text"),
-        None, idxPrefix, "doc_id", "text", 3, 0.5)
+        None, idxPrefix, "doc_id", "text")
       assert(gen.select($"doc_id").collect().map(_.getLong(0)).toSet
         === Set(5000015L))
     } finally {
@@ -1333,7 +1333,7 @@ class StreamingSpec extends SparkSpec {
       val b1 = IngestStream.applyBatch(spark,
         Seq((7000001L, synthText("la")), (7000002L, corpusText))
           .toDF("doc_id", "text"),
-        None, idxPrefix, "doc_id", "text", 3, 0.5)
+        None, idxPrefix, "doc_id", "text")
       val man1 = Shards.appendShards(b1, shardDir, "doc_id",
         length($"text"), shardMass = 20000L, buckets = 8)
       assert(man1.agg(sum($"docs")).head().getLong(0) === baseDocs + 1L)
@@ -1342,7 +1342,7 @@ class StreamingSpec extends SparkSpec {
       // drops it, the appender sees an empty batch and must be a no-op
       val b2 = IngestStream.applyBatch(spark,
         Seq((7000003L, synthText("la"))).toDF("doc_id", "text"),
-        Some(b1), idxPrefix, "doc_id", "text", 3, 0.5)
+        Some(b1), idxPrefix, "doc_id", "text")
       assert(b2.isEmpty, "re-arrival of an accepted doc must be dropped")
       val man2 = Shards.appendShards(b2, shardDir, "doc_id",
         length($"text"), shardMass = 20000L, buckets = 8)
@@ -1360,7 +1360,7 @@ class StreamingSpec extends SparkSpec {
           Seq((7100001L + k * 10, synthText(s"m$k")),
             (7100002L + k * 10, synthText(s"n$k")))
             .toDF("doc_id", "text"),
-          None, idxPrefix, "doc_id", "text", 3, 0.5)
+          None, idxPrefix, "doc_id", "text")
         Shards.appendShards(bk, shardDir, "doc_id",
           length($"text"), shardMass = 20000L, buckets = 8): Unit
       }
@@ -1377,7 +1377,7 @@ class StreamingSpec extends SparkSpec {
       // compacted numbering, integrity holds end-to-end
       val b3 = IngestStream.applyBatch(spark,
         Seq((7200001L, synthText("post"))).toDF("doc_id", "text"),
-        None, idxPrefix, "doc_id", "text", 3, 0.5)
+        None, idxPrefix, "doc_id", "text")
       val man3 = Shards.appendShards(b3, shardDir, "doc_id",
         length($"text"), shardMass = 20000L, buckets = 8)
       assert(man3.agg(sum($"docs")).head().getLong(0) === preDocs + 1L)

@@ -551,14 +551,16 @@ class TextQualitySpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path, "_ixv1")),
       "retention must drop generations older than N-1")
     assert(fs.exists(new org.apache.hadoop.fs.Path(path, "_ixv2")))
-    // a sidecar-less directory is not a model artifact
+    // a sidecar-less directory is not a model artifact: refused with
+    // its path and "rebuild"
     val bare = tmpDir("textmodel-bare")
     Seq((0, 1L)).toDF("bucket", "weight").write.parquet(s"$bare/_ixv1")
     IndexVersions.commit(spark, bare, 1)
     val ex = intercept[IllegalArgumentException] {
       TextModel.readWeights(spark, bare)
     }
-    assert(ex.getMessage.contains("not a model artifact"))
+    assert(ex.getMessage.contains(s"$bare/_ixv1") &&
+      ex.getMessage.contains("rebuild"), ex.getMessage)
   }
 
   test("promoteIfBetter: cold root promotes, a poisoned retrain is " +
